@@ -73,11 +73,12 @@ object GraftExtensions {
     Divide(FloatDotProduct(a, b),
       Multiply(Sqrt(FloatDotProduct(a, a)), Sqrt(FloatDotProduct(b, b))))
 
-  /** The graft_fetch table function body: resolve the named store under
-    * `spark.graft.fetch.root`, parse the '.'-separated pattern ('*' =
-    * wildcard), and return [[graft.core.MetricStore.fetch]]'s plan —
-    * depth filter, field equalities, epoch pruning and bucket range all
-    * derived, nothing hand-written by the remote client.
+  /** The graft_fetch table function body: open the named store under
+    * `spark.graft.fetch.root` with its own params.json (so the pattern
+    * may be as deep as the store's fields), parse the '.'-separated
+    * pattern ('*' = wildcard), and return [[graft.core.MetricStore.fetch]]'s
+    * plan — depth filter, field equalities, epoch pruning and bucket range
+    * all derived, nothing hand-written by the remote client.
     */
   private[graft] def fetchPlan(args: Seq[Expression])
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {
@@ -104,7 +105,7 @@ object GraftExtensions {
         "graft_fetch: set spark.graft.fetch.root to the stores directory"))
     val fields = pattern.split('.').toSeq
       .map(f => if (f == "*") None else Some(f))
-    new graft.core.MetricStore(spark, s"$root/$storeName")
+    graft.core.MetricStore.open(spark, s"$root/$storeName")
       .fetch(from, to, fields)
       .queryExecution.logical
   }

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.core.{MetricStore, StoreParams}
@@ -118,16 +120,21 @@ object TsdbScaleCheck {
       s"post-expire cnt ${survivors.getLong(1)} != ${2 * expCells.getLong(1)} " +
         "(each observation counts once at each surviving depth)")
 
-    // --- 5. compact one epoch: file count bounded, aggregates unchanged.
+    // --- 5. compact one epoch: one file per maxPartitionBytes of the
+    // epoch's segments, aggregates unchanged.
     val ep = "2026-01-05"
     def epochAgg() = store.points().filter(col("epoch") === ep)
       .agg(count(lit(1)), sum(col("total")), sum(col("cnt"))).collect().head
+    def segmentFiles() = Files.list(Paths.get(s"$dir/points/epoch=$ep")).iterator().asScala
+      .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
     val before = epochAgg()
-    timed(s"compact epoch $ep to 8 files") { store.compact(ep, targetFiles = 8) }
-    val nFiles = Files.list(Paths.get(s"$dir/points/epoch=$ep")).filter(
-      p => p.getFileName.toString.endsWith(".parquet")).count()
+    val maxBytes = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+      spark.conf.get("spark.sql.files.maxPartitionBytes"))
+    val expFiles = math.max(1L, (segmentFiles().map(Files.size).sum + maxBytes - 1) / maxBytes)
+    timed(s"compact epoch $ep to $expFiles file(s)") { store.compact(ep) }
+    val nFiles = segmentFiles().size
     println(s"  files after compact = $nFiles")
-    require(nFiles <= 8, s"epoch still has $nFiles files after compact")
+    require(nFiles == expFiles, s"epoch has $nFiles files after compact, expected $expFiles")
     val after = epochAgg()
     require(after.getLong(0) == before.getLong(0) && after.getLong(2) == before.getLong(2) &&
       math.abs(after.getDouble(1) - before.getDouble(1)) <= math.abs(before.getDouble(1)) * 1e-12,

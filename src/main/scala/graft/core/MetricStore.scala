@@ -3,8 +3,10 @@ package graft.core
 import java.nio.file.{Files, Path, Paths}
 import java.util.Comparator
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.network.util.JavaUtils
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Store parameters — the Spark-native analog of kadiyadb's params.json
   * (/root/reference/database.go:15-31): resolution buckets points, epochs
@@ -51,17 +53,24 @@ object StoreParams {
   * supporting arbitrary-depth field hierarchies like the reference's index
   * tree (/root/reference/index/node.go).
   *
-  * Layout: one parquet dataset partitioned by `epoch` (duration-floored
-  * bucket). Track appends pre-aggregated segment files (the analog of RW
-  * epoch blocks) covering EVERY prefix of the field list (epoch.go:66-80);
-  * Fetch merges segments with a sum-reaggregation (the analog of reading
-  * RO+RW epochs) and prunes partitions via the epoch predicate. Expire
-  * drops whole epoch partition directories, exactly like cache.Expire's
-  * os.RemoveAll (/root/reference/epoch/cache.go:136-156).
+  * Layout: one parquet dataset partitioned by `epoch`, a string
+  * partition column holding the duration-floored bucket as `yyyy-MM-dd`
+  * (lexicographic order == temporal order). Track appends pre-aggregated
+  * segment files (the analog of RW epoch blocks) covering EVERY prefix of
+  * the field list (epoch.go:66-80); Fetch merges segments with a
+  * sum-reaggregation (the analog of reading RO+RW epochs) and prunes
+  * partitions by a plain string compare on `epoch`. Expire drops whole
+  * epoch partition directories, exactly like cache.Expire's os.RemoveAll
+  * (kadiyadb epoch/cache.go:136-156).
+  *
+  * Every read goes through ONE declared segment schema derived from
+  * [[StoreParams]] (see [[segmentSchema]]), so no read starts a parquet
+  * schema-inference job, and a store with no data yet reads as an empty
+  * frame instead of failing.
   *
   * At cluster scale the same layout holds: epoch partitioning → partition
-  * pruning; appends are small per-epoch deltas; compact() bounds segment
-  * counts per epoch.
+  * pruning; appends are small per-epoch deltas; compact() rewrites an
+  * epoch into as many contiguous bucket-range files as its size calls for.
   */
 final class MetricStore(spark: SparkSession, path: String, params: StoreParams = StoreParams()) {
 
@@ -71,12 +80,36 @@ final class MetricStore(spark: SparkSession, path: String, params: StoreParams =
 
   private def fieldCols: Seq[Column] = params.fields.map(col)
 
-  /** Depth of a (possibly rolled-up) row = index of last non-null field.
-    * Forward fold so the DEEPEST field ends up as the outermost test.
+  /** The one segment schema: series fields, `bucket`, the (total, cnt)
+    * accumulators, the prefix `depth`, and the `epoch` partition column
+    * as a string. Every read of `points/` declares it, so Spark neither
+    * samples a footer (a one-task job per read) nor retypes `epoch` as a
+    * DATE; [[cascadeSchema]] extends it.
     */
-  private def depthCol: Column =
-    params.fields.zipWithIndex
-      .foldLeft(lit(0)) { case (acc, (f, i)) => when(col(f).isNotNull, i + 1).otherwise(acc) }
+  private val segmentSchema: StructType = StructType(
+    params.fields.map(StructField(_, StringType)) ++ Seq(
+      StructField("bucket", TimestampNTZType),
+      StructField("total", DoubleType), StructField("cnt", LongType),
+      StructField("depth", IntegerType), StructField("epoch", StringType)))
+
+  /** The cascade's one schema: the segment schema plus `res_hours`.
+    * [[refreshCascade]]'s written column order and [[cascade]]'s reads
+    * both derive from it, so the two paths cannot drift apart.
+    */
+  private val cascadeSchema: StructType = StructType(
+    segmentSchema.fields.take(nFields) ++
+      (StructField("res_hours", IntegerType) +: segmentSchema.fields.drop(nFields)))
+
+  /** Read an epoch-partitioned dataset under its declared schema. A
+    * directory that was never written reads as an empty frame; one whose
+    * every partition was dropped reads as empty through Spark itself.
+    */
+  private def read(dir: String, schema: StructType): DataFrame =
+    if (Files.exists(Paths.get(dir))) spark.read.schema(schema).parquet(dir)
+    else spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+
+  /** The raw append segments, one row per (segment, series, bucket). */
+  private def segments(): DataFrame = read(dataDir, segmentSchema)
 
   /** Track: accumulate (total, count) per series prefix and bucket, append
     * to the epoch-partitioned store. Input schema: (ts, fields..., value).
@@ -105,17 +138,15 @@ final class MetricStore(spark: SparkSession, path: String, params: StoreParams =
     * pruning by callers.
     */
   def points(): DataFrame =
-    spark.read.parquet(dataDir)
-      // partition-column inference types epoch=yyyy-MM-dd as DATE; keep the
-      // store's contract stable as an ISO string (lexicographic == temporal)
-      .withColumn("epoch", date_format(col("epoch"), "yyyy-MM-dd"))
+    segments()
       .groupBy((Seq(col("epoch"), col("depth")) ++ fieldCols :+ col("bucket")): _*)
       .agg(sum(col("total")).as("total"), sum(col("cnt")).as("cnt"))
 
   /** Fetch: field-pattern + [from, to) range, kadiyadb Fetch semantics
     * (pattern length = queried depth; None = `*` wildcard). The range
-    * predicate on `epoch` (a partition column) prunes whole epoch
-    * directories before any file is read.
+    * predicate on `epoch` (a string partition column) prunes whole epoch
+    * directories before any file is read. Building the frame runs no
+    * Spark job, and a store with no data fetches no rows.
     */
   def fetch(from: String, to: String, pattern: Seq[Option[String]]): DataFrame = {
     require(pattern.length <= nFields, s"pattern deeper than ${params.fields}")
@@ -175,33 +206,48 @@ final class MetricStore(spark: SparkSession, path: String, params: StoreParams =
   def sync(): Unit = ()
 
   /** Compact one epoch partition: merge its accumulated append segments
-    * back to a bounded pre-aggregated file set. Bounds per-epoch file
-    * counts the way kadiyadb's epoch close/snapshot does for its append
-    * logs (/root/reference/index/index.go:24-65). Only the named partition
-    * is rewritten (dynamic partition overwrite).
+    * back to one pre-aggregated row per (series prefix, bucket). Bounds
+    * per-epoch file counts the way kadiyadb's epoch close/snapshot does
+    * for its append logs (kadiyadb index/index.go:24-65). Only the
+    * named partition is rewritten (dynamic partition overwrite).
     *
-    * The rewrite is range-partitioned on bucket into `targetFiles` files —
-    * NOT coalesce(1): at scale an epoch partition is TBs, and a single
-    * rewrite task would both run for hours and produce one unsplittable
-    * giant file. Range (vs hash) keeps each output file a contiguous time
-    * slice, so bucket-range fetches prune at the row-group level.
+    * The file count follows the epoch's size: ceil(epoch bytes /
+    * `spark.sql.files.maxPartitionBytes`), read from a metadata-only
+    * listing like [[expire]]'s. A small epoch becomes one file; at scale
+    * an epoch of TBs becomes that many files, never one unsplittable
+    * giant written by a single task. The segments are range-partitioned
+    * on `bucket` and then merged: range partitioning on `bucket` already
+    * clusters every (series, bucket) group, so the merge adds no second
+    * exchange, and each output file is a contiguous time slice that
+    * bucket-range fetches prune at the row-group level.
     */
-  def compact(epoch: String, targetFiles: Int = 8): Unit = {
-    val merged = spark.read.parquet(dataDir)
+  def compact(epoch: String): Unit = {
+    val maxBytes = JavaUtils.byteStringAsBytes(spark.conf.get("spark.sql.files.maxPartitionBytes"))
+    val nFiles = math.max(1L, (epochBytes(epoch) + maxBytes - 1) / maxBytes).toInt
+    val merged = segments()
       .filter(col("epoch") === epoch)
-      .withColumn("epoch", date_format(col("epoch"), "yyyy-MM-dd"))
+      .repartitionByRange(nFiles, col("bucket"))
       .groupBy((Seq(col("epoch"), col("depth")) ++ fieldCols :+ col("bucket")): _*)
       .agg(sum(col("total")).as("total"), sum(col("cnt")).as("cnt"))
-      .select((fieldCols ++ Seq(col("bucket"), col("total"), col("cnt"),
-        col("depth"), col("epoch"))): _*)
+      .select(segmentSchema.fieldNames.map(col).toSeq: _*)
     val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try merged.repartitionByRange(targetFiles, col("bucket"))
-      .write.mode("overwrite").partitionBy("epoch").parquet(dataDir)
+    try merged.write.mode("overwrite").partitionBy("epoch").parquet(dataDir)
     finally prev match {
       case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
       case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
     }
+  }
+
+  /** Bytes of the named epoch's segment files (0 if it has none). */
+  private def epochBytes(epoch: String): Long = {
+    val dir = Paths.get(dataDir, s"epoch=$epoch")
+    if (!Files.isDirectory(dir)) return 0L
+    val s = Files.list(dir)
+    try {
+      import scala.jdk.CollectionConverters._
+      s.iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet")).map(Files.size).sum
+    } finally s.close()
   }
 
   /** Materialized multi-resolution cascade — the continuous-aggregate
@@ -231,8 +277,6 @@ final class MetricStore(spark: SparkSession, path: String, params: StoreParams =
         .agg(round(sum(col("total")), 2).as("total"), sum(col("cnt")).as("cnt"))
         .withColumn("res_hours", lit(h))
     }.reduce(_ union _)
-      // column order derives from the one cascade schema, so the written
-      // layout and the empty-read fallback cannot drift apart
       .select(cascadeSchema.fieldNames.map(col).toSeq: _*)
     val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
@@ -253,32 +297,9 @@ final class MetricStore(spark: SparkSession, path: String, params: StoreParams =
     * partially-deleted ones), so a cascade read never serves points that
     * were expired or deleted from the store. A cascade that was never
     * built — or whose every epoch partition was invalidated away — reads
-    * as an EMPTY frame with the cascade schema (parquet schema inference
-    * would otherwise throw on the partitionless directory).
+    * as an EMPTY frame with the cascade schema.
     */
-  /** The cascade's one schema: [[refreshCascade]]'s written column order
-    * and [[cascade]]'s empty-frame fallback both derive from it, so
-    * adding or retyping a cascade column cannot desynchronize the two
-    * paths silently.
-    */
-  private def cascadeSchema: org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    StructType(
-      params.fields.map(f => StructField(f, StringType)) ++ Seq(
-        StructField("res_hours", IntegerType),
-        StructField("bucket", TimestampNTZType),
-        StructField("total", DoubleType), StructField("cnt", LongType),
-        StructField("depth", IntegerType), StructField("epoch", StringType)))
-  }
-
-  def cascade(): DataFrame = {
-    val root = Paths.get(cascadeDir)
-    if (!Files.exists(root) || listEpochDirs(root).isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], cascadeSchema)
-    spark.read.parquet(cascadeDir)
-      .withColumn("epoch", date_format(col("epoch"), "yyyy-MM-dd"))
-  }
+  def cascade(): DataFrame = read(cascadeDir, cascadeSchema)
 
   /** Targeted series deletion — the right-to-be-forgotten path a
     * training-data store needs (the reference can only Expire whole
@@ -295,8 +316,7 @@ final class MetricStore(spark: SparkSession, path: String, params: StoreParams =
   def deleteSeries(pattern: Seq[Option[String]]): Long = {
     require(pattern.length == nFields,
       s"deleteSeries pattern must name all ${params.fields} levels (use None as wildcard)")
-    val pts = spark.read.parquet(dataDir)
-      .withColumn("epoch", date_format(col("epoch"), "yyyy-MM-dd"))
+    val pts = segments()
     val matchCond = pattern.zip(fieldCols).foldLeft(col("depth") === nFields) {
       case (acc, (Some(v), c)) => acc && c === lit(v)
       case (acc, (None, _))    => acc
@@ -319,8 +339,7 @@ final class MetricStore(spark: SparkSession, path: String, params: StoreParams =
     }
     val keepLeaves = inTouched.filter(col("depth") === nFields && !matchCond)
     val out = (adjustedPrefixes :+ keepLeaves).reduce(_.unionByName(_))
-      .select((fieldCols ++ Seq(col("bucket"), col("total"), col("cnt"),
-        col("depth"), col("epoch"))): _*)
+      .select(segmentSchema.fieldNames.map(col).toSeq: _*)
     // dynamic overwrite only rewrites partitions PRESENT in `out` — an
     // epoch whose every row was deleted would silently keep its old
     // files. Find those up front and drop their directories like expire.
@@ -339,17 +358,13 @@ final class MetricStore(spark: SparkSession, path: String, params: StoreParams =
     // partitions of epochs the delete emptied — refreshCascade's dynamic
     // overwrite writes only partitions PRESENT in its output, so an
     // emptied epoch must be dropped explicitly, like the points path.
-    // The listEpochDirs guard also covers a cascade dir whose every
-    // epoch partition was already expired away: reading it would throw
-    // "unable to infer schema", and there is nothing left to refresh.
-    if (Files.exists(Paths.get(cascadeDir)) &&
-        listEpochDirs(Paths.get(cascadeDir)).nonEmpty) {
-      val slots = cascade().select(col("res_hours")).distinct()
-        .collect().map(_.getInt(0)).toSeq.sorted
-      val refreshable = touched.filter(surviving.contains)
-      if (refreshable.nonEmpty && slots.nonEmpty) refreshCascade(refreshable, slots)
-      dropEpochDirs(cascadeDir, touched.toSet -- surviving)
-    }
+    // A cascade never built, or emptied by expire, has no slots and
+    // nothing to refresh.
+    val slots = cascade().select(col("res_hours")).distinct()
+      .collect().map(_.getInt(0)).toSeq.sorted
+    val refreshable = touched.filter(surviving.contains)
+    if (refreshable.nonEmpty && slots.nonEmpty) refreshCascade(refreshable, slots)
+    dropEpochDirs(cascadeDir, touched.toSet -- surviving)
     victims.unpersist()
     nDeleted
   }
@@ -384,20 +399,39 @@ object MetricStore {
 
   /** Shared Track aggregation: (ts, fields..., total, cnt) increments →
     * per-(series-prefix, bucket) delta rows with depth + epoch columns
-    * (one grouping-sets pass covers every prefix depth).
+    * (one grouping-sets pass covers every prefix depth). Fields and
+    * accumulators are cast to the store's declared segment types, so a
+    * feed with integer values or ids writes segments every read accepts.
     */
   private[core] def aggregateIncrements(incs: DataFrame, params: StoreParams): DataFrame = {
     val fieldCols = params.fields.map(col)
+    // Forward fold so the DEEPEST non-null field ends up as the outermost test.
     val depthCol = params.fields.zipWithIndex
       .foldLeft(lit(0)) { case (acc, (f, i)) => when(col(f).isNotNull, i + 1).otherwise(acc) }
-    val base = incs.withColumn("bucket", Tsdb.bucket(col("ts"), params.resolution))
+    val base = incs
+      .withColumns(params.fields.map(f => f -> col(f).cast(StringType)).toMap)
+      .withColumn("bucket", Tsdb.bucket(col("ts"), params.resolution))
     val sets = (1 to params.fields.length).map(i => fieldCols.take(i) :+ col("bucket"))
     base
       .groupingSets(sets, (fieldCols :+ col("bucket")): _*)
-      .agg(sum(col("total")).as("total"), sum(col("cnt")).as("cnt"))
+      .agg(sum(col("total")).cast(DoubleType).as("total"), sum(col("cnt")).cast(LongType).as("cnt"))
       .withColumn("depth", depthCol)
       .withColumn("epoch",
         date_format(Tsdb.epochOf(col("bucket"), params.epochDuration), "yyyy-MM-dd"))
+  }
+
+  /** Open the existing store at `path` with the [[StoreParams]] its
+    * params.json declares, like kadiyadb's Open reading its params.json.
+    * Fails, naming the store, when the file is missing or unparseable:
+    * reading with default params would declare the wrong series fields.
+    */
+  def open(spark: SparkSession, path: String): MetricStore = {
+    val pf = Paths.get(path, ParamFile)
+    if (!Files.isRegularFile(pf))
+      throw new IllegalArgumentException(s"metric store '$path' has no $ParamFile")
+    val params = parseParams(Files.readString(pf)).getOrElse(
+      throw new IllegalArgumentException(s"metric store '$path' has an unparseable $ParamFile"))
+    new MetricStore(spark, path, params)
   }
 
   /** LoadAll: open every store under `rootDir` that has a params.json —

@@ -2,7 +2,14 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.core.{MetricStore, StoreParams}
 
@@ -47,6 +54,18 @@ class MetricStoreSpec extends SparkSpec {
     val r = store.fetch("2024-01-01", "2024-01-02", Seq(Some("cpu"), Some("host1"))).collect()
     assert(r.length == 1)
     assert(r.head.getAs[Double]("total") == 15.0 && r.head.getAs[Long]("cnt") == 4L)
+  }
+
+  test("integer ids and values are stored under the declared segment types") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graftstore_int").toString
+    val store = new MetricStore(spark, dir)
+    store.track(Seq(("2024-01-01 10:05:00", 7, 3, 10), ("2024-01-01 10:20:00", 7, 4, 5))
+      .toDF("ts", "f1", "f2", "value")
+      .withColumn("ts", col("ts").cast("timestamp_ntz")))
+    val r = store.fetch("2024-01-01", "2024-01-02", Seq(Some("7"))).collect()
+    assert(r.length == 1 && r.head.getAs[String]("f1") == "7")
+    assert(r.head.getAs[Double]("total") == 15.0 && r.head.getAs[Long]("cnt") == 2L)
   }
 
   test("arbitrary-depth hierarchies: 3-level fields, fetch at every depth") {
@@ -139,13 +158,154 @@ class MetricStoreSpec extends SparkSpec {
     store.track(mkEvents(Seq(("2024-01-01 20:05:00", "cpu", "h1", 4.0))))
     def files() = {
       val d = java.nio.file.Paths.get(dir, "points", "epoch=2024-01-01")
-      Files.list(d).filter(_.toString.endsWith(".parquet")).count()
+      Files.list(d).iterator().asScala.filter(_.toString.endsWith(".parquet")).toSeq
     }
-    assert(files() >= 3)
-    store.compact("2024-01-01", targetFiles = 2)
-    assert(files() <= 2) // bounded, but NOT forced through one task/file
+    assert(files().size >= 3)
+    // half the epoch's bytes per file -> the epoch's size calls for two files
+    val half = (files().map(Files.size).sum + 1) / 2
+    val plans = withConf("spark.sql.files.maxPartitionBytes" -> half.toString) {
+      plansDuring(store.compact("2024-01-01"))
+    }
+    assert(files().size == 2) // bounded, but NOT forced through one task/file
+    // the range exchange on bucket already clusters the merge's groups
+    assert(plans.map(shuffles).sum == 1, plans.mkString("\n"))
+    val ranges = files().map { f =>
+      val r = spark.read.parquet(f.toString).agg(min("bucket"), max("bucket")).head()
+      (r.getAs[java.time.LocalDateTime](0), r.getAs[java.time.LocalDateTime](1))
+    }.sortBy(_._1)
+    assert(ranges.zip(ranges.tail).forall { case ((_, hi), (lo, _)) => hi.isBefore(lo) },
+      s"compacted files overlap in bucket: $ranges")
     val r = store.fetch("2024-01-01", "2024-01-02", Seq(Some("cpu"), Some("h1"))).collect()
     assert(r.map(_.getAs[Double]("total")).sum == 7.0)
+  }
+
+  test("building a fetch starts no Spark job; compact runs through one shuffle") {
+    val dir = Files.createTempDirectory("graftstore_plan").toString
+    val store = new MetricStore(spark, dir)
+    store.track(mkEvents(Seq(("2024-01-01 08:05:00", "cpu", "h1", 1.0))))
+    store.track(mkEvents(Seq(("2024-01-01 12:05:00", "cpu", "h2", 2.0))))
+
+    val jobs = jobsDuring {
+      store.fetch("2024-01-01", "2024-01-02", Seq(Some("cpu"), None))
+    }
+    assert(jobs == 0, s"building the fetch frame ran $jobs Spark job(s)")
+
+    val plans = plansDuring(store.compact("2024-01-01"))
+    assert(plans.nonEmpty, "compact ran no query")
+    val nShuffles = plans.map(shuffles).sum
+    assert(nShuffles == 1, s"compact ran $nShuffles shuffle exchanges:\n${plans.mkString("\n")}")
+    val r = store.fetch("2024-01-01", "2024-01-02", Seq(Some("cpu"))).collect()
+    assert(r.map(_.getAs[Double]("total")).sum == 3.0)
+  }
+
+  test("fetch on a store with no data returns no rows with the store's schema") {
+    val fetchSchema = Seq("epoch", "depth", "f1", "f2", "bucket", "total", "cnt")
+    val never = new MetricStore(spark, Files.createTempDirectory("graftstore_none").toString)
+    val none = never.fetch("2024-01-01", "2024-01-02", Seq(Some("cpu")))
+    assert(none.schema.fieldNames.toSeq == fetchSchema)
+    assert(none.collect().isEmpty)
+    assert(never.cascade().collect().isEmpty)
+
+    // every epoch emptied by deleteSeries: points/ exists but holds no partition
+    val dir = Files.createTempDirectory("graftstore_emptied").toString
+    val emptied = new MetricStore(spark, dir)
+    emptied.track(mkEvents(Seq(
+      ("2024-01-01 10:05:00", "cpu", "alice", 1.0),
+      ("2024-01-02 10:05:00", "mem", "alice", 2.0))))
+    assert(emptied.deleteSeries(Seq(None, Some("alice"))) == 2L)
+    assert(Files.isDirectory(java.nio.file.Paths.get(dir, "points")))
+    val gone = emptied.fetch("2024-01-01", "2024-01-03", Seq(None, None))
+    assert(gone.schema.fieldNames.toSeq == fetchSchema)
+    assert(gone.collect().isEmpty)
+  }
+
+  test("graft_fetch opens the store with its own params.json (3-level fields)") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graftroot_sql").toString
+    val store = new MetricStore(spark, s"$root/infra",
+      StoreParams(fields = Seq("dc", "host", "metric")))
+    store.track(Seq(
+      ("2024-01-01 10:05:00", "us", "h1", "cpu", 10.0),
+      ("2024-01-01 10:20:00", "us", "h1", "cpu", 4.0),
+      ("2024-01-01 10:30:00", "us", "h1", "mem", 2.0))
+      .toDF("ts", "dc", "host", "metric", "value")
+      .withColumn("ts", col("ts").cast("timestamp_ntz")))
+    withConf("spark.graft.fetch.root" -> root) {
+      val r = spark.sql("SELECT * FROM graft_fetch('infra', 'us.h1.cpu', " +
+        "'2024-01-01', '2024-01-02')").collect()
+      assert(r.length == 1 && r.head.getAs[Int]("depth") == 3)
+      assert(r.head.getAs[Double]("total") == 14.0 && r.head.getAs[Long]("cnt") == 2L)
+      // a directory without params.json is refused, naming the store
+      Files.createDirectories(java.nio.file.Paths.get(root, "bare"))
+      val e = intercept[Exception](spark.sql(
+        "SELECT * FROM graft_fetch('bare', 'us', '2024-01-01', '2024-01-02')").collect())
+      assert(e.getMessage.contains("bare") && e.getMessage.contains(MetricStore.ParamFile))
+    }
+  }
+
+  /** Run `body` with session confs set, restoring their previous values. */
+  private def withConf[T](kvs: (String, String)*)(body: => T): T = {
+    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** Spark jobs `body` started, told apart from other threads' jobs by a
+    * job group. A marker job after it flushes the asynchronous listener
+    * bus: events arrive in order, so once the marker's start is seen
+    * every earlier job's is too.
+    */
+  private def jobsDuring(body: => Any): Int = {
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse(""))
+    }
+    def marker(id: String): Unit = {
+      spark.sparkContext.setJobGroup(id, id)
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.clearJobGroup()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!groups.contains(id) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(groups.contains(id), s"listener never saw marker job $id")
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.sparkContext.setJobGroup("graft-body", "graft-body")
+      try body finally spark.sparkContext.clearJobGroup()
+      marker("graft-marker")
+      groups.asScala.count(_ == "graft-body")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** Executed plans of the queries `body` ran. */
+  private def plansDuring(body: => Any): Seq[SparkPlan] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      val deadline = System.nanoTime() + 30000000000L
+      while (plans.isEmpty && System.nanoTime() < deadline) Thread.sleep(10)
+      plans.asScala.toSeq
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** Shuffle exchanges in an executed plan, through its adaptive stages. */
+  private def shuffles(p: SparkPlan): Int = p match {
+    case a: AdaptiveSparkPlanExec => shuffles(a.executedPlan)
+    case q: QueryStageExec => shuffles(q.plan)
+    case e: ShuffleExchangeLike => 1 + e.children.map(shuffles).sum
+    case other => (other.children ++ other.subqueries).map(shuffles).sum
   }
 
   test("expire drops epoch partitions beyond retention (cache.Expire)") {
