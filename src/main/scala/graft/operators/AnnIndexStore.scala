@@ -67,10 +67,9 @@ final class AnnIndexStore(spark: SparkSession, path: String) {
   def params: AnnIndexStore.Params = {
     val p = Paths.get(path, AnnIndexStore.ParamFile)
     require(Files.exists(p), s"no ${AnnIndexStore.ParamFile} under $path — not an ANN index store")
-    val json = Files.readString(p)
-    def num(key: String) =
-      s""""$key"\\s*:\\s*(\\d+)""".r.findFirstMatchIn(json).map(_.group(1).toInt)
-        .getOrElse(throw new IllegalStateException(s"$key missing in ${AnnIndexStore.ParamFile}"))
+    val json = CorpusArtifact.readParams(p)
+    def num(key: String) = json.getOrElse(key,
+      throw new IllegalStateException(s"$key missing in ${AnnIndexStore.ParamFile}")).toInt
     AnnIndexStore.Params(num("nSub"), num("nCent"), num("nCode"))
   }
 

@@ -1,9 +1,5 @@
 package graft.operators
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.AtomicLong
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -38,10 +34,8 @@ import graft.functions.Hashing
   *     ground-truth pairs (doc_a < doc_b, jaccard on the rd4 grid);
   *   - `lsh_pairs/` — [[Dedup.minhashLsh]] at [[Dedup.SharedPairFloor]]:
   *     the banded-LSH verified pairs;
-  *   - `params.json` — algo version + corpus fingerprint (row count +
-  *     order-independent xxhash64 over (doc_id, text)), validated on
-  *     open: a regenerated corpus rebuilds instead of serving stale
-  *     pairs.
+  *   - `params.json` — the [[CorpusArtifact]] manifest over (doc_id,
+  *     text), recording `shingle_n`, `exact_floor` and `lsh_floor`.
   *
   * Every persisted table is VALUE-identical to the session view it
   * replaces (persisting is plumbing — DocPairsStoreSpec proves each
@@ -172,71 +166,24 @@ object DocPairsStore {
     */
   val ShingleN = 3
 
-  /** Times the full build actually ran in this JVM — lets a spec prove
-    * consumers build nothing once the store exists.
-    */
-  private[graft] val buildCount = new AtomicLong(0)
-
-  private val opened = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), String]
-
-  /** Drop the in-process open handles (NOT the on-disk stores). */
-  private[graft] def dropHandles(): Unit = opened.clear()
-
-  /** Bump when the shingle/sketch/pair pipeline changes behavior — part
-    * of the params.json validity check (a code change rebuilds instead of
-    * serving a warm /tmp's pre-change pairs).
-    */
+  /** Bump when the shingle/sketch/pair pipeline changes behavior. */
   private[graft] val AlgoVersion = 1
 
-  private val pathLocks = scala.collection.concurrent.TrieMap.empty[String, Object]
+  /** The open memo holds only the validated base path. */
+  private val artifact = new CorpusArtifact[String](
+    "docpairs", "documents", "doc_id", "text", AlgoVersion)
 
-  private def root(dir: String): String = {
-    val digest = java.security.MessageDigest.getInstance("SHA-1")
-      .digest(dir.getBytes(StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString.take(16)
-    s"${sys.props("java.io.tmpdir")}/graft_docpairs/$digest/n$ShingleN"
-  }
+  private[graft] val buildCount = artifact.builds
 
-  /** Order-independent corpus fingerprint (the [[QuantizerStore]] one):
-    * row count + sum of a 64-bit hash over (doc_id, text).
-    */
-  private def fingerprint(d: DataFrame): String = {
-    val r = d.agg(
-      count(lit(1)).as("n"),
-      coalesce(sum(xxhash64(col("doc_id"), col("text"))), lit(0L)).as("h")
-    ).head()
-    s"${r.getLong(0)}_${r.getLong(1)}"
-  }
+  private[graft] def dropHandles(): Unit = artifact.dropHandles()
 
   private def ensure(s: SparkSession, dir: String): String =
-    opened.getOrElseUpdate((s, dir), {
-      val base = root(dir)
-      pathLocks.getOrElseUpdate(base, new Object).synchronized {
-        val paramPath = Paths.get(base, "params.json")
-        val docs = graft.core.Tables.load(s, dir, "documents")
-        val fp = fingerprint(docs)
-        val fresh = Files.exists(paramPath) && {
-          val txt = new String(Files.readAllBytes(paramPath), StandardCharsets.UTF_8)
-          txt.contains(s""""fp": "$fp"""") &&
-            txt.contains(s""""algo_version": $AlgoVersion,""")
-        }
-        if (!fresh) {
-          buildCount.incrementAndGet()
-          new DocPairsStore(s, base).build(docs)
-          Files.createDirectories(Paths.get(base))
-          Files.write(paramPath,
-            s"""{"fp": "$fp", "algo_version": $AlgoVersion, "shingle_n": $ShingleN, "exact_floor": ${Dedup.SharedExactFloor}, "lsh_floor": ${Dedup.SharedPairFloor}}"""
-              .getBytes(StandardCharsets.UTF_8))
-        }
-        base
-      }
-    })
+    artifact.open(s, dir, s"n$ShingleN", "shingle_n" -> ShingleN,
+      "exact_floor" -> Dedup.SharedExactFloor, "lsh_floor" -> Dedup.SharedPairFloor)(
+      (docs, base) => new DocPairsStore(s, base).build(docs))(identity)
 
   /** The persisted artifacts over `dir`'s documents — built once per
-    * corpus (fingerprint-validated), then served from disk to every
-    * consumer in every session. The open memo holds only the validated
-    * base path: nothing for SharedViews to reclaim.
+    * corpus, then served from disk to every consumer in every session.
     */
   def shingles(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(s"${ensure(s, dir)}/shingles")

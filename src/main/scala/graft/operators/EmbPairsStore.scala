@@ -1,9 +1,5 @@
 package graft.operators
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.AtomicLong
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -33,11 +29,8 @@ import graft.functions.{Hashing, VectorFunctions => V}
   *     verify-fetch table ([[LshIndexStore]]'s `docs/` precedent), so an
   *     [[append]] bands + verifies against PERSISTED state and never
   *     re-scans (or even needs) the source corpus;
-  *   - `params.json` — banding shape + algo version + a corpus
-  *     fingerprint (row count + order-independent xxhash64 over
-  *     (vec_id, embedding)), validated on open like kadiyadb's
-  *     params.json (database.go:127): a regenerated corpus rebuilds
-  *     instead of serving stale edges.
+  *   - `params.json` — the [[CorpusArtifact]] manifest over (vec_id,
+  *     embedding), recording `bands`, `rows_per_band` and `floor`.
   *
   * [[append]] ingests a new vector batch with zero touch of indexed rows:
   * the batch bands its own signatures, candidates resolve against the
@@ -135,69 +128,24 @@ object EmbPairsStore {
   val Bands = 4
   val RowsPerBand = 2
 
-  /** Times the edge build actually ran in this JVM — lets a spec prove
-    * consumers build nothing once the store exists.
-    */
-  private[graft] val buildCount = new AtomicLong(0)
-
-  private val opened = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
-  /** Drop the in-process open handles (NOT the on-disk stores). */
-  private[graft] def dropHandles(): Unit = opened.clear()
-
-  /** Bump when the banding/verify pipeline changes behavior — part of the
-    * params.json validity check (a code change rebuilds instead of
-    * serving a warm /tmp's pre-change edges).
-    */
+  /** Bump when the banding/verify pipeline changes behavior. */
   private[graft] val AlgoVersion = 1
 
-  private val pathLocks = scala.collection.concurrent.TrieMap.empty[String, Object]
+  /** The open memo holds only the disk-backed pair plan. */
+  private val artifact = new CorpusArtifact[DataFrame](
+    "embpairs", "embeddings", "vec_id", "embedding", AlgoVersion)
 
-  private def root(dir: String): String = {
-    val digest = java.security.MessageDigest.getInstance("SHA-1")
-      .digest(dir.getBytes(StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString.take(16)
-    s"${sys.props("java.io.tmpdir")}/graft_embpairs/$digest/f${Bands}x$RowsPerBand"
-  }
+  private[graft] val buildCount = artifact.builds
 
-  /** Order-independent corpus fingerprint (the [[QuantizerStore]] one):
-    * row count + sum of a 64-bit hash over (vec_id, embedding).
-    */
-  private def fingerprint(e: DataFrame): String = {
-    val r = e.agg(
-      count(lit(1)).as("n"),
-      coalesce(sum(xxhash64(col("vec_id"), col("embedding"))), lit(0L)).as("h")
-    ).head()
-    s"${r.getLong(0)}_${r.getLong(1)}"
-  }
+  private[graft] def dropHandles(): Unit = artifact.dropHandles()
 
   /** The persisted verified pair table over `dir`'s embeddings — built
-    * once per corpus (fingerprint-validated), then served from disk to
-    * every consumer in every session. The open memo holds only the
-    * disk-backed plan: nothing for SharedViews to reclaim.
+    * once per corpus, then served from disk to every consumer in every
+    * session.
     */
   def pairs(s: SparkSession, dir: String): DataFrame =
-    opened.getOrElseUpdate((s, dir), {
-      val base = root(dir)
-      pathLocks.getOrElseUpdate(base, new Object).synchronized {
-        val paramPath = Paths.get(base, "params.json")
-        val emb = graft.core.Tables.load(s, dir, "embeddings")
-        val fp = fingerprint(emb)
-        val fresh = Files.exists(paramPath) && {
-          val txt = new String(Files.readAllBytes(paramPath), StandardCharsets.UTF_8)
-          txt.contains(s""""fp": "$fp"""") &&
-            txt.contains(s""""algo_version": $AlgoVersion,""")
-        }
-        if (!fresh) {
-          buildCount.incrementAndGet()
-          new EmbPairsStore(s, base).build(emb)
-          Files.createDirectories(Paths.get(base))
-          Files.write(paramPath,
-            s"""{"fp": "$fp", "algo_version": $AlgoVersion, "bands": $Bands, "rows_per_band": $RowsPerBand, "floor": ${Similarity.SharedEmbFloor}}"""
-              .getBytes(StandardCharsets.UTF_8))
-        }
-        s.read.parquet(s"$base/pairs")
-      }
-    })
+    artifact.open(s, dir, s"f${Bands}x$RowsPerBand", "bands" -> Bands,
+      "rows_per_band" -> RowsPerBand, "floor" -> Similarity.SharedEmbFloor)(
+      (emb, base) => new EmbPairsStore(s, base).build(emb))(
+      base => s.read.parquet(s"$base/pairs"))
 }

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Path}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.{QuantizerStore, Similarity}
+import graft.operators.{CorpusArtifact, QuantizerStore, Similarity}
 
 /** The disk-persisted coarse quantizer store: the search path trains
   * NOTHING once the store exists (a fresh open reads parquet), values
@@ -80,12 +80,8 @@ class QuantizerStoreSpec extends SparkSpec {
     val cent1 = sortedRows(c1)
     // forge an old-format params.json: correct fingerprint, no algo tag —
     // exactly what a warm /tmp holds after a training-code change
-    val storeRoot = {
-      val digest = java.security.MessageDigest.getInstance("SHA-1")
-        .digest(dir.toString.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
-      java.nio.file.Paths.get(
-        s"${sys.props("java.io.tmpdir")}/graft_quantizers/$digest/pp8x3")
-    }
+    val storeRoot = java.nio.file.Paths.get(
+      CorpusArtifact.root("quantizers", dir.toString, "pp8x3"))
     val pj = storeRoot.resolve("params.json")
     val txt = new String(Files.readAllBytes(pj), "UTF-8")
     Files.write(pj, txt.replace(s""""algo_version": ${QuantizerStore.AlgoVersion},""", "")
