@@ -1,15 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Benchmark main: one compact JSON line with wall times at the target
   * scale factor. An untimed warmup pass first absorbs JVM/JIT/codegen and
   * filesystem-cache effects so the timed pass measures steady-state
   * throughput (the fair comparison against the reference's long-lived
-  * server process). Shared frozen views are cleared at the START of each
-  * timed pass ([[graft.core.SharedViews.clearAll]]) so their build cost
-  * is always paid inside the pass, billed to the first consumer — the
-  * warmup warms code paths, never data.
+  * server process). Every run goes through [[Harness.timeQuery]], which
+  * drops the shared frozen views before the query, so each query pays
+  * for the shared views it reads inside its own timing — the warmup
+  * warms code paths, never data.
   *
   * Output contract: the harness captures only the last ~2000 chars of the
   * run and parses the final JSON line, so the printed line lists the most
@@ -36,42 +36,30 @@ import org.apache.spark.sql.SparkSession
   * default BASELINE_duckdb.json, use BASELINE_sf1_duckdb.json at sf1),
   * SPARK_GRAFT_ONLY (comma-separated query names — family-subset
   * captures at stress scale factors, e.g. the dedup/ANN sf3 scaling
-  * probe; the printed total then covers only those queries),
-  * SPARK_GRAFT_GC_BETWEEN=1 (System.gc() before each timed query — an
-  * A/B isolation knob for long-JVM heap-pressure investigations, never
-  * on for committed captures: the pauses it injects are not workload).
+  * probe; the printed total then covers only those queries).
+  *
+  * A query that throws is not timed: its name is listed under `failed`
+  * (with `n_failed`) in both JSON outputs and the run exits 1.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val sfDir = Harness.sfDir
     val nPasses = sys.env.getOrElse("SPARK_GRAFT_PASSES", "3").toInt
     val baselineFile = sys.env.getOrElse("SPARK_GRAFT_BASELINE", "BASELINE_duckdb.json")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Scale-adaptive reduce-side sizing (opt guide §2.2): when false,
-      // AQE coalesces post-shuffle partitions toward
-      // advisoryPartitionSizeInBytes instead of preserving parallelism —
-      // the production-recommended setting at real data volumes, where
-      // partitions are sized by BYTES, not by the local core count.
-      // Env-overridable for A/B comparability with pre-r15 captures.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"))
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))
-    names.foreach { name =>
-      try SparkEntry.queries(name)(spark, sfDir).count()
-      catch { case _: Throwable => () }
-      spark.catalog.clearCache() // warmup must not hand cached tables to the timed pass
-    }
+    // a failed query is dropped from later passes
+    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
+    def timeOrFail(name: String): Option[Double] =
+      try Some(Harness.timeQuery(spark, name, sfDir))
+      catch { case NonFatal(e) =>
+        System.err.println(s"[bench] $name failed: $e")
+        failed += name; None
+      }
+    names.foreach(timeOrFail) // untimed warmup
     // Host-noise sentinel: fixed CPU-bound work, zero IO, zero data
     // dependence — 64M-row modular sum over an in-memory range, 32 tasks.
     // Identical code measured 45% apart across driver captures of round
@@ -159,28 +147,16 @@ object Bench {
     val memSentinels = scala.collection.mutable.ArrayBuffer.empty[Double]
     val floorSentinels = scala.collection.mutable.ArrayBuffer.empty[Double]
     val passes = (1 to nPasses).map { _ =>
-      // Honest accounting: drop every shared frozen view (and its
-      // checkpoint blocks) so each pass rebuilds them INSIDE the timing
-      // — a shared build bills to its first consumer and the pass wall
-      // time equals the sum of per-query times. Without this the builds
-      // hide in the untimed warmup (the round-9 verdict's finding).
-      graft.core.SharedViews.reclaimEverything(spark)
       sentinels += sentinel()
       memSentinels += memSentinel()
       floorSentinels += floorSentinel()
-      val gcBetween = sys.env.get("SPARK_GRAFT_GC_BETWEEN").contains("1")
-      names.map { name =>
-        if (gcBetween) { System.gc(); Thread.sleep(50) }
-        val t0 = System.nanoTime()
-        try SparkEntry.queries(name)(spark, sfDir).count()
-        catch { case _: Throwable => () }
-        spark.catalog.clearCache()
-        name -> (System.nanoTime() - t0) / 1e9
-      }.toMap
+      names.filterNot(failed.contains)
+        .flatMap(name => timeOrFail(name).map(name -> _)).toMap
     }
     def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
-    val results = names.map(n => n -> passes.map(_(n)).min)
-    val medians = names.map(n => n -> median(passes.map(_(n))))
+    val timedNames = names.filterNot(failed.contains)
+    val results = timedNames.map(n => n -> passes.map(_(n)).min)
+    val medians = timedNames.map(n => n -> median(passes.map(_(n))))
     val total = results.map(_._2).sum
     val totalMedian = medians.map(_._2).sum
     def r3(v: Double): String = f"$v%.3f"
@@ -225,7 +201,7 @@ object Bench {
       val haveAll = storeExempt.forall(perQ.contains)
       if (!haveAll) None else {
         val dEx = perQ.filter { case (k, _) =>
-          names.contains(k) && !storeExempt(k) }.values.sum
+          timedNames.contains(k) && !storeExempt(k) }.values.sum
         val sEx = results.collect { case (k, v) if !storeExempt(k) => v }.sum
         if (dEx <= 0) None
         else Some(s""","spark_vs_duckdb_excl_store":${r3(sEx / dEx)}""")
@@ -267,12 +243,13 @@ object Bench {
       .mkString("{", ",", "}")
     val detailMedian = medians.map { case (k, v) => "\"" + k + "\":" + r3(v) }
       .mkString("{", ",", "}")
+    val failedJson = s""""n_failed":${failed.size},"failed":""" +
+      failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val detailJson =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","value_median":${r3(totalMedian)},"value_sentinel_adj":${r3(totalSentAdj)},"sentinel_sec":$sentinelJson,"mem_sentinel_sec":$memSentinelJson,"floor_stage_sec":$floorJson,"n_queries":${names.size},"queries":$detail,"queries_median":$detailMedian,"sf":"$sfDir"}"""
-    try java.nio.file.Files.write(
+      s"""{"metric":"total","value":${r3(total)},"unit":"sec","value_median":${r3(totalMedian)},"value_sentinel_adj":${r3(totalSentAdj)},"sentinel_sec":$sentinelJson,"mem_sentinel_sec":$memSentinelJson,"floor_stage_sec":$floorJson,"n_queries":${names.size},$failedJson,"queries":$detail,"queries_median":$detailMedian,"sf":"$sfDir"}"""
+    java.nio.file.Files.write(
       java.nio.file.Paths.get("bench_detail.json"),
       (detailJson + "\n").getBytes("UTF-8"))
-    catch { case _: Throwable => () }
     // Printed line: costliest queries first, cut to a char budget so the
     // final JSON line survives the harness's bounded tail capture.
     val budget = 1400
@@ -284,6 +261,10 @@ object Bench {
     }
     val qs = kept.mkString("{", ",", "}")
     spark.stop()
-    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","value_median":${r3(totalMedian)}$vsBaseline,"sentinel_sec":$sentinelJson,"mem_sentinel_sec":$memSentinelJson,"floor_stage_sec":$floorJson,"n_queries":${names.size},"queries":$qs,"detail":"bench_detail.json","sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","value_median":${r3(totalMedian)}$vsBaseline,"sentinel_sec":$sentinelJson,"mem_sentinel_sec":$memSentinelJson,"floor_stage_sec":$floorJson,"n_queries":${names.size},$failedJson,"queries":$qs,"detail":"bench_detail.json","sf":"$sfDir"}""")
+    if (failed.nonEmpty) {
+      System.err.println(s"[bench] ${failed.size} queries failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

@@ -54,16 +54,12 @@ object Serve {
   def main(args: Array[String]): Unit = {
     val root = args.headOption.getOrElse("/tmp/graft_stores")
     val port = args.lift(1).getOrElse("15002")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-serve")
-      .config("spark.plugins", "org.apache.spark.sql.connect.SparkConnectPlugin")
-      .config("spark.connect.grpc.binding.port", port)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    // SPARK_MASTER points the server at a cluster; local[SPARK_GRAFT_CPUS] otherwise
+    val master = sys.env.get("SPARK_MASTER").map("spark.master" -> _)
+    val spark = Harness.session(master.toSeq ++ Seq(
+      "spark.app.name" -> "graft-serve",
+      "spark.plugins" -> "org.apache.spark.sql.connect.SparkConnectPlugin",
+      "spark.connect.grpc.binding.port" -> port): _*)
     val views = registerStores(spark, root)
     println(s"graft Spark Connect server at sc://localhost:$port")
     println(views.map(v => s"  global_temp.$v").mkString("\n"))

@@ -30,7 +30,7 @@ import graft.streaming.StreamingTracker.Point
 object StreamingScaleCheck {
   def main(args: Array[String]): Unit = {
     val nPoints = args.headOption.map(_.toInt).getOrElse(2000000)
-    val spark = Harness.session("spark.sql.session.timeZone" -> "UTC")
+    val spark = Harness.session()
     import spark.implicits._
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
 

@@ -35,7 +35,7 @@ object TextScaleCheck {
 
   def main(args: Array[String]): Unit = {
     val nDocs = args.headOption.map(_.toLong).getOrElse(5000000L)
-    val spark = Harness.session("spark.sql.session.timeZone" -> "UTC")
+    val spark = Harness.session()
     import spark.implicits._
 
     // ids, a source skewed enough to matter (source 0 gets ~10x the docs

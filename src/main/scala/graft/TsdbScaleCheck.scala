@@ -31,10 +31,10 @@ import graft.core.{MetricStore, StoreParams}
 object TsdbScaleCheck {
   def main(args: Array[String]): Unit = {
     val nEvents = args.headOption.map(_.toLong).getOrElse(50000000L)
-    // UTC pinned: phase 7's gorillaBits closed form reads
+    // the session is UTC: phase 7's gorillaBits closed form reads
     // unix_timestamp over TIMESTAMP_NTZ buckets, and a DST-bearing
     // default timezone would inject a spurious 3600 s delta jump
-    val spark = Harness.session("spark.sql.session.timeZone" -> "UTC")
+    val spark = Harness.session()
 
     val hosts = 500
     val metrics = 20 // 10k (host, metric) series

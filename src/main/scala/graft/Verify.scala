@@ -1,33 +1,28 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB oracle compare. A query's old
+  * output is removed before it runs, so a failure leaves no stale dump;
+  * the run exits 1 naming every failed query. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outDir = args(1)
     val subset = args.drop(2).toSet // optional query names for a fast partial dump
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(
+      "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
+    val failed = SparkEntry.queries.toSeq
       .filter { case (name, _) => subset.isEmpty || subset(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      .flatMap { case (name, fn) =>
+        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$outDir/$name"))
+        try { fn(spark, sfDir).coalesce(1).write.parquet(s"$outDir/$name"); None }
+        catch { case NonFatal(e) =>
+          System.err.println(s"[verify] $name failed: $e")
+          Some(name)
+        }
       }
-    }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -44,5 +39,9 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} queries failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

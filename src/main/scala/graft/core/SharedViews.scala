@@ -7,11 +7,10 @@ import org.apache.spark.sql.SparkSession
   * localCheckpoint tables: shingles, tokens, incidents, BM25 pools,
   * PCA moments, ranked revenue, …). Jobs:
   *
-  *  - **Honest bench accounting**: `graft.Bench` resets shared state at
-  *    the start of every timed pass, so each shared build re-runs inside
-  *    the pass and bills its cost to its first consumer — the pass wall
-  *    time equals the sum of per-query times, with no build cost hidden
-  *    in the untimed warmup.
+  *  - **Honest bench accounting**: `graft.Harness.timeQuery` resets
+  *    shared state before every timed query, so each query pays for the
+  *    shared views it reads inside its own timing, with no build cost
+  *    hidden in the untimed warmup or in an earlier consumer.
   *  - **Lifecycle**: localCheckpoint blocks bypass the CacheManager
   *    (`spark.catalog.clearCache()` does NOT release them), so a
   *    long-lived session that touches many dirs grows executor storage
@@ -75,8 +74,8 @@ object SharedViews {
     * every other persistent RDD of `spark`'s context — including
     * transient per-query localCheckpoint blocks (iterative operators
     * truncate lineage per round; those blocks otherwise live until JVM
-    * exit) and anything a user persisted. `graft.Bench`/`TimeQuery` call
-    * this between timed passes so storage cannot grow across a
+    * exit) and anything a user persisted. `graft.Harness.timeQuery` calls
+    * this before every timed query so storage cannot grow across a
     * 210-query pass; it is NOT part of the library surface.
     */
   def reclaimEverything(spark: SparkSession): Unit = synchronized {

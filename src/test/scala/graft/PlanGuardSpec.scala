@@ -208,8 +208,8 @@ class PlanGuardSpec extends SparkSpec {
 
   test("final-plan per-file scan counts never exceed the committed watchlist") {
     // Regenerate with:
-    //   PLAN_TSV=src/test/resources/plan_scan_watchlist.tsv \
-    //     SPARK_GRAFT_SF_DIR=/root/testdata/sf0.001 sbt "runMain graft.ProfilePlan"
+    //   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.001 \
+    //     sbt --error "runMain graft.Tool plan" > src/test/resources/plan_scan_watchlist.tsv
     // The r13 sweep found 60 queries with a BENIGN duplicate per-file
     // scan (each side re-reads a pruned column slice map-side — cheaper
     // than materializing at 100 TB) and two with a duplicated SHUFFLE
@@ -242,19 +242,16 @@ class PlanGuardSpec extends SparkSpec {
     // disease is still caught exactly by the per-file scan axis.
     val src = scala.io.Source.fromFile("src/test/resources/plan_scan_watchlist.tsv")
     val expected: Map[String, Map[String, Int]] =
-      try src.getLines().toSeq.map(_.split("\t")).collect {
-        case Array(q, f, n) => (q, f, n.toInt)
-      }.groupBy(_._1).map { case (q, rows) =>
-        q -> rows.collect { case (_, f, n) if f != "-" => f -> n }.toMap }
+      try PlanGuardSpec.parseWatchlist(src.getLines().toSeq)
       finally src.close()
     val missing = SparkEntry.queries.keys.filterNot(expected.contains)
     assert(missing.isEmpty,
       s"queries missing from the scan watchlist (re-sweep it): ${missing.mkString(", ")}")
     val missingExch = SparkEntry.queries.keys.filterNot(q =>
-      expected.get(q).exists(e => e.contains(ProfilePlan.ExchangesKey) &&
-        e.contains(ProfilePlan.BcastsKey)))
+      expected.get(q).exists(e => e.contains(Tool.ExchangesKey) &&
+        e.contains(Tool.BcastsKey)))
     assert(missingExch.isEmpty,
-      s"queries missing ${ProfilePlan.ExchangesKey}/${ProfilePlan.BcastsKey} " +
+      s"queries missing ${Tool.ExchangesKey}/${Tool.BcastsKey} " +
         s"watchlist rows (re-sweep it): ${missingExch.mkString(", ")}")
     // Force-build the standing stores BEFORE the sweep: a query whose
     // /tmp store is absent builds it inline with a different (bigger)
@@ -271,11 +268,11 @@ class PlanGuardSpec extends SparkSpec {
       }
     val offenders = SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
       graft.core.SharedViews.reclaimEverything(spark)
-      val (_, perFile, nExch, nBcast) = ProfilePlan.finalPlanScanCounts(spark, name, dir)
+      val (_, perFile, nExch, nBcast) = Tool.finalPlanScanCounts(spark, name, dir)
       spark.catalog.clearCache()
       val exp = expected(name)
-      val expStages = exp.getOrElse(ProfilePlan.ExchangesKey, 0) +
-        exp.getOrElse(ProfilePlan.BcastsKey, 0)
+      val expStages = exp.getOrElse(Tool.ExchangesKey, 0) +
+        exp.getOrElse(Tool.BcastsKey, 0)
       perFile.collect { case (f, n) if n > exp.getOrElse(f, 0) =>
         s"$name: $f x$n (watchlist ${exp.getOrElse(f, 0)})" } ++
         (if (nExch + nBcast > expStages)
@@ -287,4 +284,16 @@ class PlanGuardSpec extends SparkSpec {
       s"final-plan scan/exchange counts grew past the watchlist " +
         s"(duplicate-work regression):\n${offenders.mkString("\n")}")
   }
+}
+
+object PlanGuardSpec {
+
+  /** Parse watchlist TSV rows (query, file or pseudo-key, count) into
+    * query -> file -> count; a "-" file marks a query with no scans.
+    */
+  def parseWatchlist(lines: Seq[String]): Map[String, Map[String, Int]] =
+    lines.map(_.split("\t")).collect {
+      case Array(q, f, n) => (q, f, n.toInt)
+    }.groupBy(_._1).map { case (q, rows) =>
+      q -> rows.collect { case (_, f, n) if f != "-" => f -> n }.toMap }
 }

@@ -3,21 +3,12 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for specs (one per test JVM). */
+/** Shared local SparkSession for specs (one per test JVM), built by the
+  * mains' session factory on 4 cores. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.ansi.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
+  lazy val spark: SparkSession = Harness.session(4,
     // plan-guard specs assert on full PushedFilters/ReadSchema lists
-    .config("spark.sql.maxMetadataStringLength", "2000")
-    // match Serve's serving config: graft_* SQL functions registered via
-    // the extension, in every session of this context (incl. the
-    // sessions Spark Connect creates per remote client)
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .getOrCreate()
+    "spark.sql.maxMetadataStringLength" -> "2000")
 
   /** Tiny events frame with the production schema (ts/event_type/user_id/value). */
   def eventsDf(rows: Seq[(String, String, Long, Double)]): DataFrame = {
