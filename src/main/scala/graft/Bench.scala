@@ -6,10 +6,9 @@ import scala.util.control.NonFatal
   * scale factor. An untimed warmup pass first absorbs JVM/JIT/codegen and
   * filesystem-cache effects so the timed pass measures steady-state
   * throughput (the fair comparison against the reference's long-lived
-  * server process). Every run goes through [[Harness.timeQuery]], which
-  * drops the shared frozen views before the query, so each query pays
-  * for the shared views it reads inside its own timing — the warmup
-  * warms code paths, never data.
+  * server process). Every run goes through [[Harness.timeQuery]]; each
+  * query builds its inputs inside its own plan, so it pays for them
+  * inside its own timing — the warmup warms code paths, never data.
   *
   * Output contract: the harness captures only the last ~2000 chars of the
   * run and parses the final JSON line, so the printed line lists the most

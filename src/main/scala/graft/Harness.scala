@@ -55,9 +55,11 @@ object Harness {
   }
 
   /** Run one registered query for measurement and return its wall time in
-    * seconds: shared frozen views are dropped first so their builds are
-    * billed inside the timed region, and the catalog cache is cleared
-    * after so nothing carries into the next query. Failures propagate.
+    * seconds. Every query builds its inputs inside its own plan, so the
+    * timed region holds all of its work; storage is reclaimed first (the
+    * lineage-truncating checkpoints earlier queries left behind) and the
+    * catalog cache is cleared after, so nothing carries into the next
+    * query. Failures propagate.
     */
   def timeQuery(spark: SparkSession, name: String, dir: String): Double = {
     graft.core.SharedViews.reclaimEverything(spark)

@@ -16,6 +16,13 @@ object SparkEntry {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(s, dir, name)
 
+  /** Near-dup clusters: connected components of the store's verified
+    * pairs at Jaccard 0.5.
+    */
+  private def clusters(s: SparkSession, dir: String): DataFrame =
+    Dedup.clustersFromPairs(
+      Dedup.pairsAt(Dedup.sharedPairs(s, dir), 0.5).select(col("doc_a"), col("doc_b")))
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- B. analytics -------------------------------------------------
@@ -132,13 +139,14 @@ object SparkEntry {
       Similarity.matryoshkaRecall(t(s, dir, "embeddings"), Seq(8, 16, 32), 10, 10)),
     "dedup_survivors" -> ((s, dir) =>
       Dedup.survivorsOf(t(s, dir, "documents"), Dedup.pairsAt(Dedup.sharedPairs(s, dir), 0.5))),
-    "dedup_clusters" -> ((s, dir) => Dedup.sharedClusters(s, dir)),
-    "dedup_cluster_survivors" -> ((s, dir) =>
-      Dedup.clusterSurvivorsFrom(t(s, dir, "documents"), Dedup.sharedClusters(s, dir))),
+    "dedup_clusters" -> ((s, dir) => clusters(s, dir)),
+    "dedup_cluster_survivors" -> ((s, dir) => Dedup.clusterSurvivorsOf(
+      t(s, dir, "documents"), Dedup.pairsAt(Dedup.sharedPairs(s, dir), 0.5))),
     "sample_cluster_downweight" -> ((s, dir) => Dedup.clusterDownweightOf(
-      t(s, dir, "documents"), Dedup.sharedClusters(s, dir), "cd1")),
+      t(s, dir, "documents"), clusters(s, dir), "cd1")),
     "corpus_stats" -> ((s, dir) => Curation.corpusStats(t(s, dir, "documents"))),
-    "contamination_check" -> ((s, dir) => Dedup.sharedContamPairs(s, dir)),
+    "contamination_check" -> ((s, dir) =>
+      Dedup.contamination(t(s, dir, "documents"), col("doc_id") < 50)),
     "ann_bruteforce_topk" -> ((s, dir) => Similarity.bruteForceTopK(t(s, dir, "embeddings"), 10, 5)),
     "ann_lsh_topk" -> ((s, dir) => Similarity.lshTopK(t(s, dir, "embeddings"), 10, 5)),
     "ann_ivf_topk" -> ((s, dir) => Similarity.ivfTopK(t(s, dir, "embeddings"), 10, 5)),
@@ -190,7 +198,7 @@ object SparkEntry {
         lit("2024-01-05"), lit("2024-01-08"), Seq("purchase", "error"))),
     "text_tfidf_top_terms" -> ((s, dir) =>
       // in-row tf (run-length over sorted tokens): occurrences never
-      // shuffle, so this beats the sharedTokens route even warm
+      // shuffle, so this beats an exploded-token table
       TextAnalysis.tfidfTopTerms(t(s, dir, "documents"), 3)),
     "text_dup_span_coverage" -> ((s, dir) =>
       TextAnalysis.dupSpanCoverage(t(s, dir, "documents"), 8)),
@@ -204,8 +212,8 @@ object SparkEntry {
       Dedup.minhashEstimateOf(Dedup.sharedSigs(s, dir), 0.5)),
     "corpus_length_histogram" -> ((s, dir) =>
       TextAnalysis.lengthHistogram(t(s, dir, "documents"))),
-    "contamination_bloom" -> ((s, dir) => Dedup.contaminationBloomOf(
-      t(s, dir, "documents"), Dedup.sharedShingles(s, dir, 8), col("doc_id") < 50)),
+    "contamination_bloom" -> ((s, dir) =>
+      Dedup.contaminationBloom(t(s, dir, "documents"), col("doc_id") < 50)),
     "ts_ewma" -> ((s, dir) => Tsdb.ewma(Tsdb.points1(t(s, dir, "events")), 0.3)),
     "ts_lttb" -> ((s, dir) => Tsdb.lttb(Tsdb.points1(t(s, dir, "events")), 24)),
     "ts_stl_decompose" -> ((s, dir) => Tsdb.stlDecompose(Tsdb.points1(t(s, dir, "events")), 12)),
@@ -214,8 +222,7 @@ object SparkEntry {
     "ts_rollup_audit" -> ((s, dir) => Tsdb.rollupAudit(t(s, dir, "events"))),
     "sample_topn_per_stratum" -> ((s, dir) =>
       TextAnalysis.sampleTopNPerStratum(t(s, dir, "documents"), col("lang"), 10, "s1")),
-    "dedup_containment" -> ((s, dir) =>
-      Dedup.containmentOf(Dedup.sharedShingles(s, dir, 8), 0.6)),
+    "dedup_containment" -> ((s, dir) => Dedup.containment(t(s, dir, "documents"), 0.6)),
     "text_bow_embedding" -> ((s, dir) => TextAnalysis.bowEmbedding(t(s, dir, "documents"))),
     "ann_filtered_topk" -> ((s, dir) =>
       Similarity.filteredTopK(t(s, dir, "embeddings"), 10, 5, col("label") === 3)),
@@ -238,9 +245,8 @@ object SparkEntry {
     "ts_cusum" -> ((s, dir) => Tsdb.cusum(Tsdb.points1(t(s, dir, "events")), 200.0, 400.0)),
     "seq_packing" -> ((s, dir) => TextAnalysis.seqPack(t(s, dir, "documents"), 256)),
     "domain_mix_weights" -> ((s, dir) => TextAnalysis.mixWeights(t(s, dir, "documents"))),
-    "text_lm_score" -> ((s, dir) => TextAnalysis.sharedNll(s, dir)),
-    "corpus_ccnet_buckets" -> ((s, dir) => TextAnalysis.ccnetBucketsFrom(
-      TextAnalysis.sharedNll(s, dir), t(s, dir, "documents"))),
+    "text_lm_score" -> ((s, dir) => TextAnalysis.lmScore(t(s, dir, "documents"))),
+    "corpus_ccnet_buckets" -> ((s, dir) => TextAnalysis.ccnetBuckets(t(s, dir, "documents"))),
     "text_rake_keyphrases" -> ((s, dir) => TextAnalysis.rakeKeyphrases(t(s, dir, "documents"), 50)),
     "mm_aspect_bucket" -> ((s, dir) => Multimodal.aspectBuckets(t(s, dir, "documents"))),
     "mm_keyframes" -> ((s, dir) => Multimodal.keyframes(t(s, dir, "documents"))),
@@ -264,15 +270,12 @@ object SparkEntry {
     "dedup_edit_distance" -> ((s, dir) =>
       Dedup.editDistancePairsOf(t(s, dir, "documents"), Dedup.sharedSigs(s, dir), 0.5)),
     "ts_type_overlap" -> ((s, dir) => Tsdb.typeOverlap(t(s, dir, "events"))),
-    // deciles + pareto consume ONE shared ranked pass (sharedCustomerRanked)
-    "q_revenue_deciles" -> ((s, dir) =>
-      Analytics.revenueDecilesRanked(Analytics.sharedCustomerRanked(s, dir))),
+    "q_revenue_deciles" -> (Analytics.revenueDeciles _),
     "ts_forecast_eval" -> ((s, dir) => Tsdb.forecastEval(Tsdb.points1(t(s, dir, "events")), 0.3)),
     "ann_centroid_stats" -> ((s, dir) => { val (c, a) = Similarity.sharedKmeans(s, dir)
       Similarity.centroidStatsFrom(t(s, dir, "embeddings"), c, a) }),
     "ts_ohlc" -> ((s, dir) => Tsdb.ohlc(Tsdb.points1(t(s, dir, "events")), 6)),
-    "q_pareto_customers" -> ((s, dir) =>
-      Analytics.paretoCustomersRanked(Analytics.sharedCustomerRanked(s, dir))),
+    "q_pareto_customers" -> ((s, dir) => Analytics.paretoCustomers(s, dir)),
     "ts_topk_approx" -> ((s, dir) => Tsdb.topkApprox(t(s, dir, "events"))),
     "q_rfm" -> (Analytics.rfm _),
     "embedding_drift" -> ((s, dir) => Similarity.embeddingDrift(t(s, dir, "embeddings"))),
@@ -282,7 +285,7 @@ object SparkEntry {
     "q_hhi_concentration" -> (Analytics.hhiConcentration _),
     "ts_props_funnel" -> ((s, dir) => Tsdb.propsFunnel(t(s, dir, "events"))),
     "mm_scene_detect" -> ((s, dir) => Multimodal.sceneDetect(t(s, dir, "documents"))),
-    "ts_slo_streaks" -> ((s, dir) => Tsdb.sharedIncidents(s, dir, 0.25)),
+    "ts_slo_streaks" -> ((s, dir) => Tsdb.sloStreaks(t(s, dir, "events"), 0.25)),
     "dedup_normalized" -> ((s, dir) => Dedup.normalizedExact(t(s, dir, "documents"))),
     "ann_knn_label" -> ((s, dir) => Similarity.knnLabel(t(s, dir, "embeddings"), 10, 5)),
     "quality_percentiles" -> ((s, dir) =>
@@ -295,12 +298,12 @@ object SparkEntry {
     // 12 < |corpus vocabulary| at every test SF, so the band cutoff is
     // genuinely exercised (40 admitted the whole synthetic vocabulary)
     "text_vocab_coverage" -> ((s, dir) =>
-      TextAnalysis.vocabCoverageOf(TextAnalysis.sharedTokens(s, dir), 12)),
+      TextAnalysis.vocabCoverage(t(s, dir, "documents"), 12)),
     "dedup_threshold_curve" -> ((s, dir) =>
       Dedup.thresholdCurveOf(Dedup.sharedPairs(s, dir))),
     "dedup_blocking_recall" -> ((s, dir) => Dedup.blockingRecallFrom(
       Dedup.sharedExactPairs(s, dir), Dedup.sharedSigs(s, dir))),
-    "ts_mttr" -> ((s, dir) => Tsdb.mttrFrom(Tsdb.sharedIncidents(s, dir, 0.25))),
+    "ts_mttr" -> ((s, dir) => Tsdb.mttr(t(s, dir, "events"), 0.25)),
     "ann_recall_multiprobe" -> ((s, dir) =>
       Similarity.recallEvalMultiProbe(t(s, dir, "embeddings"), 10, 5)),
     "ann_recall_ivf" -> ((s, dir) =>
@@ -317,8 +320,10 @@ object SparkEntry {
       TextAnalysis.tokenizerFertility(t(s, dir, "documents"))),
     "source_overlap_matrix" -> ((s, dir) => Dedup.sourceOverlapOf(
       t(s, dir, "documents"), Dedup.pairsAt(Dedup.sharedPairs(s, dir), 0.5))),
-    "corpus_ngram_novelty" -> ((s, dir) => Dedup.ngramNoveltyOf(
-      t(s, dir, "documents"), Dedup.sharedShingles(s, dir, 8))),
+    "corpus_ngram_novelty" -> ((s, dir) => {
+      val d = t(s, dir, "documents")
+      Dedup.ngramNoveltyOf(d, Dedup.shingles(d, 8))
+    }),
     "cluster_label_purity" -> ((s, dir) => { val (_, a) = Similarity.sharedKmeans(s, dir)
       Similarity.clusterLabelPurityFrom(t(s, dir, "embeddings"), a) }),
     "embedding_threshold_curve" -> ((s, dir) =>
@@ -327,11 +332,10 @@ object SparkEntry {
       TextAnalysis.mixtureTokenShare(t(s, dir, "documents"), "mx1")),
     "text_chunk_windows" -> ((s, dir) =>
       TextAnalysis.chunkWindows(t(s, dir, "documents"), 64, 16)),
-    "text_bm25_topk" -> ((s, dir) => TextAnalysis.bm25TopOfPool(
-      TextAnalysis.sharedBm25Pool(s, dir, Seq("spark", "window", "join"), 20), 10)),
-    "hybrid_rrf_topk" -> ((s, dir) => Similarity.hybridRrfFromPool(
-      TextAnalysis.sharedBm25Pool(s, dir, Seq("spark", "window", "join"), 20),
-      t(s, dir, "embeddings"), 7L, 10)),
+    "text_bm25_topk" -> ((s, dir) => TextAnalysis.bm25TopK(
+      t(s, dir, "documents"), Seq("spark", "window", "join"), 10)),
+    "hybrid_rrf_topk" -> ((s, dir) => Similarity.hybridRrfTopK(t(s, dir, "documents"),
+      t(s, dir, "embeddings"), Seq("spark", "window", "join"), 7L, 10)),
     "text_gopher_rules" -> ((s, dir) =>
       TextAnalysis.gopherRules(t(s, dir, "documents"))),
     "sample_dsir_weights" -> ((s, dir) =>
@@ -349,18 +353,20 @@ object SparkEntry {
       // than a 10x-corpus localCheckpoint write+read used to cost
       TextAnalysis.curriculumStages(t(s, dir, "documents"), 4)),
     "data_kfold_grouped" -> ((s, dir) => Dedup.kfoldGroupedOf(
-      t(s, dir, "documents"), Dedup.sharedClusters(s, dir), 5, "kf1")),
+      t(s, dir, "documents"), clusters(s, dir), 5, "kf1")),
     "embedding_dim_stats" -> ((s, dir) =>
       Similarity.dimStats(t(s, dir, "embeddings"))),
-    "embedding_pca_power" -> ((s, dir) => Similarity.pcaPowerShared(s, dir, 1)),
+    "embedding_pca_power" -> ((s, dir) => Similarity.pcaPower(t(s, dir, "embeddings"), 1)),
     "embedding_outliers" -> ((s, dir) =>
       Similarity.embeddingOutliers(t(s, dir, "embeddings"), 20)),
     "packing_efficiency" -> ((s, dir) =>
       TextAnalysis.packingEfficiency(t(s, dir, "documents"))),
     "corpus_zipf_slope" -> ((s, dir) =>
       TextAnalysis.zipfSlope(t(s, dir, "documents"), 100)),
-    "corpus_top_boilerplate" -> ((s, dir) => Dedup.topBoilerplateOf(
-      t(s, dir, "documents"), Dedup.sharedShingles(s, dir, 8), 8, 20)),
+    "corpus_top_boilerplate" -> ((s, dir) => {
+      val d = t(s, dir, "documents")
+      Dedup.topBoilerplateOf(d, Dedup.shingles(d, 8), 8, 20)
+    }),
     "quality_filter_agreement" -> ((s, dir) =>
       TextAnalysis.filterAgreement(t(s, dir, "documents"), 0.55)),
     "ts_forecast_eval_hw" -> ((s, dir) =>
@@ -370,12 +376,14 @@ object SparkEntry {
     "domain_mix_temperature" -> ((s, dir) =>
       TextAnalysis.mixTemperature(t(s, dir, "documents"), 0.5)),
     "embedding_pca_histogram" -> ((s, dir) =>
-      Similarity.pcaHistogramShared(s, dir, 1, 0.5)),
+      Similarity.pcaProjectionHistogram(t(s, dir, "embeddings"), 1, 0.5)),
     "ann_tuning_curve" -> ((s, dir) =>
       Similarity.ivfTuningCurve(t(s, dir, "embeddings"), 10, 5, Seq(1, 2, 3))),
-    "corpus_decontaminated" -> ((s, dir) => Dedup.decontaminatedFrom(
-      t(s, dir, "documents"), Dedup.sharedContamPairs(s, dir),
-      col("doc_id") < 50, minShared = 2L)),
+    "corpus_decontaminated" -> ((s, dir) => {
+      val d = t(s, dir, "documents")
+      Dedup.decontaminatedFrom(d, Dedup.contamination(d, col("doc_id") < 50),
+        col("doc_id") < 50, minShared = 2L)
+    }),
     // re-ingestion scenario: 10 payloads arrive again under new ids (the
     // synthetic corpus has no byte-identical media, so the dup set is
     // planted to keep the oracle non-vacuous)

@@ -89,7 +89,7 @@ object Tool {
       override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
         stages.synchronized(stages += sc.stageInfo)
     }
-    def mb(b: Long) = f"${b / 1e6}%.0fMB"
+    def kb(b: Long) = f"${b / 1e3}%.1fkB"
     names.foreach { name =>
       Harness.timeQuery(spark, name, dir)
       stages.synchronized(stages.clear())
@@ -109,9 +109,9 @@ object Tool {
       }
       val m = done.map(_.taskMetrics)
       println(f"METRIC $name time=$dt%.2f stages=${done.size} tasks=${done.map(_.numTasks).sum} " +
-        s"input=${mb(m.map(_.inputMetrics.bytesRead).sum)} " +
-        s"shufw=${mb(m.map(_.shuffleWriteMetrics.bytesWritten).sum)} " +
-        s"shufr=${mb(m.map(_.shuffleReadMetrics.totalBytesRead).sum)}")
+        s"input=${kb(m.map(_.inputMetrics.bytesRead).sum)} " +
+        s"shufw=${kb(m.map(_.shuffleWriteMetrics.bytesWritten).sum)} " +
+        s"shufr=${kb(m.map(_.shuffleReadMetrics.totalBytesRead).sum)}")
     }
   }
 

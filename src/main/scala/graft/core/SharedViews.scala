@@ -1,86 +1,22 @@
 package graft.core
 
-import org.apache.spark.SparkContext
 import org.apache.spark.sql.SparkSession
 
-/** Registry of the shared-view caches (the per-(session, dir) frozen
-  * localCheckpoint tables: shingles, tokens, incidents, BM25 pools,
-  * PCA moments, ranked revenue, …). Jobs:
-  *
-  *  - **Honest bench accounting**: `graft.Harness.timeQuery` resets
-  *    shared state before every timed query, so each query pays for the
-  *    shared views it reads inside its own timing, with no build cost
-  *    hidden in the untimed warmup or in an earlier consumer.
-  *  - **Lifecycle**: localCheckpoint blocks bypass the CacheManager
-  *    (`spark.catalog.clearCache()` does NOT release them), so a
-  *    long-lived session that touches many dirs grows executor storage
-  *    unboundedly and serves stale results if a dir is rewritten
-  *    in-session. [[clearAll]] frees exactly the blocks the registry's
-  *    builders created — a library user's own cached/checkpointed
-  *    DataFrames survive (proven by SharedViewsScopeSpec).
-  *
-  * Every shared-view cache must be created via [[register]], and every
-  * registered builder body must run inside [[building]] so the RDD
-  * blocks it persists are recorded as registry-owned; a TrieMap that
-  * skips registration re-creates the silent-warmup problem the round-9
-  * verdict flagged.
-  *
-  * NOT safe to call concurrently with in-flight queries: unpersisting a
-  * localCheckpointed RDD discards its only copy (the lineage was
-  * truncated), so a still-referenced frozen view would fail on next use.
-  * Call between passes/datasets, never mid-query.
+/** Bench-harness storage reset. graft keeps no session-level view cache:
+  * a query builds its inputs inside its own plan, and reusable per-ingest
+  * state lives on disk in the fingerprint-checked corpus stores
+  * ([[graft.operators.CorpusArtifact]]).
   */
 object SharedViews {
-  private val clearers =
-    scala.collection.mutable.ArrayBuffer.empty[() => Unit]
-  private val ownedIds =
-    scala.collection.mutable.ArrayBuffer.empty[(SparkContext, Int)]
 
-  /** Register a shared-view cache; returns it for inline val-binding. */
-  def register[M <: scala.collection.concurrent.TrieMap[_, _]](m: M): M =
-    synchronized { clearers += (() => m.clear()); m }
-
-  /** Run a shared-view builder and record every RDD it left persisted
-    * (localCheckpoint blocks AND materialized persists) as
-    * registry-owned, so [[clearAll]] can free them without touching a
-    * user's own caches. Serialized with the registry lock: the
-    * before/after diff of the context's persistent-RDD set is exact as
-    * long as no CONCURRENT thread persists during the build — builders
-    * run at query setup, where that holds.
-    */
-  def building[T](s: SparkSession)(build: => T): T = synchronized {
-    val sc = s.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    val out = build
-    (sc.getPersistentRDDs.keySet -- before).foreach(id => ownedIds += ((sc, id)))
-    out
-  }
-
-  /** Drop every registered cache entry and unpersist every RDD the
-    * registry's builders persisted. Next access rebuilds from source.
-    * Scoped: a user's own cached tables / checkpointed DataFrames are
-    * NOT touched.
-    */
-  def clearAll(spark: SparkSession): Unit = synchronized {
-    clearers.foreach(_.apply())
-    ownedIds.foreach { case (sc, id) =>
-      if (!sc.isStopped)
-        sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false))
-    }
-    ownedIds.clear()
-  }
-
-  /** Bench-harness-only sweep: [[clearAll]] PLUS the catalog cache PLUS
-    * every other persistent RDD of `spark`'s context — including
-    * transient per-query localCheckpoint blocks (iterative operators
-    * truncate lineage per round; those blocks otherwise live until JVM
-    * exit) and anything a user persisted. `graft.Harness.timeQuery` calls
-    * this before every timed query so storage cannot grow across a
-    * 210-query pass; it is NOT part of the library surface.
+  /** Drop the catalog cache and unpersist every persistent RDD of
+    * `spark`'s context — including transient per-query localCheckpoint
+    * blocks (iterative operators truncate lineage per round; those blocks
+    * otherwise live until JVM exit) and anything a user persisted. The
+    * harnesses call this between timed queries so storage cannot grow
+    * across a pass; it is NOT part of the library surface.
     */
   def reclaimEverything(spark: SparkSession): Unit = synchronized {
-    clearers.foreach(_.apply())
-    ownedIds.clear()
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = false))

@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -1666,31 +1666,9 @@ object Tsdb {
     * and non-ANSI sessions (Spark 4.x defaults `spark.sql.ansi.enabled=
     * true`, where a bare divide-by-zero would throw DIVIDE_BY_ZERO).
     */
-  def mttr(events: DataFrame, budget: Double): DataFrame =
-    mttrFrom(sloStreaks(events, budget))
-
-  private val sharedIncidentsCache = graft.core.SharedViews.register(
-      scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Double), DataFrame])
-
-  /** The [[sloStreaks]] incident table over `dir`'s events, built ONCE
-    * per (session, dir, budget) and frozen — `ts_slo_streaks` IS this
-    * table and `ts_mttr` is one aggregation over it, so the hourly
-    * error-rate scan and the island rank run once for both (a real
-    * reliability pipeline materializes the incident log and every
-    * report reads it).
-    */
-  def sharedIncidents(s: SparkSession, dir: String, budget: Double): DataFrame =
-    sharedIncidentsCache.getOrElseUpdate((s, dir, budget),
-      graft.core.SharedViews.building(s) {
-        sloStreaks(graft.core.Tables.load(s, dir, "events"), budget)
-          .localCheckpoint()
-      })
-
-  /** [[mttr]] over a prebuilt incident table (e.g. [[sharedIncidents]]). */
-  def mttrFrom(incidents: DataFrame): DataFrame = {
+  def mttr(events: DataFrame, budget: Double): DataFrame = {
     val rd4 = graft.functions.Hashing.rd4 _
-    incidents.agg(
+    sloStreaks(events, budget).agg(
       count(lit(1)).as("n_incidents"),
       sum(col("n_hours")).as("total_bad_hours"),
       rd4(sum(col("n_hours")) / count(lit(1))).as("mttr_hours"),

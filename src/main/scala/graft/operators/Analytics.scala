@@ -558,52 +558,6 @@ object Analytics {
   def paretoCustomersOf(rev: DataFrame, cut: Double = 0.8): DataFrame =
     paretoFrom(rev, cut)
 
-  private val rankedRevenueCache = graft.core.SharedViews.register(
-      scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame])
-
-  /** The customer-revenue aggregate RANKED once: global rank, row total,
-    * exact cents running sum and grand total from ONE range shuffle
-    * ([[graft.core.Ranking.withRankAndSums]]), frozen per (session, dir).
-    * The decile and pareto reports both consume this — previously each
-    * paid its own two-phase rank pass over the identical aggregate, and
-    * a real workload running the report family should rank once. Values
-    * are unchanged: the rank/cum arithmetic is the same exact-long
-    * two-phase scan each report ran separately, so both oracle replays
-    * match bit for bit.
-    */
-  def sharedCustomerRanked(s: SparkSession, dir: String): DataFrame =
-    rankedRevenueCache.getOrElseUpdate((s, dir),
-      graft.core.SharedViews.building(s) {
-        Ranking.withRankAndSums(customerRevenue(s, dir),
-          Seq(col("revenue").desc, col("o_custkey")), "__rnk",
-          Seq((col("__cents"), "cum")),
-          totalCol = Some("__tot"), valueTotals = Map("cum" -> "tot"))
-          .localCheckpoint()
-      })
-
-  /** [[revenueDeciles]] over the [[sharedCustomerRanked]] view — decile
-    * assignment is a map-side ntile of the precomputed (rank, total).
-    */
-  def revenueDecilesRanked(ranked: DataFrame): DataFrame =
-    ranked
-      .withColumn("decile", Ranking.ntileOfRank(10, col("__rnk"), col("__tot")))
-      .groupBy(col("decile"))
-      .agg(count(lit(1)).as("n_customers"),
-        (sum(col("__cents")) / 100.0).as("total_revenue"),
-        min(col("revenue")).as("min_revenue"),
-        max(col("revenue")).as("max_revenue"))
-
-  /** [[paretoCustomers]] over the [[sharedCustomerRanked]] view — the
-    * kept-set filter is a map-side comparison of the precomputed
-    * running sum.
-    */
-  def paretoCustomersRanked(ranked: DataFrame, cut: Double = 0.8): DataFrame =
-    ranked
-      .filter((col("cum") - col("__cents")) / col("tot") < cut)
-      .select(col("o_custkey"), col("revenue"),
-        graft.functions.Hashing.rd4(col("cum") / col("tot")).as("cum_share"))
-
   /** RFM segmentation: per-customer Recency (last order date),
     * Frequency (order count) and Monetary (total spend), each quartiled
     * with key tie-breaks (1 = best), concatenated into the classic 'rfm'
@@ -705,11 +659,11 @@ object Analytics {
 
   /** Pareto analysis: the smallest customer set covering 80% of revenue.
     * The cumulative sum over the ORDERED per-customer aggregate (revenue
-    * desc, key tie-break) runs through [[graft.core.Ranking.withRunningSum]]
-    * — per-range-partition running sums plus broadcast partial-sum offsets
-    * — so the scan is 32-way parallel instead of one unpartitioned window
-    * task. The sum runs over the EXACT integer cents (long path — order-
-    * independent, no summation-grouping ULPs), so the kept-set filter
+    * desc, key tie-break) runs through [[ranked]] — per-range-partition
+    * running sums plus broadcast partial-sum offsets — so the scan is
+    * 32-way parallel instead of one unpartitioned window task. The sum
+    * runs over the EXACT integer cents (long path — order-independent,
+    * no summation-grouping ULPs), so the kept-set filter
     * compares a deterministic double quotient of identical integers on
     * both engines; a double revenue sum here could flip a row whose
     * exclusive share sits within ULPs of the cut. A customer is kept
@@ -719,9 +673,19 @@ object Analytics {
   def paretoCustomers(s: SparkSession, dir: String, cut: Double = 0.8): DataFrame =
     paretoFrom(customerRevenue(s, dir), cut)
 
+  /** The customer-revenue aggregate ranked by (revenue desc, custkey):
+    * global rank `__rnk`, row total `__tot`, exact cents running sum
+    * `cum` and its grand total `tot`, all from ONE range shuffle
+    * ([[graft.core.Ranking.withRankAndSums]]) — the input of both the
+    * decile and the pareto report.
+    */
+  private def ranked(rev: DataFrame): DataFrame =
+    Ranking.withRankAndSums(rev, Seq(col("revenue").desc, col("o_custkey")), "__rnk",
+      Seq((col("__cents"), "cum")),
+      totalCol = Some("__tot"), valueTotals = Map("cum" -> "tot"))
+
   private def paretoFrom(rev: DataFrame, cut: Double): DataFrame =
-    Ranking.withRunningSum(rev, None,
-        Seq(col("revenue").desc, col("o_custkey")), col("__cents"), "cum", Some("tot"))
+    ranked(rev)
       .filter((col("cum") - col("__cents")) / col("tot") < cut)
       .select(col("o_custkey"), col("revenue"),
         graft.functions.Hashing.rd4(col("cum") / col("tot")).as("cum_share"))
@@ -736,8 +700,7 @@ object Analytics {
     decilesFrom(customerRevenue(s, dir))
 
   private def decilesFrom(rev: DataFrame): DataFrame =
-    Ranking.withGlobalRank(rev,
-        Seq(col("revenue").desc, col("o_custkey")), "__rnk", Some("__tot"))
+    ranked(rev)
       .withColumn("decile", Ranking.ntileOfRank(10, col("__rnk"), col("__tot")))
       .groupBy(col("decile"))
       .agg(count(lit(1)).as("n_customers"),

@@ -447,10 +447,6 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
   }
 
-  private val sharedShinglesCache =
-    graft.core.SharedViews.register(
-      scala.collection.concurrent.TrieMap.empty[(SparkSession, String, Int), DataFrame])
-
   /** The distinct n-gram shingle table over `dir`'s documents — the
     * upstream half of every shingle consumer (Jaccard, containment,
     * contamination, the MinHash sketch build). r16: at the default
@@ -458,16 +454,13 @@ object Dedup {
     * per-ingest artifact (a real pipeline materializes the shingle
     * table when the corpus lands — the scaladoc's long-standing claim,
     * now literally true); other widths (the n=8 contamination family)
-    * stay session-frozen views tokenized once per (session, dir, n).
+    * are a plain [[shingles]] plan over the current documents.
     * Df-capping stays per-consumer (it is a cheap aggregate over this
     * table, and consumers differ in whether they cap).
     */
   def sharedShingles(s: SparkSession, dir: String, n: Int = 3): DataFrame =
     if (n == DocPairsStore.ShingleN) DocPairsStore.shingles(s, dir)
-    else sharedShinglesCache.getOrElseUpdate((s, dir, n),
-      graft.core.SharedViews.building(s) {
-        shingles(graft.core.Tables.load(s, dir, "documents"), n).localCheckpoint()
-      })
+    else shingles(graft.core.Tables.load(s, dir, "documents"), n)
 
   /** The MinHash signature table over `dir`'s documents (doc_id +
     * NumPerms min-hash columns) — the sketch store a real pipeline
@@ -692,7 +685,10 @@ object Dedup {
     */
   def contaminationOf(docs: DataFrame, shin: DataFrame, isTest: Column,
       maxDf: Long = 50L): DataFrame = {
-    val sh = capShingles(shin, maxDf)
+    // the shingle table is frozen once per call: the df cap and the test
+    // and train sides each read it, and unfrozen every read re-shingles
+    // the corpus
+    val sh = capShingles(shin.localCheckpoint(), maxDf)
       .join(docs.select(col("doc_id"), isTest.as("__is_test")), "doc_id")
     val test = sh.filter(col("__is_test")).select(col("doc_id").as("test_id"), col("shingle"))
     val train = sh.filter(!col("__is_test")).select(col("doc_id").as("train_id"), col("shingle"))
@@ -705,8 +701,8 @@ object Dedup {
     * every doc sharing ≥ `minShared` rare n-grams with the test set
     * REMOVED — what actually ships to the trainer after the audit. One
     * anti-join of the (corpus-sublinear) flagged-id set against the
-    * train side; the expensive stage is the shared contamination pair
-    * table the audit query already built (see [[sharedContamPairs]]).
+    * train side; the expensive stage is the [[contamination]] pair
+    * table that feeds it.
     */
   def decontaminatedFrom(docs: DataFrame, pairs: DataFrame, isTest: Column,
       minShared: Long = 1L): DataFrame = {
@@ -717,25 +713,6 @@ object Dedup {
       .join(flagged, Seq("doc_id"), "left_anti")
       .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
   }
-
-  private val contamPairsCache =
-    graft.core.SharedViews.register(
-      scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame])
-
-  /** The exact-8-gram contamination pair table for `dir`'s documents
-    * against the fixed doc_id < 50 test slice, built ONCE per
-    * (session, dir) and frozen — the [[sharedPairs]] pattern on the
-    * train/test axis: the audit listing and the decontaminated-corpus
-    * materialization both start from this table (a pipeline pays the
-    * rare-gram join once per ingest snapshot, then reads it for every
-    * report and the final anti-join).
-    */
-  def sharedContamPairs(s: SparkSession, dir: String): DataFrame =
-    contamPairsCache.getOrElseUpdate((s, dir),
-      graft.core.SharedViews.building(s) {
-        contaminationOf(graft.core.Tables.load(s, dir, "documents"),
-          sharedShingles(s, dir, 8), col("doc_id") < 50).localCheckpoint()
-      })
 
   /** Bloom-sketch contamination prefilter: an m-bit, k=2 Bloom filter of
     * the test set's n-gram hashes, built as a distributed bit_or over
@@ -972,37 +949,13 @@ object Dedup {
     clusterSurvivorsOf(docs, minhashLsh(docs, threshold))
 
   /** [[clusterSurvivors]] over a precomputed verified-pair table. */
-  def clusterSurvivorsOf(docs: DataFrame, pairs: DataFrame): DataFrame =
-    clusterSurvivorsFrom(docs,
-      clustersFromPairs(pairs.select(col("doc_a"), col("doc_b"))))
-
-  /** [[clusterSurvivors]] over an already-built cluster table
-    * (e.g. [[sharedClusters]]).
-    */
-  def clusterSurvivorsFrom(docs: DataFrame, clusters: DataFrame): DataFrame = {
-    val drop = clusters
+  def clusterSurvivorsOf(docs: DataFrame, pairs: DataFrame): DataFrame = {
+    val drop = clustersFromPairs(pairs.select(col("doc_a"), col("doc_b")))
       .filter(col("doc_id") =!= col("cluster_id"))
       .select(col("doc_id"))
     docs.join(drop, Seq("doc_id"), "left_anti")
       .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
   }
-
-  private val sharedClustersCache =
-    graft.core.SharedViews.register(
-      scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame])
-
-  /** The connected-components cluster table at threshold 0.5 over the
-    * shared verified-pair view, built ONCE per (session, dir) and frozen —
-    * the iterative label propagation is the costliest stage its three
-    * consumers (cluster listing, transitive survivors, cluster-aware
-    * downsampling) were each re-running.
-    */
-  def sharedClusters(s: SparkSession, dir: String): DataFrame =
-    sharedClustersCache.getOrElseUpdate((s, dir),
-      graft.core.SharedViews.building(s) {
-        clustersFromPairs(pairsAt(sharedPairs(s, dir), 0.5)
-          .select(col("doc_a"), col("doc_b"))).localCheckpoint()
-      })
 
   /** Cluster-aware downsampling (the "soft dedup" alternative to hard
     * survivor selection): every doc in a near-dup cluster of size c gets
@@ -1047,8 +1000,7 @@ object Dedup {
     * contamination checks: without grouping, a near-copy of a training
     * doc lands in the eval fold and inflates the score). Unclustered
     * docs are their own group. One left join against the bounded cluster
-    * table plus a map-side hash — no new shuffle beyond what the shared
-    * components view already paid.
+    * table (e.g. [[clustersFromPairs]]' output) plus a map-side hash.
     */
   def kfoldGroupedOf(docs: DataFrame, clusters: DataFrame, k: Int,
       salt: String): DataFrame =
@@ -1173,7 +1125,7 @@ object Dedup {
     // in-bench time swung 2x with surrounding heap pressure; the join
     // shape below stays in whole-stage codegen end to end.
     val d = simhashFingerprints(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // Hamming-0 pairs: identical fps pair among themselves — a codegen
     // fp-equi self-join (doc_a < doc_b gives each pair once). A dup
     // flood is ONE hot fp key: sort-merge join buffers the matched

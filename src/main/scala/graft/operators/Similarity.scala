@@ -1099,34 +1099,8 @@ object Similarity {
     * the corpus-side work is exactly one BM25 pass and one cosine scan.
     */
   def hybridRrfTopK(docs: DataFrame, emb: DataFrame, queryTerms: Seq[String],
-      queryVecId: Long, k: Int, poolSize: Int = 20, kRrf: Int = 60): DataFrame =
-    hybridRrfFromPool(TextAnalysis.bm25TopK(docs, queryTerms, poolSize),
-      emb, queryVecId, k, poolSize, kRrf)
-
-  /** [[hybridRrfTopK]] over a prebuilt BM25 candidate pool
-    * (e.g. [[graft.operators.TextAnalysis.sharedBm25Pool]]) — the
-    * corpus-side lexical pass runs once for every fusion consumer. The
-    * rank windows re-sort the pool explicitly (a checkpointed pool
-    * carries no row order), so the fused output is identical to the
-    * cold path. The re-sort ends in `.limit(poolSize)` — a no-op on a
-    * pool that is already ≤ poolSize rows (the prefix property: sorting
-    * then limiting a bounded pool returns the same set) — so the rank
-    * window's input is plan-provably bounded even when the pool arrives
-    * as a checkpointed LogicalRDD with no Limit node of its own.
-    */
-  def hybridRrfFromPool(lexPool: DataFrame, emb: DataFrame,
       queryVecId: Long, k: Int, poolSize: Int = 20, kRrf: Int = 60): DataFrame = {
-    // loud contract check instead of a silent cut: a pool larger than
-    // poolSize means the caller built it with a different bound, and
-    // truncating it here would change which docs receive lex ranks.
-    // limit(poolSize+1) keeps the probe O(poolSize) however big the
-    // input is.
-    val probe = lexPool.limit(poolSize + 1).count()
-    require(probe <= poolSize,
-      s"lexPool carries > poolSize ($poolSize) rows — build the pool with " +
-        "the same poolSize as the fusion call (sharedBm25Pool contract)")
-    val lexRank = lexPool
-      .orderBy(col("score").desc, col("doc_id")).limit(poolSize)
+    val lexRank = TextAnalysis.bm25TopK(docs, queryTerms, poolSize)
       .withColumn("lex_rank",
         row_number().over(Window.orderBy(col("score").desc, col("doc_id"))))
       .select(col("doc_id").as("id"), col("lex_rank"))
@@ -1318,7 +1292,9 @@ object Similarity {
     * convergence — each extra round is the same two jobs.
     */
   /** Grid-snapped, mean-centered (vec_id, dim, c) table — the input both
-    * PCA entry points iterate over.
+    * PCA entry points iterate over — frozen once per call: every power
+    * round reads it twice, and the histogram's projection pass (which
+    * runs after the rounds) reads it again.
     */
   private def pcaCentered(emb: DataFrame): DataFrame = {
     val flat = emb
@@ -1331,9 +1307,10 @@ object Similarity {
       .select(col("vec_id"), col("dim"),
         (col("g") / 1000000.0 - col("sg") / (col("n") * 1000000.0)).as("c"),
         col("n"))
+      .localCheckpoint()
   }
 
-  /** Power-iterate over a (persisted) centered table; returns the unit
+  /** Power-iterate over the frozen centered table; returns the unit
     * direction (1e-6 grid) and the eigenvalue estimate.
     */
   private def pcaIterate(cDf: DataFrame, dim: Int,
@@ -1364,47 +1341,11 @@ object Similarity {
   }
 
   def pcaPower(emb: DataFrame, iters: Int = 1, dim: Int = 64): DataFrame = {
-    val cDf = pcaCentered(emb)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (v, eig) = pcaIterate(cDf, dim, iters)
-    cDf.unpersist()
-    pcaDirectionDf(emb.sparkSession, v.toSeq, eig, dim)
-  }
-
-  private def pcaDirectionDf(session: SparkSession, v: Seq[Double],
-      eig: Double, dim: Int): DataFrame = {
+    val (v, eig) = pcaIterate(pcaCentered(emb), dim, iters)
     val eigOut = math.floor(eig * 10000.0 + 0.5) / 10000.0
-    session.createDataFrame(
+    emb.sparkSession.createDataFrame(
       (1 to dim).map(i => (i, v(i - 1), eigOut)))
       .toDF("dim", "loading", "eigenvalue")
-  }
-
-  private val sharedPcaCache = graft.core.SharedViews.register(
-    scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, String, Int, Int), (DataFrame, Seq[Double], Double)])
-
-  /** The centered embedding table + trained top-PC direction over
-    * `dir`'s embeddings, computed ONCE per (session, dir, iters, dim)
-    * and frozen — the [[graft.operators.Dedup.sharedShingles]] precedent
-    * for PCA: `embedding_pca_power` IS the direction, and
-    * `embedding_pca_histogram` projects the frozen centered table onto
-    * it, so the centering scan and the power rounds run once for both.
-    */
-  def sharedPca(s: SparkSession, dir: String, iters: Int = 1,
-      dim: Int = 64): (DataFrame, Seq[Double], Double) =
-    sharedPcaCache.getOrElseUpdate((s, dir, iters, dim),
-      graft.core.SharedViews.building(s) {
-        val cDf = pcaCentered(
-          graft.core.Tables.load(s, dir, "embeddings")).localCheckpoint()
-        val (v, eig) = pcaIterate(cDf, dim, iters)
-        (cDf, v.toSeq, eig)
-      })
-
-  /** [[pcaPower]] through the [[sharedPca]] cache. */
-  def pcaPowerShared(s: SparkSession, dir: String, iters: Int = 1,
-      dim: Int = 64): DataFrame = {
-    val (_, v, eig) = sharedPca(s, dir, iters, dim)
-    pcaDirectionDf(s, v, eig, dim)
   }
 
   /** Corpus distribution along the top principal component: every vector
@@ -1419,21 +1360,8 @@ object Similarity {
   def pcaProjectionHistogram(emb: DataFrame, iters: Int = 1,
       binWidth: Double = 0.5, dim: Int = 64): DataFrame = {
     val cDf = pcaCentered(emb)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val (v, _) = pcaIterate(cDf, dim, iters)
-    // the cache stays live for the returned plan's final projection pass
-    // (it executes after this returns); an eager unpersist here would
-    // force a recompute of the centered table. Bounded like the shared
-    // views: one cached table per call, dropped by the caller's
-    // clearCache between bench queries.
     pcaHistogramOf(cDf, v.toSeq, binWidth)
-  }
-
-  /** [[pcaProjectionHistogram]] through the [[sharedPca]] cache. */
-  def pcaHistogramShared(s: SparkSession, dir: String, iters: Int = 1,
-      binWidth: Double = 0.5, dim: Int = 64): DataFrame = {
-    val (cDf, v, _) = sharedPca(s, dir, iters, dim)
-    pcaHistogramOf(cDf, v, binWidth)
   }
 
   private def pcaHistogramOf(cDf: DataFrame, v: Seq[Double],

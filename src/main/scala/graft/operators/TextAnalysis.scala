@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -25,62 +25,14 @@ object TextAnalysis {
   def nTokensL(text: Column): Column =
     graft.functions.TextStatsExpr.stats(text).getField("n_tokens")
 
-  private val sharedTokensCache =
-    graft.core.SharedViews.register(
-      scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame])
-
-  /** The exploded (doc_id, tok) token table over `dir`'s documents,
-    * tokenized ONCE per (session, dir) and frozen — the upstream half of
-    * every whole-corpus term-statistics consumer (tf-idf, BM25, vocab
-    * coverage, the LM-score vocabulary). The regex tokenize + explode is
-    * the scan-stage cost each of those queries was paying separately; a
-    * real pipeline materializes the token table at ingest (the
-    * [[graft.operators.Dedup.sharedShingles]] precedent, one level below
-    * shingling). Unfiltered — `split` emits empty-string tokens on
-    * leading whitespace and every doc yields ≥ 1 row, so per-doc counts
-    * over this table equal `size(tokens(text))` exactly and consumers
-    * that drop empty terms filter for themselves.
+  /** The exploded (doc_id, tok) whitespace-token table. Unfiltered:
+    * `split` emits an empty-string token on leading whitespace and every
+    * doc yields at least one row, so per-doc row counts equal
+    * `size(tokens(text))`; consumers that drop empty terms filter for
+    * themselves.
     */
-  def sharedTokens(s: SparkSession, dir: String): DataFrame =
-    sharedTokensCache.getOrElseUpdate((s, dir),
-      graft.core.SharedViews.building(s) {
-        graft.core.Tables.load(s, dir, "documents")
-          .select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
-          .localCheckpoint()
-      })
-
-  private val sharedNllCache =
-    graft.core.SharedViews.register(
-      scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame])
-
-  /** The per-doc LM-score table (doc_id, n_tokens, avg_nll), built ONCE
-    * per (session, dir) from [[sharedTokens]] and frozen — `text_lm_score`
-    * IS this table and `corpus_ccnet_buckets` re-ranks it per language,
-    * so the corpus-wide NLL join runs once for both.
-    */
-  def sharedNll(s: SparkSession, dir: String): DataFrame =
-    sharedNllCache.getOrElseUpdate((s, dir),
-      graft.core.SharedViews.building(s) {
-        lmScoreOf(sharedTokens(s, dir)).localCheckpoint()
-      })
-
-  private val sharedBm25Cache =
-    graft.core.SharedViews.register(
-      scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String, Int), DataFrame])
-
-  /** The BM25 top-`poolSize` candidate pool for one fixed query-term
-    * set, computed ONCE per (session, dir, terms, poolSize) from
-    * [[sharedTokens]] and frozen — `text_bm25_topk` is a re-sorted
-    * prefix of this pool and `hybrid_rrf_topk`'s lexical arm consumes it
-    * whole, so the corpus-side BM25 pass runs once for both.
-    */
-  def sharedBm25Pool(s: SparkSession, dir: String, terms: Seq[String],
-      poolSize: Int): DataFrame =
-    sharedBm25Cache.getOrElseUpdate((s, dir, terms.mkString("\u0000"), poolSize),
-      graft.core.SharedViews.building(s) {
-        bm25TopKOf(sharedTokens(s, dir), terms, poolSize).localCheckpoint()
-      })
-
+  private def tokenTable(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
 
   /** Token counting: whitespace tokens + a BPE-ish regex sub-token count. */
   def tokenCounts(docs: DataFrame): DataFrame =
@@ -270,18 +222,6 @@ object TextAnalysis {
                      - element_at(starts, j)) AS BIGINT) AS tf))
            END""")).as("p"))
       .select(col("doc_id"), col("p.term").as("term"), col("p.tf").as("tf"))
-
-  /** [[tfidfTopTerms]] over a prebuilt exploded token table
-    * (e.g. [[sharedTokens]]) — `docs` supplies only the 1-row corpus
-    * count. Identical output to the cold path (the shared view IS the
-    * same explode of the same corpus).
-    */
-  def tfidfTopTermsFrom(docs: DataFrame, tk: DataFrame, k: Int): DataFrame =
-    tfidfScoredFrom(docs,
-      tk.select(col("doc_id"), col("tok").as("term"))
-        .filter(length(col("term")) > 0)
-        .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf")),
-      k)
 
   /** Score + per-doc rank over a prebuilt (doc_id, term, tf) table —
     * shared by the in-row ([[inRowTf]]) and exploded-token derivations.
@@ -805,18 +745,9 @@ object TextAnalysis {
     * terms never shuffle), tiny df/stats tables broadcast, top-k via
     * TakeOrdered with doc_id tie-break.
     */
-  def bm25TopK(docs: DataFrame, queryTerms: Seq[String], k: Int): DataFrame =
-    bm25TopKOf(
-      docs.select(col("doc_id"), explode(tokens(col("text"))).as("tok")),
-      queryTerms, k)
-
-  /** [[bm25TopK]] over a prebuilt exploded token table
-    * (e.g. [[sharedTokens]]). Document length is the per-doc row count
-    * of the token table — equal to `size(tokens(text))` because `split`
-    * never yields an empty array (empty text tokenizes to one empty
-    * string), so `nd`/`avgdl`/`dl` match the cold path bit-for-bit.
-    */
-  def bm25TopKOf(tk: DataFrame, queryTerms: Seq[String], k: Int): DataFrame = {
+  def bm25TopK(docs: DataFrame, queryTerms: Seq[String], k: Int): DataFrame = {
+    // document length dl is the per-doc row count of the token table
+    val tk = tokenTable(docs)
     val dl = tk.groupBy(col("doc_id")).agg(count(lit(1)).cast("double").as("dl"))
     val stats = dl.agg(count(lit(1)).cast("double").as("nd"), avg(col("dl")).as("avgdl"))
     val tf = tk
@@ -839,16 +770,6 @@ object TextAnalysis {
       .limit(k)
   }
 
-  /** Top-`k` re-sort of a prebuilt BM25 pool (e.g. [[sharedBm25Pool]]):
-    * the top-k under (score desc, doc_id) of a top-`poolSize` pool under
-    * the same total order is the top-k of the corpus whenever
-    * k ≤ poolSize — the prefix property of a total order. The explicit
-    * re-sort matters: a checkpointed pool carries no row-order
-    * guarantee, so a bare `.limit(k)` would take arbitrary rows.
-    */
-  def bm25TopOfPool(pool: DataFrame, k: Int): DataFrame =
-    pool.orderBy(col("score").desc, col("doc_id")).limit(k)
-
   /** Vocabulary coverage / OOV rate: keep the most frequent types and
     * report each doc's covered-token fraction — the report that sizes a
     * tokenizer vocabulary (coverage vs table size). The vocabulary cut is
@@ -869,14 +790,8 @@ object TextAnalysis {
     * violated to admit a band. The oracle SQL encodes the same rule
     * (cnt >= NULL admits nothing); pinned by spec.
     */
-  def vocabCoverage(docs: DataFrame, vocabSize: Int): DataFrame =
-    vocabCoverageOf(
-      docs.select(col("doc_id"), explode(tokens(col("text"))).as("tok")), vocabSize)
-
-  /** [[vocabCoverage]] over a prebuilt exploded token table
-    * (e.g. [[sharedTokens]]).
-    */
-  def vocabCoverageOf(tk: DataFrame, vocabSize: Int): DataFrame = {
+  def vocabCoverage(docs: DataFrame, vocabSize: Int): DataFrame = {
+    val tk = tokenTable(docs)
     val vocabCnt = tk.groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
     val ff = vocabCnt.groupBy(col("cnt")).agg(count(lit(1)).as("n_types"))
     val cstar = graft.core.Ranking
@@ -922,13 +837,8 @@ object TextAnalysis {
     * equi-join is the classic wordcount shuffle: skewed stopword keys
     * are AQE-split, and the 1-row total is a broadcast, not a shuffle.
     */
-  def lmScore(docs: DataFrame): DataFrame =
-    lmScoreOf(docs.select(col("doc_id"), explode(tokens(col("text"))).as("tok")))
-
-  /** [[lmScore]] over a prebuilt exploded token table
-    * (e.g. [[sharedTokens]]).
-    */
-  def lmScoreOf(tk: DataFrame): DataFrame = {
+  def lmScore(docs: DataFrame): DataFrame = {
+    val tk = tokenTable(docs)
     // r16: the per-term NLL is computed ONCE PER DISTINCT TERM on the
     // vocab (build) side of the join, so the occurrence stream pays only
     // the broadcast probe plus a long add — the legacy shape evaluated
@@ -1127,7 +1037,7 @@ object TextAnalysis {
         pmod(graft.functions.Hashing.h60(col("t")), lit(dim.toLong)).as("b"),
         col("c"))
       .join(q, "doc_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // r15: raw and target bucket totals as ONE conditional aggregate
     // over d (sum(c) + sum(c WHERE quality ≥ cut)) instead of two
     // aggregates left-joined back together — one exchange and no join,
@@ -1513,14 +1423,8 @@ object TextAnalysis {
     * [[graft.core.Ranking.ntileOfRank]] NTILE replica. Per-bucket mean
     * NLL divides an exact integer sum of the 1e-4-grid scores once.
     */
-  def ccnetBuckets(docs: DataFrame): DataFrame =
-    ccnetBucketsFrom(lmScore(docs), docs)
-
-  /** [[ccnetBuckets]] over a prebuilt per-doc NLL table
-    * (e.g. [[sharedNll]]) — `docs` supplies only the doc→lang key.
-    */
-  def ccnetBucketsFrom(nll: DataFrame, docs: DataFrame): DataFrame = {
-    val scored = nll
+  def ccnetBuckets(docs: DataFrame): DataFrame = {
+    val scored = lmScore(docs)
       .join(docs.select(col("doc_id"), col("lang")), "doc_id")
     graft.core.Ranking.withRunningSum(scored, Some("lang"),
       Seq(col("avg_nll"), col("doc_id")), lit(1L), "rnk", Some("n_lang"))

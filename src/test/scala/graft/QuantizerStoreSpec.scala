@@ -66,10 +66,10 @@ class QuantizerStoreSpec extends SparkSpec {
     val (c1, _) = QuantizerStore.kmeans(spark, dir.toString)
     val cent1 = sortedRows(c1)
     val before = QuantizerStore.trainCount.get()
-    graft.core.SharedViews.clearAll(spark)
+    graft.core.SharedViews.reclaimEverything(spark)
     val (c2, a2) = QuantizerStore.kmeans(spark, dir.toString)
     assert(QuantizerStore.trainCount.get() == before,
-      "clearAll must not invalidate the disk-backed quantizer")
+      "reclaimEverything must not invalidate the disk-backed quantizer")
     assert(sortedRows(c2) == cent1)
     assert(a2.count() == 100L)
   }

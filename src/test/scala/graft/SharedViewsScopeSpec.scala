@@ -2,58 +2,73 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.storage.StorageLevel
 
-import graft.core.SharedViews
 import graft.operators.TextAnalysis
 
-/** [[SharedViews.clearAll]] is scoped to registry-owned blocks: a library
-  * user's own cached tables and localCheckpointed DataFrames survive it,
-  * while the shared frozen views are dropped and rebuilt on next access.
-  * (The whole-context sweep lives on as the bench-only
-  * [[SharedViews.reclaimEverything]].)
+/** Queries keep no session state: a former shared-view consumer builds
+  * its input inside its own plan, so it neither touches a library user's
+  * own cached tables nor leaves blocks of its own behind, and a corpus
+  * rewritten in the same session is read fresh.
   */
 class SharedViewsScopeSpec extends SparkSpec {
 
-  test("user caches survive clearAll; shared-view blocks do not") {
-    import spark.implicits._
-    val sc = spark.sparkContext
-    // flush whatever earlier suites froze, so ownership diffs below are
-    // exactly this test's
-    SharedViews.clearAll(spark)
-    val before = sc.getPersistentRDDs.keySet
+  private def scratchCorpus(texts: Seq[String]): String = {
+    val dir = Files.createTempDirectory("svscope")
+    dir.toFile.deleteOnExit()
+    writeCorpus(dir.toString, texts)
+    dir.toString
+  }
 
+  private def writeCorpus(dir: String, texts: Seq[String]): Unit = {
+    import spark.implicits._
+    texts.zipWithIndex.map { case (t, i) => (i.toLong + 1, t) }
+      .toDF("doc_id", "text")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+  }
+
+  private def sortedRows(df: DataFrame): Seq[Row] =
+    df.collect().toSeq.sortBy(_.getLong(0))
+
+  test("user caches survive clearAll; shared-view blocks do not") {
+    val sc = spark.sparkContext
     // a user's cached table, materialized
     val userCached = spark.range(0L, 1000L).toDF("id")
       .persist(StorageLevel.MEMORY_AND_DISK)
     userCached.count()
     // a user's localCheckpointed DataFrame (CacheManager-invisible blocks)
     val userCp = spark.range(0L, 500L).toDF("id").localCheckpoint()
-    val userIds = sc.getPersistentRDDs.keySet -- before
+    val before = sc.getPersistentRDDs.keySet
 
-    // a real shared frozen view over a scratch documents table
-    val dir = Files.createTempDirectory("svscope")
-    dir.toFile.deleteOnExit()
-    Seq((1L, "alpha beta gamma"), (2L, "beta gamma delta"))
-      .toDF("doc_id", "text")
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    TextAnalysis.sharedTokens(spark, dir.toString).count()
-    val sharedIds = sc.getPersistentRDDs.keySet -- before -- userIds
-    assert(sharedIds.nonEmpty, "shared view left no persisted blocks to scope")
+    // a former shared-view consumer over a scratch documents table
+    val dir = scratchCorpus(Seq("alpha beta gamma", "beta gamma delta"))
+    assert(SparkEntry.queries("text_lm_score")(spark, dir).collect().length == 2)
 
-    SharedViews.clearAll(spark)
-
+    val added = sc.getPersistentRDDs.keySet -- before
+    assert(added.isEmpty, s"the query left persisted RDDs $added behind")
     assert(userCached.storageLevel != StorageLevel.NONE,
-      "clearAll dropped a user's cached table")
+      "the query dropped a user's cached table")
     assert(userCached.count() == 1000L)
-    assert(userCp.count() == 500L, "clearAll broke a user's checkpointed DataFrame")
-    assert(sc.getPersistentRDDs.keySet.intersect(userIds) == userIds,
-      "clearAll unpersisted user-owned RDD blocks")
-    assert(sc.getPersistentRDDs.keySet.intersect(sharedIds).isEmpty,
-      "clearAll left registry-owned shared-view blocks persisted")
-
-    // next access rebuilds the shared view from source
-    assert(TextAnalysis.sharedTokens(spark, dir.toString).count() > 0)
+    assert(userCp.count() == 500L, "the query broke a user's checkpointed DataFrame")
     userCached.unpersist()
+  }
+
+  test("a corpus rewritten in-session is read fresh by its queries") {
+    val dir = scratchCorpus(Seq("alpha beta gamma", "beta gamma delta"))
+    val q = SparkEntry.queries("text_vocab_coverage")
+    val first = sortedRows(q(spark, dir))
+    assert(first == sortedRows(TextAnalysis.vocabCoverage(
+      graft.core.Tables.load(spark, dir, "documents"), 12)))
+
+    // same session, same dir, different text and doc count
+    writeCorpus(dir, Seq("one two", "two three three", "four", "five six seven eight"))
+    val second = sortedRows(q(spark, dir))
+    val fresh = sortedRows(TextAnalysis.vocabCoverage(
+      graft.core.Tables.load(spark, dir, "documents"), 12))
+    assert(second.length == 4, s"query served the old corpus: $second")
+    assert(second == fresh)
+    assert(second.map(_.getLong(1)) == Seq(2L, 3L, 1L, 4L),
+      s"token counts are not the new corpus's: $second")
   }
 }
