@@ -5,16 +5,17 @@ import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import graft.core.MetricStore
+import graft.core.{MetricStore, StoreParams}
 import graft.streaming.StreamingTracker
 import graft.streaming.StreamingTracker.Point
 
 /** Scale sanity harness for the streaming Track path: pushes millions of
   * points (default 2M — ~3 orders of magnitude above the StreamingSpec
-  * feeds) through `startIntoStore`'s watermarked dual-depth aggregation
-  * in time-ordered micro-batch chunks, then reconciles the resulting
-  * MetricStore against driver-side closed forms. Asserts the properties
-  * the streaming design claims:
+  * feeds) through `startIntoStore` into a two-field MetricStore (one
+  * watermarked window aggregation per prefix depth) in time-ordered
+  * micro-batch chunks, then reopens the store from the params.json the
+  * stream wrote and reconciles it against driver-side closed forms.
+  * Asserts the properties the streaming design claims:
   *
   *   - exactness: every observation lands exactly once (the foreachBatch
   *     stage→move→marker commit), so fetched counts/totals equal the
@@ -23,9 +24,10 @@ import graft.streaming.StreamingTracker.Point
   *     series × live-window-horizon, never series × all-windows-ever —
   *     the difference between "runs forever" and "state grows forever";
   *   - unclosed windows leak nothing: the flush sentinel's own window
-  *     never emits.
+  *     never emits;
+  *   - the stream declares its layout: `MetricStore.open` reads it back.
   *
-  * `runMain graft.StreamingScaleCheck [nPoints]`.
+  * `runMain graft.StreamingScaleCheck [nPoints] [nStream]`.
   */
 object StreamingScaleCheck {
   def main(args: Array[String]): Unit = {
@@ -77,8 +79,9 @@ object StreamingScaleCheck {
     val chk = java.nio.file.Files.createTempDirectory("graft_stream_chk").toString
     val input = MemoryStream[Point]
     val t0 = System.nanoTime()
-    val qs = StreamingTracker.startIntoStore(input.toDF(), root, chk,
-      resolution = "1 hour", watermark = "1 hour")
+    val qs = StreamingTracker.startIntoStore(input.toDF(),
+      new MetricStore(spark, root, StoreParams("hour", "day", 30, Seq("f1", "f2"))), chk,
+      watermark = "1 hour")
     try {
       // arrival follows event time (each chunk is one 12h tranche, shuffled
       // inside) — the shape a real feed has, and what keeps the 1h
@@ -108,7 +111,7 @@ object StreamingScaleCheck {
         s"peak state $peakState exceeds the live-window horizon $horizon — " +
           "watermark eviction is not bounding state")
 
-      val store = new MetricStore(spark, root)
+      val store = MetricStore.open(spark, root)
       val got = store.points()
         .agg(count(lit(1)).as("rows"), sum(col("cnt")).as("cnt"),
           sum(when(col("depth") === 2, col("total"))).as("tot2"),

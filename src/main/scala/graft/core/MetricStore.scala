@@ -3,10 +3,16 @@ package graft.core
 import java.nio.file.{Files, Path, Paths}
 import java.util.Comparator
 
+import scala.jdk.CollectionConverters._
+import scala.util.Try
+
+import com.fasterxml.jackson.databind.JsonNode
 import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+
+import graft.operators.CorpusArtifact
 
 /** Store parameters — the Spark-native analog of kadiyadb's params.json
   * (/root/reference/database.go:15-31): resolution buckets points, epochs
@@ -28,7 +34,11 @@ final case class StoreParams(
   private val durSec = StoreParams.unitSeconds(epochDuration)
   require(durSec % resSec == 0 && durSec >= resSec,
     s"epochDuration '$epochDuration' must be a whole multiple of resolution '$resolution'")
+  // epochs are named, compacted and expired as `yyyy-MM-dd` days
+  require(durSec % 86400L == 0,
+    s"epochDuration '$epochDuration' must be a whole number of days (epoch ids are yyyy-MM-dd)")
   require(retentionEpochs >= 1, s"retentionEpochs must be >= 1, got $retentionEpochs")
+  require(fields.nonEmpty && fields.forall(_.nonEmpty), s"series fields must be non-empty names, got $fields")
 
   private[core] def durationSeconds: Long = durSec
 }
@@ -46,6 +56,33 @@ object StoreParams {
     Units.getOrElse(u.toLowerCase,
       throw new IllegalArgumentException(
         s"unsupported time unit '$u' (expected one of ${Units.keys.toSeq.sorted.mkString(", ")})"))
+
+  /** params.json text of `p`: `fields` as a JSON array. */
+  private[core] def toJson(p: StoreParams): String = {
+    val node = CorpusArtifact.mapper.createObjectNode()
+      .put("resolution", p.resolution)
+      .put("epochDuration", p.epochDuration)
+      .put("retentionEpochs", p.retentionEpochs)
+    p.fields.foldLeft(node.putArray("fields"))(_.add(_))
+    CorpusArtifact.mapper.writeValueAsString(node)
+  }
+
+  /** Parse params.json: fails on unparseable JSON, a missing or mistyped
+    * key, or values StoreParams itself rejects.
+    */
+  private[core] def fromJson(json: String): Try[StoreParams] = Try {
+    val n = CorpusArtifact.mapper.readTree(json)
+    def text(v: JsonNode): String = {
+      require(v.isTextual, s"expected a string, got $v")
+      v.textValue
+    }
+    val retention = n.required("retentionEpochs")
+    require(retention.isInt, s"retentionEpochs must be an integer, got $retention")
+    val fields = n.required("fields")
+    require(fields.isArray, s"fields must be an array, got $fields")
+    StoreParams(text(n.required("resolution")), text(n.required("epochDuration")),
+      retention.intValue, fields.elements().asScala.map(text).toSeq)
+  }
 }
 
 /** Parquet-backed metric store with kadiyadb's DB API surface
@@ -71,12 +108,17 @@ object StoreParams {
   * At cluster scale the same layout holds: epoch partitioning → partition
   * pruning; appends are small per-epoch deltas; compact() rewrites an
   * epoch into as many contiguous bucket-range files as its size calls for.
+  *
+  * This class is the one owner of the layout: the streaming sink
+  * ([[graft.streaming.StreamingTracker.startIntoStore]]) takes the
+  * series fields, resolution, epoch id, `points/` location and params.json
+  * write from a store handle, so a stream writes what Track writes.
   */
-final class MetricStore(spark: SparkSession, path: String, params: StoreParams = StoreParams()) {
+final class MetricStore(spark: SparkSession, private[graft] val path: String,
+    private[graft] val params: StoreParams = StoreParams()) {
 
-  private val dataDir = s"$path/points"
+  private val dataDir = s"$path/${MetricStore.PointsDir}"
   private val nFields = params.fields.length
-  require(nFields >= 1, "at least one series field required")
 
   private def fieldCols: Seq[Column] = params.fields.map(col)
 
@@ -129,9 +171,35 @@ final class MetricStore(spark: SparkSession, path: String, params: StoreParams =
     */
   def trackIncrements(incs: DataFrame): Unit = {
     writeParamsIfAbsent()
-    MetricStore.aggregateIncrements(incs, params)
-      .write.mode("append").partitionBy("epoch").parquet(dataDir)
+    aggregateIncrements(incs).write.mode("append").partitionBy("epoch").parquet(dataDir)
   }
+
+  /** Track's aggregation: (ts, fields..., total, cnt) increments →
+    * per-(series-prefix, bucket) delta rows with depth + epoch columns
+    * (one grouping-sets pass covers every prefix depth). Fields and
+    * accumulators are cast to the store's declared segment types, so a
+    * feed with integer values or ids writes segments every read accepts.
+    */
+  private def aggregateIncrements(incs: DataFrame): DataFrame = {
+    // Forward fold so the DEEPEST non-null field ends up as the outermost test.
+    val depthCol = params.fields.zipWithIndex
+      .foldLeft(lit(0)) { case (acc, (f, i)) => when(col(f).isNotNull, i + 1).otherwise(acc) }
+    val base = incs
+      .withColumns(params.fields.map(f => f -> col(f).cast(StringType)).toMap)
+      .withColumn("bucket", Tsdb.bucket(col("ts"), params.resolution))
+    val sets = (1 to nFields).map(i => fieldCols.take(i) :+ col("bucket"))
+    base
+      .groupingSets(sets, (fieldCols :+ col("bucket")): _*)
+      .agg(sum(col("total")).cast(DoubleType).as("total"), sum(col("cnt")).cast(LongType).as("cnt"))
+      .withColumn("depth", depthCol)
+      .withColumn("epoch", epochOf(col("bucket")))
+  }
+
+  /** The epoch id of a bucket (or wall-clock string): its duration-floored
+    * day as `yyyy-MM-dd`, so lexicographic order is temporal order.
+    */
+  private[graft] def epochOf(bucket: Column): Column =
+    date_format(Tsdb.epochOf(bucket, params.epochDuration), "yyyy-MM-dd")
 
   /** All points, segments merged (re-summed) back to one row per
     * (series, bucket). The epoch partition column stays available for
@@ -151,8 +219,7 @@ final class MetricStore(spark: SparkSession, path: String, params: StoreParams =
   def fetch(from: String, to: String, pattern: Seq[Option[String]]): DataFrame = {
     require(pattern.length <= nFields, s"pattern deeper than ${params.fields}")
     val pruned = points()
-      .filter(col("epoch") >= date_format(Tsdb.epochOf(lit(from), params.epochDuration), "yyyy-MM-dd")
-        && col("epoch") <= date_format(Tsdb.epochOf(lit(to), params.epochDuration), "yyyy-MM-dd"))
+      .filter(col("epoch") >= epochOf(lit(from)) && col("epoch") <= epochOf(lit(to)))
     val depthMatch = col("depth") === lit(pattern.length)
     val fieldMatch = pattern.zip(fieldCols).foldLeft(depthMatch) {
       case (acc, (Some(v), c)) => acc && c === lit(v)
@@ -164,24 +231,20 @@ final class MetricStore(spark: SparkSession, path: String, params: StoreParams =
   }
 
   /** Expire: physically drop epoch partitions older than `retentionEpochs`
-    * counting back from the newest epoch present. Returns dropped epochs.
-    * The cascade materialization is invalidated in the same call: an
-    * expired epoch's cascade partition is dropped too, so [[cascade]]
+    * epochs counting back from the newest epoch present. Returns dropped
+    * epochs. The cascade materialization is invalidated in the same call:
+    * an expired epoch's cascade partition is dropped too, so [[cascade]]
     * never serves epochs [[points]] no longer has.
     */
   def expire(): Seq[String] = {
-    val root = Paths.get(dataDir)
-    if (!Files.exists(root)) return Seq.empty
-    val epochs = listEpochDirs(root)
+    val epochs = listEpochDirs(Paths.get(dataDir)).map(_._1)
     if (epochs.isEmpty) return Seq.empty
-    val keep = epochs.map(_._1).max
-    val cutoff = java.time.LocalDate.parse(keep).minusDays(params.retentionEpochs.toLong - 1)
-    val dropped = epochs.filter { case (e, _) => java.time.LocalDate.parse(e).isBefore(cutoff) }
-    dropped.foreach { case (_, dir) =>
-      Files.walk(dir).sorted(Comparator.reverseOrder[Path]()).forEach(p => Files.delete(p))
-    }
-    dropEpochDirs(cascadeDir, dropped.map(_._1).toSet)
-    dropped.map(_._1).sorted
+    val cutoff = java.time.LocalDate.parse(epochs.max)
+      .minusDays((params.retentionEpochs - 1L) * params.durationSeconds / 86400L)
+    val dropped = epochs.filter(e => java.time.LocalDate.parse(e).isBefore(cutoff)).sorted
+    dropEpochDirs(dataDir, dropped.toSet)
+    dropEpochDirs(cascadeDir, dropped.toSet)
+    dropped
   }
 
   private def cascadeDir = s"$path/cascade"
@@ -190,15 +253,12 @@ final class MetricStore(spark: SparkSession, path: String, params: StoreParams =
     * epochs/dirs that don't exist) — the shared invalidation primitive
     * for expire / deleteSeries.
     */
-  private def dropEpochDirs(base: String, epochs: Set[String]): Unit = {
-    val root = Paths.get(base)
-    if (epochs.isEmpty || !Files.exists(root)) return
-    listEpochDirs(root)
+  private def dropEpochDirs(base: String, epochs: Set[String]): Unit =
+    if (epochs.nonEmpty) listEpochDirs(Paths.get(base))
       .filter { case (e, _) => epochs.contains(e) }
       .foreach { case (_, dir) =>
         Files.walk(dir).sorted(Comparator.reverseOrder[Path]()).forEach(p => Files.delete(p))
       }
-  }
 
   /** Sync: parquet appends are already durable; kept for API parity with
     * kadiyadb's DB.Sync (/root/reference/database.go:258).
@@ -230,13 +290,8 @@ final class MetricStore(spark: SparkSession, path: String, params: StoreParams =
       .groupBy((Seq(col("epoch"), col("depth")) ++ fieldCols :+ col("bucket")): _*)
       .agg(sum(col("total")).as("total"), sum(col("cnt")).as("cnt"))
       .select(segmentSchema.fieldNames.map(col).toSeq: _*)
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try merged.write.mode("overwrite").partitionBy("epoch").parquet(dataDir)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
+    merged.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("epoch").parquet(dataDir)
   }
 
   /** Bytes of the named epoch's segment files (0 if it has none). */
@@ -244,10 +299,8 @@ final class MetricStore(spark: SparkSession, path: String, params: StoreParams =
     val dir = Paths.get(dataDir, s"epoch=$epoch")
     if (!Files.isDirectory(dir)) return 0L
     val s = Files.list(dir)
-    try {
-      import scala.jdk.CollectionConverters._
-      s.iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet")).map(Files.size).sum
-    } finally s.close()
+    try s.iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet")).map(Files.size).sum
+    finally s.close()
   }
 
   /** Materialized multi-resolution cascade — the continuous-aggregate
@@ -278,13 +331,8 @@ final class MetricStore(spark: SparkSession, path: String, params: StoreParams =
         .withColumn("res_hours", lit(h))
     }.reduce(_ union _)
       .select(cascadeSchema.fieldNames.map(col).toSeq: _*)
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try out.write.mode("overwrite").partitionBy("epoch").parquet(s"$path/cascade")
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
+    out.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("epoch").parquet(cascadeDir)
   }
 
   /** The materialized cascade (see [[refreshCascade]]); epoch kept as an
@@ -345,13 +393,8 @@ final class MetricStore(spark: SparkSession, path: String, params: StoreParams =
     // files. Find those up front and drop their directories like expire.
     val surviving = out.select(col("epoch")).distinct()
       .collect().map(_.getString(0)).toSet
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try out.write.mode("overwrite").partitionBy("epoch").parquet(dataDir)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
+    out.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("epoch").parquet(dataDir)
     dropEpochDirs(dataDir, touched.toSet -- surviving)
     // cascade invalidation: re-derive touched epochs that still have
     // points (at the slot set the cascade was built with) and drop the
@@ -369,25 +412,27 @@ final class MetricStore(spark: SparkSession, path: String, params: StoreParams =
     nDeleted
   }
 
-  private def writeParamsIfAbsent(): Unit = {
+  /** Declare the store's layout in `<path>/params.json` on its first write. */
+  private[graft] def writeParamsIfAbsent(): Unit = {
     val p = Paths.get(path, MetricStore.ParamFile)
     if (!Files.exists(p)) {
       Files.createDirectories(p.getParent)
-      val json = s"""{"resolution":"${params.resolution}","epochDuration":"${params.epochDuration}","retentionEpochs":${params.retentionEpochs},"fields":[${params.fields.map("\"" + _ + "\"").mkString(",")}]}"""
-      Files.writeString(p, json)
+      Files.writeString(p, StoreParams.toJson(params))
     }
   }
 
-  private def listEpochDirs(root: Path): Seq[(String, Path)] = {
-    val s = Files.list(root)
-    try {
-      import scala.jdk.CollectionConverters._
-      s.iterator().asScala
-        .filter(p => Files.isDirectory(p) && p.getFileName.toString.startsWith("epoch="))
-        .map(p => (p.getFileName.toString.stripPrefix("epoch="), p))
-        .toSeq
-    } finally s.close()
-  }
+  /** (epoch, directory) of each partition under `root`; none if `root` is absent. */
+  private def listEpochDirs(root: Path): Seq[(String, Path)] =
+    if (!Files.isDirectory(root)) Seq.empty
+    else {
+      val s = Files.list(root)
+      try {
+        s.iterator().asScala
+          .filter(p => Files.isDirectory(p) && p.getFileName.toString.startsWith("epoch="))
+          .map(p => (p.getFileName.toString.stripPrefix("epoch="), p))
+          .toSeq
+      } finally s.close()
+    }
 }
 
 object MetricStore {
@@ -397,28 +442,8 @@ object MetricStore {
     */
   val ParamFile = "params.json"
 
-  /** Shared Track aggregation: (ts, fields..., total, cnt) increments →
-    * per-(series-prefix, bucket) delta rows with depth + epoch columns
-    * (one grouping-sets pass covers every prefix depth). Fields and
-    * accumulators are cast to the store's declared segment types, so a
-    * feed with integer values or ids writes segments every read accepts.
-    */
-  private[core] def aggregateIncrements(incs: DataFrame, params: StoreParams): DataFrame = {
-    val fieldCols = params.fields.map(col)
-    // Forward fold so the DEEPEST non-null field ends up as the outermost test.
-    val depthCol = params.fields.zipWithIndex
-      .foldLeft(lit(0)) { case (acc, (f, i)) => when(col(f).isNotNull, i + 1).otherwise(acc) }
-    val base = incs
-      .withColumns(params.fields.map(f => f -> col(f).cast(StringType)).toMap)
-      .withColumn("bucket", Tsdb.bucket(col("ts"), params.resolution))
-    val sets = (1 to params.fields.length).map(i => fieldCols.take(i) :+ col("bucket"))
-    base
-      .groupingSets(sets, (fieldCols :+ col("bucket")): _*)
-      .agg(sum(col("total")).cast(DoubleType).as("total"), sum(col("cnt")).cast(LongType).as("cnt"))
-      .withColumn("depth", depthCol)
-      .withColumn("epoch",
-        date_format(Tsdb.epochOf(col("bucket"), params.epochDuration), "yyyy-MM-dd"))
-  }
+  /** The epoch-partitioned segment directory under a store's path. */
+  private[graft] val PointsDir = "points"
 
   /** Open the existing store at `path` with the [[StoreParams]] its
     * params.json declares, like kadiyadb's Open reading its params.json.
@@ -429,20 +454,22 @@ object MetricStore {
     val pf = Paths.get(path, ParamFile)
     if (!Files.isRegularFile(pf))
       throw new IllegalArgumentException(s"metric store '$path' has no $ParamFile")
-    val params = parseParams(Files.readString(pf)).getOrElse(
-      throw new IllegalArgumentException(s"metric store '$path' has an unparseable $ParamFile"))
+    val params = StoreParams.fromJson(Files.readString(pf)).fold(
+      e => throw new IllegalArgumentException(
+        s"metric store '$path' has an unparseable $ParamFile: ${e.getMessage}", e),
+      identity)
     new MetricStore(spark, path, params)
   }
 
   /** LoadAll: open every store under `rootDir` that has a params.json —
     * the directory-of-databases layout of kadiyadb.LoadAll
-    * (/root/reference/database.go:66-124). Unparseable stores are skipped,
-    * matching the reference's tolerant loop.
+    * (kadiyadb database.go:66-124). Stores whose params.json is
+    * unparseable or declares invalid params are skipped, matching the
+    * reference's tolerant loop.
     */
   def loadAll(spark: SparkSession, rootDir: String): Map[String, MetricStore] = {
     val root = Paths.get(rootDir)
     if (!Files.exists(root)) return Map.empty
-    import scala.jdk.CollectionConverters._
     val s = Files.list(root)
     try {
       s.iterator().asScala
@@ -450,34 +477,11 @@ object MetricStore {
         .flatMap { dir =>
           val pf = dir.resolve(ParamFile)
           if (!Files.exists(pf)) None
-          else parseParams(Files.readString(pf)).map { params =>
+          else StoreParams.fromJson(Files.readString(pf)).toOption.map { params =>
             dir.getFileName.toString -> new MetricStore(spark, dir.toString, params)
           }
         }
         .toMap
     } finally s.close()
-  }
-
-  /** Minimal params.json parser (flat schema, no external deps). */
-  private[core] def parseParams(json: String): Option[StoreParams] = {
-    def str(key: String) =
-      s""""$key"\\s*:\\s*"([^"]*)"""".r.findFirstMatchIn(json).map(_.group(1))
-    def num(key: String) =
-      s""""$key"\\s*:\\s*(\\d+)""".r.findFirstMatchIn(json).map(_.group(1).toInt)
-    def arr(key: String) =
-      s""""$key"\\s*:\\s*\\[([^\\]]*)\\]""".r.findFirstMatchIn(json)
-        .map(_.group(1).split(",").map(_.trim.stripPrefix("\"").stripSuffix("\"")).toSeq)
-    val parsed = for {
-      res <- str("resolution")
-      dur <- str("epochDuration")
-      ret <- num("retentionEpochs")
-      fs <- arr("fields")
-      if fs.nonEmpty && fs.forall(_.nonEmpty)
-    } yield (res, dur, ret, fs)
-    // invalid unit/divisibility combos are treated like unparseable params
-    // (loadAll's tolerant skip, like the reference's LoadAll error path)
-    parsed.flatMap { case (res, dur, ret, fs) =>
-      scala.util.Try(StoreParams(res, dur, ret, fs)).toOption
-    }
   }
 }

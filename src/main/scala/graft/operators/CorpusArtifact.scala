@@ -115,7 +115,8 @@ object CorpusArtifact {
 
   private val pathLocks = TrieMap.empty[String, Object]
 
-  private val mapper = new ObjectMapper()
+  /** The one JSON codec for params.json files (corpus and metric stores). */
+  private[graft] val mapper = new ObjectMapper()
 
   private[graft] def root(store: String, dir: String, key: String): String = {
     val digest = java.security.MessageDigest.getInstance("SHA-1")

@@ -1,8 +1,13 @@
 package graft.streaming
 
+import java.time.{ZoneId, ZoneOffset}
+
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{DoubleType, StringType}
+
+import graft.core.MetricStore
 
 /** Structured Streaming ingestion — the real-time Track path of the
   * reference (kadiyadb ingests metrics continuously and serves reads on
@@ -26,56 +31,48 @@ object StreamingTracker {
       .select(col("window.start").as("bucket"), col("f1"), col("f2"),
         col("total"), col("cnt"))
 
-  /** Start the stream into a parquet sink (an epoch-partitioned landing
-    * zone a MetricStore can serve).
-    */
-  def start(events: DataFrame, outDir: String, checkpointDir: String,
-      resolution: String = "1 hour", watermark: String = "2 hours"): StreamingQuery =
-    trackStream(events, resolution, watermark)
-      .withColumn("epoch", date_format(date_trunc("day", col("bucket")), "yyyy-MM-dd"))
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.ProcessingTime("10 seconds"))
-      .option("checkpointLocation", checkpointDir)
-      .partitionBy("epoch")
-      .format("parquet")
-      .start(outDir)
-
   /** Continuous ingestion INTO a MetricStore: the streaming twin of
-    * MetricStore.track. One streaming aggregation per prefix depth (Spark
-    * disallows grouping sets in a single streaming agg), each appending
-    * store-layout segments (fields…, bucket, total, cnt, depth, epoch=…)
-    * under `<storePath>/points`; closed windows become segments the
-    * store's segment-merging fetch already handles. Returns one
-    * StreamingQuery per depth.
+    * MetricStore.track, laid out by the `store` handle. One watermarked
+    * window aggregation per prefix of the store's `fields` (Spark
+    * disallows grouping sets in a streaming aggregation), unioned into ONE
+    * query, so a single writer owns `points/`. Windows are the store's
+    * `resolution` and start where `Tsdb.bucket` starts; epoch ids and
+    * params.json come from the store. Closed windows become segments the
+    * store's segment-merging fetch already handles, committed
+    * exactly-once by [[commitBatch]]; `MetricStore.open` and `loadAll`
+    * find a store that only a stream ever wrote.
+    *
+    * `window()` tiles UTC time while `Tsdb.bucket` truncates in the
+    * session time zone, so the session must run in UTC (as
+    * `Harness.session` does).
     */
-  def startIntoStore(events: DataFrame, storePath: String,
-      checkpointDir: String, resolution: String = "1 hour",
+  def startIntoStore(events: DataFrame, store: MetricStore, checkpointDir: String,
       watermark: String = "2 hours"): Seq[StreamingQuery] = {
-    val dataDir = s"$storePath/points"
-    val d2 = trackStream(events, resolution, watermark)
-      .select(col("f1"), col("f2"), col("bucket"), col("total"), col("cnt"))
-      .withColumn("depth", lit(2))
-    val d1 = events
+    val tz = events.sparkSession.sessionState.conf.sessionLocalTimeZone
+    require(ZoneId.of(tz).normalized() == ZoneOffset.UTC,
+      s"startIntoStore needs a UTC session time zone, got '$tz'")
+    val fields = store.params.fields
+    val len = s"1 ${store.params.resolution}"
+    // window() tiles from 1970-01-01, a Thursday; Tsdb.bucket's weeks start on Monday
+    val start = if (store.params.resolution.equalsIgnoreCase("week")) "4 days" else "0 seconds"
+    val base = events
+      .withColumns(fields.map(f => f -> col(f).cast(StringType)).toMap)
       .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), resolution), col("f1"))
-      .agg(sum(col("value")).as("total"), count(lit(1)).as("cnt"))
-      .select(col("f1"), lit(null).cast("string").as("f2"), col("window.start").as("bucket"),
-        col("total"), col("cnt"))
-      .withColumn("depth", lit(1))
-    // ONE query over the union of both depth aggregations (Spark 4 supports
-    // multiple stateful operators): a single writer owns the directory, so
-    // batch appends can't race on _temporary. foreachBatch + the idempotent
-    // commitBatch below writes the exact segment layout MetricStore.track
-    // uses, exactly-once under micro-batch replay.
-    val q = d2.union(d1)
-      .withColumn("bucket", col("bucket").cast("timestamp_ntz"))
-      .withColumn("epoch", date_format(date_trunc("day", col("bucket")), "yyyy-MM-dd"))
+    val depths = (1 to fields.length).map { d =>
+      base.groupBy(window(col("ts"), len, len, start) +: fields.take(d).map(col): _*)
+        .agg(sum(col("value")).cast(DoubleType).as("total"), count(lit(1)).as("cnt"))
+        .select(fields.take(d).map(col) ++ fields.drop(d).map(lit(null).cast(StringType).as(_)) ++
+          Seq(col("window.start").cast("timestamp_ntz").as("bucket"),
+            col("total"), col("cnt"), lit(d).as("depth")): _*)
+    }
+    store.writeParamsIfAbsent()
+    val q = depths.reduce(_ union _)
+      .withColumn("epoch", store.epochOf(col("bucket")))
       .writeStream
       .outputMode(OutputMode.Append)
       .trigger(Trigger.ProcessingTime("5 seconds"))
       .option("checkpointLocation", s"$checkpointDir/union")
-      .foreachBatch(commitBatch(storePath) _)
+      .foreachBatch(commitBatch(store.path) _)
       .start()
     Seq(q)
   }
@@ -107,7 +104,7 @@ object StreamingTracker {
     ls(stagingDir).foreach { epochDir =>
       val name = epochDir.getFileName.toString
       if (name.startsWith("epoch=")) {
-        val target = Paths.get(storePath, "points", name)
+        val target = Paths.get(storePath, MetricStore.PointsDir, name)
         Files.createDirectories(target)
         // clear any partial move from a crashed earlier attempt of THIS batch
         ls(target)

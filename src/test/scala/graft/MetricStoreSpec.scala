@@ -116,15 +116,20 @@ class MetricStoreSpec extends SparkSpec {
     val store = new MetricStore(spark, dir)
     store.track(mkEvents(Seq(("2024-01-01 10:05:00", "cpu", "h1", 10.0))))
     store.track(mkEvents(Seq(("2024-01-01 10:45:00", "cpu", "h1", 7.0))))
-    def files() = {
-      val d = java.nio.file.Paths.get(dir, "points", "epoch=2024-01-01")
-      Files.list(d).filter(_.toString.endsWith(".parquet")).count()
+    // a second epoch the compact must leave alone (a static overwrite would wipe it)
+    store.track(mkEvents(Seq(("2024-01-02 03:15:00", "cpu", "h1", 5.0))))
+    def files(epoch: String) = {
+      val d = java.nio.file.Paths.get(dir, "points", s"epoch=$epoch")
+      Files.list(d).iterator().asScala.filter(_.toString.endsWith(".parquet")).map(_.getFileName).toSet
     }
-    val before = files()
+    def day2() = store.fetch("2024-01-02", "2024-01-03", Seq(Some("cpu"), Some("h1"))).collect().toSeq
+    val before = files("2024-01-01")
+    val (day2Files, day2Rows) = (files("2024-01-02"), day2())
     store.compact("2024-01-01")
-    assert(files() < before)
+    assert(files("2024-01-01").size < before.size)
     val r = store.fetch("2024-01-01", "2024-01-02", Seq(Some("cpu"), Some("h1"))).collect()
     assert(r.length == 1 && r.head.getAs[Double]("total") == 17.0 && r.head.getAs[Long]("cnt") == 2L)
+    assert(files("2024-01-02") == day2Files && day2() == day2Rows && day2Rows.length == 1)
   }
 
   test("StoreParams rejects non-dividing unit combos (database.go Open parity)") {
@@ -132,9 +137,11 @@ class MetricStoreSpec extends SparkSpec {
     intercept[IllegalArgumentException](StoreParams(resolution = "hour", epochDuration = "minute"))
     intercept[IllegalArgumentException](StoreParams(retentionEpochs = 0))
     intercept[IllegalArgumentException](StoreParams(resolution = "fortnight"))
+    intercept[IllegalArgumentException](
+      StoreParams(resolution = "minute", epochDuration = "hour", retentionEpochs = 5))
     // valid combos construct fine
     StoreParams()
-    StoreParams(resolution = "minute", epochDuration = "hour", retentionEpochs = 5)
+    StoreParams(resolution = "day", epochDuration = "week", retentionEpochs = 5)
   }
 
   test("loadAll skips a store whose params.json has invalid units") {
@@ -320,6 +327,19 @@ class MetricStoreSpec extends SparkSpec {
     val left = store.points().select(col("epoch")).distinct().collect()
       .map(_.getString(0)).sorted.toSeq
     assert(left == Seq("2024-01-02", "2024-01-03"))
+  }
+
+  test("expire counts retention in epochs: a week store with retention 2 keeps both weeks") {
+    val dir = Files.createTempDirectory("graftstore_week").toString
+    val store = new MetricStore(spark, dir, StoreParams("day", "week", retentionEpochs = 2))
+    store.track(mkEvents(Seq(
+      ("2023-12-27 09:00:00", "cpu", "h", 1.0), // week of Mon 2023-12-25
+      ("2024-01-03 09:00:00", "cpu", "h", 1.0), // week of Mon 2024-01-01
+      ("2024-01-08 09:00:00", "cpu", "h", 1.0)))) // week of Mon 2024-01-08
+    assert(store.expire() == Seq("2023-12-25"))
+    val left = store.points().select(col("epoch")).distinct().collect()
+      .map(_.getString(0)).sorted.toSeq
+    assert(left == Seq("2024-01-01", "2024-01-08"))
   }
 
   test("deleteSeries removes a user's leaves and decrements ancestor rollups") {

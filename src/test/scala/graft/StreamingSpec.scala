@@ -5,6 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 
+import graft.core.{MetricStore, StoreParams}
 import graft.streaming.StreamingTracker
 import graft.streaming.StreamingTracker.{Latest, Point}
 
@@ -91,8 +92,8 @@ class StreamingSpec extends SparkSpec {
     val root = java.nio.file.Files.createTempDirectory("streamstore").toString
     val chk = java.nio.file.Files.createTempDirectory("streamchk").toString
     val input = MemoryStream[Point]
-    val qs = StreamingTracker.startIntoStore(input.toDF(), root, chk,
-      resolution = "1 hour", watermark = "0 seconds")
+    val qs = StreamingTracker.startIntoStore(input.toDF(), new MetricStore(spark, root), chk,
+      watermark = "0 seconds")
     try {
       input.addData(
         Point("cpu", "h1", ts("2024-01-01 10:05:00"), 10.0),
@@ -102,12 +103,55 @@ class StreamingSpec extends SparkSpec {
       // advance the watermark so the 10:00/11:00 windows close and flush
       input.addData(Point("cpu", "h9", ts("2024-01-01 13:00:00"), 0.0))
       qs.foreach(_.processAllAvailable())
-      val store = new graft.core.MetricStore(spark, root)
+      val store = new MetricStore(spark, root)
       val exact = store.fetch("2024-01-01", "2024-01-02", Seq(Some("cpu"), Some("h1"))).collect()
       assert(exact.length == 1 && exact.head.getAs[Double]("total") == 15.0)
       val rollup = store.fetch("2024-01-01", "2024-01-02", Seq(Some("cpu"))).collect()
       assert(rollup.map(_.getAs[Long]("cnt")).sum == 3L)
     } finally qs.foreach(_.stop())
+  }
+
+  test("startIntoStore writes what batch track writes: 3-field parity at every depth") {
+    import spark.implicits._
+    implicit val sq = spark.sqlContext
+    // binary-exact values: the stream and the batch sum them in different orders
+    val feed = Seq(
+      (ts("2024-01-01 23:58:10"), "us", "h1", "cpu", 0.5),
+      (ts("2024-01-01 23:58:40"), "us", "h1", "cpu", 1.25),
+      (ts("2024-01-01 23:58:50"), "us", "h1", "mem", 8.0),
+      (ts("2024-01-01 23:59:30"), "us", "h2", "cpu", 2.75),
+      (ts("2024-01-02 00:00:05"), "eu", "h3", "cpu", 4.5),
+      (ts("2024-01-02 00:00:55"), "eu", "h3", "cpu", 0.25),
+      (ts("2024-01-02 00:01:20"), "us", "h1", "cpu", 16.0))
+    def parity(params: StoreParams): Unit = {
+      val root = java.nio.file.Files.createTempDirectory("streamparity").toString
+      val chk = java.nio.file.Files.createTempDirectory("streamparitychk").toString
+      val input = MemoryStream[(Timestamp, String, String, String, Double)]
+      val qs = StreamingTracker.startIntoStore(
+        input.toDF().toDF("ts", "dc", "host", "metric", "value"),
+        new MetricStore(spark, s"$root/streamed", params), chk, watermark = "0 seconds")
+      try {
+        input.addData(feed)
+        qs.foreach(_.processAllAvailable())
+        // a later point advances the watermark past every feed window; its own never closes
+        input.addData((ts("2024-01-20 00:30:00"), "zz", "zz", "zz", 0.0))
+        qs.foreach(_.processAllAvailable())
+      } finally qs.foreach(_.stop())
+      val batch = new MetricStore(spark, s"$root/batch", params)
+      batch.track(feed.toDF("ts", "dc", "host", "metric", "value"))
+
+      assert(MetricStore.loadAll(spark, root).keySet == Set("streamed", "batch"))
+      val streamed = MetricStore.open(spark, s"$root/streamed")
+      def rows(s: MetricStore, depth: Int) = s.fetch("2023-12-01", "2024-01-08",
+        Seq.fill(depth)(None)).collect().map(_.toString).sorted.toSeq
+      (1 to 3).foreach { d =>
+        val want = rows(batch, d)
+        assert(want.nonEmpty && rows(streamed, d) == want, s"$params depth $d")
+      }
+    }
+    parity(StoreParams("minute", "day", 30, Seq("dc", "host", "metric")))
+    // window() tiles weeks from Thursday 1970-01-01; the store's weeks start on Monday
+    parity(StoreParams("week", "week", 30, Seq("dc", "host", "metric")))
   }
 
   test("commitBatch is exactly-once under micro-batch replay") {
