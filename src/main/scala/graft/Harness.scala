@@ -2,9 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The one session factory of graft's mains (Bench, Verify, Serve, Tool,
-  * the scale checks) and of the test suite, plus the shared measurement
-  * plumbing: ONE place for the session shape, the data directory and the
+/** The one session factory of graft's mains (Bench, Verify, Serve, Tool)
+  * and of the test suite, plus the shared measurement plumbing: ONE
+  * place for the session shape, the data directory and the
   * timed-query protocol, so a config change (time zone, shuffle width,
   * extensions, ANSI mode) cannot drift between the measured path and the
   * verified path.
@@ -23,7 +23,7 @@ object Harness {
   /** The standard session: local[n], n shuffle partitions, ANSI off, UTC
     * session time zone, UI off, graft's SQL functions registered, ERROR
     * logs. `extra` appends/overrides per-caller config (a deployment
-    * master, a harness premise such as AQE off).
+    * master, a spec's plan-string length).
     */
   def session(n: Int, extra: (String, String)*): SparkSession = {
     val confs = Seq(
@@ -67,11 +67,5 @@ object Harness {
     try SparkEntry.queries(name)(spark, dir).count()
     finally spark.catalog.clearCache()
     (System.nanoTime() - t0) / 1e9
-  }
-
-  /** Print the wall time of a stage and pass its result through. */
-  def timed[T](name: String)(f: => T): T = {
-    val t0 = System.nanoTime(); val r = f
-    println(f"$name: ${(System.nanoTime() - t0) / 1e9}%.1f s"); r
   }
 }

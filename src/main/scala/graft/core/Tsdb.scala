@@ -788,7 +788,7 @@ object Tsdb {
     * LOUDLY here instead of opaquely OOM-ing the executor; the fix at
     * that scale is downsampling before the fold (the rollup cascade
     * exists for exactly this), not a bigger heap. The single-10M-bucket
-    * case is proven in TsdbScaleCheck phase 6b.
+    * case is proven by ScaleSmokeSpec's tsdb check at full size.
     */
   private[graft] val MaxFoldBucketsPerSeries: Int = 32 << 20
 

@@ -58,7 +58,7 @@ object Dedup {
     * pair agreeing on part of band b's rows usually agrees on all of
     * band b — and is then already caught by band b's own small bucket),
     * which measurably erases the recovery (planted-flood recall 0.71 vs
-    * 0.89 with fresh perms in DedupScaleCheck's templated phase). The
+    * 0.89 with fresh perms in ScaleSmokeSpec's templated flood). The
     * extra 18 min-aggregates ride the same shingle pass — map-side CPU,
     * no extra shuffle.
     */
@@ -543,7 +543,7 @@ object Dedup {
     * O(flood²), while a TEMPLATED flood (shared boilerplate band,
     * varying bodies) keeps pairwise recall ≈ 1-(1-j^SubRows)^SubBands
     * per oversized bucket instead of the old drop-to-zero
-    * (DedupScaleCheck phase 5b plants exactly this and measures it).
+    * (ScaleSmokeSpec's templated-flood check plants exactly this).
     */
   private[graft] def candFromBands(bands: DataFrame,
       bucketCap: Long = BandBucketCap): DataFrame = {
@@ -1039,7 +1039,7 @@ object Dedup {
     * At maxHamming = 3 this gives 20 tables keyed on 30 BITS instead of
     * 4 tables keyed on 15: random-collision candidate mass drops from
     * n²/2¹⁵ to n²·20/2³⁰ per corpus — the difference between the
-    * DedupScaleCheck audit failing at 2M docs (308M candidates for 15k
+    * ScaleSmokeSpec simhash audit failing at 2M docs (308M candidates for 15k
     * true pairs) and passing with room to 10⁸ docs.
     */
   private[graft] def simhashComboKeys(maxHamming: Int): Seq[(Int, String)] = {
@@ -1083,7 +1083,7 @@ object Dedup {
     * Candidate tables are the Manku-style block-combination keys of
     * [[simhashComboKeys]] (30-bit keys at the default hamming 3 — the
     * 15-bit 4-band split stopped discriminating at 2M docs, see the
-    * DedupScaleCheck audit): any pair at hamming ≤ maxHamming has all
+    * ScaleSmokeSpec simhash audit): any pair at hamming ≤ maxHamming has all
     * its key blocks intact in at least one combination, so this equals
     * the brute-force O(n²) scan the oracle runs — without the cross
     * join. `bucketCap` is the scale guard: a band bucket holding more

@@ -1495,7 +1495,7 @@ object Similarity {
     * that holds when flat LSH banding floods: candidate edges come
     * from [[semanticDedupFrom]]'s cell + sub-band chain (small cells
     * pair within the cell, fat cells additionally require a shared
-    * hyperplane band — the DedupScaleCheck-proven shape), reusing the
+    * hyperplane band — the flood-proven LSH shape), reusing the
     * memoized [[sharedKmeans]] quantizer, then symmetrize + rank per
     * vector as in [[knnJoin]]. At 10⁹ vectors the candidate volume is
     * bounded by cellCap²·nCells + banded-fat-cell pairs, independent

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Path}
-import java.util.Comparator
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -30,10 +29,6 @@ class AnnIndexStoreSpec extends SparkSpec {
     d.toFile.deleteOnExit()
     d
   }
-
-  private def rmrf(p: Path): Unit =
-    Files.walk(p).sorted(Comparator.reverseOrder[Path]())
-      .forEach(f => Files.delete(f))
 
   private val corpusRows = (0L until 200L).map(i => (i, i))
 

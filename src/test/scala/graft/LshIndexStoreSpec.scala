@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Path}
-import java.util.Comparator
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -28,10 +27,6 @@ class LshIndexStoreSpec extends SparkSpec {
     d.toFile.deleteOnExit()
     d
   }
-
-  private def rmrf(p: Path): Unit =
-    Files.walk(p).sorted(Comparator.reverseOrder[Path]())
-      .forEach(f => Files.delete(f))
 
   // corpus: 200 docs, distinct seeds; batch: 2 exact dups of corpus docs
   // (seeds 7, 42), 1 batch-internal dup pair (seed 900), 2 novel docs

@@ -1,5 +1,8 @@
 package graft
 
+import java.nio.file.{Files, Path}
+import java.util.Comparator
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -20,5 +23,15 @@ trait SparkSpec extends AnyFunSuite {
   def docsDf(rows: Seq[(Long, String)]): DataFrame = {
     import spark.implicits._
     rows.toDF("doc_id", "text")
+  }
+
+  /** Delete a file tree. */
+  def rmrf(p: Path): Unit =
+    Files.walk(p).sorted(Comparator.reverseOrder[Path]()).forEach(f => Files.delete(f))
+
+  /** Run `f` in a fresh private temp directory, deleted afterwards. */
+  def withTempDir[T](prefix: String)(f: Path => T): T = {
+    val d = Files.createTempDirectory(prefix)
+    try f(d) finally if (Files.exists(d)) rmrf(d)
   }
 }
