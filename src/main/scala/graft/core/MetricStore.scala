@@ -9,7 +9,10 @@ import scala.util.Try
 import com.fasterxml.jackson.databind.JsonNode
 import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, JavaCode}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SqlBridge
 import org.apache.spark.sql.types._
 
 import graft.operators.CorpusArtifact
@@ -96,7 +99,10 @@ object StoreParams {
   * segment files (the analog of RW epoch blocks) covering EVERY prefix of
   * the field list (epoch.go:66-80); Fetch merges segments with a
   * sum-reaggregation (the analog of reading RO+RW epochs) and prunes
-  * partitions by a plain string compare on `epoch`. Expire drops whole
+  * partitions by a plain string compare on `epoch`. A Fetch whose epochs
+  * hold at most one split of files merges inside the scan's one task (no
+  * shuffle), and its range is bound by reference in generated code, so a
+  * repeated Fetch over a new range compiles nothing. Expire drops whole
   * epoch partition directories, exactly like cache.Expire's os.RemoveAll
   * (kadiyadb epoch/cache.go:136-156).
   *
@@ -205,9 +211,11 @@ final class MetricStore(spark: SparkSession, private[graft] val path: String,
     * (series, bucket). The epoch partition column stays available for
     * pruning by callers.
     */
-  def points(): DataFrame =
-    segments()
-      .groupBy((Seq(col("epoch"), col("depth")) ++ fieldCols :+ col("bucket")): _*)
+  def points(): DataFrame = merge(segments())
+
+  /** Re-sum segment rows to one row per (epoch, depth, series, bucket). */
+  private def merge(segs: DataFrame): DataFrame =
+    segs.groupBy((Seq(col("epoch"), col("depth")) ++ fieldCols :+ col("bucket")): _*)
       .agg(sum(col("total")).as("total"), sum(col("cnt")).as("cnt"))
 
   /** Fetch: field-pattern + [from, to) range, kadiyadb Fetch semantics
@@ -215,20 +223,50 @@ final class MetricStore(spark: SparkSession, private[graft] val path: String,
     * predicate on `epoch` (a string partition column) prunes whole epoch
     * directories before any file is read. Building the frame runs no
     * Spark job, and a store with no data fetches no rows.
+    *
+    * Two fixed costs stay out of a Fetch:
+    *  - The range is bound by reference: the epoch ids and bucket bounds
+    *    are evaluated on the driver, and each bucket bound is a
+    *    [[ReferenceLiteral]], so a Fetch over a new range reuses the
+    *    whole-stage classes an earlier Fetch of the same pattern shape
+    *    compiled. The scan still pushes both bounds into the parquet reader.
+    *  - A one-split Fetch merges inside the scan's task: when the epoch
+    *    directories the range prunes to hold at most
+    *    `spark.sql.files.maxPartitionBytes` of files (compact's
+    *    metadata-only size rule), the segments are coalesced to one
+    *    partition before the merge, so the plan has no Exchange and runs
+    *    one stage. A larger Fetch merges through a shuffle.
     */
   def fetch(from: String, to: String, pattern: Seq[Option[String]]): DataFrame = {
     require(pattern.length <= nFields, s"pattern deeper than ${params.fields}")
-    val pruned = points()
-      .filter(col("epoch") >= epochOf(lit(from)) && col("epoch") <= epochOf(lit(to)))
-    val depthMatch = col("depth") === lit(pattern.length)
-    val fieldMatch = pattern.zip(fieldCols).foldLeft(depthMatch) {
+    val Seq(firstEpoch, lastEpoch, lo, hi) = constants(epochOf(lit(from)), epochOf(lit(to)),
+      lit(from).cast(TimestampNTZType), lit(to).cast(TimestampNTZType))
+    val Seq(e0, e1) = Seq(firstEpoch, lastEpoch).map(e => if (e == null) null else e.toString)
+    val fieldMatch = pattern.zip(fieldCols).foldLeft(col("depth") === lit(pattern.length)) {
       case (acc, (Some(v), c)) => acc && c === lit(v)
       case (acc, (None, _))    => acc // wildcard
     }
-    pruned.filter(fieldMatch &&
-      col("bucket") >= lit(from).cast("timestamp_ntz") &&
-      col("bucket") < lit(to).cast("timestamp_ntz"))
+    def bound(v: Any): Column = SqlBridge.column(new ReferenceLiteral(v, TimestampNTZType))
+    val inRange = segments()
+      .filter(col("epoch") >= lit(e0) && col("epoch") <= lit(e1))
+      .filter(fieldMatch && col("bucket") >= bound(lo) && col("bucket") < bound(hi))
+    merge(if (rangeBytes(e0, e1) <= maxPartitionBytes) inRange.coalesce(1) else inRange)
   }
+
+  /** Values of constant columns, evaluated on the driver after analysis
+    * (which resolves them exactly as in a query): no job runs.
+    */
+  private def constants(cs: Column*): Seq[Any] =
+    spark.range(1).select(cs: _*).queryExecution.analyzed.expressions.map(_.eval())
+
+  private def maxPartitionBytes: Long =
+    JavaUtils.byteStringAsBytes(spark.conf.get("spark.sql.files.maxPartitionBytes"))
+
+  /** Bytes of the segment files in epochs [first, last] (0 for a null bound). */
+  private def rangeBytes(first: String, last: String): Long =
+    if (first == null || last == null) 0L
+    else listEpochDirs(Paths.get(dataDir))
+      .collect { case (e, dir) if e >= first && e <= last => parquetBytes(dir) }.sum
 
   /** Expire: physically drop epoch partitions older than `retentionEpochs`
     * epochs counting back from the newest epoch present. Returns dropped
@@ -251,14 +289,13 @@ final class MetricStore(spark: SparkSession, private[graft] val path: String,
 
   /** Drop the named epoch partition directories under `base` (no-op for
     * epochs/dirs that don't exist) — the shared invalidation primitive
-    * for expire / deleteSeries.
+    * for expire / deleteSeries. Each epoch's directory is addressed by
+    * name, so nothing is listed.
     */
   private def dropEpochDirs(base: String, epochs: Set[String]): Unit =
-    if (epochs.nonEmpty) listEpochDirs(Paths.get(base))
-      .filter { case (e, _) => epochs.contains(e) }
-      .foreach { case (_, dir) =>
-        Files.walk(dir).sorted(Comparator.reverseOrder[Path]()).forEach(p => Files.delete(p))
-      }
+    epochs.map(e => Paths.get(base, s"epoch=$e")).filter(Files.isDirectory(_)).foreach { dir =>
+      Files.walk(dir).sorted(Comparator.reverseOrder[Path]()).forEach(p => Files.delete(p))
+    }
 
   /** Sync: parquet appends are already durable; kept for API parity with
     * kadiyadb's DB.Sync (/root/reference/database.go:258).
@@ -282,21 +319,19 @@ final class MetricStore(spark: SparkSession, private[graft] val path: String,
     * bucket-range fetches prune at the row-group level.
     */
   def compact(epoch: String): Unit = {
-    val maxBytes = JavaUtils.byteStringAsBytes(spark.conf.get("spark.sql.files.maxPartitionBytes"))
-    val nFiles = math.max(1L, (epochBytes(epoch) + maxBytes - 1) / maxBytes).toInt
-    val merged = segments()
+    val maxBytes = maxPartitionBytes
+    val epochBytes = parquetBytes(Paths.get(dataDir, s"epoch=$epoch"))
+    val nFiles = math.max(1L, (epochBytes + maxBytes - 1) / maxBytes).toInt
+    val merged = merge(segments()
       .filter(col("epoch") === epoch)
-      .repartitionByRange(nFiles, col("bucket"))
-      .groupBy((Seq(col("epoch"), col("depth")) ++ fieldCols :+ col("bucket")): _*)
-      .agg(sum(col("total")).as("total"), sum(col("cnt")).as("cnt"))
+      .repartitionByRange(nFiles, col("bucket")))
       .select(segmentSchema.fieldNames.map(col).toSeq: _*)
     merged.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
       .partitionBy("epoch").parquet(dataDir)
   }
 
-  /** Bytes of the named epoch's segment files (0 if it has none). */
-  private def epochBytes(epoch: String): Long = {
-    val dir = Paths.get(dataDir, s"epoch=$epoch")
+  /** Bytes of the parquet files in epoch directory `dir` (0 if it has none). */
+  private def parquetBytes(dir: Path): Long = {
     if (!Files.isDirectory(dir)) return 0L
     val s = Files.list(dir)
     try s.iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet")).map(Files.size).sum
@@ -483,5 +518,25 @@ object MetricStore {
         }
         .toMap
     } finally s.close()
+  }
+}
+
+/** A literal whose generated code reads its value from the plan's
+  * reference array instead of inlining it as a Java constant, so plans
+  * that differ only in this value share one compiled class. It is still
+  * a [[Literal]] to every rule: comparisons against it are pushed into
+  * parquet scans like any other, and Literal's constructor shape keeps
+  * `makeCopy` working.
+  */
+private[core] final class ReferenceLiteral(value: Any, dataType: DataType)
+    extends Literal(value, dataType) {
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val javaType = CodeGenerator.javaType(dataType)
+    // non-primitive literals are reference objects already
+    if (value == null || !CodeGenerator.isPrimitiveType(javaType)) super.doGenCode(ctx, ev)
+    else {
+      val ref = ctx.addReferenceObj("literal", value, CodeGenerator.boxedType(dataType))
+      ExprCode.forNonNullValue(JavaCode.expression(s"$ref.${javaType}Value()", dataType))
+    }
   }
 }

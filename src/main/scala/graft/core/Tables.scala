@@ -1,51 +1,107 @@
 package graft.core
 
+import scala.collection.immutable.ListMap
+
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.{Type => ParquetType}
+import org.apache.parquet.schema.LogicalTypeAnnotation.{TimestampLogicalTypeAnnotation, TimeUnit}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
-/** Loaders for the driver-generated parquet tables (see /root/repo/TESTDATA.md). */
+/** Loaders for the driver-generated parquet tables (see TESTDATA.md). */
 object Tables {
-  val all: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** The declared schema of each table, in the generator's column order.
+    * Every generated data dir carries exactly these types (`TablesSpec`
+    * pins declared == inferred), so [[load]] never asks Spark to infer
+    * one. `events.ts` is declared `TIMESTAMP_NTZ` here; [[load]] reads a
+    * TIMESTAMP(NANOS) file's `ts` as its raw LONG nanos instead.
+    */
+  val schemas: ListMap[String, StructType] = ListMap(
+    "region" -> "r_regionkey INT, r_name STRING",
+    "nation" -> "n_nationkey INT, n_name STRING, n_regionkey INT",
+    "customer" -> ("c_custkey BIGINT, c_name STRING, c_nationkey INT, c_acctbal DOUBLE, " +
+      "c_mktsegment STRING"),
+    "supplier" -> "s_suppkey BIGINT, s_name STRING, s_nationkey INT, s_acctbal DOUBLE",
+    "part" -> ("p_partkey BIGINT, p_name STRING, p_brand STRING, p_type STRING, p_size INT, " +
+      "p_retailprice DOUBLE"),
+    "orders" -> ("o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, " +
+      "o_totalprice DOUBLE, o_orderdate TIMESTAMP_NTZ, o_orderpriority STRING"),
+    "lineitem" -> ("l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, l_linenumber INT, " +
+      "l_quantity DOUBLE, l_extendedprice DOUBLE, l_discount DOUBLE, l_tax DOUBLE, " +
+      "l_returnflag STRING, l_linestatus STRING, l_shipdate TIMESTAMP_NTZ"),
+    "events" -> ("event_id BIGINT, ts TIMESTAMP_NTZ, user_id BIGINT, event_type STRING, " +
+      "value DOUBLE, props STRING"),
+    "documents" -> "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT",
+    "embeddings" -> "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT"
+  ).map { case (name, ddl) => name -> StructType.fromDDL(ddl) }
+
+  val all: Seq[String] = schemas.keys.toSeq
+
+  /** Table `name` of data dir `dir`, read under its declared schema: no
+    * call starts a Spark job (no schema inference).
+    *
+    * `events` also gets the Tsdb contract: `ts` as timestamp_ntz (the
+    * wall clock, matching the tz-naive source and the DuckDB oracle) plus
+    * `ts_ns`, the raw wall-clock nanos since epoch. `events.ts` has
+    * shipped as both parquet TIMESTAMP(NANOS) and TIMESTAMP(MICROS); one
+    * part file's footer, read on the driver, says which this file holds.
+    */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // events.ts has shipped as both parquet TIMESTAMP(NANOS) and
-    // TIMESTAMP(MICROS) across generator versions; adapt to whichever the
-    // file carries so every Tsdb operator sees the same schema: `ts` as
-    // timestamp_ntz (wall-clock, matching the tz-naive source and the
-    // DuckDB oracle) + `ts_ns` as raw wall-clock nanos since epoch.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$dir/$name.parquet")
-    if (name == "events")
-      df.schema("ts").dataType match {
-        case org.apache.spark.sql.types.LongType =>
-          // TIMESTAMP(NANOS) read as raw nanos (nanosAsLong). `div`
-          // (integer division) is required: nano values exceed 2^53, so a
-          // double roundtrip would lose precision. The raw nanos column
-          // survives as ts_ns so range predicates stay pushable into the
-          // parquet scan (a predicate on the derived ts cannot be pushed).
-          df.withColumn("ts_ns", col("ts"))
-            .withColumn("ts", timestamp_micros(expr("ts div 1000")).cast("timestamp_ntz"))
-        case org.apache.spark.sql.types.TimestampNTZType =>
-          // TIMESTAMP(MICROS) inferred as ntz (isAdjustedToUTC=false under
-          // the default inferTimestampNTZ). Here `ts` IS the raw scan
-          // column — range predicates on it push down — and ts_ns is
-          // derived via timestampdiff, pure wall-clock arithmetic on ntz
-          // with no session-timezone dependence.
-          df.withColumn("ts", col("ts").cast("timestamp_ntz"))
-            .withColumn("ts_ns",
-              expr("timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts) * 1000"))
-        case other =>
-          // A session-timezone-adjusted TimestampType read (micros file
-          // written with isAdjustedToUTC=true, or inferTimestampNTZ off)
-          // would SILENTLY shift wall clocks in ts and the derived ts_ns
-          // for any non-UTC session — fail loudly instead.
-          throw new IllegalStateException(
-            s"events.ts read as $other — expected raw nanos (LongType) or TIMESTAMP_NTZ; " +
-              "refusing a timezone-adjusted read that would shift wall clocks")
-      }
-    else df
+    val declared = schemas.getOrElse(name, throw new IllegalArgumentException(
+      s"unknown table '$name' (expected one of ${all.mkString(", ")})"))
+    val path = s"$dir/$name.parquet"
+    if (name != "events") return spark.read.schema(declared).parquet(path)
+    val ts = eventsTs(spark, path)
+    ts.getLogicalTypeAnnotation match {
+      case t: TimestampLogicalTypeAnnotation if t.getUnit == TimeUnit.NANOS =>
+        // raw nanos (nanosAsLong). `div` (integer division) is required:
+        // nano values exceed 2^53, so a double roundtrip would lose
+        // precision. The raw column survives as ts_ns so range predicates
+        // stay pushable into the parquet scan (one on the derived ts is not).
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        spark.read.schema(StructType(declared.map(f =>
+            if (f.name == "ts") f.copy(dataType = LongType) else f)))
+          .parquet(path)
+          .withColumn("ts_ns", col("ts"))
+          .withColumn("ts", timestamp_micros(expr("ts div 1000")).cast("timestamp_ntz"))
+      case t: TimestampLogicalTypeAnnotation if !t.isAdjustedToUTC =>
+        // wall-clock MICROS: `ts` IS the raw scan column, so
+        // range predicates on it push down, and ts_ns is pure wall-clock
+        // arithmetic on ntz with no session-timezone dependence.
+        spark.read.schema(declared).parquet(path)
+          .withColumn("ts_ns",
+            expr("timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts) * 1000"))
+      case _ =>
+        // A timezone-adjusted timestamp would SILENTLY shift wall clocks
+        // in ts and the derived ts_ns for any non-UTC session.
+        throw new IllegalStateException(
+          s"events.ts in $path is '$ts' — expected TIMESTAMP(NANOS) or a " +
+            "TIMESTAMP(MICROS) with isAdjustedToUTC=false; refusing a timezone-adjusted read " +
+            "that would shift wall clocks")
+    }
+  }
+
+  /** The parquet type of `ts` in the footer of `path` (a file, or the
+    * first part file of a directory): a driver-side read, no job.
+    */
+  private def eventsTs(spark: SparkSession, path: String): ParquetType = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new HPath(path)
+    val fs = root.getFileSystem(conf)
+    val file =
+      if (!fs.getFileStatus(root).isDirectory) root
+      else fs.listStatus(root).map(_.getPath)
+        .filter(p => p.getName.endsWith(".parquet") && !p.getName.startsWith("_") &&
+          !p.getName.startsWith("."))
+        .sortBy(_.getName).headOption
+        .getOrElse(throw new IllegalStateException(s"$path holds no parquet part file"))
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+    try reader.getFooter.getFileMetaData.getSchema.getType(Seq("ts"): _*)
+    finally reader.close()
   }
 
   /** Ensure a CPU-heavy projection's input has at least the session's
@@ -76,8 +132,6 @@ object Tables {
     val target = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     if (df.rdd.getNumPartitions < target) df.repartition(target) else df
   }
-
-  import org.apache.spark.sql.types._
 
   /** Source schema for text-format event feeds (`ts` as an ISO-8601
     * wall-clock string). Explicit — schema inference would both scan the

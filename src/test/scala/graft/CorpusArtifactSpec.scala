@@ -28,7 +28,7 @@ class CorpusArtifactSpec extends SparkSpec {
              ' tail', CAST(doc_id AS STRING))"""))
       .write.parquet(s"$d/documents.parquet")
     (0L until 120L).toDF("vec_id")
-      .withColumn("label", pmod(col("vec_id"), lit(3L)).cast("int").cast("string"))
+      .withColumn("label", pmod(col("vec_id"), lit(3L)).cast("int"))
       .withColumn("embedding", expr(
         """transform(sequence(1, 64), j -> CAST(
              (pmod(xxhash64(pmod(vec_id, 6) + 1000003, j), 2000) - 1000) / 1000.0 +

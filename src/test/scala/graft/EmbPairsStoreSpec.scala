@@ -19,7 +19,7 @@ class EmbPairsStoreSpec extends SparkSpec {
   private def vecsOf(rows: Seq[(Long, Long)]): DataFrame = {
     import spark.implicits._
     rows.toDF("vec_id", "seed")
-      .withColumn("label", pmod(col("seed"), lit(3L)).cast("int").cast("string"))
+      .withColumn("label", pmod(col("seed"), lit(3L)).cast("int"))
       .withColumn("embedding", expr(
         """transform(sequence(1, 64), j -> CAST(
              (pmod(xxhash64(pmod(seed, 6) + 1000003, j), 2000) - 1000) / 1000.0 +

@@ -4,9 +4,9 @@ import java.nio.file.Files
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -205,6 +205,48 @@ class MetricStoreSpec extends SparkSpec {
     assert(r.map(_.getAs[Double]("total")).sum == 3.0)
   }
 
+  test("a warmed fetch over a new range compiles no class and keeps both bounds pushed") {
+    withTempDir("graftstore_codegen") { d =>
+      val store = new MetricStore(spark, d.toString)
+      store.track(mkEvents(Seq(
+        ("2024-01-01 10:05:00", "cpu", "h1", 1.0), ("2024-01-01 20:05:00", "cpu", "h2", 2.0),
+        ("2024-01-02 08:05:00", "cpu", "h1", 4.0), ("2024-01-02 13:05:00", "mem", "h1", 8.0))))
+      def fetch(from: String, to: String) = store.fetch(from, to, Seq(Some("cpu"), None))
+      fetch("2024-01-01", "2024-01-02").collect() // warm: compiles this pattern's classes
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val df = fetch("2024-01-01 12:00:00", "2024-01-02 12:00:00")
+      val rows = df.collect()
+      assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiles,
+        "a fetch over a new range recompiled generated code")
+      assert(rows.map(_.getAs[Double]("total")).sorted.toSeq == Seq(2.0, 4.0))
+      val pushed = new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
+        case s: FileSourceScanExec => s.metadata("PushedFilters")
+      }
+      assert(pushed.length == 1 && pushed.head.contains("GreaterThanOrEqual(bucket,") &&
+        pushed.head.contains("LessThan(bucket,"), s"bucket bounds not pushed: $pushed")
+    }
+  }
+
+  test("a one-split fetch merges without a shuffle; a larger one shuffles, same rows") {
+    withTempDir("graftstore_split") { d =>
+      val store = new MetricStore(spark, d.toString)
+      store.track(mkEvents(Seq(("2024-01-01 10:05:00", "cpu", "h1", 1.0))))
+      store.track(mkEvents(Seq(
+        ("2024-01-01 10:35:00", "cpu", "h1", 2.0), ("2024-01-01 11:05:00", "cpu", "h2", 4.0))))
+      def fetched() = {
+        val df = store.fetch("2024-01-01", "2024-01-02", Seq(Some("cpu"), None))
+        val rows = df.collect().map(_.toString).sorted.toSeq
+        (rows, shuffles(df.queryExecution.executedPlan))
+      }
+      val (small, smallShuffles) = fetched()
+      assert(smallShuffles == 0, s"a one-split fetch ran $smallShuffles shuffle exchange(s)")
+      assert(small.length == 2)
+      val (large, largeShuffles) = withConf("spark.sql.files.maxPartitionBytes" -> "1k")(fetched())
+      assert(largeShuffles == 1, s"a fetch above one split ran $largeShuffles shuffle exchange(s)")
+      assert(large == small)
+    }
+  }
+
   test("fetch on a store with no data returns no rows with the store's schema") {
     val fetchSchema = Seq("epoch", "depth", "f1", "f2", "bucket", "total", "cnt")
     val never = new MetricStore(spark, Files.createTempDirectory("graftstore_none").toString)
@@ -248,46 +290,6 @@ class MetricStoreSpec extends SparkSpec {
         "SELECT * FROM graft_fetch('bare', 'us', '2024-01-01', '2024-01-02')").collect())
       assert(e.getMessage.contains("bare") && e.getMessage.contains(MetricStore.ParamFile))
     }
-  }
-
-  /** Run `body` with session confs set, restoring their previous values. */
-  private def withConf[T](kvs: (String, String)*)(body: => T): T = {
-    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
-  /** Spark jobs `body` started, told apart from other threads' jobs by a
-    * job group. A marker job after it flushes the asynchronous listener
-    * bus: events arrive in order, so once the marker's start is seen
-    * every earlier job's is too.
-    */
-  private def jobsDuring(body: => Any): Int = {
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        groups.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .getOrElse(""))
-    }
-    def marker(id: String): Unit = {
-      spark.sparkContext.setJobGroup(id, id)
-      try spark.sparkContext.parallelize(Seq(1), 1).count()
-      finally spark.sparkContext.clearJobGroup()
-      val deadline = System.nanoTime() + 30000000000L
-      while (!groups.contains(id) && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(groups.contains(id), s"listener never saw marker job $id")
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      spark.sparkContext.setJobGroup("graft-body", "graft-body")
-      try body finally spark.sparkContext.clearJobGroup()
-      marker("graft-marker")
-      groups.asScala.count(_ == "graft-body")
-    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   /** Executed plans of the queries `body` ran. */

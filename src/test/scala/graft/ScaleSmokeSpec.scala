@@ -6,8 +6,6 @@ import java.sql.Timestamp
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Dataset, SQLContext}
-import org.apache.spark.sql.execution.FileSourceScanExec
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -63,19 +61,6 @@ class ScaleSmokeSpec extends SparkSpec with BeforeAndAfterAllConfigMap {
 
   private def frozen(df: DataFrame): DataFrame = {
     val p = df.persist(MEMORY_AND_DISK); p.count(); p
-  }
-
-  /** Collect `df`, then sum the partitions its scans of a table
-    * partitioned by `column` opened: what was read, not what the plan
-    * text promises. */
-  private def partitionsRead(df: DataFrame, column: String): (Int, Long) = {
-    val n = df.collect().length
-    val parts = new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
-      case s: FileSourceScanExec if s.relation.partitionSchema.fieldNames.contains(column) =>
-        s.metrics("numPartitions").value
-    }
-    assert(parts.nonEmpty, s"no scan of a $column-partitioned table in the executed plan")
-    (n, parts.sum)
   }
 
   private def hitsOf(truth: DataFrame, got: DataFrame): Long =

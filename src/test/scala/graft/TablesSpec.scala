@@ -119,6 +119,37 @@ class TablesSpec extends SparkSpec {
     }
   }
 
+  /** Every data dir the engine reads: the generated test tables and the benchmark's. */
+  private val dataDirs = Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01",
+    "/root/testdata/sf0.1", "graftbench/data/sf0.01")
+
+  test("load starts no Spark job for any table, in a fresh session") {
+    val fresh = spark.newSession()
+    for (dir <- dataDirs; name <- Tables.all) {
+      val jobs = jobsDuring(Tables.load(fresh, dir, name).schema)
+      assert(jobs == 0, s"Tables.load($dir, $name) ran $jobs Spark job(s)")
+    }
+  }
+
+  test("the declared schema is the inferred one for every table in every data dir") {
+    for (dir <- dataDirs; name <- Tables.all) {
+      val inferred = spark.read.parquet(s"$dir/$name.parquet").schema
+      assert(inferred == Tables.schemas(name), s"$dir/$name: inferred $inferred")
+    }
+  }
+
+  test("load refuses an events.ts adjusted to UTC") {
+    withTempDir("graft_ltz") { d =>
+      withConf("spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS") {
+        eventsDf(Seq(("2024-01-01 10:05:00", "purchase", 7L, 1.0)))
+          .withColumn("ts", col("ts").cast("timestamp"))
+          .write.parquet(s"$d/events.parquet")
+      }
+      val e = intercept[IllegalStateException](Tables.load(spark, d.toString, "events"))
+      assert(e.getMessage.contains("TIMESTAMP(MICROS,true)"), e.getMessage)
+    }
+  }
+
   test("events values sit on the 2-dec cent grid (the fused-aggregate invariant)") {
     // Tsdb.topkMoversFromEvents (and every exact-LONG-cents sum) assumes
     // event values are whole cents: round(v*100) is then lossless and the
