@@ -11,6 +11,7 @@ import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, JavaCode}
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.SqlBridge
 import org.apache.spark.sql.types._
@@ -99,12 +100,12 @@ object StoreParams {
   * segment files (the analog of RW epoch blocks) covering EVERY prefix of
   * the field list (epoch.go:66-80); Fetch merges segments with a
   * sum-reaggregation (the analog of reading RO+RW epochs) and prunes
-  * partitions by a plain string compare on `epoch`. A Fetch whose epochs
-  * hold at most one split of files merges inside the scan's one task (no
-  * shuffle), and its range is bound by reference in generated code, so a
-  * repeated Fetch over a new range compiles nothing. Expire drops whole
-  * epoch partition directories, exactly like cache.Expire's os.RemoveAll
-  * (kadiyadb epoch/cache.go:136-156).
+  * partitions by a plain string compare on `epoch`. A small Fetch merges
+  * inside the scan's one task (no shuffle), and its range is bound by
+  * reference in generated code, so a repeated Fetch over a new range
+  * compiles nothing. Expire drops whole epoch partition directories,
+  * exactly like cache.Expire's os.RemoveAll (kadiyadb
+  * epoch/cache.go:136-156).
   *
   * Every read goes through ONE declared segment schema derived from
   * [[StoreParams]] (see [[segmentSchema]]), so no read starts a parquet
@@ -230,12 +231,14 @@ final class MetricStore(spark: SparkSession, private[graft] val path: String,
     *    [[ReferenceLiteral]], so a Fetch over a new range reuses the
     *    whole-stage classes an earlier Fetch of the same pattern shape
     *    compiled. The scan still pushes both bounds into the parquet reader.
-    *  - A one-split Fetch merges inside the scan's task: when the epoch
-    *    directories the range prunes to hold at most
-    *    `spark.sql.files.maxPartitionBytes` of files (compact's
-    *    metadata-only size rule), the segments are coalesced to one
-    *    partition before the merge, so the plan has no Exchange and runs
-    *    one stage. A larger Fetch merges through a shuffle.
+    *  - A small Fetch merges inside the scan's task: when the files its
+    *    pruned scan reads hold at most [[MetricStore.OneTaskFetchBytes]]
+    *    (and at most one `spark.sql.files.maxPartitionBytes` split), the
+    *    segments are coalesced to one partition before the merge, so the
+    *    plan has no Exchange and runs one stage. A larger Fetch keeps a
+    *    parallel scan and merges through a shuffle. The size comes from
+    *    the file index Spark listed when the segments frame was built;
+    *    nothing is listed again.
     */
   def fetch(from: String, to: String, pattern: Seq[Option[String]]): DataFrame = {
     require(pattern.length <= nFields, s"pattern deeper than ${params.fields}")
@@ -250,7 +253,8 @@ final class MetricStore(spark: SparkSession, private[graft] val path: String,
     val inRange = segments()
       .filter(col("epoch") >= lit(e0) && col("epoch") <= lit(e1))
       .filter(fieldMatch && col("bucket") >= bound(lo) && col("bucket") < bound(hi))
-    merge(if (rangeBytes(e0, e1) <= maxPartitionBytes) inRange.coalesce(1) else inRange)
+    val oneTask = scanBytes(inRange) <= math.min(MetricStore.OneTaskFetchBytes, maxPartitionBytes)
+    merge(if (oneTask) inRange.coalesce(1) else inRange)
   }
 
   /** Values of constant columns, evaluated on the driver after analysis
@@ -262,11 +266,14 @@ final class MetricStore(spark: SparkSession, private[graft] val path: String,
   private def maxPartitionBytes: Long =
     JavaUtils.byteStringAsBytes(spark.conf.get("spark.sql.files.maxPartitionBytes"))
 
-  /** Bytes of the segment files in epochs [first, last] (0 for a null bound). */
-  private def rangeBytes(first: String, last: String): Long =
-    if (first == null || last == null) 0L
-    else listEpochDirs(Paths.get(dataDir))
-      .collect { case (e, dir) if e >= first && e <= last => parquetBytes(dir) }.sum
+  /** Bytes of the files `df`'s scan reads after partition pruning, taken
+    * from its planned scan's selection over the frame's file index (no
+    * job, no second listing); 0 when `df` reads no files.
+    */
+  private def scanBytes(df: DataFrame): Long =
+    df.queryExecution.sparkPlan.collectFirst {
+      case s: FileSourceScanExec => s.selectedPartitions.totalFileSize
+    }.getOrElse(0L)
 
   /** Expire: physically drop epoch partitions older than `retentionEpochs`
     * epochs counting back from the newest epoch present. Returns dropped
@@ -479,6 +486,16 @@ object MetricStore {
 
   /** The epoch-partitioned segment directory under a store's path. */
   private[graft] val PointsDir = "points"
+
+  /** The largest Fetch (bytes of segment files after pruning) that merges
+    * in one task instead of a parallel scan and a shuffle. Measured in a
+    * local[4] session on 4 cores, with a wildcard fetch that keeps every
+    * row: one task won at 0.28 and 0.55 MB (216 vs 267 ms, 214 vs 265 ms),
+    * tied at 1.1 MB and lost from 2.2 MB on (386 vs 310 ms; 626 vs 296 ms
+    * at 4.5 MB). Half the crossover leaves a margin for hosts where the
+    * shuffle costs less.
+    */
+  private[graft] val OneTaskFetchBytes: Long = 512L * 1024
 
   /** Open the existing store at `path` with the [[StoreParams]] its
     * params.json declares, like kadiyadb's Open reading its params.json.

@@ -4,8 +4,8 @@ import java.nio.file.Files
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
@@ -205,21 +205,29 @@ class MetricStoreSpec extends SparkSpec {
     assert(r.map(_.getAs[Double]("total")).sum == 3.0)
   }
 
-  test("a warmed fetch over a new range compiles no class and keeps both bounds pushed") {
+  test("a fetch over a new range reuses the compiled code and keeps both bounds pushed") {
     withTempDir("graftstore_codegen") { d =>
       val store = new MetricStore(spark, d.toString)
       store.track(mkEvents(Seq(
         ("2024-01-01 10:05:00", "cpu", "h1", 1.0), ("2024-01-01 20:05:00", "cpu", "h2", 2.0),
         ("2024-01-02 08:05:00", "cpu", "h1", 4.0), ("2024-01-02 13:05:00", "mem", "h1", 8.0))))
+      val helper = new AdaptiveSparkPlanHelper {}
       def fetch(from: String, to: String) = store.fetch(from, to, Seq(Some("cpu"), None))
-      fetch("2024-01-01", "2024-01-02").collect() // warm: compiles this pattern's classes
-      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      // CodeGenerator caches compiled classes by source text, so equal
+      // whole-stage sources mean the second range compiles nothing.
+      def sources(df: DataFrame) = helper.collect(df.queryExecution.executedPlan) {
+        case w: WholeStageCodegenExec => w.doCodeGen()._2.body
+      }
+      val warm = fetch("2024-01-01", "2024-01-02")
+      assert(warm.collect().map(_.getAs[Double]("total")).sorted.toSeq == Seq(1.0, 2.0))
       val df = fetch("2024-01-01 12:00:00", "2024-01-02 12:00:00")
       val rows = df.collect()
-      assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiles,
-        "a fetch over a new range recompiled generated code")
       assert(rows.map(_.getAs[Double]("total")).sorted.toSeq == Seq(2.0, 4.0))
-      val pushed = new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
+      val (warmCode, code) = (sources(warm), sources(df))
+      assert(warmCode.nonEmpty, "the fetch ran no whole-stage code")
+      val same = code == warmCode
+      assert(same, "a fetch over a new range generated different code")
+      val pushed = helper.collect(df.queryExecution.executedPlan) {
         case s: FileSourceScanExec => s.metadata("PushedFilters")
       }
       assert(pushed.length == 1 && pushed.head.contains("GreaterThanOrEqual(bucket,") &&
@@ -244,6 +252,28 @@ class MetricStoreSpec extends SparkSpec {
       val (large, largeShuffles) = withConf("spark.sql.files.maxPartitionBytes" -> "1k")(fetched())
       assert(largeShuffles == 1, s"a fetch above one split ran $largeShuffles shuffle exchange(s)")
       assert(large == small)
+    }
+  }
+
+  test("a fetch above OneTaskFetchBytes keeps the parallel scan and shuffle merge") {
+    withTempDir("graftstore_wide") { d =>
+      val store = new MetricStore(spark, d.toString)
+      // two appends of 300 hosts x 144 ten-minute ticks of random values: ~0.8 MB
+      val hosts = 300
+      val tick = (col("id") / hosts).cast("long") * 600L
+      for (a <- 0 until 2) store.track(spark.range(0L, hosts * 144L).select(
+        (lit(1704067200L) + tick + a).cast("timestamp").cast("timestamp_ntz").as("ts"),
+        concat(lit("m"), (col("id") % 7).cast("string")).as("f1"),
+        concat(lit("h"), (col("id") % hosts).cast("string")).as("f2"),
+        rand(a).as("value")))
+      val bytes = Files.walk(d).iterator().asScala
+        .filter(_.toString.endsWith(".parquet")).map(Files.size).sum
+      assert(bytes > MetricStore.OneTaskFetchBytes, s"the store holds only $bytes bytes")
+      val df = store.fetch("2024-01-01", "2024-01-02", Seq(None, None))
+      assert(df.agg(sum("cnt")).head().getLong(0) == 2L * hosts * 144)
+      df.collect()
+      val n = shuffles(df.queryExecution.executedPlan)
+      assert(n == 1, s"a fetch of $bytes bytes ran $n shuffle exchange(s)")
     }
   }
 
