@@ -76,9 +76,11 @@ object GraftExtensions {
   /** The graft_fetch table function body: open the named store under
     * `spark.graft.fetch.root` with its own params.json (so the pattern
     * may be as deep as the store's fields), parse the '.'-separated
-    * pattern ('*' = wildcard), and return [[graft.core.MetricStore.fetch]]'s
-    * plan — depth filter, field equalities, epoch pruning and bucket range
-    * all derived, nothing hand-written by the remote client.
+    * pattern ('*' = wildcard, any other segment an exact value, the empty
+    * one included, so the depth is the segment count), and return
+    * [[graft.core.MetricStore.fetch]]'s plan — depth filter, field
+    * equalities, epoch pruning and bucket range all derived, nothing
+    * hand-written by the remote client.
     */
   private[graft] def fetchPlan(args: Seq[Expression])
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {
@@ -103,7 +105,8 @@ object GraftExtensions {
     val root = spark.conf.getOption("spark.graft.fetch.root").getOrElse(
       throw new IllegalStateException(
         "graft_fetch: set spark.graft.fetch.root to the stores directory"))
-    val fields = pattern.split('.').toSeq
+    // limit -1 keeps trailing empty segments
+    val fields = pattern.split("\\.", -1).toSeq
       .map(f => if (f == "*") None else Some(f))
     graft.core.MetricStore.open(spark, s"$root/$storeName")
       .fetch(from, to, fields)

@@ -23,6 +23,15 @@ import graft.operators.CorpusArtifact
   * partition storage, retention bounds history, `fields` names the series
   * hierarchy levels. MaxRO/MaxRWEpochs (an mmap cache concern) have no
   * Spark equivalent — the executor cache + partition pruning fill that role.
+  *
+  * It is also the one owner of the Track/Fetch rules every writer and
+  * reader of a series layout applies: the prefix sets Track rolls up
+  * ([[prefixes]], [[rollup]], depth taken from grouping), the Fetch
+  * pattern predicate ([[matches]]), the bucket and the epoch
+  * ([[bucket]], [[epochStart]], [[epochId]]). [[MetricStore]], the
+  * streaming sink and `Tsdb`'s event family (through `Tsdb.Layout`) all
+  * call these, so a batch, a stream and a query-time aggregation of the
+  * same feed return the same rows.
   */
 final case class StoreParams(
     resolution: String = "hour",
@@ -45,6 +54,58 @@ final case class StoreParams(
   require(fields.nonEmpty && fields.forall(_.nonEmpty), s"series fields must be non-empty names, got $fields")
 
   private[core] def durationSeconds: Long = durSec
+
+  /** The series prefixes Track adds every point to: `fields.take(1)`, …,
+    * `fields` (kadiyadb epoch.go:66-80).
+    */
+  private[graft] def prefixes: Seq[Seq[String]] = (1 to fields.length).map(fields.take)
+
+  /** Resolution bucket of a timestamp. */
+  private[graft] def bucket(ts: Column): Column = Tsdb.bucket(ts, resolution)
+
+  /** First instant of the epoch holding `ts` (a day epoch starts at
+    * midnight, a week epoch on Monday, like `date_trunc`).
+    */
+  private[graft] def epochStart(ts: Column): Column = Tsdb.bucket(ts, epochDuration)
+
+  /** One epoch's length, to add to an [[epochStart]]. */
+  private[graft] def epochLength: Column = expr(s"INTERVAL 1 $epochDuration")
+
+  /** The epoch id: [[epochStart]] as `yyyy-MM-dd`, so lexicographic order
+    * is temporal order. Partition directories are named by it.
+    */
+  private[graft] def epochId(ts: Column): Column = date_format(epochStart(ts), "yyyy-MM-dd")
+
+  /** Track's rollup of `df` (series fields and `bucket` columns): ONE
+    * grouping-sets aggregation over every prefix and `bucket`, computing
+    * `aggs` and a `depth` column. Depth counts the fields a row is grouped
+    * by, so a NULL field value stays a series of its own at its depth
+    * instead of reading as a shallower rollup row.
+    */
+  private[graft] def rollup(df: DataFrame, aggs: Column*): DataFrame = {
+    val depth = fields.map(f => lit(1) - grouping(f)).reduce(_ + _).cast(IntegerType)
+    df.groupingSets(prefixes.map(_.map(col) :+ col("bucket")), (fields.map(col) :+ col("bucket")): _*)
+      .agg(aggs.head, (aggs.tail :+ depth.as("depth")): _*)
+  }
+
+  /** The series columns of a depth-`d` row: the prefix's fields, then the
+    * rest as NULL strings (Track's layout of a rollup row).
+    */
+  private[graft] def seriesCols(d: Int): Seq[Column] =
+    fields.take(d).map(col) ++ fields.drop(d).map(lit(null).cast(StringType).as(_))
+
+  /** Fetch's series predicate (kadiyadb Fetch): rows at exactly the
+    * pattern's depth whose fields equal each `Some` value; `None` is the
+    * `*` wildcard and matches any value, NULL included.
+    */
+  private[graft] def matches(pattern: Seq[Option[String]]): Column = {
+    require(pattern.nonEmpty && pattern.length <= fields.length,
+      s"pattern ${pattern.mkString("[", ",", "]")} must name 1 to ${fields.length} of $fields")
+    pattern.zip(fields).foldLeft(col("depth") === pattern.length) {
+      case (acc, (Some(v), f)) => acc && col(f) === lit(v)
+      case (acc, (None, _))    => acc
+    }
+  }
 }
 
 object StoreParams {
@@ -116,10 +177,13 @@ object StoreParams {
   * pruning; appends are small per-epoch deltas; compact() rewrites an
   * epoch into as many contiguous bucket-range files as its size calls for.
   *
-  * This class is the one owner of the layout: the streaming sink
-  * ([[graft.streaming.StreamingTracker.startIntoStore]]) takes the
-  * series fields, resolution, epoch id, `points/` location and params.json
-  * write from a store handle, so a stream writes what Track writes.
+  * This class is the one owner of the store's on-disk layout: the
+  * streaming sink ([[graft.streaming.StreamingTracker.startIntoStore]])
+  * takes the `points/` location, params.json write and [[StoreParams]]
+  * from a store handle, so a stream writes what Track writes. The
+  * Track/Fetch rules themselves (prefix sets and depth, the pattern
+  * predicate, bucket and epoch id) are [[StoreParams]]' own: Track,
+  * Fetch and deleteSeries call them rather than spelling them out.
   */
 final class MetricStore(spark: SparkSession, private[graft] val path: String,
     private[graft] val params: StoreParams = StoreParams()) {
@@ -162,7 +226,8 @@ final class MetricStore(spark: SparkSession, private[graft] val path: String,
 
   /** Track: accumulate (total, count) per series prefix and bucket, append
     * to the epoch-partitioned store. Input schema: (ts, fields..., value).
-    * One grouping-sets aggregation covers all prefix depths.
+    * One grouping-sets aggregation ([[StoreParams.rollup]]) covers all
+    * prefix depths; a NULL field value is a series of its own.
     */
   def track(events: DataFrame): Unit =
     trackIncrements(events
@@ -188,25 +253,13 @@ final class MetricStore(spark: SparkSession, private[graft] val path: String,
     * feed with integer values or ids writes segments every read accepts.
     */
   private def aggregateIncrements(incs: DataFrame): DataFrame = {
-    // Forward fold so the DEEPEST non-null field ends up as the outermost test.
-    val depthCol = params.fields.zipWithIndex
-      .foldLeft(lit(0)) { case (acc, (f, i)) => when(col(f).isNotNull, i + 1).otherwise(acc) }
     val base = incs
       .withColumns(params.fields.map(f => f -> col(f).cast(StringType)).toMap)
-      .withColumn("bucket", Tsdb.bucket(col("ts"), params.resolution))
-    val sets = (1 to nFields).map(i => fieldCols.take(i) :+ col("bucket"))
-    base
-      .groupingSets(sets, (fieldCols :+ col("bucket")): _*)
-      .agg(sum(col("total")).cast(DoubleType).as("total"), sum(col("cnt")).cast(LongType).as("cnt"))
-      .withColumn("depth", depthCol)
-      .withColumn("epoch", epochOf(col("bucket")))
+      .withColumn("bucket", params.bucket(col("ts")))
+    params.rollup(base,
+      sum(col("total")).cast(DoubleType).as("total"), sum(col("cnt")).cast(LongType).as("cnt"))
+      .withColumn("epoch", params.epochId(col("bucket")))
   }
-
-  /** The epoch id of a bucket (or wall-clock string): its duration-floored
-    * day as `yyyy-MM-dd`, so lexicographic order is temporal order.
-    */
-  private[graft] def epochOf(bucket: Column): Column =
-    date_format(Tsdb.epochOf(bucket, params.epochDuration), "yyyy-MM-dd")
 
   /** All points, segments merged (re-summed) back to one row per
     * (series, bucket). The epoch partition column stays available for
@@ -220,7 +273,8 @@ final class MetricStore(spark: SparkSession, private[graft] val path: String,
       .agg(sum(col("total")).as("total"), sum(col("cnt")).as("cnt"))
 
   /** Fetch: field-pattern + [from, to) range, kadiyadb Fetch semantics
-    * (pattern length = queried depth; None = `*` wildcard). The range
+    * ([[StoreParams.matches]]: pattern length = queried depth, None = `*`
+    * wildcard; 1 to `fields.length` levels). The range
     * predicate on `epoch` (a string partition column) prunes whole epoch
     * directories before any file is read. Building the frame runs no
     * Spark job, and a store with no data fetches no rows.
@@ -241,18 +295,14 @@ final class MetricStore(spark: SparkSession, private[graft] val path: String,
     *    nothing is listed again.
     */
   def fetch(from: String, to: String, pattern: Seq[Option[String]]): DataFrame = {
-    require(pattern.length <= nFields, s"pattern deeper than ${params.fields}")
-    val Seq(firstEpoch, lastEpoch, lo, hi) = constants(epochOf(lit(from)), epochOf(lit(to)),
-      lit(from).cast(TimestampNTZType), lit(to).cast(TimestampNTZType))
+    val seriesMatch = params.matches(pattern)
+    val Seq(firstEpoch, lastEpoch, lo, hi) = constants(params.epochId(lit(from)),
+      params.epochId(lit(to)), lit(from).cast(TimestampNTZType), lit(to).cast(TimestampNTZType))
     val Seq(e0, e1) = Seq(firstEpoch, lastEpoch).map(e => if (e == null) null else e.toString)
-    val fieldMatch = pattern.zip(fieldCols).foldLeft(col("depth") === lit(pattern.length)) {
-      case (acc, (Some(v), c)) => acc && c === lit(v)
-      case (acc, (None, _))    => acc // wildcard
-    }
     def bound(v: Any): Column = SqlBridge.column(new ReferenceLiteral(v, TimestampNTZType))
     val inRange = segments()
       .filter(col("epoch") >= lit(e0) && col("epoch") <= lit(e1))
-      .filter(fieldMatch && col("bucket") >= bound(lo) && col("bucket") < bound(hi))
+      .filter(seriesMatch && col("bucket") >= bound(lo) && col("bucket") < bound(hi))
     val oneTask = scanBytes(inRange) <= math.min(MetricStore.OneTaskFetchBytes, maxPartitionBytes)
     merge(if (oneTask) inRange.coalesce(1) else inRange)
   }
@@ -363,12 +413,9 @@ final class MetricStore(spark: SparkSession, private[graft] val path: String,
       require(params.durationSeconds % (h * 3600L) == 0,
         s"slot ${h}h must tile epochDuration '${params.epochDuration}'")
     }
-    def slot(h: Int) = expr(
-      s"timestampadd(HOUR, CAST(floor(hour(bucket) / $h) * $h AS INT), date_trunc('DAY', bucket))")
-      .cast("timestamp_ntz")
     val pts = points().filter(col("epoch").isin(epochs: _*))
     val out = slotHours.map { h =>
-      pts.groupBy((Seq(col("epoch"), col("depth")) ++ fieldCols :+ slot(h).as("bucket")): _*)
+      pts.groupBy((Seq(col("epoch"), col("depth")) ++ fieldCols :+ Tsdb.slot(h).as("bucket")): _*)
         .agg(round(sum(col("total")), 2).as("total"), sum(col("cnt")).as("cnt"))
         .withColumn("res_hours", lit(h))
     }.reduce(_ union _)
@@ -407,21 +454,18 @@ final class MetricStore(spark: SparkSession, private[graft] val path: String,
     require(pattern.length == nFields,
       s"deleteSeries pattern must name all ${params.fields} levels (use None as wildcard)")
     val pts = segments()
-    val matchCond = pattern.zip(fieldCols).foldLeft(col("depth") === nFields) {
-      case (acc, (Some(v), c)) => acc && c === lit(v)
-      case (acc, (None, _))    => acc
-    }
+    val matchCond = params.matches(pattern)
     val victims = pts.filter(matchCond).persist()
     val touched = victims.select(col("epoch")).distinct()
       .collect().map(_.getString(0)).toSeq // bounded by epoch count, not data
     if (touched.isEmpty) { victims.unpersist(); return 0L }
     val nDeleted = victims.count()
     val inTouched = pts.filter(col("epoch").isin(touched: _*))
-    val adjustedPrefixes = (1 until nFields).map { d =>
-      val keys = params.fields.take(d) ++ Seq("bucket", "epoch")
+    val adjustedPrefixes = params.prefixes.init.map { prefix =>
+      val keys = prefix ++ Seq("bucket", "epoch")
       val delta = victims.groupBy(keys.map(col): _*)
         .agg(sum(col("total")).as("__dt"), sum(col("cnt")).as("__dc"))
-      inTouched.filter(col("depth") === d).join(delta, keys, "left")
+      inTouched.filter(col("depth") === prefix.length).join(delta, keys, "left")
         .withColumn("total", col("total") - coalesce(col("__dt"), lit(0.0)))
         .withColumn("cnt", col("cnt") - coalesce(col("__dc"), lit(0L)))
         .drop("__dt", "__dc")

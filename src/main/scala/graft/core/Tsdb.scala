@@ -18,11 +18,17 @@ import org.apache.spark.sql.functions._
   *    (/root/reference/database.go:267-277, /root/reference/epoch/cache.go:136-156).
   *
   * Here the "database" is the `events` fact table and a series is identified
-  * by fields = [event_type, user_id]. All transformations are declarative
-  * DataFrame ops: aggregation is map-side-partial (shuffle volume is
-  * |series x buckets|, not |events|), pattern matching is a pushed-down
-  * predicate, and epochs map to time-partitioning — so the same plan holds
-  * on a 1000-executor cluster at 100 TB.
+  * by fields = [event_type, user_id]. The Track/Fetch family (trackRollup,
+  * fetchEvents, fetchDense, points, points1, epochChunks) takes its
+  * layout from one constant [[StoreParams]], [[Layout]] (hour buckets,
+  * day epochs), so it applies the same prefix, pattern, bucket and epoch
+  * rules as [[MetricStore]] and the streaming sink.
+  *
+  * All transformations are declarative DataFrame ops: aggregation is
+  * map-side-partial (shuffle volume is |series x buckets|, not |events|),
+  * pattern matching is a pushed-down predicate, and epochs map to
+  * time-partitioning — so the same plan holds on a 1000-executor cluster
+  * at 100 TB.
   */
 object Tsdb {
 
@@ -33,120 +39,64 @@ object Tsdb {
   def bucket(ts: Column, resolution: String): Column =
     date_trunc(resolution, ts).cast("timestamp_ntz")
 
-  /** Wall-clock 'yyyy-MM-dd[ HH:mm:ss]' → nanos since epoch (UTC). */
-  private def wallNanos(s: String): Long = {
-    val ldt =
-      if (s.contains(" "))
-        java.time.LocalDateTime.parse(s.replace(' ', 'T'))
-      else java.time.LocalDate.parse(s).atStartOfDay()
-    ldt.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000000L
-  }
-
-  /** [floor(from), ceil(to)) over `duration`-sized epochs — the epoch span
-    * a [from, to) window touches (database.go:267 split()).
+  /** The events table's series layout: `f1` = `event_type`, `f2` =
+    * `user_id` (as a string), hourly buckets, day epochs. Every Track and
+    * Fetch of the event family below takes its prefixes, pattern
+    * predicate, bucket and epoch from it.
     */
-  private[graft] def epochBounds(from: String, to: String, duration: String): (String, String) = {
-    def parse(s: String) =
-      if (s.length > 10) java.time.LocalDateTime.parse(s.replace(' ', 'T'))
-      else java.time.LocalDate.parse(s).atStartOfDay()
-    val unit = duration match {
-      case "day"  => java.time.temporal.ChronoUnit.DAYS
-      case "hour" => java.time.temporal.ChronoUnit.HOURS
-      case d      => throw new IllegalArgumentException(s"unsupported epoch duration: $d")
-    }
-    val lo = parse(from).truncatedTo(unit)
-    val hiRaw = parse(to)
-    val hiFloor = hiRaw.truncatedTo(unit)
-    val hi = if (hiFloor == hiRaw) hiFloor else hiFloor.plus(1, unit)
-    def fmt(t: java.time.LocalDateTime) =
-      t.format(java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss"))
-    (fmt(lo), fmt(hi))
-  }
+  private[graft] val Layout: StoreParams = StoreParams()
+
+  /** The layout's series keys over the raw events columns. */
+  private val seriesKeys: Seq[Column] =
+    Layout.fields.zip(Seq(col("event_type"), col("user_id").cast("string"))).map { case (f, c) => c.as(f) }
 
   /** Canonical materialized store: one row per (series-prefix, bucket).
     * Equivalent of Track()'s write amplification, done as ONE aggregation
     * with grouping sets (depth-1 and depth-2 prefixes), not two passes.
     * Output: f1 (event_type), f2 (user_id as string; NULL at depth 1),
-    *         depth, bucket, total, cnt.
+    *         bucket, total, cnt, depth.
     */
-  def trackRollup(events: DataFrame, resolution: String = "hour"): DataFrame = {
-    val base = events
-      .withColumn("f1", col("event_type"))
-      .withColumn("f2", col("user_id").cast("string"))
-      .withColumn("bucket", bucket(col("ts"), resolution))
-    base
-      .groupingSets(
-        Seq(Seq(col("f1"), col("bucket")), Seq(col("f1"), col("f2"), col("bucket"))),
-        col("f1"), col("f2"), col("bucket"))
-      .agg(
-        round(sum(col("value")), 2).as("total"),
-        count(lit(1)).as("cnt"))
-      .withColumn("depth", when(col("f2").isNull, 1).otherwise(2))
+  def trackRollup(events: DataFrame): DataFrame =
+    Layout.rollup(events.select(seriesKeys :+ Layout.bucket(col("ts")).as("bucket") :+ col("value"): _*),
+      round(sum(col("value")), 2).as("total"), count(lit(1)).as("cnt"))
+
+  /** Events with `ts` in [from, to): a range predicate on the raw nanos
+    * column (pushable into the parquet scan; row-group stats prune whole
+    * epochs) and on the derived ts. Bounds are constant columns, folded
+    * to literals before the scan sees them.
+    */
+  private def inRange(events: DataFrame, from: Column, to: Column): DataFrame = {
+    val (lo, hi) = (from.cast("timestamp_ntz"), to.cast("timestamp_ntz"))
+    // session tz is UTC in every entrypoint, so ntz → ltz is the identity
+    def nanos(c: Column) = unix_micros(c.cast("timestamp")) * 1000L
+    events.filter(
+      (if (events.columns.contains("ts_ns")) col("ts_ns") >= nanos(lo) && col("ts_ns") < nanos(hi)
+       else lit(true)) && col("ts") >= lo && col("ts") < hi)
   }
 
-  /** Fetch: field-pattern + time-range scan over the canonical store.
-    * `pattern` entries: Some(v) = exact match, None = `*` wildcard.
-    * Pattern length selects the prefix depth (kadiyadb returns the node at
-    * exactly the queried depth — index/node.go:126). Bounds are [from, to).
-    */
-  def fetch(points: DataFrame, from: Column, to: Column, pattern: Seq[Option[String]]): DataFrame = {
-    val depthMatch = col("depth") === lit(pattern.length)
-    val fieldCols = Seq(col("f1"), col("f2"))
-    val fieldMatch = pattern.zip(fieldCols).foldLeft(depthMatch) {
-      case (acc, (Some(v), c)) => acc && c === lit(v)
-      case (acc, (None, _))    => acc // wildcard
-    }
-    points.filter(fieldMatch && col("bucket") >= from && col("bucket") < to)
-  }
-
-  /** ntz bucket → epoch seconds (session tz is UTC in every entrypoint,
-    * so the ntz→ltz hop is identity; ntz has no direct long cast).
-    */
-  private def epochSec(c: Column): Column = c.cast("timestamp").cast("long")
-
-  /** Epoch id for a bucket: duration-floor (database.go:267 split()). */
-  def epochOf(bucket: Column, duration: String = "day"): Column =
-    date_trunc(duration, bucket).cast("timestamp_ntz")
+  /** Depth-`d` series points of `events`: one row per (prefix, bucket). */
+  private def seriesPoints(events: DataFrame, d: Int): DataFrame =
+    events.groupBy(seriesKeys.take(d) :+ Layout.bucket(col("ts")).as("bucket"): _*)
+      .agg(round(sum(col("value")), 2).as("total"), count(lit(1)).as("cnt"))
 
   /** Fetch evaluated directly against the raw events table: the pattern
     * and time range become plain predicates on scan columns (pushed into
     * the parquet reader — verified `PushedFilters`), and only the queried
     * prefix depth is aggregated (no Expand of unused grouping sets).
     * This is the plan shape that survives 100 TB: filter → partial agg →
-    * one shuffle of |matching series × buckets| rows.
+    * one shuffle of |matching series × buckets| rows. Output: f1, f2
+    * (NULL at depth 1), bucket, total, cnt, depth.
     *
     * `from`/`to` must be resolution-aligned (bucket predicate ≡ ts
     * predicate), which kadiyadb's integer split() also assumes
     * (/root/reference/database.go:267).
     */
   def fetchEvents(events: DataFrame, from: String, to: String,
-      pattern: Seq[Option[String]], resolution: String = "hour"): DataFrame = {
-    val fieldCols = Seq(col("event_type"), col("user_id").cast("string"))
-    // range predicate on the raw nanos column (pushable into the parquet
-    // scan; row-group stats prune whole epochs) + on the derived ts
-    val ranged = events.filter(
-      (if (events.columns.contains("ts_ns"))
-         col("ts_ns") >= wallNanos(from) && col("ts_ns") < wallNanos(to)
-       else lit(true)) &&
-        col("ts") >= lit(from).cast("timestamp_ntz") && col("ts") < lit(to).cast("timestamp_ntz"))
-    val filtered = pattern.zip(fieldCols).foldLeft(ranged) {
-      case (df, (Some(v), c)) => df.filter(c === lit(v))
-      case (df, (None, _))    => df
-    }
-    val agg = Seq(round(sum(col("value")), 2).as("total"), count(lit(1)).as("cnt"))
-    if (pattern.length == 1)
-      filtered
-        .groupBy(col("event_type").as("f1"), bucket(col("ts"), resolution).as("bucket"))
-        .agg(agg.head, agg.tail: _*)
-        .select(col("f1"), lit(null).cast("string").as("f2"), col("bucket"),
-          col("total"), col("cnt"), lit(1).as("depth"))
-    else
-      filtered
-        .groupBy(col("event_type").as("f1"), col("user_id").cast("string").as("f2"),
-          bucket(col("ts"), resolution).as("bucket"))
-        .agg(agg.head, agg.tail: _*)
-        .select(col("f1"), col("f2"), col("bucket"),
-          col("total"), col("cnt"), lit(2).as("depth"))
+      pattern: Seq[Option[String]]): DataFrame = {
+    val d = pattern.length
+    seriesPoints(inRange(events, lit(from), lit(to)), d)
+      .select(Layout.seriesCols(d) ++ Seq(col("bucket"), col("total"), col("cnt"), lit(d).as("depth")): _*)
+      .filter(Layout.matches(pattern))
   }
 
   /** Dense fetch — kadiyadb parity: one point for EVERY resolution slot in
@@ -165,62 +115,40 @@ object Tsdb {
     * series with epoch data only before `from` still emits zero rows.
     */
   def fetchDense(events: DataFrame, from: String, to: String,
-      pattern: Seq[Option[String]], resolution: String = "hour",
-      epochDuration: String = "day"): DataFrame = {
-    val pts = fetchEvents(events, from, to, pattern, resolution)
-    val step = expr(s"INTERVAL 1 $resolution")
-    val (eFrom, eTo) = epochBounds(from, to, epochDuration)
-    val fieldCols = Seq(col("event_type"), col("user_id").cast("string"))
-    val inEpochs = events.filter(
-      (if (events.columns.contains("ts_ns"))
-         col("ts_ns") >= wallNanos(eFrom) && col("ts_ns") < wallNanos(eTo)
-       else lit(true)) &&
-        col("ts") >= lit(eFrom).cast("timestamp_ntz") &&
-        col("ts") < lit(eTo).cast("timestamp_ntz"))
-    val matched = pattern.zip(fieldCols).foldLeft(inEpochs) {
-      case (df, (Some(v), c)) => df.filter(c === lit(v))
-      case (df, (None, _))    => df
-    }
-    val srs = matched.select(col("event_type").as("f1"),
-      (if (pattern.length == 1) lit(null).cast("string")
-       else col("user_id").cast("string")).as("f2")).distinct()
+      pattern: Seq[Option[String]]): DataFrame = {
+    val d = pattern.length
+    val keys = Layout.fields.take(d)
+    val (lo, hi) = (lit(from).cast("timestamp_ntz"), lit(to).cast("timestamp_ntz"))
+    // the touched epochs: [epoch of from, first epoch start at or after to)
+    val lastStart = Layout.epochStart(hi)
+    val epochs = inRange(events, Layout.epochStart(lo),
+      when(lastStart === hi, lastStart).otherwise(lastStart + Layout.epochLength))
+    val srs = epochs.select(seriesKeys.take(d) ++ Seq(lit(d).as("depth")): _*)
+      .filter(Layout.matches(pattern))
+      .select(keys.map(col): _*).distinct()
+    val step = expr(s"INTERVAL 1 ${Layout.resolution}")
     val axis = srs
-      .select(col("f1"), col("f2"), explode(sequence(
-        lit(from).cast("timestamp_ntz"),
-        lit(to).cast("timestamp_ntz") - step, step)).as("bucket"))
-      .filter(col("bucket") < lit(to).cast("timestamp_ntz"))
-    val joined =
-      if (pattern.length == 1)
-        // depth-1 rows carry a NULL f2, which never equi-joins: key on f1
-        axis.drop("f2").join(pts.drop("f2", "depth"), Seq("f1", "bucket"), "left")
-          .select(col("f1"), lit(null).cast("string").as("f2"), col("bucket"),
-            col("total"), col("cnt"))
-      else
-        axis.join(pts.drop("depth"), Seq("f1", "f2", "bucket"), "left")
-          .select(col("f1"), col("f2"), col("bucket"), col("total"), col("cnt"))
-    joined.select(col("f1"), col("f2"), col("bucket"),
-      coalesce(col("total"), lit(0.0)).as("total"),
-      coalesce(col("cnt"), lit(0L)).as("cnt"),
-      lit(pattern.length).as("depth"))
+      .select(keys.map(col) :+ explode(sequence(lo, hi - step, step)).as("bucket"): _*)
+      .filter(col("bucket") < hi)
+    val pts = fetchEvents(events, from, to, pattern)
+      .select((keys ++ Seq("bucket", "total", "cnt")).map(col): _*)
+    // a NULL field value is a series like any other: its keys join null-safe
+    val on = keys.map(k => axis(k) <=> pts(k)).foldLeft(axis("bucket") === pts("bucket"))(_ && _)
+    axis.join(pts, on, "left").drop(pts("bucket"), keys.map(pts(_)): _*)
+      .select(Layout.seriesCols(d) ++ Seq(col("bucket"),
+        coalesce(col("total"), lit(0.0)).as("total"),
+        coalesce(col("cnt"), lit(0L)).as("cnt"),
+        lit(d).as("depth")): _*)
   }
 
   /** Depth-2 series points only (no rollup expand): one row per
     * (f1, f2, bucket). Cheaper than trackRollup when a single depth is
     * queried — no Expand node, one map-side-partial aggregation.
     */
-  def points(events: DataFrame, resolution: String = "hour"): DataFrame =
-    events
-      .groupBy(
-        col("event_type").as("f1"),
-        col("user_id").cast("string").as("f2"),
-        bucket(col("ts"), resolution).as("bucket"))
-      .agg(round(sum(col("value")), 2).as("total"), count(lit(1)).as("cnt"))
+  def points(events: DataFrame): DataFrame = seriesPoints(events, 2)
 
   /** Depth-1 (rollup) series points: one row per (f1, bucket). */
-  def points1(events: DataFrame, resolution: String = "hour"): DataFrame =
-    events
-      .groupBy(col("event_type").as("f1"), bucket(col("ts"), resolution).as("bucket"))
-      .agg(round(sum(col("value")), 2).as("total"), count(lit(1)).as("cnt"))
+  def points1(events: DataFrame): DataFrame = seriesPoints(events, 1)
 
   /** Fetch result chunked per epoch, kadiyadb's protocol.Chunk shape
     * (database.go:201-251): per epoch, [From, To) clipped to the query
@@ -229,7 +157,7 @@ object Tsdb {
   def epochChunks(pts: DataFrame, from: Column, to: Column): DataFrame =
     pts
       .filter(col("bucket") >= from && col("bucket") < to)
-      .withColumn("epoch", epochOf(col("bucket")))
+      .withColumn("epoch", Layout.epochStart(col("bucket")))
       .groupBy(col("epoch"))
       .agg(
         countDistinct(col("f1"), col("f2")).as("n_series"),
@@ -237,27 +165,35 @@ object Tsdb {
         round(sum(col("total")), 2).as("total"))
       .withColumn("chunk_from", greatest(col("epoch"), from.cast("timestamp_ntz")))
       .withColumn("chunk_to",
-        least(col("epoch") + expr("INTERVAL 1 DAY"), to.cast("timestamp_ntz")))
+        least(col("epoch") + Layout.epochLength, to.cast("timestamp_ntz")))
+
+  /** ntz bucket → epoch seconds (session tz is UTC in every entrypoint,
+    * so the ntz→ltz hop is identity; ntz has no direct long cast).
+    */
+  private def epochSec(c: Column): Column = c.cast("timestamp").cast("long")
 
   /** Expire (epoch/cache.go:136): drop epochs older than the retention
     * window, measured from the newest epoch. The max-epoch scalar is a
     * 1-row aggregate broadcast into the filter — no global window, scales.
     */
   def retentionExpire(pts: DataFrame, retentionDays: Int): DataFrame = {
-    val maxEpoch = pts.agg(max(epochOf(col("bucket"))).as("max_epoch"))
+    val maxEpoch = pts.agg(max(Layout.epochStart(col("bucket"))).as("max_epoch"))
     pts
-      .withColumn("epoch", epochOf(col("bucket")))
+      .withColumn("epoch", Layout.epochStart(col("bucket")))
       .crossJoin(broadcast(maxEpoch))
       .filter(col("epoch") > col("max_epoch") - expr(s"INTERVAL $retentionDays DAYS"))
       .drop("max_epoch")
   }
 
+  /** The `hours`-sized slot of the day holding the `bucket` column. */
+  private[graft] def slot(hours: Int): Column =
+    expr(s"timestampadd(HOUR, CAST(floor(hour(bucket) / $hours) * $hours AS INT), date_trunc('DAY', bucket))")
+      .cast("timestamp_ntz")
+
   /** Re-aggregate hourly points to a coarser resolution (slotHours-sized slots). */
   def downsample(pts: DataFrame, slotHours: Int): DataFrame =
     pts
-      .withColumn("bucket6",
-        expr(s"timestampadd(HOUR, CAST(floor(hour(bucket) / $slotHours) * $slotHours AS INT), date_trunc('DAY', bucket))")
-          .cast("timestamp_ntz"))
+      .withColumn("bucket6", slot(slotHours))
       .groupBy(col("f1"), col("f2"), col("bucket6"))
       .agg(round(sum(col("total")), 2).as("total"), sum(col("cnt")).as("cnt"))
 
@@ -271,9 +207,6 @@ object Tsdb {
     * level, so per-level round(…, 2) is engine-stable.
     */
   def rollupCascade(pts: DataFrame): DataFrame = {
-    def slot(hrs: Int) = expr(
-      s"timestampadd(HOUR, CAST(floor(hour(bucket) / $hrs) * $hrs AS INT), date_trunc('DAY', bucket))")
-      .cast("timestamp_ntz")
     val l1 = pts.select(col("f1"), col("f2"), lit(1).as("res_hours"),
       col("bucket"), col("total"), col("cnt"))
     val l6 = pts
@@ -1072,7 +1005,7 @@ object Tsdb {
     * joining each event back to its user's cohort.
     */
   def retentionCohorts(events: DataFrame): DataFrame = {
-    val days = events.select(col("user_id"), epochOf(col("ts")).as("day")).distinct()
+    val days = events.select(col("user_id"), bucket(col("ts"), "day").as("day")).distinct()
     val cohorts = days.groupBy(col("user_id")).agg(min(col("day")).as("cohort"))
     days.join(cohorts, "user_id")
       .groupBy(col("cohort"), datediff(col("day"), col("cohort")).as("day_offset"))
@@ -1380,9 +1313,7 @@ object Tsdb {
   private def saxSymbols(pts1: DataFrame, segHours: Int): DataFrame = {
     val rd4 = graft.functions.Hashing.rd4 _
     val segs = pts1
-      .withColumn("seg",
-        expr(s"timestampadd(HOUR, CAST(floor(hour(bucket) / $segHours) * $segHours AS INT), date_trunc('DAY', bucket))")
-          .cast("timestamp_ntz"))
+      .withColumn("seg", slot(segHours))
       .groupBy(col("f1"), col("seg"))
       .agg((sum(col("total")) / count(lit(1))).as("m"))
     val stats = segs.groupBy(col("f1"))
@@ -1453,9 +1384,7 @@ object Tsdb {
     */
   def ohlc(pts1: DataFrame, slotHours: Int = 6): DataFrame =
     pts1
-      .withColumn("slot",
-        expr(s"timestampadd(HOUR, CAST(floor(hour(bucket) / $slotHours) * $slotHours AS INT), date_trunc('DAY', bucket))")
-          .cast("timestamp_ntz"))
+      .withColumn("slot", slot(slotHours))
       .groupBy(col("f1"), col("slot"))
       .agg(
         min_by(col("total"), col("bucket")).as("open"),

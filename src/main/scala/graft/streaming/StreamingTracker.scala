@@ -4,7 +4,7 @@ import java.time.{ZoneId, ZoneOffset}
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.{DoubleType, StringType}
 
 import graft.core.MetricStore
@@ -16,6 +16,10 @@ import graft.core.MetricStore
   * readStream → watermark → windowed (total, count) aggregation is the
   * streaming twin of Tsdb.points: same bucket semantics, late data bounded
   * by the watermark, state bounded because closed windows are evicted.
+  * [[startIntoStore]] writes a MetricStore under the Track/Fetch rules of
+  * its `StoreParams` (prefix sets, depth, bucket, epoch id), the ones batch
+  * Track and `Tsdb`'s event family apply, so a streamed store fetches the
+  * rows a batch one does.
   */
 object StreamingTracker {
 
@@ -32,15 +36,18 @@ object StreamingTracker {
         col("total"), col("cnt"))
 
   /** Continuous ingestion INTO a MetricStore: the streaming twin of
-    * MetricStore.track, laid out by the `store` handle. One watermarked
-    * window aggregation per prefix of the store's `fields` (Spark
-    * disallows grouping sets in a streaming aggregation), unioned into ONE
-    * query, so a single writer owns `points/`. Windows are the store's
-    * `resolution` and start where `Tsdb.bucket` starts; epoch ids and
-    * params.json come from the store. Closed windows become segments the
-    * store's segment-merging fetch already handles, committed
-    * exactly-once by [[commitBatch]]; `MetricStore.open` and `loadAll`
-    * find a store that only a stream ever wrote.
+    * MetricStore.track, laid out by the store's `StoreParams`. One
+    * watermarked window aggregation per prefix in `params.prefixes`
+    * (Spark disallows grouping sets in a streaming aggregation), each
+    * writing its prefix's depth, unioned into ONE query, so a single
+    * writer owns `points/`. Windows are the store's `resolution` and
+    * start where `Tsdb.bucket` starts; epoch ids and params.json come
+    * from the store. Closed windows become segments the store's
+    * segment-merging fetch already handles, committed exactly-once by
+    * [[commitBatch]]; `MetricStore.open` and `loadAll` find a store that
+    * only a stream ever wrote. The query runs on Spark's default trigger:
+    * a micro-batch starts as soon as the previous one ends and data or a
+    * watermark advance is waiting.
     *
     * `window()` tiles UTC time while `Tsdb.bucket` truncates in the
     * session time zone, so the session must run in UTC (as
@@ -51,26 +58,25 @@ object StreamingTracker {
     val tz = events.sparkSession.sessionState.conf.sessionLocalTimeZone
     require(ZoneId.of(tz).normalized() == ZoneOffset.UTC,
       s"startIntoStore needs a UTC session time zone, got '$tz'")
-    val fields = store.params.fields
-    val len = s"1 ${store.params.resolution}"
+    val params = store.params
+    val len = s"1 ${params.resolution}"
     // window() tiles from 1970-01-01, a Thursday; Tsdb.bucket's weeks start on Monday
-    val start = if (store.params.resolution.equalsIgnoreCase("week")) "4 days" else "0 seconds"
+    val start = if (params.resolution.equalsIgnoreCase("week")) "4 days" else "0 seconds"
     val base = events
-      .withColumns(fields.map(f => f -> col(f).cast(StringType)).toMap)
+      .withColumns(params.fields.map(f => f -> col(f).cast(StringType)).toMap)
       .withWatermark("ts", watermark)
-    val depths = (1 to fields.length).map { d =>
-      base.groupBy(window(col("ts"), len, len, start) +: fields.take(d).map(col): _*)
+    val depths = params.prefixes.map { prefix =>
+      base.groupBy(window(col("ts"), len, len, start) +: prefix.map(col): _*)
         .agg(sum(col("value")).cast(DoubleType).as("total"), count(lit(1)).as("cnt"))
-        .select(fields.take(d).map(col) ++ fields.drop(d).map(lit(null).cast(StringType).as(_)) ++
+        .select(params.seriesCols(prefix.length) ++
           Seq(col("window.start").cast("timestamp_ntz").as("bucket"),
-            col("total"), col("cnt"), lit(d).as("depth")): _*)
+            col("total"), col("cnt"), lit(prefix.length).as("depth")): _*)
     }
     store.writeParamsIfAbsent()
     val q = depths.reduce(_ union _)
-      .withColumn("epoch", store.epochOf(col("bucket")))
+      .withColumn("epoch", params.epochId(col("bucket")))
       .writeStream
       .outputMode(OutputMode.Append)
-      .trigger(Trigger.ProcessingTime("5 seconds"))
       .option("checkpointLocation", s"$checkpointDir/union")
       .foreachBatch(commitBatch(store.path) _)
       .start()

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.core.Skew
+import graft.core.{MetricStore, Skew}
 
 class ExtensionsSpec extends SparkSpec {
 
@@ -48,6 +48,23 @@ class ExtensionsSpec extends SparkSpec {
     val r = spark.sql(
       "SELECT graft_cosine(a, b) AS same, graft_cosine(a, c) AS orth FROM cv").head()
     assert(r.getDouble(0) == 1.0 && r.getDouble(1) == 0.0)
+  }
+
+  test("graft_fetch: a trailing '.' is one more (empty) segment, not the prefix rollup") {
+    import spark.implicits._
+    withTempDir("graftroot_dot") { tmp =>
+      new MetricStore(spark, tmp.resolve("m").toString).track(Seq(
+        ("2024-01-01 10:05:00", "host1", "cpu", 1.0), ("2024-01-01 10:10:00", "host1", "", 2.0))
+        .toDF("ts", "f1", "f2", "value").withColumn("ts", col("ts").cast("timestamp_ntz")))
+      withConf("spark.graft.fetch.root" -> tmp.toString) {
+        def fetch(pattern: String) = spark.sql(s"SELECT depth, f2, total FROM " +
+          s"graft_fetch('m', '$pattern', '2024-01-01', '2024-01-02')").collect()
+          .map(r => (r.getInt(0), r.getString(1), r.getDouble(2))).sortBy(r => String.valueOf(r._2)).toSeq
+        assert(fetch("host1") == Seq((1, null, 3.0)))
+        assert(fetch("host1.") == Seq((2, "", 2.0)))
+        assert(fetch("host1.*") == Seq((2, "", 2.0), (2, "cpu", 1.0)))
+      }
+    }
   }
 
   test("saltedJoin equals the plain join on a skewed key") {

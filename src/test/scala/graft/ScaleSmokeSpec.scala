@@ -447,8 +447,7 @@ class ScaleSmokeSpec extends SparkSpec with BeforeAndAfterAllConfigMap {
         // inside) — what keeps the 1h watermark from marking tranches late.
         // The last tranche carries a flush sentinel 2h past the end: it
         // closes every real window, and its own window must never emit.
-        // Each tranche costs three ticks of the sink's 5 s trigger, so two
-        // tranches are the fewest that still let the state gate bite.
+        // Two tranches are the fewest that still let the state gate bite.
         val endSec = baseSec + chunks * chunkHours * 3600L
         val sentinel = Point("zz", "zz", new Timestamp((endSec + 2L * 3600L) * 1000L), 0.0)
         (0 until chunks).foreach { c =>

@@ -89,43 +89,48 @@ class StreamingSpec extends SparkSpec {
   test("startIntoStore: streamed windows are fetchable through MetricStore") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("streamstore").toString
-    val chk = java.nio.file.Files.createTempDirectory("streamchk").toString
-    val input = MemoryStream[Point]
-    val qs = StreamingTracker.startIntoStore(input.toDF(), new MetricStore(spark, root), chk,
-      watermark = "0 seconds")
-    try {
-      input.addData(
-        Point("cpu", "h1", ts("2024-01-01 10:05:00"), 10.0),
-        Point("cpu", "h1", ts("2024-01-01 10:50:00"), 5.0),
-        Point("cpu", "h2", ts("2024-01-01 11:10:00"), 2.0))
-      qs.foreach(_.processAllAvailable())
-      // advance the watermark so the 10:00/11:00 windows close and flush
-      input.addData(Point("cpu", "h9", ts("2024-01-01 13:00:00"), 0.0))
-      qs.foreach(_.processAllAvailable())
-      val store = new MetricStore(spark, root)
-      val exact = store.fetch("2024-01-01", "2024-01-02", Seq(Some("cpu"), Some("h1"))).collect()
-      assert(exact.length == 1 && exact.head.getAs[Double]("total") == 15.0)
-      val rollup = store.fetch("2024-01-01", "2024-01-02", Seq(Some("cpu"))).collect()
-      assert(rollup.map(_.getAs[Long]("cnt")).sum == 3L)
-    } finally qs.foreach(_.stop())
+    withTempDir("streamstore") { tmp =>
+      val root = tmp.resolve("streamstore").toString
+      val chk = tmp.resolve("streamchk").toString
+      val input = MemoryStream[Point]
+      val qs = StreamingTracker.startIntoStore(input.toDF(), new MetricStore(spark, root), chk,
+        watermark = "0 seconds")
+      try {
+        input.addData(
+          Point("cpu", "h1", ts("2024-01-01 10:05:00"), 10.0),
+          Point("cpu", "h1", ts("2024-01-01 10:50:00"), 5.0),
+          Point("cpu", "h2", ts("2024-01-01 11:10:00"), 2.0))
+        qs.foreach(_.processAllAvailable())
+        // advance the watermark so the 10:00/11:00 windows close and flush
+        input.addData(Point("cpu", "h9", ts("2024-01-01 13:00:00"), 0.0))
+        qs.foreach(_.processAllAvailable())
+        val store = new MetricStore(spark, root)
+        val exact = store.fetch("2024-01-01", "2024-01-02", Seq(Some("cpu"), Some("h1"))).collect()
+        assert(exact.length == 1 && exact.head.getAs[Double]("total") == 15.0)
+        val rollup = store.fetch("2024-01-01", "2024-01-02", Seq(Some("cpu"))).collect()
+        assert(rollup.map(_.getAs[Long]("cnt")).sum == 3L)
+      } finally qs.foreach(_.stop())
+    }
   }
 
   test("startIntoStore writes what batch track writes: 3-field parity at every depth") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
-    // binary-exact values: the stream and the batch sum them in different orders
+    // binary-exact values: the stream and the batch sum them in different orders;
+    // NULL field values are series of their own at every depth
     val feed = Seq(
       (ts("2024-01-01 23:58:10"), "us", "h1", "cpu", 0.5),
+      (ts("2024-01-01 23:58:20"), "us", "h1", null, 3.0),
+      (ts("2024-01-01 23:58:30"), "eu", null, "cpu", 0.75),
       (ts("2024-01-01 23:58:40"), "us", "h1", "cpu", 1.25),
       (ts("2024-01-01 23:58:50"), "us", "h1", "mem", 8.0),
       (ts("2024-01-01 23:59:30"), "us", "h2", "cpu", 2.75),
       (ts("2024-01-02 00:00:05"), "eu", "h3", "cpu", 4.5),
       (ts("2024-01-02 00:00:55"), "eu", "h3", "cpu", 0.25),
       (ts("2024-01-02 00:01:20"), "us", "h1", "cpu", 16.0))
-    def parity(params: StoreParams): Unit = {
-      val root = java.nio.file.Files.createTempDirectory("streamparity").toString
-      val chk = java.nio.file.Files.createTempDirectory("streamparitychk").toString
+    def parity(params: StoreParams): Unit = withTempDir("streamparity") { tmp =>
+      val root = tmp.toString
+      val chk = tmp.resolve("chk").toString
       val input = MemoryStream[(Timestamp, String, String, String, Double)]
       val qs = StreamingTracker.startIntoStore(
         input.toDF().toDF("ts", "dc", "host", "metric", "value"),
@@ -156,39 +161,43 @@ class StreamingSpec extends SparkSpec {
 
   test("commitBatch is exactly-once under micro-batch replay") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("commitstore").toString
-    val batch = Seq(("cpu", "h1", "2024-01-01 10:00:00", 15.0, 2L, 2))
-      .toDF("f1", "f2", "bucket", "total", "cnt", "depth")
-      .withColumn("bucket", org.apache.spark.sql.functions.col("bucket").cast("timestamp_ntz"))
-      .withColumn("epoch", org.apache.spark.sql.functions.lit("2024-01-01"))
-    StreamingTracker.commitBatch(root)(batch, 7L)
-    StreamingTracker.commitBatch(root)(batch, 7L) // replay of the same batch
-    val store = new graft.core.MetricStore(spark, root)
-    val r = store.fetch("2024-01-01", "2024-01-02", Seq(Some("cpu"), Some("h1"))).collect()
-    assert(r.length == 1 && r.head.getAs[Double]("total") == 15.0
-      && r.head.getAs[Long]("cnt") == 2L) // not doubled
+    withTempDir("commitstore") { tmp =>
+      val root = tmp.toString
+      val batch = Seq(("cpu", "h1", "2024-01-01 10:00:00", 15.0, 2L, 2))
+        .toDF("f1", "f2", "bucket", "total", "cnt", "depth")
+        .withColumn("bucket", org.apache.spark.sql.functions.col("bucket").cast("timestamp_ntz"))
+        .withColumn("epoch", org.apache.spark.sql.functions.lit("2024-01-01"))
+      StreamingTracker.commitBatch(root)(batch, 7L)
+      StreamingTracker.commitBatch(root)(batch, 7L) // replay of the same batch
+      val store = new graft.core.MetricStore(spark, root)
+      val r = store.fetch("2024-01-01", "2024-01-02", Seq(Some("cpu"), Some("h1"))).collect()
+      assert(r.length == 1 && r.head.getAs[Double]("total") == 15.0
+        && r.head.getAs[Long]("cnt") == 2L) // not doubled
+    }
   }
 
   test("commitBatch writes multiple part files; partial-move replay stays exactly-once") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("commitstore2").toString
-    val batch = (0 until 8).map(h => ("cpu", s"h$h", f"2024-01-01 $h%02d:00:00", 1.0, 1L, 2))
-      .toDF("f1", "f2", "bucket", "total", "cnt", "depth")
-      .withColumn("bucket", org.apache.spark.sql.functions.col("bucket").cast("timestamp_ntz"))
-      .withColumn("epoch", org.apache.spark.sql.functions.lit("2024-01-01"))
-      .repartition(3) // a large micro-batch is NOT squeezed through one task
-    StreamingTracker.commitBatch(root)(batch, 9L)
-    val epochDir = java.nio.file.Paths.get(root, "points", "epoch=2024-01-01")
-    def parts() = java.nio.file.Files.list(epochDir).filter(
-      _.getFileName.toString.matches("batch-9-\\d+\\.parquet")).count()
-    assert(parts() > 1)
-    // simulate a crash after the move but before the marker: replay must
-    // clear this batch's files and re-move, never double the data
-    java.nio.file.Files.delete(java.nio.file.Paths.get(root, "_commits", "9"))
-    StreamingTracker.commitBatch(root)(batch, 9L)
-    val store = new graft.core.MetricStore(spark, root)
-    val r = store.fetch("2024-01-01", "2024-01-02", Seq(Some("cpu"), None)).collect()
-    assert(r.length == 8 && r.map(_.getAs[Long]("cnt")).sum == 8L)
+    withTempDir("commitstore2") { tmp =>
+      val root = tmp.toString
+      val batch = (0 until 8).map(h => ("cpu", s"h$h", f"2024-01-01 $h%02d:00:00", 1.0, 1L, 2))
+        .toDF("f1", "f2", "bucket", "total", "cnt", "depth")
+        .withColumn("bucket", org.apache.spark.sql.functions.col("bucket").cast("timestamp_ntz"))
+        .withColumn("epoch", org.apache.spark.sql.functions.lit("2024-01-01"))
+        .repartition(3) // a large micro-batch is NOT squeezed through one task
+      StreamingTracker.commitBatch(root)(batch, 9L)
+      val epochDir = java.nio.file.Paths.get(root, "points", "epoch=2024-01-01")
+      def parts() = java.nio.file.Files.list(epochDir).filter(
+        _.getFileName.toString.matches("batch-9-\\d+\\.parquet")).count()
+      assert(parts() > 1)
+      // simulate a crash after the move but before the marker: replay must
+      // clear this batch's files and re-move, never double the data
+      java.nio.file.Files.delete(java.nio.file.Paths.get(root, "_commits", "9"))
+      StreamingTracker.commitBatch(root)(batch, 9L)
+      val store = new graft.core.MetricStore(spark, root)
+      val r = store.fetch("2024-01-01", "2024-01-02", Seq(Some("cpu"), None)).collect()
+      assert(r.length == 8 && r.map(_.getAs[Long]("cnt")).sum == 8L)
+    }
   }
 
   test("latestPerSeries keeps the newest point via mapGroupsWithState") {

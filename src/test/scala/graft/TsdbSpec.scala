@@ -27,23 +27,6 @@ class TsdbSpec extends SparkSpec {
     assert(rollup.getAs[Double]("total") == 16.0 && rollup.getAs[Long]("cnt") == 3L)
   }
 
-  test("fetch: exact, wildcard, prefix patterns with [from, to) range") {
-    val store = Tsdb.trackRollup(ev)
-    val exact = Tsdb.fetch(store, lit("2024-01-01"), lit("2024-01-02"),
-      Seq(Some("purchase"), Some("1"))).collect()
-    assert(exact.length == 1 && exact.head.getAs[Double]("total") == 15.0)
-    val wild = Tsdb.fetch(store, lit("2024-01-01"), lit("2024-01-03"),
-      Seq(None, Some("2"))).collect()
-    assert(wild.map(_.getAs[String]("f1")).sorted.toSeq == Seq("error", "purchase"))
-    val prefix = Tsdb.fetch(store, lit("2024-01-01"), lit("2024-01-02"),
-      Seq(Some("purchase"))).collect()
-    assert(prefix.length == 1 && prefix.head.getAs[Long]("cnt") == 3L)
-    // range excludes the 2024-01-02 point
-    assert(Tsdb.fetch(store, lit("2024-01-01"), lit("2024-01-02"),
-      Seq(None, None)).collect().forall(_.getAs[String]("f1") != "error" ||
-        exact.nonEmpty))
-  }
-
   test("epochChunks clips chunk bounds to the query range") {
     val chunks = Tsdb.epochChunks(Tsdb.points(ev),
       lit("2024-01-01 00:30:00"), lit("2024-01-02 12:00:00")).collect()
