@@ -444,7 +444,9 @@ final class MetricStore(spark: SparkSession, private[graft] val path: String,
     * `pattern` (Some(v) = exact, None = wildcard) and DECREMENTS every
     * ancestor prefix rollup by the removed series' contribution, so the
     * Track invariant (parent = sum of children + parent-only increments)
-    * still holds. Prefix rows whose count drops to zero are removed.
+    * still holds. Prefix rows whose count drops to zero are removed. A
+    * NULL field value is a value like any other: only `None` matches it,
+    * and a NULL-valued ancestor is decremented like the rest.
     *
     * Only epochs that actually contain matches are rewritten (dynamic
     * partition overwrite); the touched-epoch list is metadata-scale,
@@ -461,17 +463,22 @@ final class MetricStore(spark: SparkSession, private[graft] val path: String,
     if (touched.isEmpty) { victims.unpersist(); return 0L }
     val nDeleted = victims.count()
     val inTouched = pts.filter(col("epoch").isin(touched: _*))
+    // a NULL field value is a series of its own, so the ancestor join
+    // matches prefix fields null-safely (like fetchDense's axis join)
     val adjustedPrefixes = params.prefixes.init.map { prefix =>
       val keys = prefix ++ Seq("bucket", "epoch")
-      val delta = victims.groupBy(keys.map(col): _*)
+      val delta = victims.groupBy(keys.map(k => col(k).as(s"__key_$k")): _*)
         .agg(sum(col("total")).as("__dt"), sum(col("cnt")).as("__dc"))
-      inTouched.filter(col("depth") === prefix.length).join(delta, keys, "left")
+      inTouched.filter(col("depth") === prefix.length)
+        .join(delta, keys.map(k => col(k) <=> col(s"__key_$k")).reduce(_ && _), "left")
         .withColumn("total", col("total") - coalesce(col("__dt"), lit(0.0)))
         .withColumn("cnt", col("cnt") - coalesce(col("__dc"), lit(0L)))
-        .drop("__dt", "__dc")
+        .drop("__dt" +: "__dc" +: keys.map(k => s"__key_$k"): _*)
         .filter(col("cnt") > 0)
     }
-    val keepLeaves = inTouched.filter(col("depth") === nFields && !matchCond)
+    // keep every leaf that does not definitely match: `field = v` is NULL
+    // on a NULL field, and such a leaf is not a victim
+    val keepLeaves = inTouched.filter(col("depth") === nFields && !coalesce(matchCond, lit(false)))
     val out = (adjustedPrefixes :+ keepLeaves).reduce(_.unionByName(_))
       .select(segmentSchema.fieldNames.map(col).toSeq: _*)
     // dynamic overwrite only rewrites partitions PRESENT in `out` — an

@@ -452,6 +452,28 @@ class MetricStoreSpec extends SparkSpec {
     }
   }
 
+  test("deleteSeries keeps NULL-valued series and decrements their NULL ancestors") {
+    withTempDir("graftstore_del_null") { tmp =>
+      val store = new MetricStore(spark, tmp.toString)
+      store.track(mkEvents(Seq(
+        ("2024-01-01 10:05:00", "a", "x", 1.0),
+        ("2024-01-01 10:10:00", "a", null, 2.0),
+        ("2024-01-01 10:15:00", null, "x", 4.0),
+        ("2024-01-01 10:20:00", null, "y", 8.0),
+        ("2024-01-01 10:25:00", "a", "y", 16.0))))
+      def series(): Seq[(Int, String, String, Double, Long)] =
+        store.points().collect().toSeq.map(r => (r.getAs[Int]("depth"), r.getAs[String]("f1"),
+          r.getAs[String]("f2"), r.getAs[Double]("total"), r.getAs[Long]("cnt"))).sortBy(_.toString)
+      assert(store.deleteSeries(Seq(None, Some("y"))) == 2L)
+      // (a, NULL) is not a match of (*, y); the (NULL) rollup loses (NULL, y)
+      assert(series() == Seq(
+        (1, "a", null, 3.0, 2L), (1, null, null, 4.0, 1L),
+        (2, "a", "x", 1.0, 1L), (2, "a", null, 2.0, 1L), (2, null, "x", 4.0, 1L)).sortBy(_.toString))
+      assert(store.deleteSeries(Seq(Some("a"), None)) == 2L)
+      assert(series() == Seq((1, null, null, 4.0, 1L), (2, null, "x", 4.0, 1L)).sortBy(_.toString))
+    }
+  }
+
   test("refreshCascade incrementally maintains 6h/24h continuous aggregates") {
     withTempDir("graftstore_casc") { tmp =>
       val dir = tmp.toString

@@ -23,6 +23,9 @@ import graft.streaming.StreamingTracker
   * return the rows of [[TrackFetchModel]], a plain-Scala model of
   * kadiyadb's Track/Fetch:
   *  - `MetricStore.track`, then its stored points and `fetch`;
+  *  - `MetricStore.deleteSeries` of a full-depth pattern, after which
+  *    the store must hold the model's Track of the feed without the
+  *    deleted leaves;
   *  - for `Tsdb.Layout` (2 fields, hour buckets, day epochs),
   *    `Tsdb.trackRollup`, `Tsdb.fetchEvents` and `Tsdb.fetchDense` over
   *    an events frame;
@@ -32,6 +35,7 @@ class TrackFetchPropertySpec extends SparkSpec {
   import TrackFetchModel._
 
   private val Trials = 25
+  private val DeleteTrials = 12
 
   /** Store rows (epoch, depth, fields, bucket, total, cnt) of `df`. */
   private def storeRows(p: StoreParams, df: DataFrame): Seq[Cell] =
@@ -128,6 +132,31 @@ class TrackFetchPropertySpec extends SparkSpec {
     }
   }
 
+  test("deleteSeries leaves the model's Track of the feed without the deleted leaves") {
+    withTempDir("trackfetch_delete") { tmp =>
+      var (trial, withVictims) = (0, 0)
+      val prop = Prop.forAllNoShrink(genCase) { c =>
+        trial += 1
+        val store = new MetricStore(spark, tmp.resolve(s"s$trial").toString, c.params)
+        store.track(feedFrame(c))
+        val tracked = track(c.params, c.feed)
+        val victims = tracked.keys.count { case (prefix, _) => hit(c.delete, prefix) }
+        if (victims > 0) withVictims += 1
+        val deleted = store.deleteSeries(c.delete)
+        val kept = track(c.params, c.feed.filterNot(pt => hit(c.delete, pt.fields)))
+        (Prop(deleted == victims) :| s"${c.params} deleteSeries ${c.delete}: deleted $deleted, want $victims") &&
+          same("MetricStore.deleteSeries", s"${c.params} ${c.delete}",
+            storeRows(c.params, store.points()), cells(c.params, kept))
+      }
+      val result = Test.check(Test.Parameters.default.withMinSuccessfulTests(DeleteTrials)
+        .withInitialSeed(Seed(20240102L)).withWorkers(1), prop)
+      assert(result.passed, Pretty.pretty(result, Pretty.Params(2)))
+      val (n, full) = compared("MetricStore.deleteSeries")
+      info(s"$n stores compared after a delete ($full non-empty, $withVictims with deleted leaves)")
+      assert(n == DeleteTrials && full > 0 && withVictims > 0)
+    }
+  }
+
   test("Track/Fetch: startIntoStore then fetch equals the model on fixed seeds") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
@@ -173,7 +202,8 @@ object TrackFetchModel {
     def field(i: Int): Option[String] = if (i < fields.length) fields(i) else None
   }
   final case class Query(from: LocalDateTime, to: LocalDateTime, pattern: Seq[Option[String]])
-  final case class Case(params: StoreParams, feed: Seq[Pt], queries: Seq[Query])
+  /** `delete` is a full-depth deleteSeries pattern. */
+  final case class Case(params: StoreParams, feed: Seq[Pt], queries: Seq[Query], delete: Seq[Option[String]])
   /** One fetched or stored row; `epoch` is None where a path has no epoch. */
   final case class Cell(epoch: Option[String], depth: Int, fields: Seq[Option[String]],
       bucket: LocalDateTime, total: Double, cnt: Long)
@@ -211,7 +241,8 @@ object TrackFetchModel {
     t.plus(1, Map("minute" -> ChronoUnit.MINUTES, "hour" -> ChronoUnit.HOURS,
       "day" -> ChronoUnit.DAYS, "week" -> ChronoUnit.WEEKS)(unit))
 
-  private def hit(pattern: Seq[Option[String]], prefix: Seq[Option[String]]): Boolean =
+  /** A series prefix matches a pattern at its exact depth; a NULL value matches only `None`. */
+  def hit(pattern: Seq[Option[String]], prefix: Seq[Option[String]]): Boolean =
     prefix.length == pattern.length &&
       pattern.zip(prefix).forall { case (want, v) => want.forall(w => v.contains(w)) }
 
@@ -286,5 +317,6 @@ object TrackFetchModel {
         pattern <- Gen.listOfN(d, Gen.frequency(1 -> None, 1 -> Gen.oneOf("1", "2", "3").map(Some(_))))
       } yield Query(if (a.isBefore(b)) a else b, if (a.isBefore(b)) b else a.plusHours(1), pattern)
     })
-  } yield Case(p, feed, queries)
+    delete <- Gen.listOfN(n, Gen.frequency(1 -> None, 1 -> Gen.oneOf("1", "2", "3").map(Some(_))))
+  } yield Case(p, feed, queries, delete)
 }
