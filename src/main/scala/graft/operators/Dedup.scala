@@ -308,10 +308,7 @@ object Dedup {
             col("doc_b") === col("b.doc_id") && col("a.shingle") === col("b.shingle"))
           .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("inter"))
       case None =>
-        sh.as("a")
-          .join(sh.as("b"),
-            col("a.shingle") === col("b.shingle") && col("a.doc_id") < col("b.doc_id"))
-          .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+        bucketPairs(sh, Seq("shingle"), "doc_id", "doc_a", "doc_b")
           .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("inter"))
     }
     inter
@@ -530,8 +527,37 @@ object Dedup {
     pairs.filter(col("jaccard") >= threshold)
   }
 
+  /** Pairs within a bucket: `rows` self-joined on the bucket `keys`,
+    * each id pair once (x.id < y.id), as (carry…, a, b) with the `carry`
+    * columns read from the x side. Sort-merge join buffers one bucket's
+    * matched rows (spillable) and streams its product, so memory holds
+    * at most a bucket; bounding the bucket size is the caller's job.
+    */
+  private[graft] def bucketPairs(rows: DataFrame, keys: Seq[String], id: String,
+      a: String, b: String, carry: Seq[String] = Nil): DataFrame =
+    rows.as("x")
+      .join(rows.as("y"), (keys.map(k => col(s"x.$k") === col(s"y.$k")) :+
+        (col(s"x.$id") < col(s"y.$id"))).reduce(_ && _))
+      .select(carry.map(c => col(s"x.$c").as(c)) ++
+        Seq(col(s"x.$id").as(a), col(s"y.$id").as(b)): _*)
+
+  /** [[bucketPairs]] for CAPPED buckets, with `rows` read once: one
+    * aggregate collects each bucket's sorted ids, and the pairs stream
+    * out of two explodes (every row holds at most one bucket's ids, never
+    * its pair list). Same rows as [[bucketPairs]]'s (a, b). Relies on
+    * the caller having dropped oversized buckets: one bucket's ids must
+    * fit in one row.
+    */
+  private[graft] def cappedBucketPairs(rows: DataFrame, keys: Seq[String], id: String,
+      a: String, b: String): DataFrame =
+    rows.groupBy(keys.map(col): _*)
+      .agg(sort_array(collect_list(col(id))).as("__ids"))
+      .select(col("__ids"), posexplode(col("__ids")).as(Seq("__i", a)))
+      .select(col(a), explode(expr("slice(__ids, __i + 2, size(__ids))")).as(b))
+      .filter(col(a) < col(b))
+
   /** Distinct ordered candidate pairs from an LSH band table. Buckets of
-    * size ≤ `bucketCap` self-join all-pairs as before; buckets ABOVE the
+    * size ≤ `bucketCap` pair all their members; buckets ABOVE the
     * cap are SUB-BLOCKED instead of dropped (the [[semanticDedup]]
     * clusterCap precedent): each member explodes into its [[SubBands]]
     * dedicated-perm sub-keys ([[lshBands]] sk0..sk2) and candidates must
@@ -544,6 +570,10 @@ object Dedup {
     * varying bodies) keeps pairwise recall ≈ 1-(1-j^SubRows)^SubBands
     * per oversized bucket instead of the old drop-to-zero
     * (ScaleSmokeSpec's templated-flood check plants exactly this).
+    * Both capped tables pair through [[cappedBucketPairs]], so each has
+    * ONE consumer: a self-join's second read let AQE re-plan that side
+    * per run (a reused exchange in most runs, a second scan of the
+    * sketches in others).
     */
   private[graft] def candFromBands(bands: DataFrame,
       bucketCap: Long = BandBucketCap): DataFrame = {
@@ -552,12 +582,6 @@ object Dedup {
     val small = bands.join(
       sizes.filter(col("bsz") <= bucketCap).select(col("band"), col("key")),
       Seq("band", "key"))
-      .select(col("doc_id"), col("band"), col("key"))
-    val smallPairs = small.as("x")
-      .join(small.as("y"),
-        col("x.band") === col("y.band") && col("x.key") === col("y.key") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
     val big = bands.join(
       sizes.filter(col("bsz") > bucketCap).select(col("band"), col("key")),
       Seq("band", "key"))
@@ -566,19 +590,16 @@ object Dedup {
           struct(lit(sb).as("sb"), col(s"sk$sb").as("sk"))): _*)).as("s"))
       .select(col("doc_id"), col("band"), col("key"),
         col("s.sb").as("sb"), col("s.sk").as("sk"))
+    val subKeys = Seq("band", "key", "sb", "sk")
     val subOk = big.join(
-      big.groupBy(col("band"), col("key"), col("sb"), col("sk"))
+      big.groupBy(subKeys.map(col): _*)
         .agg(count(lit(1)).as("ssz"))
         .filter(col("ssz") <= bucketCap)
-        .select(col("band"), col("key"), col("sb"), col("sk")),
-      Seq("band", "key", "sb", "sk"))
-    val bigPairs = subOk.as("x")
-      .join(subOk.as("y"),
-        col("x.band") === col("y.band") && col("x.key") === col("y.key") &&
-          col("x.sb") === col("y.sb") && col("x.sk") === col("y.sk") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-    smallPairs.unionByName(bigPairs).distinct()
+        .select(subKeys.map(col): _*),
+      subKeys)
+    cappedBucketPairs(small, Seq("band", "key"), "doc_id", "doc_a", "doc_b")
+      .unionByName(cappedBucketPairs(subOk, subKeys, "doc_id", "doc_a", "doc_b"))
+      .distinct()
   }
 
   /** Edit-distance verification of LSH candidates: Levenshtein over the
@@ -847,11 +868,7 @@ object Dedup {
           // every survivor against itself
           col("x.doc_id") =!= col("y.doc_id"))
       .select(col("y.doc_id").as("doc_a"), col("x.doc_id").as("doc_b"))
-    val candBatch = cappedB.as("x")
-      .join(cappedB.as("y"),
-        col("x.band") === col("y.band") && col("x.key") === col("y.key") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
+    val candBatch = bucketPairs(cappedB, Seq("band", "key"), "doc_id", "doc_a", "doc_b")
     val cand = candCorpus.union(candBatch).distinct()
     val touched = corpus.join(
       cand.select(col("doc_a").as("doc_id")), Seq("doc_id"), "left_semi")
@@ -1131,11 +1148,8 @@ object Dedup {
     // flood is ONE hot fp key: sort-merge join buffers the matched
     // group in a spillable row array (O(k) memory, spills past it) and
     // STREAMS the C(k,2) output — flood-safe without any chunking.
-    val within = d.as("a")
-      .join(d.as("b"),
-        col("a.fp") === col("b.fp") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        lit(0).as("hamming"))
+    val within = bucketPairs(d, Seq("fp"), "doc_id", "doc_a", "doc_b")
+      .withColumn("hamming", lit(0))
     val B = SimhashIdBlock
     val fpPairs = d.select(col("fp")).distinct()
       .select(col("fp"), explode(array(bandStructs: _*)).as("bk"))

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{Hashing, VectorFunctions => V}
+import graft.functions.Hashing
 
 /** Parquet-persisted verified embedding near-dup pair table (the banded-LSH
   * kNN-graph edge set) for continuous vector ingestion — the graph analog
@@ -54,19 +54,6 @@ final class EmbPairsStore(spark: SparkSession, path: String) {
       .withColumn("sig", Similarity.lshSignature(col("embedding")))
       .select(col("vec_id"), col("label"), col("embedding"), col("nrm"), col("sig"))
 
-  /** The banded (vec_id, label, band, key) rows of a sig-carrying table —
-    * the same band split as [[Similarity.embeddingDedup]], computed from
-    * the PERSISTED signature (never from the vector).
-    */
-  private def bandRows(sigs: DataFrame): DataFrame = {
-    val bandStructs = (0 until Bands).map { b =>
-      struct(lit(b).as("band"),
-        expr(s"(sig div ${1L << (b * RowsPerBand)}) % ${1L << RowsPerBand}").as("key"))
-    }
-    sigs.select(col("vec_id"), col("label"), explode(array(bandStructs: _*)).as("bk"))
-      .select(col("vec_id"), col("label"), col("bk.band").as("band"), col("bk.key").as("key"))
-  }
-
   /** Build (or replace) the store from a standing corpus. */
   def build(emb: DataFrame): Unit = {
     withSig(emb).write.mode("overwrite").parquet(vecsDir)
@@ -92,8 +79,10 @@ final class EmbPairsStore(spark: SparkSession, path: String) {
     val batch = withSig(emb).localCheckpoint()
     val within = Similarity.embeddingDedup(emb, Similarity.SharedEmbFloor,
       Bands, RowsPerBand)
-    val cand = bandRows(vecs.select(col("vec_id"), col("label"), col("sig"))).as("x")
-      .join(bandRows(batch.select(col("vec_id"), col("label"), col("sig"))).as("y"),
+    // band keys from the PERSISTED signatures, never from the vectors
+    val keep = Seq("vec_id", "label")
+    val cand = Similarity.hyperplaneBands(vecs, keep, Bands, RowsPerBand).as("x")
+      .join(Similarity.hyperplaneBands(batch, keep, Bands, RowsPerBand).as("y"),
         col("x.label") === col("y.label") && col("x.band") === col("y.band") &&
           col("x.key") === col("y.key"))
       .select(least(col("x.vec_id"), col("y.vec_id")).as("vec_a"),
@@ -104,13 +93,8 @@ final class EmbPairsStore(spark: SparkSession, path: String) {
     // pair's lower id may sit on either side)
     val lookup = vecs.select(col("vec_id"), col("embedding"), col("nrm"))
       .unionByName(batch.select(col("vec_id"), col("embedding"), col("nrm")))
-    val cross = cand
-      .join(lookup.select(col("vec_id").as("vec_a"), col("embedding").as("ea"),
-        col("nrm").as("na")), Seq("vec_a"))
-      .join(lookup.select(col("vec_id").as("vec_b"), col("embedding").as("eb"),
-        col("nrm").as("nb")), Seq("vec_b"))
-      .select(col("vec_a"), col("vec_b"), col("label"),
-        Hashing.rd4(V.dotF(col("ea"), col("eb")) / (col("na") * col("nb"))).as("cos_sim"))
+    val cross = Similarity.withPairCos(cand, lookup, lookup, "vec_a", "vec_b")
+      .select(col("vec_a"), col("vec_b"), col("label"), Hashing.rd4(col("cos")).as("cos_sim"))
       .filter(col("cos_sim") >= Similarity.SharedEmbFloor)
     // freeze decisions before any write so a branch never sees its own
     // appends (the LshIndexStore.ingest discipline); edges append before

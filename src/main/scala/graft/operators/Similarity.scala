@@ -26,6 +26,90 @@ object Similarity {
   private[graft] def withNorm(emb: DataFrame): DataFrame =
     emb.withColumn("nrm", V.normF(col("embedding")))
 
+  /** The search operators' query set: rows of `e` with vec_id < nQueries
+    * as (query_id, qv = `vec`, qnrm, extra…). Relies on `e` carrying
+    * `vec` and `nrm` ([[withNorm]]); callers broadcast it, which holds
+    * because nQueries is a fixed eval sample, never the corpus.
+    */
+  private[graft] def querySet(e: DataFrame, nQueries: Int, vec: String = "embedding",
+      extra: Seq[Column] = Nil): DataFrame =
+    e.filter(col("vec_id") < nQueries)
+      .select(Seq(col("vec_id").as("query_id"), col(vec).as("qv"), col("nrm").as("qnrm"))
+        ++ extra: _*)
+
+  /** Exact rerank to top-k: per query_id the k rows of `scored` with the
+    * highest UNROUNDED `cos` (ties → lower `id`), as (query_id,
+    * neighbor_id, rnk, score = rd4(cos)). The window partitions on the
+    * bounded query set, so each partition holds one query's candidates.
+    */
+  private def topK(scored: DataFrame, k: Int, id: String = "neighbor_id"): DataFrame = {
+    val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col(id))
+    scored.withColumn("rnk", row_number().over(w))
+      .filter(col("rnk") <= k)
+      .select(col("query_id"), col(id).as("neighbor_id"), col("rnk"),
+        Hashing.rd4(col("cos")).as("score"))
+  }
+
+  /** Exact cosine of each corpus row of `c` (aliased "c": vec_id,
+    * embedding, nrm) against each row of the broadcast query set `q`
+    * ([[querySet]]) that it joins `on`, a query never scoring itself,
+    * reranked by [[topK]].
+    */
+  private def rerank(c: DataFrame, q: DataFrame, k: Int, on: Column*): DataFrame =
+    topK(c.join(broadcast(q), (on :+ (col("c.vec_id") =!= col("query_id"))).reduce(_ && _))
+      .select(col("query_id"), col("c.vec_id").as("neighbor_id"),
+        (V.dotF(col("qv"), col("c.embedding")) / (col("qnrm") * col("c.nrm"))).as("cos")), k)
+
+  /** The kNN graph of an undirected pair table (vec_a < vec_b, score
+    * cos_sim): every pair both ways, then per vec_id the k best (cos
+    * desc, ties → lower neighbor_id) as (vec_id, rnk, neighbor_id,
+    * cos_sim). Each window partition is one vector's candidate list, so
+    * its size is bounded by the blocking that built `pairs`.
+    */
+  private def symmetricTopK(pairs: DataFrame, k: Int): DataFrame = {
+    val sym = pairs
+      .select(col("vec_a").as("vec_id"), col("vec_b").as("neighbor_id"), col("cos_sim"))
+      .unionByName(pairs
+        .select(col("vec_b").as("vec_id"), col("vec_a").as("neighbor_id"), col("cos_sim")))
+    val w = Window.partitionBy(col("vec_id"))
+      .orderBy(col("cos_sim").desc, col("neighbor_id"))
+    sym.withColumn("rnk", row_number().over(w).cast("long"))
+      .filter(col("rnk") <= k)
+      .select(col("vec_id"), col("rnk"), col("neighbor_id"), col("cos_sim"))
+  }
+
+  /** Hyperplane-LSH band explode: each row of `rows` (with a `sig`
+    * column of [[NumPlanes]] sign bits, see [[lshSignature]]) becomes
+    * `bands` rows (keep…, band, key), key = bits
+    * [band·rowsPerBand, (band+1)·rowsPerBand) of sig. Relies on
+    * bands·rowsPerBand ≤ NumPlanes (callers require it). Keep the kept
+    * columns narrow: the explode multiplies each of them by `bands`.
+    */
+  private[graft] def hyperplaneBands(rows: DataFrame, keep: Seq[String], bands: Int,
+      rowsPerBand: Int): DataFrame = {
+    val bandStructs = (0 until bands).map { b =>
+      struct(lit(b).as("band"),
+        expr(s"(sig div ${1L << (b * rowsPerBand)}) % ${1L << rowsPerBand}").as("key"))
+    }
+    rows.select(keep.map(col) :+ explode(array(bandStructs: _*)).as("bk"): _*)
+      .select(keep.map(col) ++ Seq(col("bk.band").as("band"), col("bk.key").as("key")): _*)
+  }
+
+  /** Candidate cosine verify: joins both ends' vectors into `cand` —
+    * `left` (vec_id, embedding, nrm) on column `a`, `right` on `b` — and
+    * adds the UNROUNDED `cos` = dotF/(na·nb). Rounding, the threshold and
+    * the output columns are the caller's rule; broadcast a bounded end
+    * by passing it hinted.
+    */
+  private[graft] def withPairCos(cand: DataFrame, left: DataFrame, right: DataFrame,
+      a: String, b: String): DataFrame =
+    cand
+      .join(left.select(col("vec_id").as(a), col("embedding").as("ea"), col("nrm").as("na")),
+        Seq(a))
+      .join(right.select(col("vec_id").as(b), col("embedding").as("eb"), col("nrm").as("nb")),
+        Seq(b))
+      .withColumn("cos", V.dotF(col("ea"), col("eb")) / (col("na") * col("nb")))
+
   /** Embedding near-dup pairs, cos ≥ threshold, blocked by
     * (label, LSH band): a pair is compared only if it shares one of
     * `bands` hyperplane-signature bands of `rowsPerBand` sign bits each —
@@ -42,29 +126,15 @@ object Similarity {
     val e = withNorm(emb)
     // candidate-first: band only the narrow (vec_id, label, sig) projection
     // so the explode never duplicates the 64-float vectors through a shuffle
-    val sig = emb.select(col("vec_id"), col("label"),
-      lshSignature(col("embedding")).as("sig"))
-    val bandStructs = (0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        expr(s"(sig div ${1L << (b * rowsPerBand)}) % ${1L << rowsPerBand}").as("key"))
-    }
-    val banded = sig
-      .select(col("vec_id"), col("label"), explode(array(bandStructs: _*)).as("bk"))
-      .select(col("vec_id"), col("label"), col("bk.band").as("band"), col("bk.key").as("key"))
-    val cand = banded.as("x")
-      .join(banded.as("y"),
-        col("x.label") === col("y.label") && col("x.band") === col("y.band") &&
-          col("x.key") === col("y.key") && col("x.vec_id") < col("y.vec_id"))
-      .select(col("x.vec_id").as("vec_a"), col("y.vec_id").as("vec_b"),
-        col("x.label").as("label"))
+    val banded = hyperplaneBands(emb.select(col("vec_id"), col("label"),
+      lshSignature(col("embedding")).as("sig")), Seq("vec_id", "label"), bands, rowsPerBand)
+    val cand = Dedup.bucketPairs(banded, Seq("label", "band", "key"), "vec_id",
+        "vec_a", "vec_b", carry = Seq("label"))
+      .select(col("vec_a"), col("vec_b"), col("label"))
       .distinct()
-    cand
-      .join(e.select(col("vec_id").as("vec_a"), col("embedding").as("ea"), col("nrm").as("na")),
-        Seq("vec_a"))
-      .join(e.select(col("vec_id").as("vec_b"), col("embedding").as("eb"), col("nrm").as("nb")),
-        Seq("vec_b"))
+    withPairCos(cand, e, e, "vec_a", "vec_b")
       .select(col("vec_a"), col("vec_b"), col("label"),
-        Hashing.rd4(V.dotF(col("ea"), col("eb")) / (col("na") * col("nb"))).as("cos_sim"))
+        Hashing.rd4(col("cos")).as("cos_sim"))
       .filter(col("cos_sim") >= threshold)
   }
 
@@ -85,29 +155,15 @@ object Similarity {
       bands: Int = 4, rowsPerBand: Int = 2): DataFrame = {
     require(bands * rowsPerBand <= NumPlanes, s"needs <= $NumPlanes planes")
     val e = withNorm(emb)
-    val sig = emb.select(col("vec_id"), isTest.as("__is_test"),
-      lshSignature(col("embedding")).as("sig"))
-    val bandStructs = (0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        expr(s"(sig div ${1L << (b * rowsPerBand)}) % ${1L << rowsPerBand}").as("key"))
-    }
-    val banded = sig
-      .select(col("vec_id"), col("__is_test"), explode(array(bandStructs: _*)).as("bk"))
-      .select(col("vec_id"), col("__is_test"),
-        col("bk.band").as("band"), col("bk.key").as("key"))
+    val banded = hyperplaneBands(emb.select(col("vec_id"), isTest.as("__is_test"),
+      lshSignature(col("embedding")).as("sig")), Seq("vec_id", "__is_test"), bands, rowsPerBand)
     val cand = banded.filter(!col("__is_test")).as("x")
       .join(broadcast(banded.filter(col("__is_test")).as("y")),
         col("x.band") === col("y.band") && col("x.key") === col("y.key"))
       .select(col("x.vec_id").as("train_id"), col("y.vec_id").as("test_id"))
       .distinct()
-    cand
-      .join(e.select(col("vec_id").as("train_id"), col("embedding").as("ea"),
-        col("nrm").as("na")), Seq("train_id"))
-      .join(broadcast(e.filter(isTest)
-        .select(col("vec_id").as("test_id"), col("embedding").as("eb"),
-          col("nrm").as("nb"))), Seq("test_id"))
-      .select(col("train_id"), col("test_id"),
-        Hashing.rd4(V.dotF(col("ea"), col("eb")) / (col("na") * col("nb"))).as("cos_sim"))
+    withPairCos(cand, e, broadcast(e.filter(isTest)), "train_id", "test_id")
+      .select(col("train_id"), col("test_id"), Hashing.rd4(col("cos")).as("cos_sim"))
       .filter(col("cos_sim") >= threshold)
   }
 
@@ -116,17 +172,7 @@ object Similarity {
     */
   def bruteForceTopK(emb: DataFrame, nQueries: Int, k: Int): DataFrame = {
     val e = withNorm(emb)
-    val q = e.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"), col("nrm").as("qnrm"))
-    val scored = e.as("c")
-      .join(broadcast(q), col("c.vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("c.vec_id").as("neighbor_id"),
-        (V.dotF(col("qv"), col("c.embedding")) / (col("qnrm") * col("c.nrm"))).as("cos"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rnk"),
-        Hashing.rd4(col("cos")).as("score"))
+    rerank(e.as("c"), querySet(e, nQueries), k)
   }
 
   /** Predicate-filtered ANN: exact top-k cosine among only the corpus
@@ -141,17 +187,7 @@ object Similarity {
     */
   def filteredTopK(emb: DataFrame, nQueries: Int, k: Int, pred: Column): DataFrame = {
     val e = withNorm(emb.filter(pred))
-    val q = withNorm(emb).filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"), col("nrm").as("qnrm"))
-    val scored = e.as("c")
-      .join(broadcast(q), col("c.vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("c.vec_id").as("neighbor_id"),
-        (V.dotF(col("qv"), col("c.embedding")) / (col("qnrm") * col("c.nrm"))).as("cos"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rnk"),
-        Hashing.rd4(col("cos")).as("score"))
+    rerank(e.as("c"), querySet(withNorm(emb), nQueries), k)
   }
 
   /** Nearest-centroid assignment (max cosine, tie-break centroid id). */
@@ -172,7 +208,7 @@ object Similarity {
     // the NaN row while min(struct(-cos,…)) picks a non-NaN one. The
     // generated corpus contains no zero vector (oracle-verified at four
     // SFs) and a centroid is a fixed-point mean of its cluster's nonzero
-    // vectors (updateCentroids), which never vanishes on this data; if
+    // vectors (centroidMeans), which never vanishes on this data; if
     // embeddings ever become user-supplied, enforce nrm > 0 at ingest
     // (QuantizerStore.build is the choke point) rather than relying on
     // this comment.
@@ -185,16 +221,18 @@ object Similarity {
       .groupBy(col("vec_id")).agg(min(col("sc")).as("b"))
       .select(col("vec_id"), col("b.embedding").as("embedding"), col("b.cid").as("cid"))
 
-  /** Deterministic centroid update: per-component fixed-point integer
-    * mean (order-independent — see ivfTopK). Empty clusters drop out.
+  /** Deterministic centroids: per `key` group of `rows` (key,
+    * embedding), the per-component fixed-point integer mean (order-
+    * independent — see ivfTopK) as (key, cvec, cnrm). Empty groups drop
+    * out.
     */
-  private def updateCentroids(assigned: DataFrame): DataFrame =
-    assigned.select(col("cid"), posexplode(col("embedding")).as(Seq("pos", "v")))
-      .groupBy(col("cid"), col("pos"))
+  private def centroidMeans(rows: DataFrame, key: String): DataFrame =
+    rows.select(col(key), posexplode(col("embedding")).as(Seq("pos", "v")))
+      .groupBy(col(key), col("pos"))
       .agg(sum(floor(col("v").cast("double") * 1e7 + 0.5).cast("long")).as("sq"),
         count(lit(1)).as("n"))
       .withColumn("cv", col("sq").cast("double") / 1e7 / col("n"))
-      .groupBy(col("cid"))
+      .groupBy(col(key))
       .agg(expr("transform(sort_array(collect_list(struct(pos, cv))), x -> CAST(x.cv AS FLOAT))")
         .as("cvec"))
       .withColumn("cnrm", V.normF(col("cvec")))
@@ -270,7 +308,7 @@ object Similarity {
       .withColumn("cid", row_number().over(Window.orderBy(col("hv"), col("vec_id"))))
       .select(col("cid"), col("embedding").as("cvec"), col("nrm").as("cnrm")))
     (1 to iters).foldLeft(cent0)((c, _) =>
-      localized(updateCentroids(assignToCentroids(e, c))))
+      localized(centroidMeans(assignToCentroids(e, c), "cid")))
   }
 
   /** SemDeDup-style semantic deduplication: learn k-means clusters over
@@ -317,35 +355,17 @@ object Similarity {
     // small clusters: within-cluster all pairs (≤ cap²/2 each, bounded)
     val small = keyed.filter(col("csize") <= clusterCap)
       .select(col("cid"), col("vec_id"))
-    val smallPairs = small.as("a")
-      .join(small.as("b"), col("a.cid") === col("b.cid")
-        && col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.cid").as("cid"), col("a.vec_id").as("vec_a"),
-        col("b.vec_id").as("vec_b"))
+    val smallPairs = Dedup.bucketPairs(small, Seq("cid"), "vec_id", "vec_a", "vec_b",
+      carry = Seq("cid"))
     // fat clusters: candidates must ALSO share an LSH band bucket; band
     // only the narrow (cid, vec_id, sig) projection (see embeddingDedup)
     val bigSig = keyed.filter(col("csize") > clusterCap)
       .join(emb.select(col("vec_id"), lshSignature(col("embedding")).as("sig")), "vec_id")
-    val bandStructs = (0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        expr(s"(sig div ${1L << (b * rowsPerBand)}) % ${1L << rowsPerBand}").as("key"))
-    }
-    val banded = bigSig
-      .select(col("cid"), col("vec_id"), explode(array(bandStructs: _*)).as("bk"))
-      .select(col("cid"), col("vec_id"), col("bk.band").as("band"), col("bk.key").as("key"))
-    val bigPairs = banded.as("x")
-      .join(banded.as("y"),
-        col("x.cid") === col("y.cid") && col("x.band") === col("y.band") &&
-          col("x.key") === col("y.key") && col("x.vec_id") < col("y.vec_id"))
-      .select(col("x.cid").as("cid"), col("x.vec_id").as("vec_a"),
-        col("y.vec_id").as("vec_b"))
+    val bigPairs = Dedup.bucketPairs(
+        hyperplaneBands(bigSig, Seq("cid", "vec_id"), bands, rowsPerBand),
+        Seq("cid", "band", "key"), "vec_id", "vec_a", "vec_b", carry = Seq("cid"))
       .distinct()
-    smallPairs.unionByName(bigPairs)
-      .join(e.select(col("vec_id").as("vec_a"), col("embedding").as("ea"),
-        col("nrm").as("na")), Seq("vec_a"))
-      .join(e.select(col("vec_id").as("vec_b"), col("embedding").as("eb"),
-        col("nrm").as("nb")), Seq("vec_b"))
-      .withColumn("cos", V.dotF(col("ea"), col("eb")) / (col("na") * col("nb")))
+    withPairCos(smallPairs.unionByName(bigPairs), e, e, "vec_a", "vec_b")
       .filter(col("cos") >= threshold)
       .select(col("cid"), col("vec_a"), col("vec_b"),
         Hashing.rd4(col("cos")).as("cos"))
@@ -356,24 +376,10 @@ object Similarity {
     */
   private def centroidProbeSearch(e: DataFrame, cent: DataFrame, asn: DataFrame,
       nQueries: Int, k: Int, nProbe: Int): DataFrame = {
-    val q = e.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"), col("nrm").as("qnrm"))
-    val wc = Window.partitionBy(col("query_id"))
-      .orderBy((V.dotF(col("qv"), col("cvec")) / (col("qnrm") * col("cnrm"))).desc, col("cid"))
-    val probes = broadcast(q).crossJoin(broadcast(cent))
-      .withColumn("crnk", row_number().over(wc))
-      .filter(col("crnk") <= nProbe)
+    val probes = nearestCells(querySet(e, nQueries), cent, "cid", nProbe)
       .select(col("query_id"), col("qv"), col("qnrm"), col("cid"))
-    val scored = e.as("c").join(asn.as("a"), col("c.vec_id") === col("a.vec_id"))
-      .join(broadcast(probes),
-        col("a.cid") === probes("cid") && col("c.vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("c.vec_id").as("neighbor_id"),
-        (V.dotF(col("qv"), col("c.embedding")) / (col("qnrm") * col("c.nrm"))).as("cos"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rnk"),
-        Hashing.rd4(col("cos")).as("score"))
+    rerank(e.as("c").join(asn.as("a"), col("c.vec_id") === col("a.vec_id")), probes, k,
+      col("a.cid") === probes("cid"))
   }
 
   /** Deterministic k-means‖-style seeding (Bahmani et al.'s oversampling
@@ -460,7 +466,7 @@ object Similarity {
     * convergence early-stop: Lloyd runs at most `iters` rounds but stops
     * as soon as the assignment is stable. The early stop is bit-compatible
     * with the oracle's fixed `iters`-round unroll — once assignments
-    * repeat, updateCentroids is a fixpoint, so extra oracle rounds are
+    * repeat, centroidMeans is a fixpoint, so extra oracle rounds are
     * no-ops. The per-round stability check is one keyed join + isEmpty on
     * the two cached assignment tables.
     */
@@ -489,7 +495,7 @@ object Similarity {
       // cent is an 8-row aggregate OVER the checkpointed prev — leave it
       // lazy so update+assign materialize as ONE job per round (the probe
       // tail re-derives the tiny agg rather than paying a round-trip here)
-      cent = updateCentroids(prev)
+      cent = centroidMeans(prev, "cid")
       val asn = assignToCentroids(e, cent)
       it += 1
       if (it == iters) {
@@ -500,7 +506,7 @@ object Similarity {
         // changed-assignment count rides the checkpoint job via observe()
         // (same keyed comparison as before, zero extra actions); the
         // projection restores asn's exact column set, and the reshuffle
-        // the join introduces cannot move results — updateCentroids'
+        // the join introduces cannot move results — centroidMeans'
         // fixed-point integer means are partition-order-independent
         val obs = new org.apache.spark.sql.Observation(s"km_chg_$it")
         val cols = asn.columns.map(col)
@@ -559,19 +565,13 @@ object Similarity {
   def quantizedTopK(emb: DataFrame, nQueries: Int, k: Int): DataFrame = {
     val base = withQuantized(emb)
       .select(col("vec_id"), col("qvec"), col("scale"), col("nrm"))
-    val q = base.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("qvec").as("qv"),
-        col("scale").as("qs"), col("nrm").as("qnrm"))
-    val scored = base.as("c")
+    val q = querySet(base, nQueries, "qvec", Seq(col("scale").as("qs")))
+      .select("query_id", "qv", "qs", "qnrm")
+    topK(base.as("c")
       .join(broadcast(q), col("c.vec_id") =!= col("query_id"))
       .select(col("query_id"), col("c.vec_id").as("neighbor_id"),
         ((col("qs") * col("c.scale")) * V.dotI(col("qv"), col("c.qvec"))
-          / (col("qnrm") * col("c.nrm"))).as("cos"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rnk"),
-        Hashing.rd4(col("cos")).as("score"))
+          / (col("qnrm") * col("c.nrm"))).as("cos")), k)
   }
 
   /** Product-quantization ANN with asymmetric-distance (ADC) search.
@@ -627,8 +627,7 @@ object Similarity {
         (0 until nSub).flatMap(s => Seq(
           col(s"b$s.cid").as(s"c$s"), col(s"b$s.cc").as(s"cc$s"))): _*)
       .withColumn("rnrm", sqrt((0 until nSub).map(s => col(s"cc$s")).reduce(_ + _)))
-    val q = e.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"), col("nrm").as("qnrm"))
+    val q = querySet(e, nQueries)
     val adc = q
       .select(col("query_id"), explode(subStructs("qv")).as("x"))
       .select(col("query_id"), col("x.s").as("s"), col("x.sv").as("qs"))
@@ -643,13 +642,9 @@ object Similarity {
         broadcast(adc.filter(col("s") === s)
           .select(col("query_id"), col("cid").as(s"c$s"), col("qc").as(s"qc$s"))),
         Seq("query_id", s"c$s"))
-    val scored = pairs.withColumn("cos",
-      (0 until nSub).map(s => col(s"qc$s")).reduce(_ + _) / (col("qnrm") * col("rnrm")))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("vec_id"))
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("rnk"),
-        Hashing.rd4(col("cos")).as("score"))
+    topK(pairs.withColumn("cos",
+      (0 until nSub).map(s => col(s"qc$s")).reduce(_ + _) / (col("qnrm") * col("rnrm"))),
+      k, "vec_id")
   }
 
   /** IVF-PQ composite index with asymmetric-distance search — the
@@ -701,9 +696,7 @@ object Similarity {
       nQueries: Int, k: Int, nProbe: Int, nSub: Int, nCode: Int): DataFrame = {
     val cb = ivfPqCodebook(resTab, nSub, nCode)
     val wide = ivfPqEncode(resTab, cent, cb, nSub)
-    val q = e.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"), col("nrm").as("qnrm"))
-    ivfPqSearch(q, cent, cb, wide, k, nProbe, nSub)
+    ivfPqSearch(querySet(e, nQueries), cent, cb, wide, k, nProbe, nSub)
   }
 
   private def pqSubStructs(vec: String, nSub: Int) = {
@@ -802,20 +795,28 @@ object Similarity {
         (0 until nSub).map(s => col(s"c$s")) :+ col("rnrm"): _*)
   }
 
-  /** Per-query probe assignments: the nProbe coarse cells nearest each
-    * query, with the query-side pieces the ADC scorer reuses. Both sides
-    * are bounded (queries by contract, centroids by nCent), so the
-    * crossJoin is a broadcast nest, never a shuffle.
+  /** The nProbe coarse cells nearest each query of `q` ([[querySet]]):
+    * every (query, centroid) row of `cent` (`cell` id, cvec, cnrm)
+    * ranked by cosine, ties → lower cell id. Both sides are bounded
+    * (queries by contract, centroids by their count), so the crossJoin
+    * is a broadcast nest, never a shuffle.
     */
-  private[graft] def ivfProbes(q: DataFrame, cent: DataFrame, nProbe: Int): DataFrame = {
+  private def nearestCells(q: DataFrame, cent: DataFrame, cell: String,
+      nProbe: Int): DataFrame = {
     val wc = Window.partitionBy(col("query_id"))
-      .orderBy((V.dotF(col("qv"), col("cvec")) / (col("qnrm") * col("cnrm"))).desc, col("cid"))
+      .orderBy((V.dotF(col("qv"), col("cvec")) / (col("qnrm") * col("cnrm"))).desc, col(cell))
     broadcast(q).crossJoin(broadcast(cent))
       .withColumn("crnk", row_number().over(wc))
       .filter(col("crnk") <= nProbe)
+  }
+
+  /** Per-query probe assignments ([[nearestCells]] over k-means cells),
+    * with the query-side pieces the ADC scorer reuses.
+    */
+  private[graft] def ivfProbes(q: DataFrame, cent: DataFrame, nProbe: Int): DataFrame =
+    nearestCells(q, cent, "cid", nProbe)
       .select(col("query_id"), col("qnrm"), col("cid"),
         V.dotF(col("qv"), col("cvec")).as("qcent"))
-  }
 
   /** ADC search against an IVF-PQ index (cent + cb + encoded `wide`
     * table): probe the nProbe nearest cells per query, score candidates
@@ -839,14 +840,9 @@ object Similarity {
         broadcast(adc.filter(col("s") === s)
           .select(col("query_id"), col("code").as(s"c$s"), col("qc").as(s"qc$s"))),
         Seq("query_id", s"c$s"))
-    val scored = pairs.withColumn("cos",
+    topK(pairs.withColumn("cos",
       (col("qcent") +: (0 until nSub).map(s => col(s"qc$s"))).reduce(_ + _)
-        / (col("qnrm") * col("rnrm")))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("vec_id"))
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("rnk"),
-        Hashing.rd4(col("cos")).as("score"))
+        / (col("qnrm") * col("rnrm"))), k, "vec_id")
   }
 
   /** End-to-end embedding dedup: the corpus minus the higher-id member of
@@ -886,10 +882,8 @@ object Similarity {
     */
   def rangeSearch(emb: DataFrame, nQueries: Int, minCos: Double): DataFrame = {
     val e = withNorm(emb)
-    val q = e.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"), col("nrm").as("qnrm"))
     e.as("c")
-      .join(broadcast(q), col("c.vec_id") =!= col("query_id"))
+      .join(broadcast(querySet(e, nQueries)), col("c.vec_id") =!= col("query_id"))
       .select(col("query_id"), col("c.vec_id").as("neighbor_id"),
         Hashing.rd4(V.dotF(col("qv"), col("c.embedding")) / (col("qnrm") * col("c.nrm")))
           .as("score"))
@@ -927,35 +921,10 @@ object Similarity {
     */
   def ivfTopK(emb: DataFrame, nQueries: Int, k: Int, nProbe: Int = 2): DataFrame = {
     val e = withNorm(emb)
-    val cent = emb
-      .select(col("label"), posexplode(col("embedding")).as(Seq("pos", "v")))
-      .groupBy(col("label"), col("pos"))
-      .agg(
-        sum(floor(col("v").cast("double") * 1e7 + 0.5).cast("long")).as("sq"),
-        count(lit(1)).as("n"))
-      .withColumn("cv", col("sq").cast("double") / 1e7 / col("n"))
-      .groupBy(col("label"))
-      .agg(expr("transform(sort_array(collect_list(struct(pos, cv))), x -> CAST(x.cv AS FLOAT))")
-        .as("cvec"))
-      .withColumn("cnrm", V.normF(col("cvec")))
-    val q = e.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"), col("nrm").as("qnrm"))
-    val wc = Window.partitionBy(col("query_id"))
-      .orderBy((V.dotF(col("qv"), col("cvec")) / (col("qnrm") * col("cnrm"))).desc, col("label"))
-    val probes = broadcast(q).crossJoin(broadcast(cent))
-      .withColumn("crnk", row_number().over(wc))
-      .filter(col("crnk") <= nProbe)
+    val cent = centroidMeans(emb, "label")
+    val probes = nearestCells(querySet(e, nQueries), cent, "label", nProbe)
       .select(col("query_id"), col("qv"), col("qnrm"), col("label"))
-    val scored = e.as("c")
-      .join(broadcast(probes),
-        col("c.label") === probes("label") && col("c.vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("c.vec_id").as("neighbor_id"),
-        (V.dotF(col("qv"), col("c.embedding")) / (col("qnrm") * col("c.nrm"))).as("cos"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rnk"),
-        Hashing.rd4(col("cos")).as("score"))
+    rerank(e.as("c"), probes, k, col("c.label") === probes("label"))
   }
 
   /** ANN via LSH buckets: candidates share the query's bucket signature,
@@ -964,18 +933,8 @@ object Similarity {
     */
   def lshTopK(emb: DataFrame, nQueries: Int, k: Int): DataFrame = {
     val sig = withNorm(emb).withColumn("sig", lshSignature(col("embedding")))
-    val q = sig.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
-        col("nrm").as("qnrm"), col("sig"))
-    val scored = sig.as("c")
-      .join(broadcast(q), col("c.sig") === q("sig") && col("c.vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("c.vec_id").as("neighbor_id"),
-        (V.dotF(col("qv"), col("c.embedding")) / (col("qnrm") * col("c.nrm"))).as("cos"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rnk"),
-        Hashing.rd4(col("cos")).as("score"))
+    val q = querySet(sig, nQueries, extra = Seq(col("sig")))
+    rerank(sig.as("c"), q, k, col("c.sig") === q("sig"))
   }
 
   /** kNN label inference: each query's label predicted by majority vote
@@ -1153,25 +1112,14 @@ object Similarity {
     */
   def multiProbeTopK(emb: DataFrame, nQueries: Int, k: Int): DataFrame = {
     val sig = withNorm(emb).withColumn("sig", lshSignature(col("embedding")))
-    val q = sig.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
-        col("nrm").as("qnrm"), col("sig"))
+    val q = querySet(sig, nQueries, extra = Seq(col("sig")))
       // p = -1 is the home bucket; p in [0, NumPlanes) flips bit p
       .select(col("query_id"), col("qv"), col("qnrm"), col("sig"),
         explode(expr(s"sequence(-1, ${NumPlanes - 1})")).as("p"))
       .select(col("query_id"), col("qv"), col("qnrm"),
         when(col("p") === -1, col("sig"))
           .otherwise(expr("sig ^ shiftleft(CAST(1 AS BIGINT), p)")).as("probe"))
-    val scored = sig.as("c")
-      .join(broadcast(q),
-        col("c.sig") === col("probe") && col("c.vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("c.vec_id").as("neighbor_id"),
-        (V.dotF(col("qv"), col("c.embedding")) / (col("qnrm") * col("c.nrm"))).as("cos"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rnk"),
-        Hashing.rd4(col("cos")).as("score"))
+    rerank(sig.as("c"), q, k, col("c.sig") === col("probe"))
   }
 
   /** ANN index evaluation: recall@k of the LSH index against brute-force
@@ -1508,17 +1456,7 @@ object Similarity {
     // (the minhashLsh AQE-race precedent)
     val pairs = semanticDedupFrom(graft.core.Tables.load(s, dir, "embeddings"),
       c, a, 0.4, clusterCap = 64, bands = 2, rowsPerBand = 4).localCheckpoint()
-    val sym = pairs
-      .select(col("vec_a").as("vec_id"), col("vec_b").as("neighbor_id"),
-        col("cos").as("cos_sim"))
-      .unionByName(pairs
-        .select(col("vec_b").as("vec_id"), col("vec_a").as("neighbor_id"),
-          col("cos").as("cos_sim")))
-    val w = Window.partitionBy(col("vec_id"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id"))
-    sym.withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
-      .select(col("vec_id"), col("rnk"), col("neighbor_id"), col("cos_sim"))
+    symmetricTopK(pairs.withColumnRenamed("cos", "cos_sim"), k)
   }
 
   /** Connected components over the [[knnJoin]] graph — SemDeDup-style
@@ -1580,18 +1518,8 @@ object Similarity {
     * are not graph-worthy here); the recall matrix ops quantify that
     * trade on the query ops' side.
     */
-  def knnJoin(s: SparkSession, dir: String, k: Int): DataFrame = {
-    val pairs = sharedEmbPairs(s, dir)
-    val sym = pairs
-      .select(col("vec_a").as("vec_id"), col("vec_b").as("neighbor_id"), col("cos_sim"))
-      .unionByName(pairs
-        .select(col("vec_b").as("vec_id"), col("vec_a").as("neighbor_id"), col("cos_sim")))
-    val w = Window.partitionBy(col("vec_id"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id"))
-    sym.withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
-      .select(col("vec_id"), col("rnk"), col("neighbor_id"), col("cos_sim"))
-  }
+  def knnJoin(s: SparkSession, dir: String, k: Int): DataFrame =
+    symmetricTopK(sharedEmbPairs(s, dir), k)
 
   /** Matryoshka (MRL-style) truncation sweep: exact top-k recall of
     * prefix-dimension cosine search against the full-dimension ground
@@ -1610,8 +1538,7 @@ object Similarity {
       nQueries: Int = 10, k: Int = 10): DataFrame = {
     val full = bruteForceTopK(emb, nQueries, k)
       .select(col("query_id"), col("neighbor_id")).withColumn("hit", lit(1L))
-    val q = emb.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
+    val q = querySet(withNorm(emb), nQueries)
     val truncated = emb.as("c")
       .join(broadcast(q), col("c.vec_id") =!= col("query_id"))
       .select(col("query_id"), col("c.vec_id").as("neighbor_id"), col("qv"),

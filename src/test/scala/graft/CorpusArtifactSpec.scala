@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Paths}
 import java.util.concurrent.{CyclicBarrier, Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicLong
 
@@ -17,10 +17,8 @@ import graft.operators.{CorpusArtifact, DocPairsStore, EmbPairsStore, QuantizerS
 class CorpusArtifactSpec extends SparkSpec {
 
   /** One corpus dir holding both source tables the stores read. */
-  private def freshCorpusDir(): Path = {
+  private def withCorpusDir[T](f: String => T): T = withTempDir("artifact") { d =>
     import spark.implicits._
-    val d = Files.createTempDirectory("artifact")
-    d.toFile.deleteOnExit()
     (0L until 60L).toDF("doc_id")
       .withColumn("text", expr(
         """concat(array_join(transform(sequence(1, 30),
@@ -34,7 +32,7 @@ class CorpusArtifactSpec extends SparkSpec {
              (pmod(xxhash64(pmod(vec_id, 6) + 1000003, j), 2000) - 1000) / 1000.0 +
              (pmod(xxhash64(vec_id, j + 100), 2000) - 1000) / 1000.0 * 0.1 AS FLOAT))"""))
       .write.parquet(s"$d/embeddings.parquet")
-    d
+    f(d.toString)
   }
 
   private def sortedRows(df: DataFrame): Seq[String] =
@@ -57,45 +55,47 @@ class CorpusArtifactSpec extends SparkSpec {
       QuantizerStore.trainCount, () => QuantizerStore.dropHandles(), "nCent", "16"))
 
   test("a forged recorded value in params.json rebuilds each of the four stores") {
-    val dir = freshCorpusDir().toString
-    val stale = stores.flatMap { case (store, key, open, counter, drop, recordedKey, forged) =>
-      open(spark, dir)
-      val pj = Paths.get(CorpusArtifact.root(store, dir, key), "params.json")
-      val txt = Files.readString(pj)
-      val edited = s""""$recordedKey": [^,}]+""".r
-        .replaceAllIn(txt, s""""$recordedKey": $forged""")
-      assert(edited != txt, s"$store: $recordedKey not recorded in $txt")
-      Files.writeString(pj, edited)
-      drop()
-      val before = counter.get()
-      open(spark, dir)
-      val builds = counter.get() - before
-      // a rebuild also rewrites the manifest with the true value
-      if (builds == 1 && Files.readString(pj) == txt) None
-      else Some(s"$store ($recordedKey forged to $forged): $builds builds")
+    withCorpusDir { dir =>
+      val stale = stores.flatMap { case (store, key, open, counter, drop, recordedKey, forged) =>
+        open(spark, dir)
+        val pj = Paths.get(CorpusArtifact.root(store, dir, key), "params.json")
+        val txt = Files.readString(pj)
+        val edited = s""""$recordedKey": [^,}]+""".r
+          .replaceAllIn(txt, s""""$recordedKey": $forged""")
+        assert(edited != txt, s"$store: $recordedKey not recorded in $txt")
+        Files.writeString(pj, edited)
+        drop()
+        val before = counter.get()
+        open(spark, dir)
+        val builds = counter.get() - before
+        // a rebuild also rewrites the manifest with the true value
+        if (builds == 1 && Files.readString(pj) == txt) None
+        else Some(s"$store ($recordedKey forged to $forged): $builds builds")
+      }
+      assert(stale.isEmpty,
+        s"a changed recorded value must rebuild, not serve the stale artifact: ${stale.mkString("; ")}")
     }
-    assert(stale.isEmpty,
-      s"a changed recorded value must rebuild, not serve the stale artifact: ${stale.mkString("; ")}")
   }
 
   test("two threads opening the same fresh store build it once and read identical rows") {
-    val dir = freshCorpusDir().toString
-    val before = EmbPairsStore.buildCount.get()
-    val barrier = new CyclicBarrier(2)
-    val pool = Executors.newFixedThreadPool(2)
-    try {
-      // separate sessions: distinct open-memo keys, so both threads reach
-      // the per-path lock instead of sharing one memo entry
-      val results = Seq.fill(2)(spark.newSession()).map { s =>
-        pool.submit(() => {
-          barrier.await()
-          sortedRows(EmbPairsStore.pairs(s, dir))
-        })
-      }.map(_.get(300, TimeUnit.SECONDS))
-      assert(EmbPairsStore.buildCount.get() == before + 1,
-        "concurrent opens of one store must build it exactly once")
-      assert(results.head.nonEmpty, "banded corpus produced no verified pairs")
-      assert(results(0) == results(1), "concurrent opens served different edge sets")
-    } finally pool.shutdownNow()
+    withCorpusDir { dir =>
+      val before = EmbPairsStore.buildCount.get()
+      val barrier = new CyclicBarrier(2)
+      val pool = Executors.newFixedThreadPool(2)
+      try {
+        // separate sessions: distinct open-memo keys, so both threads reach
+        // the per-path lock instead of sharing one memo entry
+        val results = Seq.fill(2)(spark.newSession()).map { s =>
+          pool.submit(() => {
+            barrier.await()
+            sortedRows(EmbPairsStore.pairs(s, dir))
+          })
+        }.map(_.get(300, TimeUnit.SECONDS))
+        assert(EmbPairsStore.buildCount.get() == before + 1,
+          "concurrent opens of one store must build it exactly once")
+        assert(results.head.nonEmpty, "banded corpus produced no verified pairs")
+        assert(results(0) == results(1), "concurrent opens served different edge sets")
+      } finally pool.shutdownNow()
+    }
   }
 }

@@ -31,12 +31,11 @@ class DocPairsStoreSpec extends SparkSpec {
       .select("doc_id", "text")
   }
 
-  private def freshCorpusDir(rows: Seq[(Long, Long)]): Path = {
-    val d = Files.createTempDirectory("docpairs")
-    d.toFile.deleteOnExit()
-    docsOf(rows).write.mode("overwrite").parquet(s"$d/documents.parquet")
-    d
-  }
+  private def withCorpusDir[T](rows: Seq[(Long, Long)])(f: Path => T): T =
+    withTempDir("docpairs") { d =>
+      docsOf(rows).write.mode("overwrite").parquet(s"$d/documents.parquet")
+      f(d)
+    }
 
   private def sortedRows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
@@ -45,67 +44,70 @@ class DocPairsStoreSpec extends SparkSpec {
   private def baseRows = (0L until 90L).map(i => (i, i / 3))
 
   test("re-open builds nothing; every table is value-identical to the direct computation") {
-    val dir = freshCorpusDir(baseRows)
-    val before = DocPairsStore.buildCount.get()
-    val e1 = sortedRows(DocPairsStore.exactPairs(spark, dir.toString))
-    val l1 = sortedRows(DocPairsStore.lshPairs(spark, dir.toString))
-    val s1 = sortedRows(DocPairsStore.sigs(spark, dir.toString))
-    val sh1 = sortedRows(DocPairsStore.shingles(spark, dir.toString))
-    assert(DocPairsStore.buildCount.get() == before + 1, "first open must build once")
-    assert(e1.nonEmpty && l1.nonEmpty, "dup-planted corpus produced no pairs")
+    withCorpusDir(baseRows) { dir =>
+      val before = DocPairsStore.buildCount.get()
+      val e1 = sortedRows(DocPairsStore.exactPairs(spark, dir.toString))
+      val l1 = sortedRows(DocPairsStore.lshPairs(spark, dir.toString))
+      val s1 = sortedRows(DocPairsStore.sigs(spark, dir.toString))
+      val sh1 = sortedRows(DocPairsStore.shingles(spark, dir.toString))
+      assert(DocPairsStore.buildCount.get() == before + 1, "first open must build once")
+      assert(e1.nonEmpty && l1.nonEmpty, "dup-planted corpus produced no pairs")
 
-    DocPairsStore.dropHandles()
-    assert(sortedRows(DocPairsStore.exactPairs(spark, dir.toString)) == e1)
-    assert(DocPairsStore.buildCount.get() == before + 1,
-      "re-open of a valid store must build nothing")
+      DocPairsStore.dropHandles()
+      assert(sortedRows(DocPairsStore.exactPairs(spark, dir.toString)) == e1)
+      assert(DocPairsStore.buildCount.get() == before + 1,
+        "re-open of a valid store must build nothing")
 
-    val docs = graft.core.Tables.load(spark, dir.toString, "documents")
-    assert(sh1 == sortedRows(Dedup.shingles(docs, DocPairsStore.ShingleN)),
-      "persisted shingles differ from a fresh build")
-    assert(s1 == sortedRows(Dedup.minhashSignatures(docs)),
-      "persisted sigs differ from a fresh build")
-    assert(e1 == sortedRows(Dedup.ngramJaccard(docs, Dedup.SharedExactFloor)),
-      "persisted exact pairs differ from a fresh build")
-    assert(l1 == sortedRows(Dedup.minhashLsh(docs, Dedup.SharedPairFloor)),
-      "persisted LSH pairs differ from a fresh build")
+      val docs = graft.core.Tables.load(spark, dir.toString, "documents")
+      assert(sh1 == sortedRows(Dedup.shingles(docs, DocPairsStore.ShingleN)),
+        "persisted shingles differ from a fresh build")
+      assert(s1 == sortedRows(Dedup.minhashSignatures(docs)),
+        "persisted sigs differ from a fresh build")
+      assert(e1 == sortedRows(Dedup.ngramJaccard(docs, Dedup.SharedExactFloor)),
+        "persisted exact pairs differ from a fresh build")
+      assert(l1 == sortedRows(Dedup.minhashLsh(docs, Dedup.SharedPairFloor)),
+        "persisted LSH pairs differ from a fresh build")
+    }
   }
 
   test("append == full rebuild on the enlarged corpus, and never re-scans the source") {
     // batch doc 200+i extends dup group i/3 (seeds overlap the base's),
     // so the append must surface batch-batch AND batch-store pairs
     val batchRows = (200L until 230L).map(i => (i, (i - 200) / 3))
-    val dir = freshCorpusDir(baseRows)
-    val storeRoot = Files.createTempDirectory("docpairs_store")
-    storeRoot.toFile.deleteOnExit()
-    val store = new DocPairsStore(spark, storeRoot.toString)
-    store.build(graft.core.Tables.load(spark, dir.toString, "documents"))
+    withCorpusDir(baseRows) { dir =>
+      withTempDir("docpairs_store") { storeRoot =>
+        val store = new DocPairsStore(spark, storeRoot.toString)
+        store.build(graft.core.Tables.load(spark, dir.toString, "documents"))
 
-    // source-deletion proof: the append below runs with the corpus
-    // parquet GONE — ingest state lives entirely in the store
-    val deleted = Files.walk(dir).sorted(java.util.Comparator.reverseOrder[Path]())
-    deleted.forEach(p => Files.deleteIfExists(p))
-    store.append(docsOf(batchRows))
+        // source-deletion proof: the append below runs with the corpus
+        // parquet GONE — ingest state lives entirely in the store
+        val deleted = Files.walk(dir).sorted(java.util.Comparator.reverseOrder[Path]())
+        deleted.forEach(p => Files.deleteIfExists(p))
+        store.append(docsOf(batchRows))
 
-    val full = docsOf(baseRows ++ batchRows)
-    assert(sortedRows(store.exactPairs) ==
-      sortedRows(Dedup.ngramJaccard(full, Dedup.SharedExactFloor)),
-      "exact-pair append diverged from a full rebuild of the enlarged corpus")
-    assert(sortedRows(store.lshPairs) ==
-      sortedRows(Dedup.minhashLsh(full, Dedup.SharedPairFloor)),
-      "LSH-pair append diverged from a full rebuild of the enlarged corpus")
-    assert(store.sigs.count() == (baseRows.size + batchRows.size).toLong,
-      "sigs/ must grow by exactly the batch")
+        val full = docsOf(baseRows ++ batchRows)
+        assert(sortedRows(store.exactPairs) ==
+          sortedRows(Dedup.ngramJaccard(full, Dedup.SharedExactFloor)),
+          "exact-pair append diverged from a full rebuild of the enlarged corpus")
+        assert(sortedRows(store.lshPairs) ==
+          sortedRows(Dedup.minhashLsh(full, Dedup.SharedPairFloor)),
+          "LSH-pair append diverged from a full rebuild of the enlarged corpus")
+        assert(store.sigs.count() == (baseRows.size + batchRows.size).toLong,
+          "sigs/ must grow by exactly the batch")
+      }
+    }
   }
 
   test("a regenerated corpus under the same path triggers a rebuild") {
-    val dir = freshCorpusDir(baseRows)
-    DocPairsStore.exactPairs(spark, dir.toString).count()
-    docsOf((0L until 90L).map(i => (i, i / 3 + 500)))
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    DocPairsStore.dropHandles()
-    val before = DocPairsStore.buildCount.get()
-    DocPairsStore.exactPairs(spark, dir.toString).count()
-    assert(DocPairsStore.buildCount.get() == before + 1,
-      "fingerprint mismatch must rebuild, not serve stale pairs")
+    withCorpusDir(baseRows) { dir =>
+      DocPairsStore.exactPairs(spark, dir.toString).count()
+      docsOf((0L until 90L).map(i => (i, i / 3 + 500)))
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      DocPairsStore.dropHandles()
+      val before = DocPairsStore.buildCount.get()
+      DocPairsStore.exactPairs(spark, dir.toString).count()
+      assert(DocPairsStore.buildCount.get() == before + 1,
+        "fingerprint mismatch must rebuild, not serve stale pairs")
+    }
   }
 }

@@ -27,71 +27,73 @@ class EmbPairsStoreSpec extends SparkSpec {
       .select("vec_id", "label", "embedding")
   }
 
-  private def freshCorpusDir(rows: Seq[(Long, Long)]): Path = {
-    val d = Files.createTempDirectory("embpairs")
-    d.toFile.deleteOnExit()
-    vecsOf(rows).write.mode("overwrite").parquet(s"$d/embeddings.parquet")
-    d
-  }
+  private def withCorpusDir[T](rows: Seq[(Long, Long)])(f: Path => T): T =
+    withTempDir("embpairs") { d =>
+      vecsOf(rows).write.mode("overwrite").parquet(s"$d/embeddings.parquet")
+      f(d)
+    }
 
   private def sortedRows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
 
   test("re-open after a handle drop builds nothing and serves bit-identical edges") {
-    val dir = freshCorpusDir((0L until 150L).map(i => (i, i)))
-    val before = EmbPairsStore.buildCount.get()
-    val p1 = sortedRows(EmbPairsStore.pairs(spark, dir.toString))
-    assert(EmbPairsStore.buildCount.get() == before + 1, "first open must build")
-    assert(p1.nonEmpty, "banded corpus produced no verified pairs")
+    withCorpusDir((0L until 150L).map(i => (i, i))) { dir =>
+      val before = EmbPairsStore.buildCount.get()
+      val p1 = sortedRows(EmbPairsStore.pairs(spark, dir.toString))
+      assert(EmbPairsStore.buildCount.get() == before + 1, "first open must build")
+      assert(p1.nonEmpty, "banded corpus produced no verified pairs")
 
-    EmbPairsStore.dropHandles()
-    val p2 = sortedRows(EmbPairsStore.pairs(spark, dir.toString))
-    assert(EmbPairsStore.buildCount.get() == before + 1,
-      "re-open of a valid store must build nothing")
-    assert(p2 == p1, "store round-trip changed the edge set")
+      EmbPairsStore.dropHandles()
+      val p2 = sortedRows(EmbPairsStore.pairs(spark, dir.toString))
+      assert(EmbPairsStore.buildCount.get() == before + 1,
+        "re-open of a valid store must build nothing")
+      assert(p2 == p1, "store round-trip changed the edge set")
 
-    // persisted edges equal a from-scratch embeddingDedup run (persisting
-    // is plumbing, not a value change — the oracle replay contract)
-    val fresh = sortedRows(Similarity.embeddingDedup(
-      graft.core.Tables.load(spark, dir.toString, "embeddings"),
-      Similarity.SharedEmbFloor, EmbPairsStore.Bands, EmbPairsStore.RowsPerBand))
-    assert(p1 == fresh, "persisted pairs differ from a fresh build")
+      // persisted edges equal a from-scratch embeddingDedup run (persisting
+      // is plumbing, not a value change — the oracle replay contract)
+      val fresh = sortedRows(Similarity.embeddingDedup(
+        graft.core.Tables.load(spark, dir.toString, "embeddings"),
+        Similarity.SharedEmbFloor, EmbPairsStore.Bands, EmbPairsStore.RowsPerBand))
+      assert(p1 == fresh, "persisted pairs differ from a fresh build")
+    }
   }
 
   test("append == full rebuild on the enlarged corpus, and never re-scans the source") {
     val baseRows = (0L until 120L).map(i => (i, i))
     val batchRows = (200L until 260L).map(i => (i, i - 197)) // seeds overlap base's
-    val dir = freshCorpusDir(baseRows)
-    val storeRoot = Files.createTempDirectory("embpairs_store")
-    storeRoot.toFile.deleteOnExit()
-    val store = new graft.operators.EmbPairsStore(spark, storeRoot.toString)
-    store.build(graft.core.Tables.load(spark, dir.toString, "embeddings"))
+    withCorpusDir(baseRows) { dir =>
+      withTempDir("embpairs_store") { storeRoot =>
+        val store = new graft.operators.EmbPairsStore(spark, storeRoot.toString)
+        store.build(graft.core.Tables.load(spark, dir.toString, "embeddings"))
 
-    // source-deletion proof: the append below runs with the corpus
-    // parquet GONE — ingest state lives entirely in the store
-    val deleted = Files.walk(dir).sorted(java.util.Comparator.reverseOrder[Path]())
-    deleted.forEach(p => Files.deleteIfExists(p))
-    store.append(vecsOf(batchRows))
+        // source-deletion proof: the append below runs with the corpus
+        // parquet GONE — ingest state lives entirely in the store
+        val deleted = Files.walk(dir).sorted(java.util.Comparator.reverseOrder[Path]())
+        deleted.forEach(p => Files.deleteIfExists(p))
+        store.append(vecsOf(batchRows))
 
-    val viaAppend = sortedRows(store.pairs)
-    val rebuilt = sortedRows(Similarity.embeddingDedup(
-      vecsOf(baseRows ++ batchRows),
-      Similarity.SharedEmbFloor, EmbPairsStore.Bands, EmbPairsStore.RowsPerBand))
-    assert(viaAppend == rebuilt,
-      "incremental append diverged from a full rebuild of the enlarged corpus")
-    assert(store.vecs.count() == (baseRows.size + batchRows.size).toLong,
-      "vecs/ must grow by exactly the batch")
+        val viaAppend = sortedRows(store.pairs)
+        val rebuilt = sortedRows(Similarity.embeddingDedup(
+          vecsOf(baseRows ++ batchRows),
+          Similarity.SharedEmbFloor, EmbPairsStore.Bands, EmbPairsStore.RowsPerBand))
+        assert(viaAppend == rebuilt,
+          "incremental append diverged from a full rebuild of the enlarged corpus")
+        assert(store.vecs.count() == (baseRows.size + batchRows.size).toLong,
+          "vecs/ must grow by exactly the batch")
+      }
+    }
   }
 
   test("a regenerated corpus under the same path triggers a rebuild") {
-    val dir = freshCorpusDir((0L until 100L).map(i => (i, i)))
-    EmbPairsStore.pairs(spark, dir.toString).count()
-    vecsOf((0L until 100L).map(i => (i, i + 500)))
-      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    EmbPairsStore.dropHandles()
-    val before = EmbPairsStore.buildCount.get()
-    EmbPairsStore.pairs(spark, dir.toString).count()
-    assert(EmbPairsStore.buildCount.get() == before + 1,
-      "fingerprint mismatch must rebuild, not serve stale edges")
+    withCorpusDir((0L until 100L).map(i => (i, i))) { dir =>
+      EmbPairsStore.pairs(spark, dir.toString).count()
+      vecsOf((0L until 100L).map(i => (i, i + 500)))
+        .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+      EmbPairsStore.dropHandles()
+      val before = EmbPairsStore.buildCount.get()
+      EmbPairsStore.pairs(spark, dir.toString).count()
+      assert(EmbPairsStore.buildCount.get() == before + 1,
+        "fingerprint mismatch must rebuild, not serve stale edges")
+    }
   }
 }

@@ -206,6 +206,32 @@ class PlanGuardSpec extends SparkSpec {
       s"quality_retention_curve final plan reads the text column $curveScans times (want 1)")
   }
 
+  test("candFromBands consumers plan one scan and exchange count across repeated runs") {
+    // Dedup.candFromBands used to self-join its capped band table; AQE
+    // re-planned that join's second read per run (a reused exchange in
+    // most runs, a second scan of the store's sigs/ in others), so these
+    // rows' final plans depended on which query stage finished first.
+    // Each capped table now has one consumer; the counts must not move
+    // between runs of the same query in one JVM. A first untimed run
+    // builds the standing store, whose inline build plans differently.
+    // Only consumers with no other swing are pinned: the rows that also
+    // verify through Dedup.pairJaccard (dedup_lsh_subblocked,
+    // dedup_incremental) or join signatures back (dedup_minhash_estimate)
+    // still flip a join's build side with stage timing.
+    val swings = Seq("dedup_edit_distance", "dedup_blocking_recall")
+      .flatMap { name =>
+        SparkEntry.queries(name)(spark, dir).count()
+        val counts = (1 to 5).map { _ =>
+          graft.core.SharedViews.reclaimEverything(spark)
+          val (_, perFile, nExch, nBcast) = Tool.finalPlanScanCounts(spark, name, dir)
+          spark.catalog.clearCache()
+          (perFile.toSeq.sorted, nExch, nBcast)
+        }.distinct
+        if (counts.size > 1) Some(s"$name: ${counts.mkString(" | ")}") else None
+      }
+    assert(swings.isEmpty, s"final-plan counts moved between runs:\n${swings.mkString("\n")}")
+  }
+
   test("final-plan per-file scan counts never exceed the committed watchlist") {
     // Regenerate with:
     //   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.001 \

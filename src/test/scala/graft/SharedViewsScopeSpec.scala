@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.storage.StorageLevel
 
@@ -14,12 +12,11 @@ import graft.operators.TextAnalysis
   */
 class SharedViewsScopeSpec extends SparkSpec {
 
-  private def scratchCorpus(texts: Seq[String]): String = {
-    val dir = Files.createTempDirectory("svscope")
-    dir.toFile.deleteOnExit()
-    writeCorpus(dir.toString, texts)
-    dir.toString
-  }
+  private def withScratchCorpus[T](texts: Seq[String])(f: String => T): T =
+    withTempDir("svscope") { d =>
+      writeCorpus(d.toString, texts)
+      f(d.toString)
+    }
 
   private def writeCorpus(dir: String, texts: Seq[String]): Unit = {
     import spark.implicits._
@@ -42,33 +39,35 @@ class SharedViewsScopeSpec extends SparkSpec {
     val before = sc.getPersistentRDDs.keySet
 
     // a former shared-view consumer over a scratch documents table
-    val dir = scratchCorpus(Seq("alpha beta gamma", "beta gamma delta"))
-    assert(SparkEntry.queries("text_lm_score")(spark, dir).collect().length == 2)
+    withScratchCorpus(Seq("alpha beta gamma", "beta gamma delta")) { dir =>
+      assert(SparkEntry.queries("text_lm_score")(spark, dir).collect().length == 2)
 
-    val added = sc.getPersistentRDDs.keySet -- before
-    assert(added.isEmpty, s"the query left persisted RDDs $added behind")
-    assert(userCached.storageLevel != StorageLevel.NONE,
-      "the query dropped a user's cached table")
-    assert(userCached.count() == 1000L)
-    assert(userCp.count() == 500L, "the query broke a user's checkpointed DataFrame")
-    userCached.unpersist()
+      val added = sc.getPersistentRDDs.keySet -- before
+      assert(added.isEmpty, s"the query left persisted RDDs $added behind")
+      assert(userCached.storageLevel != StorageLevel.NONE,
+        "the query dropped a user's cached table")
+      assert(userCached.count() == 1000L)
+      assert(userCp.count() == 500L, "the query broke a user's checkpointed DataFrame")
+      userCached.unpersist()
+    }
   }
 
   test("a corpus rewritten in-session is read fresh by its queries") {
-    val dir = scratchCorpus(Seq("alpha beta gamma", "beta gamma delta"))
-    val q = SparkEntry.queries("text_vocab_coverage")
-    val first = sortedRows(q(spark, dir))
-    assert(first == sortedRows(TextAnalysis.vocabCoverage(
-      graft.core.Tables.load(spark, dir, "documents"), 12)))
+    withScratchCorpus(Seq("alpha beta gamma", "beta gamma delta")) { dir =>
+      val q = SparkEntry.queries("text_vocab_coverage")
+      val first = sortedRows(q(spark, dir))
+      assert(first == sortedRows(TextAnalysis.vocabCoverage(
+        graft.core.Tables.load(spark, dir, "documents"), 12)))
 
-    // same session, same dir, different text and doc count
-    writeCorpus(dir, Seq("one two", "two three three", "four", "five six seven eight"))
-    val second = sortedRows(q(spark, dir))
-    val fresh = sortedRows(TextAnalysis.vocabCoverage(
-      graft.core.Tables.load(spark, dir, "documents"), 12))
-    assert(second.length == 4, s"query served the old corpus: $second")
-    assert(second == fresh)
-    assert(second.map(_.getLong(1)) == Seq(2L, 3L, 1L, 4L),
-      s"token counts are not the new corpus's: $second")
+      // same session, same dir, different text and doc count
+      writeCorpus(dir, Seq("one two", "two three three", "four", "five six seven eight"))
+      val second = sortedRows(q(spark, dir))
+      val fresh = sortedRows(TextAnalysis.vocabCoverage(
+        graft.core.Tables.load(spark, dir, "documents"), 12))
+      assert(second.length == 4, s"query served the old corpus: $second")
+      assert(second == fresh)
+      assert(second.map(_.getLong(1)) == Seq(2L, 3L, 1L, 4L),
+        s"token counts are not the new corpus's: $second")
+    }
   }
 }

@@ -9,48 +9,52 @@ import graft.core.{Tables, Tsdb}
 class TablesSpec extends SparkSpec {
 
   test("csv and jsonl event feeds produce the parquet-path schema") {
-    val dir = Files.createTempDirectory("graft_src").toString
-    Files.writeString(java.nio.file.Paths.get(dir, "ev.csv"),
-      """event_id,ts,user_id,event_type,value,props
-        |1,2024-01-01 10:05:00,7,purchase,10.5,"{""k"": 3}"
-        |2,2024-01-01 10:50:00,7,purchase,2.5,"{""k"": 4}"
-        |3,2024-01-01 11:10:00,8,error,1.0,"{""k"": 5}"
-        |""".stripMargin)
-    Files.writeString(java.nio.file.Paths.get(dir, "ev.jsonl"),
-      """{"event_id":1,"ts":"2024-01-01 10:05:00","user_id":7,"event_type":"purchase","value":10.5,"props":"{\"k\": 3}"}
-        |{"event_id":2,"ts":"2024-01-01 10:50:00","user_id":7,"event_type":"purchase","value":2.5,"props":"{\"k\": 4}"}
-        |{"event_id":3,"ts":"2024-01-01 11:10:00","user_id":8,"event_type":"error","value":1.0,"props":"{\"k\": 5}"}
-        |""".stripMargin)
-    val csv = Tables.loadEventsText(spark, s"$dir/ev.csv", "csv")
-    val jsonl = Tables.loadEventsText(spark, s"$dir/ev.jsonl", "jsonl")
-    // identical rows from both formats
-    assert(csv.schema == jsonl.schema)
-    assert(csv.collect().map(_.toString).sorted.toSeq ==
-      jsonl.collect().map(_.toString).sorted.toSeq)
-    // downstream TSDB operators run unchanged: same rollup from either feed
-    val pts = Tsdb.points(csv).collect()
-    val p7 = pts.find(r => r.getAs[String]("f2") == "7").get
-    assert(p7.getAs[Double]("total") == 13.0 && p7.getAs[Long]("cnt") == 2L)
-    // ts_ns carries exact nanos for pushdown-style range predicates
-    assert(csv.filter(col("ts_ns") === 1704103500000000000L).count() == 1L)
+    withTempDir("graft_src") { tmp =>
+      val dir = tmp.toString
+      Files.writeString(java.nio.file.Paths.get(dir, "ev.csv"),
+        """event_id,ts,user_id,event_type,value,props
+          |1,2024-01-01 10:05:00,7,purchase,10.5,"{""k"": 3}"
+          |2,2024-01-01 10:50:00,7,purchase,2.5,"{""k"": 4}"
+          |3,2024-01-01 11:10:00,8,error,1.0,"{""k"": 5}"
+          |""".stripMargin)
+      Files.writeString(java.nio.file.Paths.get(dir, "ev.jsonl"),
+        """{"event_id":1,"ts":"2024-01-01 10:05:00","user_id":7,"event_type":"purchase","value":10.5,"props":"{\"k\": 3}"}
+          |{"event_id":2,"ts":"2024-01-01 10:50:00","user_id":7,"event_type":"purchase","value":2.5,"props":"{\"k\": 4}"}
+          |{"event_id":3,"ts":"2024-01-01 11:10:00","user_id":8,"event_type":"error","value":1.0,"props":"{\"k\": 5}"}
+          |""".stripMargin)
+      val csv = Tables.loadEventsText(spark, s"$dir/ev.csv", "csv")
+      val jsonl = Tables.loadEventsText(spark, s"$dir/ev.jsonl", "jsonl")
+      // identical rows from both formats
+      assert(csv.schema == jsonl.schema)
+      assert(csv.collect().map(_.toString).sorted.toSeq ==
+        jsonl.collect().map(_.toString).sorted.toSeq)
+      // downstream TSDB operators run unchanged: same rollup from either feed
+      val pts = Tsdb.points(csv).collect()
+      val p7 = pts.find(r => r.getAs[String]("f2") == "7").get
+      assert(p7.getAs[Double]("total") == 13.0 && p7.getAs[Long]("cnt") == 2L)
+      // ts_ns carries exact nanos for pushdown-style range predicates
+      assert(csv.filter(col("ts_ns") === 1704103500000000000L).count() == 1L)
+    }
   }
 
   test("loadEventsText keeps ts and ts_ns consistent for sub-second feeds") {
-    val dir = Files.createTempDirectory("graft_subsec").toString
-    Files.writeString(java.nio.file.Paths.get(dir, "ev.csv"),
-      """event_id,ts,user_id,event_type,value,props
-        |1,2024-01-01 10:05:00.250,7,purchase,10.5,{}
-        |2,2024-01-01 10:05:01.250,7,purchase,3.14159,{}
-        |""".stripMargin)
-    val df = Tables.loadEventsText(spark, s"$dir/ev.csv", "csv")
-    // sub-cent feed values snap to the 2-dec grid at the load boundary
-    // (the exact-LONG-cents aggregate invariant — see the events-grid test)
-    assert(df.filter(col("event_id") === 2).head().getAs[Double]("value") == 3.14)
-    val r = df.filter(col("event_id") === 1).head()
-    // the fractional 250 ms survives in BOTH columns, so a range predicate
-    // on ts_ns selects exactly the rows the same predicate on ts would
-    assert(r.getAs[Long]("ts_ns") == 1704103500250000000L)
-    assert(df.filter(expr("unix_micros(CAST(ts AS TIMESTAMP)) * 1000 = ts_ns")).count() == 2L)
+    withTempDir("graft_subsec") { tmp =>
+      val dir = tmp.toString
+      Files.writeString(java.nio.file.Paths.get(dir, "ev.csv"),
+        """event_id,ts,user_id,event_type,value,props
+          |1,2024-01-01 10:05:00.250,7,purchase,10.5,{}
+          |2,2024-01-01 10:05:01.250,7,purchase,3.14159,{}
+          |""".stripMargin)
+      val df = Tables.loadEventsText(spark, s"$dir/ev.csv", "csv")
+      // sub-cent feed values snap to the 2-dec grid at the load boundary
+      // (the exact-LONG-cents aggregate invariant — see the events-grid test)
+      assert(df.filter(col("event_id") === 2).head().getAs[Double]("value") == 3.14)
+      val r = df.filter(col("event_id") === 1).head()
+      // the fractional 250 ms survives in BOTH columns, so a range predicate
+      // on ts_ns selects exactly the rows the same predicate on ts would
+      assert(r.getAs[Long]("ts_ns") == 1704103500250000000L)
+      assert(df.filter(expr("unix_micros(CAST(ts AS TIMESTAMP)) * 1000 = ts_ns")).count() == 2L)
+    }
   }
 
   test("schema evolution: epochs written before a new column still fetch") {
@@ -58,21 +62,23 @@ class TablesSpec extends SparkSpec {
     // mergeSchema unions the file schemas and NULL-fills history — the
     // read-side contract that lets stores evolve without rewriting epochs
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_evolve").toString
-    Seq(("cpu", "2024-01-01T10:00", 10.0))
-      .toDF("f1", "bucket", "total")
-      .write.parquet(s"$dir/epoch=2024-01-01")
-    Seq(("cpu", "2024-01-02T10:00", 4.0, "us-east"))
-      .toDF("f1", "bucket", "total", "region") // new column in the new epoch
-      .write.parquet(s"$dir/epoch=2024-01-02")
-    val all = spark.read.option("mergeSchema", "true").parquet(dir)
-    assert(all.columns.toSet == Set("f1", "bucket", "total", "region", "epoch"))
-    val rows = all.orderBy("bucket").collect()
-    assert(rows.length == 2)
-    assert(rows.head.isNullAt(rows.head.fieldIndex("region"))) // old epoch null-filled
-    assert(rows.last.getAs[String]("region") == "us-east")
-    // partition pruning still applies on the epoch column
-    assert(all.filter(col("epoch") === "2024-01-02").count() == 1L)
+    withTempDir("graft_evolve") { tmp =>
+      val dir = tmp.toString
+      Seq(("cpu", "2024-01-01T10:00", 10.0))
+        .toDF("f1", "bucket", "total")
+        .write.parquet(s"$dir/epoch=2024-01-01")
+      Seq(("cpu", "2024-01-02T10:00", 4.0, "us-east"))
+        .toDF("f1", "bucket", "total", "region") // new column in the new epoch
+        .write.parquet(s"$dir/epoch=2024-01-02")
+      val all = spark.read.option("mergeSchema", "true").parquet(dir)
+      assert(all.columns.toSet == Set("f1", "bucket", "total", "region", "epoch"))
+      val rows = all.orderBy("bucket").collect()
+      assert(rows.length == 2)
+      assert(rows.head.isNullAt(rows.head.fieldIndex("region"))) // old epoch null-filled
+      assert(rows.last.getAs[String]("region") == "us-east")
+      // partition pruning still applies on the epoch column
+      assert(all.filter(col("epoch") === "2024-01-02").count() == 1L)
+    }
   }
 
   test("load adapts to both events timestamp encodings (nanos and micros)") {
@@ -84,22 +90,15 @@ class TablesSpec extends SparkSpec {
     val fixtureDir = new java.io.File("src/test/resources").getAbsolutePath
     // the fixture files are named events_<enc>.parquet; load() expects
     // <dir>/events.parquet, so read each through a copied temp dir
-    // (deleted in the finally — temp dirs must not leak per run)
-    def loadFixture(enc: String)(check: org.apache.spark.sql.DataFrame => Unit): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory(enc)
-      val copy = tmp.resolve("events.parquet")
-      try {
-        java.nio.file.Files.copy(
-          java.nio.file.Paths.get(s"$fixtureDir/events_$enc.parquet"), copy)
+    def loadFixture(enc: String)(check: org.apache.spark.sql.DataFrame => Unit): Unit =
+      withTempDir(enc) { tmp =>
+        Files.copy(java.nio.file.Paths.get(s"$fixtureDir/events_$enc.parquet"),
+          tmp.resolve("events.parquet"))
         val df = Tables.load(spark, tmp.toString, "events")
         assert(df.schema("ts").dataType.typeName == "timestamp_ntz")
         assert(df.schema("ts_ns").dataType.typeName == "long")
         check(df)
-      } finally {
-        java.nio.file.Files.deleteIfExists(copy)
-        java.nio.file.Files.deleteIfExists(tmp)
       }
-    }
     loadFixture("nanos") { nanos =>
       // fixture row 1: 2024-01-05 01:00:00 wall clock
       val r = nanos.orderBy(col("event_id")).collect()(1)

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.Path
 
 import org.apache.spark.sql.DataFrame
 
@@ -24,68 +24,70 @@ class TokenizerStoreSpec extends SparkSpec {
     }.toDF("doc_id", "text", "source")
   }
 
-  private def freshCorpusDir(seed: Int): Path = {
-    val d = Files.createTempDirectory("tokstore")
-    d.toFile.deleteOnExit()
-    corpusOf(seed).write.mode("overwrite").parquet(s"$d/documents.parquet")
-    d
-  }
+  private def withCorpusDir[T](seed: Int)(f: Path => T): T =
+    withTempDir("tokstore") { d =>
+      corpusOf(seed).write.mode("overwrite").parquet(s"$d/documents.parquet")
+      f(d)
+    }
 
   private def sortedRows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
 
   test("re-open after a handle drop trains nothing and serves the trained merges") {
-    val dir = freshCorpusDir(0)
-    val before = TokenizerStore.trainCount.get()
-    val m1 = sortedRows(TokenizerStore.merges(spark, dir.toString, 8))
-    assert(TokenizerStore.trainCount.get() == before + 1, "first open must train")
-    assert(m1.nonEmpty, "trainer learned no merges on a mergeable corpus")
+    withCorpusDir(0) { dir =>
+      val before = TokenizerStore.trainCount.get()
+      val m1 = sortedRows(TokenizerStore.merges(spark, dir.toString, 8))
+      assert(TokenizerStore.trainCount.get() == before + 1, "first open must train")
+      assert(m1.nonEmpty, "trainer learned no merges on a mergeable corpus")
 
-    // simulate a fresh session: drop in-process handles, keep the disk
-    // store — the encode path must NOT retrain
-    TokenizerStore.dropHandles()
-    val m2 = sortedRows(TokenizerStore.merges(spark, dir.toString, 8))
-    assert(TokenizerStore.trainCount.get() == before + 1,
-      "re-open of a valid store must train nothing")
-    assert(m2 == m1, "store round-trip changed the merge table")
+      // simulate a fresh session: drop in-process handles, keep the disk
+      // store — the encode path must NOT retrain
+      TokenizerStore.dropHandles()
+      val m2 = sortedRows(TokenizerStore.merges(spark, dir.toString, 8))
+      assert(TokenizerStore.trainCount.get() == before + 1,
+        "re-open of a valid store must train nothing")
+      assert(m2 == m1, "store round-trip changed the merge table")
 
-    // persisted merges equal a from-scratch trainer run (persisting is a
-    // plumbing change, not a value change — the oracle replay contract)
-    val fresh = sortedRows(TextAnalysis.bpeMerges(
-      graft.core.Tables.load(spark, dir.toString, "documents"), 8))
-    assert(m1 == fresh, "persisted merges differ from fresh training")
+      // persisted merges equal a from-scratch trainer run (persisting is a
+      // plumbing change, not a value change — the oracle replay contract)
+      val fresh = sortedRows(TextAnalysis.bpeMerges(
+        graft.core.Tables.load(spark, dir.toString, "documents"), 8))
+      assert(m1 == fresh, "persisted merges differ from fresh training")
+    }
   }
 
   test("encode over stored merges equals the inline-training encode") {
-    val dir = freshCorpusDir(1)
-    val docs = graft.core.Tables.load(spark, dir.toString, "documents")
-    val viaStore = TextAnalysis.bpeEncodeStatsFrom(docs,
-      TokenizerStore.collectMerges(spark, dir.toString, 8))
-    val inline = TextAnalysis.bpeEncodeStats(docs, 8)
-    assert(sortedRows(viaStore) == sortedRows(inline),
-      "store-backed encode diverged from the inline-training encode")
-    // and the store-backed call after the first open runs zero trainer loops
-    val before = TokenizerStore.trainCount.get()
-    TextAnalysis.bpeEncodeStatsFrom(docs,
-      TokenizerStore.collectMerges(spark, dir.toString, 8)).count()
-    assert(TokenizerStore.trainCount.get() == before,
-      "encode re-trained the tokenizer despite an open store")
+    withCorpusDir(1) { dir =>
+      val docs = graft.core.Tables.load(spark, dir.toString, "documents")
+      val viaStore = TextAnalysis.bpeEncodeStatsFrom(docs,
+        TokenizerStore.collectMerges(spark, dir.toString, 8))
+      val inline = TextAnalysis.bpeEncodeStats(docs, 8)
+      assert(sortedRows(viaStore) == sortedRows(inline),
+        "store-backed encode diverged from the inline-training encode")
+      // and the store-backed call after the first open runs zero trainer loops
+      val before = TokenizerStore.trainCount.get()
+      TextAnalysis.bpeEncodeStatsFrom(docs,
+        TokenizerStore.collectMerges(spark, dir.toString, 8)).count()
+      assert(TokenizerStore.trainCount.get() == before,
+        "encode re-trained the tokenizer despite an open store")
+    }
   }
 
   test("a regenerated corpus under the same path triggers a retrain") {
-    val dir = freshCorpusDir(2)
-    val m1 = sortedRows(TokenizerStore.merges(spark, dir.toString, 8))
-    assert(m1.nonEmpty)
-    // rewrite the corpus in place: same path, different text mixture
-    corpusOf(5).withColumn("text",
-        org.apache.spark.sql.functions.concat_ws(" ",
-          org.apache.spark.sql.functions.col("text"),
-          org.apache.spark.sql.functions.lit("zzqq zzqq zzqq")))
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    TokenizerStore.dropHandles()
-    val before = TokenizerStore.trainCount.get()
-    TokenizerStore.merges(spark, dir.toString, 8).count()
-    assert(TokenizerStore.trainCount.get() == before + 1,
-      "fingerprint mismatch must retrain, not serve the stale tokenizer")
+    withCorpusDir(2) { dir =>
+      val m1 = sortedRows(TokenizerStore.merges(spark, dir.toString, 8))
+      assert(m1.nonEmpty)
+      // rewrite the corpus in place: same path, different text mixture
+      corpusOf(5).withColumn("text",
+          org.apache.spark.sql.functions.concat_ws(" ",
+            org.apache.spark.sql.functions.col("text"),
+            org.apache.spark.sql.functions.lit("zzqq zzqq zzqq")))
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      TokenizerStore.dropHandles()
+      val before = TokenizerStore.trainCount.get()
+      TokenizerStore.merges(spark, dir.toString, 8).count()
+      assert(TokenizerStore.trainCount.get() == before + 1,
+        "fingerprint mismatch must retrain, not serve the stale tokenizer")
+    }
   }
 }
