@@ -710,7 +710,7 @@ object Tsdb {
     * integer-valued double; values here are far below 2^53 so the long
     * round-trip is exact).
     */
-  @inline private def rd4d(x: Double): Double =
+  @inline private[graft] def rd4d(x: Double): Double =
     math.floor(x * 10000.0 + 0.5) / 10000.0
 
   /** Hard per-series ceiling for [[foldSeries]]'s in-task array: 32M
@@ -1273,14 +1273,21 @@ object Tsdb {
     }
   }
 
+  /** One step of the one-sided CUSUM: the clamped sum after `x`, from the
+    * previous clamped sum `c` (0.0 before a series' first point). [[cusum]]
+    * and StreamingTracker.cusumStream both fold through it, so the live
+    * and batch values are the same IEEE op sequence.
+    */
+  private[graft] def cusumStep(c: Double, x: Double, target: Double): Double =
+    math.max(0.0, c + x - target)
+
   def cusum(pts1: DataFrame, target: Double, h: Double): DataFrame =
     foldSeries[CusumRow](pts1) { (f1, v) =>
       val out = new Array[CusumRow](v.length)
-      var acc = v(0).total - target
+      var cs = 0.0
       var i = 0
       while (i < v.length) {
-        if (i > 0) acc = math.max(0.0, acc) + v(i).total - target
-        val cs = math.max(0.0, acc)
+        cs = cusumStep(cs, v(i).total, target)
         out(i) = CusumRow(f1, v(i).bucket, rd4d(cs), cs > h)
         i += 1
       }
@@ -1447,41 +1454,43 @@ object Tsdb {
     * standard cold start; later cycles wash it out at these smoothing
     * rates). The recurrence is inherently sequential PER SERIES, so —
     * like the Brown operators — it runs as ONE O(n) in-order fold per
-    * series ([[foldSeries]]) with (level, trend, seasonal[m]) carried as
-    * locals; series are independent, so the corpus-wide shape is one
+    * series ([[foldSeries]]) with (level, trend, seasonal[m]) carried in
+    * one [[HwFold]]; series are independent, so the corpus-wide shape is one
     * shuffle and per-task linear work, no windows. Double arithmetic is
     * a left-to-right fold of plain IEEE ops over identically-ordered
     * inputs on both engines, so results are bit-identical without grid
     * snapping (the hwCtes oracle replays the same fold).
     */
   def holtWinters(pts1: DataFrame, alpha: Double, beta: Double,
-      gamma: Double, m: Int): DataFrame = {
-    val a = alpha; val b = beta; val g = gamma
-    val omA = 1.0 - alpha; val omB = 1.0 - beta; val omG = 1.0 - gamma
+      gamma: Double, m: Int): DataFrame =
     foldSeries[HwRow](pts1) { (f1, v) =>
-      val n = v.length
-      val out = new Array[HwRow](n)
-      // cold start: level = first point, trend = 0, seasonal = zeros;
-      // forecast at position 0 is the identity (the first point itself)
-      out(0) = HwRow(f1, v(0).bucket, v(0).total, rd4d(v(0).total))
-      var lvl = v(0).total
-      var tr = 0.0
-      val se = new Array[Double](m)
-      var idx = 1 // acc.i: seasonal slot of the NEXT point is i % m
-      var i = 1
-      while (i < n) {
-        val x = v(i).total
-        val s = idx % m
-        val fc = lvl + tr + se(s)
-        val lvl2 = a * (x - se(s)) + omA * (lvl + tr)
-        val tr2 = b * (lvl2 - lvl) + omB * tr
-        se(s) = g * (x - lvl2) + omG * se(s)
-        lvl = lvl2; tr = tr2; idx += 1
-        out(i) = HwRow(f1, v(i).bucket, x, rd4d(fc))
-        i += 1
-      }
-      out.iterator
+      val hw = new HwFold(alpha, beta, gamma, 0L, 0.0, 0.0, new Array[Double](m))
+      v.iterator.map(p => HwRow(f1, p.bucket, p.total, rd4d(hw.step(p.total))))
     }
+
+  /** Additive Holt-Winters state — points seen, level, trend and the m
+    * seasonal slots — and its one-point step: the fold [[holtWinters]] and
+    * StreamingTracker.holtWintersStream share.
+    */
+  private[graft] final class HwFold(alpha: Double, beta: Double, gamma: Double,
+      var i: Long, var lvl: Double, var tr: Double, val se: Array[Double]) {
+
+    /** Folds `x` in and returns the one-step-ahead forecast made for it.
+      * Cold start: level = the first point, trend = 0, seasonal = zeros,
+      * and the first point's forecast is the point itself.
+      */
+    def step(x: Double): Double =
+      if (i == 0L) { lvl = x; i = 1L; x }
+      else {
+        val s = (i % se.length).toInt
+        val fc = lvl + tr + se(s)
+        val lvl2 = alpha * (x - se(s)) + (1.0 - alpha) * (lvl + tr)
+        tr = beta * (lvl2 - lvl) + (1.0 - beta) * tr
+        se(s) = gamma * (x - lvl2) + (1.0 - gamma) * se(s)
+        lvl = lvl2
+        i += 1L
+        fc
+      }
   }
 
   /** Walk-forward evaluation of [[holtWinters]]: per-series MAE/MAPE of

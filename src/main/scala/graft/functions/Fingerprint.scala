@@ -1,20 +1,14 @@
 package graft.functions
 
-import java.security.MessageDigest
-
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.graft.SqlBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expression for the rolling document-fingerprint fold
-  * ([[graft.operators.TextAnalysis.fingerprint]]).
-  *
-  * The builtin formulation was the last interpreted higher-order-function
-  * kernel in the text family (the r15 verdict's "not yet" list):
+  * ([[graft.operators.TextAnalysis.fingerprint]]), in one compiled pass
+  * per row. The builtin formulation it replaces is
   *
   *   aggregate(
   *     transform(split(text, '\\s+'),
@@ -22,40 +16,27 @@ import org.apache.spark.unsafe.types.UTF8String
   *                    % 1000003),
   *     0L, (acc, x) -> (acc * 31 + x) % 2147483647)
   *
-  * `transform`/`aggregate` lambdas run INTERPRETED (~1µs/element, no
-  * codegen), and the chain additionally materializes the split token
-  * array plus a transformed copy per row. Unlike the SimHash/Shingles
-  * folds this one is ORDER- and MULTIPLICITY-sensitive (a sequential
-  * hash chain), so neither of those expressions drops in — it needs its
-  * own single compiled pass (optimization guide §4).
+  * whose `transform`/`aggregate` lambdas run INTERPRETED (~1µs/element,
+  * no codegen) over a materialized token array plus a transformed copy
+  * per row. Unlike the SimHash/Shingles folds this one is ORDER- and
+  * MULTIPLICITY-sensitive (a sequential hash chain).
   *
   * Semantics replicated exactly (pinned by FingerprintSpec against the
   * original expression tree on the real corpus + boundary cases):
-  *  - `split(text, '\\s+')` is Java-regex split with limit -1: tokens in
-  *    document order; an empty part leads when the text is empty or
-  *    starts with whitespace, and TRAILS when it ends with whitespace
-  *    (both can occur — " " yields ["", ""]). Every part, empty included,
-  *    contributes one fold step, in order, with multiplicity.
-  *  - the per-token value is the first 15 hex digits of md5(token) (the
-  *    Hashing.h60 contract) reduced mod 1000003.
+  *  - every [[TokenWalk]] part, boundary empties included (" " yields
+  *    two), contributes one fold step, in document order, with
+  *    multiplicity;
+  *  - the per-token value is [[Hashing.h60]] of the token reduced mod
+  *    1000003;
   *  - the fold is exact long arithmetic: acc = (acc*31 + x) % 2147483647,
   *    every operand non-negative and far below overflow.
   */
-case class FingerprintExpr(child: Expression) extends UnaryExpression {
+case class FingerprintExpr(child: Expression)
+    extends TextKernelExpr("doc_fingerprint", "FingerprintHelper") {
 
   override def dataType: DataType = LongType
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"doc_fingerprint expects a STRING child, got ${child.dataType.sql}")
-
-  override protected def nullSafeEval(input: Any): Any =
-    FingerprintHelper.compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.FingerprintHelper.compute($c);")
+  override protected def compute(s: UTF8String): Any = FingerprintHelper.compute(s)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -70,52 +51,13 @@ object FingerprintExpr {
 /** The single-pass ordered fold, Java-callable from generated code. */
 object FingerprintHelper {
 
-  private val md5 = new ThreadLocal[MessageDigest] {
-    override def initialValue(): MessageDigest = MessageDigest.getInstance("MD5")
-  }
-
-  private def isWs(b: Byte): Boolean =
-    b == ' ' || b == '\t' || b == '\n' || b == 11 || b == '\f' || b == '\r'
-
-  /** h60(token bytes) % 1000003 — md5 first 15 hex digits = digest bytes
-    * 0..6 plus the high nibble of byte 7 (the Hashing.h60jvm contract).
-    */
-  private def tokenValue(digest: MessageDigest, bytes: Array[Byte],
-      start: Int, len: Int): Long = {
-    digest.reset()
-    digest.update(bytes, start, len)
-    val d = digest.digest()
-    var h = 0L
-    var k = 0
-    while (k < 7) { h = (h << 8) | (d(k) & 0xFFL); k += 1 }
-    h = (h << 4) | ((d(7) >> 4) & 0xFL)
-    h % 1000003L
-  }
-
-  def compute(s: UTF8String): Long = {
-    val bytes = s.getBytes
-    val n = bytes.length
-    val digest = md5.get()
+  private final class Fold(text: Array[Byte]) extends TokenWalk(text) {
     var acc = 0L
-    def step(start: Int, endExcl: Int): Unit = {
-      acc = (acc * 31L + tokenValue(digest, bytes, start, endExcl - start)) %
+    private val digest = Hashing.md5Digest()
+    protected def token(start: Int, end: Int): Unit =
+      acc = (acc * 31L + Hashing.h60(digest, bytes, start, end - start) % 1000003L) %
         2147483647L
-    }
-    // Java split(regex, -1) emits a LEADING empty part when the text is
-    // empty or starts with a separator...
-    if (n == 0 || isWs(bytes(0))) step(0, 0)
-    var i = 0
-    while (i < n) {
-      if (!isWs(bytes(i))) {
-        val start = i
-        while (i < n && !isWs(bytes(i))) i += 1
-        step(start, i)
-      } else i += 1
-    }
-    // ...and a TRAILING empty part when it ends with one (limit -1 keeps
-    // trailing empties; both boundary empties occur for all-whitespace
-    // text).
-    if (n > 0 && isWs(bytes(n - 1))) step(0, 0)
-    acc
   }
+
+  def compute(s: UTF8String): Long = new Fold(s.getBytes).walk().acc
 }

@@ -46,12 +46,33 @@ object Hashing {
     */
   def rd6(c: Column): Column = floor(c * 1000000.0 + 0.5) / 1000000.0
 
+  private val digests = new ThreadLocal[MessageDigest] {
+    override def initialValue(): MessageDigest = MessageDigest.getInstance("MD5")
+  }
+
+  /** This thread's md5 digest, for [[h60]]; a kernel fetches it once per row. */
+  private[functions] def md5Digest(): MessageDigest = digests.get()
+
+  /** h60 of `len` bytes from `start`: the first 15 hex digits of their
+    * md5 are digest bytes 0..6 plus the high nibble of byte 7. The
+    * driver-side [[h60jvm]] and the text kernels both hash through here.
+    */
+  private[functions] def h60(digest: MessageDigest, bytes: Array[Byte], start: Int,
+      len: Int): Long = {
+    digest.reset()
+    digest.update(bytes, start, len)
+    val d = digest.digest()
+    var h = 0L
+    var k = 0
+    while (k < 7) { h = (h << 8) | (d(k) & 0xFFL); k += 1 }
+    (h << 4) | ((d(7) >> 4) & 0xFL)
+  }
+
   /** Same hash computed driver-side (for deriving small constant tables
     * like LSH hyperplanes that are then broadcast as literals).
     */
   def h60jvm(s: String): Long = {
-    val d = MessageDigest.getInstance("MD5").digest(s.getBytes(StandardCharsets.UTF_8))
-    val hex = d.map(b => f"$b%02x").mkString
-    java.lang.Long.parseLong(hex.substring(0, 15), 16)
+    val b = s.getBytes(StandardCharsets.UTF_8)
+    h60(md5Digest(), b, 0, b.length)
   }
 }

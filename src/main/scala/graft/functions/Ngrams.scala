@@ -1,9 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graft.SqlBridge
 import org.apache.spark.sql.types._
@@ -16,27 +14,20 @@ import org.apache.spark.unsafe.types.UTF8String
   * lambda (plus `array_distinct` when `distinct`).
   *
   * Exact-equality contract (pinned by NgramsSpec against the legacy
-  * builtin chain): Java split(limit -1) boundary tokens participate,
-  * grams are the n consecutive tokens joined by one space, order is
-  * positional (or first-occurrence when `distinct`), and docs with
-  * fewer than n tokens yield an empty array.
+  * builtin chain): the tokens are the [[TokenWalk]] parts, boundary
+  * empties included, grams are the n consecutive tokens joined by one
+  * space, order is positional (or first-occurrence when `distinct`), and
+  * docs with fewer than n tokens yield an empty array.
   */
 case class NgramsExpr(child: Expression, n: Int, distinct: Boolean)
-    extends UnaryExpression {
+    extends TextKernelExpr("ngrams", "NgramsHelper") {
+  require(n >= 1, s"ngrams needs n >= 1, got $n")
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType && n >= 1) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"ngrams expects a STRING child and n >= 1, got ${child.dataType.sql}, n=$n")
+  override protected def args: Seq[Any] = Seq(n, distinct)
 
-  override protected def nullSafeEval(input: Any): Any =
-    NgramsHelper.compute(input.asInstanceOf[UTF8String], n, distinct)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.NgramsHelper.compute($c, $n, $distinct);")
+  override protected def compute(s: UTF8String): Any = NgramsHelper.compute(s, n, distinct)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -51,32 +42,14 @@ object NgramsExpr {
 object NgramsHelper {
 
   def compute(s: UTF8String, n: Int, distinct: Boolean): ArrayData = {
-    val bytes = s.getBytes
-    // token offsets in unboxed int[] buffers (r15 ADVICE: the previous
-    // ArrayList<Integer> boxed two Integers per token in this hot path)
-    val tok = new TokenOffsets().scan(bytes)
-    val starts = tok.starts
-    val ends = tok.ends
+    val tok = new TokenOffsets(s.getBytes).walk()
     val t = tok.count
     if (t < n) return new GenericArrayData(Array.empty[Any])
     val seen = if (distinct) new java.util.HashSet[UTF8String]() else null
     val out = new java.util.ArrayList[AnyRef](t - n + 1)
     var g = 0
     while (g <= t - n) {
-      var glen = n - 1
-      var j = 0
-      while (j < n) { glen += ends(g + j) - starts(g + j); j += 1 }
-      val gram = new Array[Byte](glen)
-      var p = 0
-      j = 0
-      while (j < n) {
-        if (j > 0) { gram(p) = ' '; p += 1 }
-        val st = starts(g + j); val en = ends(g + j)
-        System.arraycopy(bytes, st, gram, p, en - st)
-        p += en - st
-        j += 1
-      }
-      val u = UTF8String.fromBytes(gram)
+      val u = UTF8String.fromBytes(tok.join(g, n))
       if (seen == null || seen.add(u)) out.add(u)
       g += 1
     }

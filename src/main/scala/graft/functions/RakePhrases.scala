@@ -3,9 +3,7 @@ package graft.functions
 import java.nio.charset.StandardCharsets
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graft.SqlBridge
 import org.apache.spark.sql.types._
@@ -16,8 +14,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * order — one compiled byte scan.
   *
   * Replaces the interpreted chain in
-  * [[graft.operators.TextAnalysis.rakeKeyphrases]] (r15 verdict item 5:
-  * the last interpreted lambdas on the rake path):
+  * [[graft.operators.TextAnalysis.rakeKeyphrases]]:
   *
   *   flag   = transform(tk, t -> array_contains(stops, t))        // HOF
   *   starts = filter(sequence(1, size(tk)), i -> ...)             // HOF
@@ -28,7 +25,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * chain materializes the token array plus three derived arrays per row.
   *
   * Exact-equality contract (pinned by RakePhrasesSpec against the legacy
-  * expression tree): tokens are Java `split("\\s+", -1)` parts (boundary
+  * expression tree): tokens are the [[TokenWalk]] parts (boundary
   * empties included — the empty token is in the stop set, so it only ever
   * acts as a run boundary), the stop set is the fixed RAKE list
   * ('the','a','of','and','to','in','is',''), a phrase is a maximal run of
@@ -36,21 +33,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * positional order with multiplicity. Docs with no non-stop token yield
   * an empty array.
   */
-case class RakePhrasesExpr(child: Expression) extends UnaryExpression {
+case class RakePhrasesExpr(child: Expression)
+    extends TextKernelExpr("rake_phrases", "RakePhrasesHelper") {
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"rake_phrases expects a STRING child, got ${child.dataType.sql}")
-
-  override protected def nullSafeEval(input: Any): Any =
-    RakePhrasesHelper.compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.RakePhrasesHelper.compute($c);")
+  override protected def compute(s: UTF8String): Any = RakePhrasesHelper.compute(s)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -88,65 +76,28 @@ object RakePhrasesHelper {
     false
   }
 
-  def compute(s: UTF8String): ArrayData = {
-    val bytes = s.getBytes
-    val n = bytes.length
+  /** The offsets of the current run of non-stop tokens; a stop token
+    * (boundary empties included) flushes the run as one phrase.
+    */
+  private final class Phrases(text: Array[Byte]) extends TokenOffsets(text) {
     val out = new java.util.ArrayList[AnyRef](4)
-    // current run's token offsets (unboxed growable buffers)
-    var runStarts = new Array[Int](8)
-    var runEnds = new Array[Int](8)
-    var runLen = 0
-    var runBytes = 0
 
-    def flush(): Unit = {
-      if (runLen > 0) {
-        if (runLen == 1) {
-          // single-token phrase: zero-copy slice of the backing array
-          out.add(UTF8String.fromBytes(bytes, runStarts(0), runEnds(0) - runStarts(0)))
-        } else {
-          val phrase = new Array[Byte](runBytes + runLen - 1)
-          var p = 0
-          var j = 0
-          while (j < runLen) {
-            if (j > 0) { phrase(p) = ' '; p += 1 }
-            val st = runStarts(j); val en = runEnds(j)
-            System.arraycopy(bytes, st, phrase, p, en - st)
-            p += en - st
-            j += 1
-          }
-          out.add(UTF8String.fromBytes(phrase))
-        }
-        runLen = 0
-        runBytes = 0
+    override protected def token(start: Int, end: Int): Unit =
+      if (isStop(bytes, start, end - start)) flush() else super.token(start, end)
+
+    def flush(): Unit =
+      if (count > 0) {
+        // a single-token phrase is a zero-copy slice of the backing array
+        out.add(
+          if (count == 1) UTF8String.fromBytes(bytes, starts(0), ends(0) - starts(0))
+          else UTF8String.fromBytes(join(0, count)))
+        count = 0
       }
-    }
+  }
 
-    def token(start: Int, endExcl: Int): Unit = {
-      if (isStop(bytes, start, endExcl - start)) flush()
-      else {
-        if (runLen == runStarts.length) {
-          runStarts = java.util.Arrays.copyOf(runStarts, runLen * 2)
-          runEnds = java.util.Arrays.copyOf(runEnds, runLen * 2)
-        }
-        runStarts(runLen) = start
-        runEnds(runLen) = endExcl
-        runLen += 1
-        runBytes += endExcl - start
-      }
-    }
-
-    // Java split(regex, -1) boundary semantics: boundary empties are stop
-    // tokens, so they only flush (a leading/trailing empty never starts a
-    // phrase) — the walk below visits real tokens in document order.
-    var i = 0
-    while (i < n) {
-      if (!TokenOffsets.isWs(bytes(i))) {
-        val start = i
-        while (i < n && !TokenOffsets.isWs(bytes(i))) i += 1
-        token(start, i)
-      } else i += 1
-    }
-    flush()
-    new GenericArrayData(out.toArray)
+  def compute(s: UTF8String): ArrayData = {
+    val p = new Phrases(s.getBytes).walk()
+    p.flush()
+    new GenericArrayData(p.out.toArray)
   }
 }

@@ -1,31 +1,20 @@
 package graft.functions
 
-import java.security.MessageDigest
-
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.graft.SqlBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expression for the per-document n-gram shingle pass.
+/** Native Catalyst expression for the per-document n-gram shingle pass
+  * ([[graft.operators.Dedup.shingles]]), in one compiled pass per row.
+  * The builtin chain it replaces runs a regex `split` plus an interpreted
+  * `transform` lambda that allocates a `slice` array and an `array_join`
+  * string per token position, an `array_distinct` over the n-gram
+  * strings, and one md5 per exploded row.
   *
-  * The builtin formulation ([[graft.operators.Dedup.shingles]] before
-  * round 15) ran, per document, a regex `split` plus an INTERPRETED
-  * `transform` lambda whose body allocated a `slice` array and an
-  * `array_join` string per token position, an `array_distinct` over the
-  * n-gram strings, and one md5 per exploded row — the tokenize cost every
-  * shingle consumer (Jaccard, containment, contamination, MinHash
-  * sketches, novelty) pays once per shared-view build. Higher-order
-  * lambdas have no codegen (~1µs per element), so the per-token
-  * interpreted dispatch dominated the build.
-  *
-  * This expression computes, in one compiled pass per row,
-  * BIT-IDENTICALLY to the legacy chain (pinned by ShinglesSpec):
+  * BIT-IDENTICAL to the legacy chain (pinned by ShinglesSpec):
   *
   *   transform(array_distinct(
   *     CASE WHEN size(tk) >= n
@@ -36,32 +25,23 @@ import org.apache.spark.unsafe.types.UTF8String
   *   where tk = split(text, '\\s+')
   *
   * Semantics replicated exactly:
-  *  - Java split(limit -1) boundary tokens: an EMPTY token leads when
-  *    the text starts with [ \t\n\x0B\f\r] whitespace and trails when it
-  *    ends with it ("" yields one empty token) — boundary empties
+  *  - the tokens are the [[TokenWalk]] parts; boundary empties
   *    PARTICIPATE in n-grams, e.g. " a b" 3-shingles to " a b" (empty +
-  *    'a' + 'b' joined by spaces), exactly as array_join did.
+  *    'a' + 'b' joined by spaces), exactly as array_join did;
   *  - distinctness is on the n-gram STRING value in first-occurrence
   *    order (so an h60 collision between two distinct n-grams still
-  *    yields two array entries, as the legacy explode did).
-  *  - the emitted long is Hashing.h60 of the n-gram: the first 15 hex
-  *    digits of its md5, read straight from the digest bytes.
+  *    yields two array entries, as the legacy explode did);
+  *  - the emitted long is [[Hashing.h60]] of the n-gram.
   */
-case class ShinglesExpr(child: Expression, n: Int) extends UnaryExpression {
+case class ShinglesExpr(child: Expression, n: Int)
+    extends TextKernelExpr("shingle_hashes", "ShinglesHelper") {
+  require(n >= 1, s"shingle_hashes needs n >= 1, got $n")
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType && n >= 1) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"shingle_hashes expects a STRING child and n >= 1, got ${child.dataType.sql}, n=$n")
+  override protected def args: Seq[Any] = Seq(n)
 
-  override protected def nullSafeEval(input: Any): Any =
-    ShinglesHelper.compute(input.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.ShinglesHelper.compute($c, $n);")
+  override protected def compute(s: UTF8String): Any = ShinglesHelper.compute(s, n)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -76,50 +56,19 @@ object ShinglesExpr {
 /** The single-pass scan, Java-callable from generated code. */
 object ShinglesHelper {
 
-  private val md5 = new ThreadLocal[MessageDigest] {
-    override def initialValue(): MessageDigest = MessageDigest.getInstance("MD5")
-  }
-
   def compute(s: UTF8String, n: Int): ArrayData = {
-    val bytes = s.getBytes
-    // token byte ranges, Java split(regex, -1) semantics: boundary
-    // separator runs contribute EMPTY tokens ("" -> one empty token).
-    // Offsets live in unboxed int[] buffers (r15 ADVICE: the previous
-    // ArrayList<Integer> boxed two Integers per token in this hot path).
-    val tok = new TokenOffsets().scan(bytes)
-    val starts = tok.starts
-    val ends = tok.ends
+    val tok = new TokenOffsets(s.getBytes).walk()
     val t = tok.count
     if (t < n) return UnsafeArrayData.fromPrimitiveArray(Array.emptyLongArray)
-
     val seen = new java.util.HashSet[UTF8String]()
     val out = new Array[Long](t - n + 1)
     var nOut = 0
-    val digest = md5.get()
+    val digest = Hashing.md5Digest()
     var g = 0
     while (g <= t - n) {
-      // compose tok_g .. tok_{g+n-1} joined by ' ' (array_join semantics)
-      var glen = n - 1
-      var j = 0
-      while (j < n) { glen += ends(g + j) - starts(g + j); j += 1 }
-      val gram = new Array[Byte](glen)
-      var p = 0
-      j = 0
-      while (j < n) {
-        if (j > 0) { gram(p) = ' '; p += 1 }
-        val st = starts(g + j); val en = ends(g + j)
-        System.arraycopy(bytes, st, gram, p, en - st)
-        p += en - st
-        j += 1
-      }
+      val gram = tok.join(g, n)
       if (seen.add(UTF8String.fromBytes(gram))) {
-        digest.reset()
-        val d = digest.digest(gram)
-        var h = 0L
-        var k = 0
-        while (k < 7) { h = (h << 8) | (d(k) & 0xFFL); k += 1 }
-        h = (h << 4) | ((d(7) >> 4) & 0xFL)
-        out(nOut) = h
+        out(nOut) = Hashing.h60(digest, gram, 0, gram.length)
         nOut += 1
       }
       g += 1

@@ -1,31 +1,20 @@
 package graft.functions
 
-import java.security.MessageDigest
-
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.graft.SqlBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expression for the 60-bit SimHash fingerprint fold.
+/** Native Catalyst expression for the 60-bit SimHash fingerprint fold
+  * ([[graft.operators.Dedup.simhashFingerprints]]), in one compiled pass
+  * per row. The builtin formulation evaluates, per DISTINCT token, a
+  * `zip_with` lambda over a 60-element accumulator array — interpreted
+  * (~1µs per element, no codegen), so every token pays ~60 closure
+  * dispatches plus two 60-element array allocations.
   *
-  * The builtin formulation ([[graft.operators.Dedup.simhashFingerprints]]
-  * before round 15) evaluated, per DISTINCT token, a `zip_with` lambda
-  * over a 60-element accumulator array — higher-order-function lambdas
-  * run INTERPRETED (~1µs per element, no codegen), so every token paid
-  * ~60 interpreted closure dispatches plus two 60-element array
-  * allocations: the whole-corpus fingerprint pass profiled at 6-8 s on
-  * sf0.1's ~50 MB of text while shuffling nothing (ProfileQ: 326 tasks,
-  * 2 MB shuffle — all the time was this fold). The optimization-guide §4
-  * rule ("eliminate non-codegen expressions in the hot path") and the
-  * round-12 TextStats precedent both say: ONE native expression.
-  *
-  * This expression computes, in a single compiled pass per row,
-  * BIT-IDENTICALLY to the legacy builtin formula (pinned by
-  * SimhashFpSpec against the original expression tree):
+  * BIT-IDENTICAL to the legacy builtin formula (pinned by SimhashFpSpec
+  * against the original expression tree):
   *
   *   aggregate(
   *     transform(array_distinct(split(text, '\\s+')),
@@ -36,34 +25,19 @@ import org.apache.spark.unsafe.types.UTF8String
   *     acc -> SUM over i of IF(acc[i] > 0, 2^i, 0))
   *
   * Semantics replicated exactly:
-  *  - `split(text, '\\s+')` is Java-regex split with limit -1: tokens
-  *    are maximal runs of non-[ \t\n\x0B\f\r] bytes; an EMPTY part
-  *    appears when the text is empty, starts with whitespace, or ends
-  *    with whitespace (leading/trailing separator runs) — after
-  *    array_distinct the empty token contributes at most once, so the
-  *    scan below folds all three cases into one `sawEmpty` flag.
-  *  - distinctness is on token VALUE (byte equality), not on the hash.
-  *  - the 60-bit hash is the first 15 hex digits of md5(token) — the
-  *    Hashing.h60 contract (DuckDB twin: ('0x' || substr(md5(x),1,15))
-  *    ::UBIGINT), read here straight from the digest bytes.
+  *  - the tokens are the [[TokenWalk]] parts; distinctness is on token
+  *    VALUE (byte equality), not on the hash, so the two boundary empties
+  *    of " x " vote once, as after array_distinct;
+  *  - the 60-bit hash is [[Hashing.h60]] of the token;
   *  - bit i of the fingerprint is set iff the ±1 vote sum over distinct
   *    tokens is strictly positive.
   */
-case class SimhashFpExpr(child: Expression) extends UnaryExpression {
+case class SimhashFpExpr(child: Expression)
+    extends TextKernelExpr("simhash_fp", "SimhashFpHelper") {
 
   override def dataType: DataType = LongType
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"simhash_fp expects a STRING child, got ${child.dataType.sql}")
-
-  override protected def nullSafeEval(input: Any): Any =
-    SimhashFpHelper.compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.SimhashFpHelper.compute($c);")
+  override protected def compute(s: UTF8String): Any = SimhashFpHelper.compute(s)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -80,55 +54,24 @@ object SimhashFpHelper {
 
   val Bits = 60
 
-  private val md5 = new ThreadLocal[MessageDigest] {
-    override def initialValue(): MessageDigest = MessageDigest.getInstance("MD5")
-  }
-
-  private def isWs(b: Byte): Boolean =
-    b == ' ' || b == '\t' || b == '\n' || b == 11 || b == '\f' || b == '\r'
-
-  def compute(s: UTF8String): Long = {
-    val bytes = s.getBytes
-    val n = bytes.length
+  private final class Votes(text: Array[Byte]) extends TokenWalk(text) {
     val acc = new Array[Int](Bits)
-    // distinct-by-value gate over token byte slices
-    val seen = new java.util.HashSet[UTF8String]()
-    val digest = md5.get()
+    private val seen = new java.util.HashSet[UTF8String]()
+    private val digest = Hashing.md5Digest()
 
-    def vote(start: Int, endExcl: Int): Unit = {
-      val len = endExcl - start
-      if (seen.add(UTF8String.fromBytes(bytes, start, len))) {
-        digest.reset()
-        digest.update(bytes, start, len)
-        val d = digest.digest()
-        // first 15 hex digits of the md5 = bytes 0..6 plus the high
-        // nibble of byte 7 (the Hashing.h60 / h60jvm contract)
-        var h = 0L
-        var k = 0
-        while (k < 7) { h = (h << 8) | (d(k) & 0xFFL); k += 1 }
-        h = (h << 4) | ((d(7) >> 4) & 0xFL)
+    protected def token(start: Int, end: Int): Unit =
+      if (seen.add(UTF8String.fromBytes(bytes, start, end - start))) {
+        val h = Hashing.h60(digest, bytes, start, end - start)
         var i = 0
         while (i < Bits) {
           acc(i) += (if (((h >>> i) & 1L) == 1L) 1 else -1)
           i += 1
         }
       }
-    }
+  }
 
-    // Java split(regex, -1) boundary semantics: an empty part exists iff
-    // the text is empty OR begins with a separator OR ends with one;
-    // array_distinct collapses them to one empty-token vote.
-    val sawEmpty = n == 0 || isWs(bytes(0)) || isWs(bytes(n - 1))
-    if (sawEmpty) vote(0, 0)
-    var i = 0
-    while (i < n) {
-      if (!isWs(bytes(i))) {
-        val start = i
-        while (i < n && !isWs(bytes(i))) i += 1
-        vote(start, i)
-      } else i += 1
-    }
-
+  def compute(s: UTF8String): Long = {
+    val acc = new Votes(s.getBytes).walk().acc
     var fp = 0L
     var b = 0
     while (b < Bits) {

@@ -2,10 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.graft.SqlBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -21,14 +18,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * paid 2-4 split()+lambda evaluations per row even after manual
   * projection-level CSE.
   *
-  * TextStats replaces all of it with ONE pass over the UTF-8 bytes — no
-  * regex, no token array, no lambda dispatch — returning a struct of
+  * TextStats replaces all of it with ONE [[TokenWalk]] over the UTF-8
+  * bytes — no regex, no token array, no lambda dispatch — and a scan of
+  * each token's bytes as the walk hands it over, returning a struct of
   * counters that are BIT-IDENTICAL to the builtin formulas they replace
   * (pinned by TextStatsSpec against the legacy expressions):
   *
-  *  - `n_tokens`      = size(split(text, '\\s+'))              (Java split
-  *    semantics, limit -1: leading/trailing separator runs produce empty
-  *    parts, the empty string yields one empty part)
+  *  - `n_tokens`      = size(split(text, '\\s+'))              (the
+  *    walk's part count, boundary empties included: separator runs + 1)
   *  - `sum_tok_chars` = aggregate(tk, 0L, (a,x) -> a + length(x))
   *  - `n_alpha`       = size(filter(tk, x -> x rlike '[a-z]'))
   *  - `n_stops`       = size(filter(tk, x -> x IN ('the','a','of','and',
@@ -38,28 +35,17 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - `c_the/c_der/c_el/c_le` = size(filter(tk, x -> x = '<marker>')) —
   *    the lang-id marker votes.
   *
-  * `\s` here is Java-regex ASCII whitespace ([ \t\n\x0B\f\r]) — the same
+  * `\s` here is the walk's Java-regex ASCII whitespace — the same
   * class `split(text, '\\s+')` used, so non-ASCII spaces are token chars
   * (and symbols), exactly as before. DuckDB oracle twins keep using the
   * regex formulas; equality holds because the counters are integers.
   */
-case class TextStatsExpr(child: Expression) extends UnaryExpression {
+case class TextStatsExpr(child: Expression)
+    extends TextKernelExpr("text_stats", "TextStatsHelper") {
 
   override def dataType: DataType = TextStatsExpr.schema
 
-  // Fail at analysis rather than a runtime ClassCastException in
-  // compute() when handed a non-string child.
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"text_stats expects a STRING child, got ${child.dataType.sql}")
-
-  override protected def nullSafeEval(input: Any): Any =
-    TextStatsHelper.compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextStatsHelper.compute($c);")
+  override protected def compute(s: UTF8String): Any = TextStatsHelper.compute(s)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -83,45 +69,40 @@ object TextStatsExpr {
 }
 
 /** The single-pass scan, Java-callable from generated code (static
-  * forwarder). Iterates raw UTF-8 bytes: ASCII classes ([a-z], [0-9],
-  * Java-\s) are single-byte tests; multi-byte codepoints are counted at
-  * their lead byte ((b & 0xC0) != 0x80) so char counts match
+  * forwarder). Reads the row's UTF-8 bytes: ASCII classes
+  * ([a-z], [0-9]) are single-byte tests; multi-byte codepoints are
+  * counted at their lead byte ((b & 0xC0) != 0x80) so char counts match
   * UTF8String.numChars and per-codepoint regex match counts.
   */
 object TextStatsHelper {
 
-  def compute(s: UTF8String): InternalRow = {
-    val n = s.numBytes
-    var i = 0
-    var sepRuns = 0L
-    var inWs = false
-    var sumLen = 0L
-    var nAlpha = 0L
-    var nStops = 0L
-    var nSym = 0L
-    var cThe = 0L
-    var cDer = 0L
-    var cEl = 0L
-    var cLe = 0L
-    // current-token state
-    var tokStart = 0
-    var tokChars = 0L
-    var tokHasAlpha = false
-    var inTok = false
+  private final class Counts(text: Array[Byte]) extends TokenWalk(text) {
+    var nTokens, sumLen, nAlpha, nStops, nSym, cThe, cDer, cEl, cLe = 0L
 
-    // token-end bookkeeping: length/alpha tallies plus the tiny
-    // fixed-width stop/marker table (all stop + marker words are ≤ 3
-    // ASCII bytes, so a byteLen switch + direct byte compares suffice)
-    def endToken(endExcl: Int): Unit = {
-      sumLen += tokChars
-      if (tokHasAlpha) nAlpha += 1
-      val len = endExcl - tokStart
+    // every non-separator byte lies in a token, so the per-token scan
+    // also covers n_symbol; the stop/marker words are all ≤ 3 ASCII
+    // bytes, so a byte-length switch + direct byte compares suffice
+    protected def token(start: Int, end: Int): Unit = {
+      nTokens += 1
+      var hasAlpha = false
+      var i = start
+      while (i < end) {
+        val b = bytes(i)
+        if ((b & 0xC0) != 0x80) { // non-continuation: one codepoint
+          sumLen += 1
+          if (b >= 'a' && b <= 'z') hasAlpha = true
+          else if (!(b >= '0' && b <= '9')) nSym += 1
+        }
+        i += 1
+      }
+      if (hasAlpha) nAlpha += 1
+      val len = end - start
       if (len >= 1 && len <= 3) {
-        val b0 = s.getByte(tokStart)
+        val b0 = bytes(start)
         if (len == 1) {
           if (b0 == 'a') nStops += 1
         } else {
-          val b1 = s.getByte(tokStart + 1)
+          val b1 = bytes(start + 1)
           if (len == 2) {
             if (b0 == 'o' && b1 == 'f') nStops += 1
             else if (b0 == 't' && b1 == 'o') nStops += 1
@@ -129,42 +110,19 @@ object TextStatsHelper {
             else if (b0 == 'e' && b1 == 'l') cEl += 1
             else if (b0 == 'l' && b1 == 'e') cLe += 1
           } else {
-            val b2 = s.getByte(tokStart + 2)
+            val b2 = bytes(start + 2)
             if (b0 == 't' && b1 == 'h' && b2 == 'e') { nStops += 1; cThe += 1 }
             else if (b0 == 'a' && b1 == 'n' && b2 == 'd') nStops += 1
             else if (b0 == 'd' && b1 == 'e' && b2 == 'r') cDer += 1
           }
         }
       }
-      inTok = false
-      tokChars = 0L
-      tokHasAlpha = false
     }
+  }
 
-    while (i < n) {
-      val b = s.getByte(i)
-      val isWs = b == ' ' || b == '\t' || b == '\n' || b == 11 || b == '\f' || b == '\r'
-      if (isWs) {
-        if (inTok) endToken(i)
-        if (!inWs) sepRuns += 1
-        inWs = true
-      } else {
-        if (!inTok) { inTok = true; tokStart = i }
-        inWs = false
-        if ((b & 0xC0) != 0x80) { // non-continuation: one codepoint
-          tokChars += 1
-          val isLower = b >= 'a' && b <= 'z'
-          if (isLower) tokHasAlpha = true
-          else if (!(b >= '0' && b <= '9')) nSym += 1
-        }
-      }
-      i += 1
-    }
-    if (inTok) endToken(n)
-    // Java split(limit=-1): parts = separator runs + 1 (leading/trailing
-    // runs contribute empty parts; "" -> [""]).
-    val nTokens = sepRuns + 1L
+  def compute(s: UTF8String): InternalRow = {
+    val c = new Counts(s.getBytes).walk()
     new GenericInternalRow(Array[Any](
-      nTokens, sumLen, nAlpha, nStops, nSym, cThe, cDer, cEl, cLe))
+      c.nTokens, c.sumLen, c.nAlpha, c.nStops, c.nSym, c.cThe, c.cDer, c.cEl, c.cLe))
   }
 }

@@ -1,9 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graft.SqlBridge
 import org.apache.spark.sql.types._
@@ -21,28 +19,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * backing array.
   *
   * Exact-equality contract (pinned by WsTokensSpec against
-  * `split(text, '\\s+')` on real testdata + edge cases):
-  *  - separators are runs of Java-regex `\s` = ASCII [ \t\n\x0B\f\r]
-  *    (multi-byte whitespace codepoints are TOKEN bytes, as before);
-  *  - limit -1 boundary semantics: a leading separator run yields an
-  *    empty first token, a trailing run an empty last token, and the
-  *    empty string yields one empty token.
+  * `split(text, '\\s+')` on real testdata + edge cases): the tokens are
+  * the [[TokenWalk]] parts, boundary empties included.
   */
-case class WsTokensExpr(child: Expression) extends UnaryExpression {
+case class WsTokensExpr(child: Expression)
+    extends TextKernelExpr("ws_tokens", "WsTokensHelper") {
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"ws_tokens expects a STRING child, got ${child.dataType.sql}")
-
-  override protected def nullSafeEval(input: Any): Any =
-    WsTokensHelper.compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.WsTokensHelper.compute($c);")
+  override protected def compute(s: UTF8String): Any = WsTokensHelper.compute(s)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -57,25 +42,12 @@ object WsTokensExpr {
 /** The single-pass scan, Java-callable from generated code. */
 object WsTokensHelper {
 
-  private val Empty = UTF8String.EMPTY_UTF8
-
-  private def isWs(b: Byte): Boolean =
-    b == ' ' || b == '\t' || b == '\n' || b == 11 || b == '\f' || b == '\r'
-
-  def compute(s: UTF8String): ArrayData = {
-    val bytes = s.getBytes
-    val n = bytes.length
+  private final class Tokens(text: Array[Byte]) extends TokenWalk(text) {
     val out = new java.util.ArrayList[AnyRef](8)
-    if (n == 0 || isWs(bytes(0))) out.add(Empty)
-    var i = 0
-    while (i < n) {
-      if (!isWs(bytes(i))) {
-        val st = i
-        while (i < n && !isWs(bytes(i))) i += 1
-        out.add(UTF8String.fromBytes(bytes, st, i - st)) // zero-copy slice
-      } else i += 1
-    }
-    if (n > 0 && isWs(bytes(n - 1))) out.add(Empty)
-    new GenericArrayData(out.toArray)
+    protected def token(start: Int, end: Int): Unit =
+      out.add(UTF8String.fromBytes(bytes, start, end - start)) // zero-copy slice
   }
+
+  def compute(s: UTF8String): ArrayData =
+    new GenericArrayData(new Tokens(s.getBytes).walk().out.toArray)
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.{DoubleType, StringType}
 
-import graft.core.MetricStore
+import graft.core.{MetricStore, Tsdb}
 
 /** Structured Streaming ingestion — the real-time Track path of the
   * reference (kadiyadb ingests metrics continuously and serves reads on
@@ -99,34 +99,49 @@ object StreamingTracker {
   def commitBatch(storePath: String)(batch: DataFrame, batchId: Long): Unit = {
     import java.nio.file.{Files, Path, Paths, StandardCopyOption}
     import scala.jdk.CollectionConverters._
-    val marker = Paths.get(storePath, "_commits", batchId.toString)
-    if (Files.exists(marker)) return // replay of a committed batch
-    val stagingDir = Paths.get(storePath, "_staging", batchId.toString)
-    batch.write.mode("overwrite").partitionBy("epoch").parquet(stagingDir.toString)
     def ls(p: Path): Seq[Path] = {
       val s = Files.list(p)
       try s.iterator().asScala.toSeq finally s.close()
     }
-    ls(stagingDir).foreach { epochDir =>
-      val name = epochDir.getFileName.toString
-      if (name.startsWith("epoch=")) {
-        val target = Paths.get(storePath, MetricStore.PointsDir, name)
-        Files.createDirectories(target)
-        // clear any partial move from a crashed earlier attempt of THIS batch
-        ls(target)
-          .filter(_.getFileName.toString.matches(s"batch-$batchId-\\d+\\.parquet"))
-          .foreach(Files.delete(_))
-        val parts = ls(epochDir)
-          .filter(_.getFileName.toString.endsWith(".parquet"))
-          .sortBy(_.getFileName.toString)
-        parts.zipWithIndex.foreach { case (f, i) =>
-          Files.move(f, target.resolve(s"batch-$batchId-$i.parquet"),
-            StandardCopyOption.REPLACE_EXISTING)
+    commitOnce(storePath, "", batchId) {
+      val stagingDir = Paths.get(storePath, "_staging", batchId.toString)
+      batch.write.mode("overwrite").partitionBy("epoch").parquet(stagingDir.toString)
+      ls(stagingDir).foreach { epochDir =>
+        val name = epochDir.getFileName.toString
+        if (name.startsWith("epoch=")) {
+          val target = Paths.get(storePath, MetricStore.PointsDir, name)
+          Files.createDirectories(target)
+          // clear any partial move from a crashed earlier attempt of THIS batch
+          ls(target)
+            .filter(_.getFileName.toString.matches(s"batch-$batchId-\\d+\\.parquet"))
+            .foreach(Files.delete(_))
+          val parts = ls(epochDir)
+            .filter(_.getFileName.toString.endsWith(".parquet"))
+            .sortBy(_.getFileName.toString)
+          parts.zipWithIndex.foreach { case (f, i) =>
+            Files.move(f, target.resolve(s"batch-$batchId-$i.parquet"),
+              StandardCopyOption.REPLACE_EXISTING)
+          }
         }
       }
     }
-    Files.createDirectories(marker.getParent)
-    Files.createFile(marker)
+  }
+
+  /** The batch-id commit marker `<storePath>/_commits/<tag><batchId>`:
+    * runs `work`, then writes the marker, unless the marker already exists
+    * (a replay of a committed batch). True iff `work` ran.
+    */
+  private def commitOnce(storePath: String, tag: String, batchId: Long)(
+      work: => Unit): Boolean = {
+    import java.nio.file.{Files, Paths}
+    val marker = Paths.get(storePath, "_commits", s"$tag$batchId")
+    val fresh = !Files.exists(marker)
+    if (fresh) {
+      work
+      Files.createDirectories(marker.getParent)
+      Files.createFile(marker)
+    }
+    fresh
   }
 
   /** Streaming exact dedup for continuous document ingestion: drop any
@@ -162,15 +177,11 @@ object StreamingTracker {
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import java.nio.file.{Files, Paths}
         val store = new graft.operators.LshIndexStore(batch.sparkSession, storePath)
-        val marker = Paths.get(storePath, "_commits", batchId.toString)
-        val decided =
-          if (Files.exists(marker)) store.decide(batch, threshold)
-          else store.ingest(batch, threshold)
-        decided.write.mode("append").parquet(outDir)
-        Files.createDirectories(marker.getParent)
-        if (!Files.exists(marker)) { Files.createFile(marker); () }
+        val fresh = commitOnce(storePath, "", batchId) {
+          store.ingest(batch, threshold).write.mode("append").parquet(outDir)
+        }
+        if (!fresh) store.decide(batch, threshold).write.mode("append").parquet(outDir)
       }
       .start()
 
@@ -192,18 +203,13 @@ object StreamingTracker {
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import java.nio.file.{Files, Paths}
         val store = new graft.operators.LshIndexStore(batch.sparkSession, storePath)
         val nov = store.noveltyOf(batch)
           .withColumn("batch_id", lit(batchId))
           .localCheckpoint() // freeze BEFORE the type append changes the store
         nov.write.mode("append").parquet(outDir)
-        val marker = Paths.get(storePath, "_commits", s"nov_$batchId")
-        if (!Files.exists(marker)) {
-          store.appendTypes(batch)
-          Files.createDirectories(marker.getParent)
-          Files.createFile(marker); ()
-        }
+        commitOnce(storePath, "nov_", batchId)(store.appendTypes(batch))
+        ()
       }
       .start()
 
@@ -221,14 +227,11 @@ object StreamingTracker {
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import java.nio.file.{Files, Paths}
-        val marker = Paths.get(storePath, "_commits", s"ann_$batchId")
-        if (!Files.exists(marker)) {
+        commitOnce(storePath, "ann_", batchId) {
           new graft.operators.AnnIndexStore(batch.sparkSession, storePath)
             .append(batch)
-          Files.createDirectories(marker.getParent)
-          Files.createFile(marker); ()
         }
+        ()
       }
       .start()
 
@@ -429,12 +432,13 @@ object StreamingTracker {
       cusum: Double, alarm: Boolean)
 
   /** Streaming one-sided CUSUM — the live twin of Tsdb.cusum. Per-key
-    * state is ONLY the running accumulator c (O(|keys|)); each sample
-    * applies c = max(0, c + (value - target)) and alarms past `h`, so a
-    * slow drift pages long before any single bucket would. The fold is
-    * the same +/max arithmetic as the batch operator — replaying the
-    * batch history through the stream yields identical values. Same
-    * in-order cross-batch parity scope as [[asofStream]].
+    * state is ONLY the running clamped sum c (O(|keys|)); each sample
+    * applies Tsdb.cusumStep, c = max(0, c + value - target), emits c at
+    * the batch operator's 4-decimal grid and alarms once the unrounded c
+    * passes `h`, so a slow drift pages long before any single bucket
+    * would. Batch and stream share the step, so replaying the batch
+    * history through the stream yields identical values. Same in-order
+    * cross-batch parity scope as [[asofStream]].
     */
   def cusumStream(spark: SparkSession, points: Dataset[Point],
       target: Double, h: Double): Dataset[CusumOut] = {
@@ -448,8 +452,8 @@ object StreamingTracker {
           var c = state.getOption.getOrElse(0.0)
           val out = Seq.newBuilder[CusumOut]
           ordered.foreach { p =>
-            c = math.max(0.0, c + (p.value - target))
-            out += CusumOut(f1, f2, p.ts, c, c > h)
+            c = Tsdb.cusumStep(c, p.value, target)
+            out += CusumOut(f1, f2, p.ts, Tsdb.rd4d(c), c > h)
           }
           state.update(c)
           out.result().iterator
@@ -478,28 +482,15 @@ object StreamingTracker {
       .flatMapGroupsWithState[HwState, HwOut](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         case ((f1, f2), it, state: GroupState[HwState]) =>
-          def rd4(x: Double) = math.floor(x * 10000.0 + 0.5) / 10000.0
-          val ordered = it.toSeq.sortBy(_.ts.getTime)
-          var st = state.getOption.orNull
-          val out = Seq.newBuilder[HwOut]
-          ordered.foreach { p =>
-            if (st == null) {
-              st = HwState(1L, p.value, 0.0, Vector.fill(m)(0.0))
-              out += HwOut(f1, f2, p.ts, p.value, rd4(p.value))
-            } else {
-              val slot = (st.i % m).toInt
-              val fc = st.lvl + st.tr + st.se(slot)
-              val lvl2 = alpha * (p.value - st.se(slot)) +
-                (1.0 - alpha) * (st.lvl + st.tr)
-              val tr2 = beta * (lvl2 - st.lvl) + (1.0 - beta) * st.tr
-              val se2 = st.se.updated(slot,
-                gamma * (p.value - lvl2) + (1.0 - gamma) * st.se(slot))
-              st = HwState(st.i + 1L, lvl2, tr2, se2)
-              out += HwOut(f1, f2, p.ts, p.value, rd4(fc))
-            }
+          val hw = state.getOption match {
+            case Some(st) => new Tsdb.HwFold(alpha, beta, gamma, st.i, st.lvl, st.tr, st.se.toArray)
+            case None => new Tsdb.HwFold(alpha, beta, gamma, 0L, 0.0, 0.0, new Array[Double](m))
           }
-          state.update(st)
-          out.result().iterator
+          val out = it.toSeq.sortBy(_.ts.getTime).map { p =>
+            HwOut(f1, f2, p.ts, p.value, Tsdb.rd4d(hw.step(p.value)))
+          }
+          state.update(HwState(hw.i, hw.lvl, hw.tr, hw.se.toSeq))
+          out.iterator
       }
   }
 

@@ -412,6 +412,40 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("cusumStream reproduces the batch fold across a micro-batch split") {
+    import spark.implicits._
+    implicit val sq = spark.sqlContext
+    import StreamingTracker.CusumOut
+    // non-integer drifts: the batch emits the 4-decimal grid and folds
+    // max(0, c) + x - target, so a stream that differs in either shows here
+    val pts = Seq(
+      ("2024-01-01 10:10:00", 10.1), ("2024-01-01 11:10:00", 10.2),
+      ("2024-01-01 12:10:00", 9.7), ("2024-01-01 13:10:00", 10.3),
+      ("2024-01-01 14:10:00", 10.4), ("2024-01-01 15:10:00", 9.9),
+      ("2024-01-01 16:10:00", 10.6))
+    val input = MemoryStream[Point]
+    val cs = StreamingTracker.cusumStream(spark, input.toDS(), target = 10.0, h = 0.5)
+    val q = cs.writeStream.format("memory").queryName("cusum_split")
+      .outputMode(OutputMode.Append).start()
+    try {
+      val (b1, b2) = pts.splitAt(3)
+      input.addData(b1.map { case (t, v) => Point("purchase", "", ts(t), v) }: _*)
+      q.processAllAvailable()
+      input.addData(b2.map { case (t, v) => Point("purchase", "", ts(t), v) }: _*)
+      q.processAllAvailable()
+      val streamed = spark.table("cusum_split").as[CusumOut].collect()
+        .sortBy(_.ts.getTime).map(r => (r.cusum, r.alarm)).toSeq
+      val batch = graft.core.Tsdb.cusum(
+        graft.core.Tsdb.points1(eventsDf(pts.map { case (t, v) => (t, "purchase", 1L, v) })),
+        10.0, 0.5)
+        .collect()
+        .sortBy(_.getAs[java.time.LocalDateTime]("bucket").toString)
+        .map(r => (r.getAs[Double]("cusum"), r.getAs[Boolean]("alarm"))).toSeq
+      assert(batch.exists(_._2) && batch.exists(!_._2), s"alarm never flips: $batch")
+      assert(streamed == batch, s"stream $streamed != batch $batch")
+    } finally q.stop()
+  }
+
   test("holtWintersStream reproduces the batch fold across a micro-batch split") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
