@@ -17,6 +17,7 @@ import org.apache.spark.sql.graft.SqlBridge
 import org.apache.spark.sql.types._
 
 import graft.operators.CorpusArtifact
+import graft.operators.CorpusArtifact.ParamFile
 
 /** Store parameters — the Spark-native analog of kadiyadb's params.json
   * (/root/reference/database.go:15-31): resolution buckets points, epochs
@@ -122,15 +123,10 @@ object StoreParams {
       throw new IllegalArgumentException(
         s"unsupported time unit '$u' (expected one of ${Units.keys.toSeq.sorted.mkString(", ")})"))
 
-  /** params.json text of `p`: `fields` as a JSON array. */
-  private[core] def toJson(p: StoreParams): String = {
-    val node = CorpusArtifact.mapper.createObjectNode()
-      .put("resolution", p.resolution)
-      .put("epochDuration", p.epochDuration)
-      .put("retentionEpochs", p.retentionEpochs)
-    p.fields.foldLeft(node.putArray("fields"))(_.add(_))
-    CorpusArtifact.mapper.writeValueAsString(node)
-  }
+  /** params.json entries of `p`: `fields` as a JSON array. */
+  private[core] def entries(p: StoreParams): Seq[(String, Any)] = Seq(
+    "resolution" -> p.resolution, "epochDuration" -> p.epochDuration,
+    "retentionEpochs" -> p.retentionEpochs, "fields" -> p.fields.asJava)
 
   /** Parse params.json: fails on unparseable JSON, a missing or mistyped
     * key, or values StoreParams itself rejects.
@@ -415,8 +411,7 @@ final class MetricStore(spark: SparkSession, private[graft] val path: String,
     }
     val pts = points().filter(col("epoch").isin(epochs: _*))
     val out = slotHours.map { h =>
-      pts.groupBy((Seq(col("epoch"), col("depth")) ++ fieldCols :+ Tsdb.slot(h).as("bucket")): _*)
-        .agg(round(sum(col("total")), 2).as("total"), sum(col("cnt")).as("cnt"))
+      Tsdb.reslot(pts, Seq(col("epoch"), col("depth")) ++ fieldCols, h)
         .withColumn("res_hours", lit(h))
     }.reduce(_ union _)
       .select(cascadeSchema.fieldNames.map(col).toSeq: _*)
@@ -507,11 +502,8 @@ final class MetricStore(spark: SparkSession, private[graft] val path: String,
 
   /** Declare the store's layout in `<path>/params.json` on its first write. */
   private[graft] def writeParamsIfAbsent(): Unit = {
-    val p = Paths.get(path, MetricStore.ParamFile)
-    if (!Files.exists(p)) {
-      Files.createDirectories(p.getParent)
-      Files.writeString(p, StoreParams.toJson(params))
-    }
+    val p = Paths.get(path, ParamFile)
+    if (!Files.exists(p)) CorpusArtifact.writeParams(p, StoreParams.entries(params))
   }
 
   /** (epoch, directory) of each partition under `root`; none if `root` is absent. */
@@ -529,11 +521,6 @@ final class MetricStore(spark: SparkSession, private[graft] val path: String,
 }
 
 object MetricStore {
-
-  /** Name of the per-store config file, like kadiyadb's params.json
-    * (/root/reference/database.go:30).
-    */
-  val ParamFile = "params.json"
 
   /** The epoch-partitioned segment directory under a store's path. */
   private[graft] val PointsDir = "points"

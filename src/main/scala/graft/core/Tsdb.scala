@@ -190,12 +190,18 @@ object Tsdb {
     expr(s"timestampadd(HOUR, CAST(floor(hour(bucket) / $hours) * $hours AS INT), date_trunc('DAY', bucket))")
       .cast("timestamp_ntz")
 
+  /** Re-aggregate points per `keys` into the `hours`-sized [[slot]] of
+    * their `bucket`: the rounded total and the summed count. The one slot
+    * step of [[downsample]], both [[rollupCascade]] levels and
+    * MetricStore.refreshCascade.
+    */
+  private[graft] def reslot(pts: DataFrame, keys: Seq[Column], hours: Int): DataFrame =
+    pts.groupBy(keys :+ slot(hours).as("bucket"): _*)
+      .agg(round(sum(col("total")), 2).as("total"), sum(col("cnt")).as("cnt"))
+
   /** Re-aggregate hourly points to a coarser resolution (slotHours-sized slots). */
   def downsample(pts: DataFrame, slotHours: Int): DataFrame =
-    pts
-      .withColumn("bucket6", slot(slotHours))
-      .groupBy(col("f1"), col("f2"), col("bucket6"))
-      .agg(round(sum(col("total")), 2).as("total"), sum(col("cnt")).as("cnt"))
+    reslot(pts, Seq(col("f1"), col("f2")), slotHours).withColumnRenamed("bucket", "bucket6")
 
   /** Multi-resolution continuous aggregate (hour → 6h → day), the TSDB
     * rollup-cascade pattern: each coarser level aggregates THE PREVIOUS
@@ -207,36 +213,35 @@ object Tsdb {
     * level, so per-level round(…, 2) is engine-stable.
     */
   def rollupCascade(pts: DataFrame): DataFrame = {
-    val l1 = pts.select(col("f1"), col("f2"), lit(1).as("res_hours"),
-      col("bucket"), col("total"), col("cnt"))
-    val l6 = pts
-      .groupBy(col("f1"), col("f2"), slot(6).as("bucket"))
-      .agg(round(sum(col("total")), 2).as("total"), sum(col("cnt")).as("cnt"))
-    val l24 = l6
-      .groupBy(col("f1"), col("f2"), date_trunc("DAY", col("bucket")).cast("timestamp_ntz").as("bucket"))
-      .agg(round(sum(col("total")), 2).as("total"), sum(col("cnt")).as("cnt"))
+    val keys = Seq(col("f1"), col("f2"))
+    val l6 = reslot(pts, keys, 6)
     def tag(df: DataFrame, res: Int) = df.select(col("f1"), col("f2"),
       lit(res).as("res_hours"), col("bucket"), col("total"), col("cnt"))
-    l1.union(tag(l6, 6)).union(tag(l24, 24))
+    tag(pts, 1).union(tag(l6, 6)).union(tag(reslot(l6, keys, 24), 24))
+  }
+
+  /** The hourly axis [from, to) of every `series` present in `pts1`,
+    * left-joined on (f1, bucket) with that series' points in the range; a
+    * synthesized hour has NULL point columns. The dense frame [[gapfill]],
+    * [[interpolate]] and [[gapfillLocf]] each fill their own way.
+    */
+  private def hourlyAxisJoin(pts1: DataFrame, from: Column, to: Column,
+      series: Seq[String]): DataFrame = {
+    val ofSeries = pts1.filter(col("f1").isin(series: _*))
+    val step = expr("INTERVAL 1 HOUR")
+    ofSeries.select(col("f1")).distinct()
+      .select(col("f1"), explode(sequence(
+        from.cast("timestamp_ntz"), to.cast("timestamp_ntz") - step, step)).as("bucket"))
+      .join(ofSeries.filter(col("bucket") >= from && col("bucket") < to),
+        Seq("f1", "bucket"), "left")
   }
 
   /** Dense time axis per series with zero-filled gaps. */
-  def gapfill(pts1: DataFrame, from: Column, to: Column, series: Seq[String]): DataFrame = {
-    val axis = pts1
-      .filter(col("f1").isin(series: _*))
-      .select(col("f1")).distinct()
-      .select(col("f1"), explode(sequence(
-        from.cast("timestamp_ntz"),
-        to.cast("timestamp_ntz") - expr("INTERVAL 1 HOUR"),
-        expr("INTERVAL 1 HOUR"))).as("bucket"))
-    axis.join(
-        pts1.filter(col("f1").isin(series: _*) &&
-          col("bucket") >= from && col("bucket") < to),
-        Seq("f1", "bucket"), "left")
+  def gapfill(pts1: DataFrame, from: Column, to: Column, series: Seq[String]): DataFrame =
+    hourlyAxisJoin(pts1, from, to, series)
       .select(col("f1"), col("bucket"),
         coalesce(col("total"), lit(0.0)).as("total"),
         coalesce(col("cnt"), lit(0L)).as("cnt"))
-  }
 
   /** As-of join: align each point of the `probeF1` series with the most
     * recent (bucket ≤ probe bucket, inclusive) point of the `buildF1`
@@ -278,17 +283,7 @@ object Tsdb {
     * the per-partition work is |series axis|, not |events|.
     */
   def interpolate(pts1: DataFrame, from: Column, to: Column, series: Seq[String]): DataFrame = {
-    val inRange = pts1.filter(col("f1").isin(series: _*) &&
-      col("bucket") >= from && col("bucket") < to)
-    val axis = pts1
-      .filter(col("f1").isin(series: _*))
-      .select(col("f1")).distinct()
-      .select(col("f1"), explode(sequence(
-        from.cast("timestamp_ntz"),
-        to.cast("timestamp_ntz") - expr("INTERVAL 1 HOUR"),
-        expr("INTERVAL 1 HOUR"))).as("bucket"))
-    val joined = axis.join(inRange.select(col("f1"), col("bucket"), col("total")),
-      Seq("f1", "bucket"), "left")
+    val joined = hourlyAxisJoin(pts1, from, to, series)
     val ord = Window.partitionBy(col("f1")).orderBy(col("bucket"))
     val wPrev = ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wNext = ord.rowsBetween(Window.currentRow, Window.unboundedFollowing)
@@ -325,20 +320,29 @@ object Tsdb {
     * one distinct-shuffle of (group, hash) followed by a per-group top-k;
     * state per group is k longs, independent of cardinality.
     */
-  def approxDistinctKMV(events: DataFrame, k: Int = 64): DataFrame = {
-    val hashed = events
+  def approxDistinctKMV(events: DataFrame, k: Int = 64): DataFrame =
+    kmvPerType(kmvSketch(events, k), k)
+      .select(col("f1"), col("k_used"), graft.functions.Hashing.rd4(col("est")).as("est"))
+
+  /** The per-type KMV sketch: each event type's k smallest distinct h60
+    * user hashes, as (f1, hv, rn) rows. Every KMV estimate derives from
+    * these ≤ k rows per type, never from the full hash set.
+    */
+  private def kmvSketch(events: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("f1")).orderBy(col("hv"))
+    events
       .select(col("event_type").as("f1"),
         graft.functions.Hashing.h60(col("user_id").cast("string")).as("hv"))
       .distinct()
-    val w = Window.partitionBy(col("f1")).orderBy(col("hv"))
-    hashed.withColumn("rn", row_number().over(w))
+      .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= k)
-      .groupBy(col("f1"))
-      .agg(count(lit(1)).as("k_used"), max(col("hv")).as("kth"))
-      .select(col("f1"), col("k_used"),
-        graft.functions.Hashing.rd4(
-          kmvEst(k)(col("k_used"), col("kth"))).as("est"))
   }
+
+  /** Per-type (f1, k_used, est) from [[kmvSketch]] rows. */
+  private def kmvPerType(sketch: DataFrame, k: Int): DataFrame =
+    sketch.groupBy(col("f1"))
+      .agg(count(lit(1)).as("k_used"), max(col("hv")).as("kth"))
+      .select(col("f1"), col("k_used"), kmvEst(k)(col("k_used"), col("kth")).as("est"))
 
   /** Distinct-set OVERLAP estimation between two event types via KMV
     * sketch algebra: |A∩B| ≈ est(A) + est(B) − est(A∪B) (inclusion–
@@ -350,20 +354,8 @@ object Tsdb {
     */
   def distinctOverlapKMV(events: DataFrame, typeA: String, typeB: String,
       k: Int = 64): DataFrame = {
-    val hashed = events
-      .filter(col("event_type").isin(typeA, typeB))
-      .select(col("event_type").as("f1"),
-        graft.functions.Hashing.h60(col("user_id").cast("string")).as("hv"))
-      .distinct()
-    val w = Window.partitionBy(col("f1")).orderBy(col("hv"))
-    // Per-type sketches: the k smallest hashes of each type. Everything
-    // downstream derives from these ≤2k rows — never from the full hash set.
-    val topk = hashed.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-    val perType = topk
-      .groupBy(col("f1"))
-      .agg(count(lit(1)).as("k_used"), max(col("hv")).as("kth"))
-      .select(col("f1"), kmvEst(k)(col("k_used"), col("kth")).as("est"))
+    val topk = kmvSketch(events.filter(col("event_type").isin(typeA, typeB)), k)
+    val perType = kmvPerType(topk, k)
     // Sketch merge: the k smallest of A∪B are a subset of topk(A)∪topk(B)
     // (any hash ranking ≤k in the union ranks ≤k within its own type), so
     // the union sketch is computed from the ≤2k sketch rows — the
@@ -550,15 +542,24 @@ object Tsdb {
     val a = pts1.filter(col("f1") === f1a).select(col("bucket"), col("total").as("x"))
     val b = pts1.filter(col("f1") === f1b).select(col("bucket"), col("total").as("y"))
     a.join(b, "bucket")
-      .agg(count(lit(1)).cast("double").as("n"), sum(col("x")).as("sx"),
-        sum(col("y")).as("sy"), sum(col("x") * col("y")).as("sxy"),
-        sum(col("x") * col("x")).as("sxx"), sum(col("y") * col("y")).as("syy"))
-      .select(col("n").cast("long").as("n_buckets"),
-        graft.functions.Hashing.rd4(
-          (col("n") * col("sxy") - col("sx") * col("sy")) /
-            (sqrt(col("n") * col("sxx") - col("sx") * col("sx")) *
-             sqrt(col("n") * col("syy") - col("sy") * col("sy")))).as("pearson"))
+      .agg(pearsonSums.head, pearsonSums.tail: _*)
+      .select(col("n").cast("long").as("n_buckets"), pearson.as("pearson"))
   }
+
+  /** The six explicit sums (n, Σx, Σy, Σxy, Σx², Σy²) of the `x` and `y`
+    * columns that [[pearson]] reads; [[correlation]] and [[autocorr]]
+    * aggregate them.
+    */
+  private val pearsonSums: Seq[Column] = Seq(
+    count(lit(1)).cast("double").as("n"), sum(col("x")).as("sx"),
+    sum(col("y")).as("sy"), sum(col("x") * col("y")).as("sxy"),
+    sum(col("x") * col("x")).as("sxx"), sum(col("y") * col("y")).as("syy"))
+
+  /** Pearson r from [[pearsonSums]], on the rd4 grid. */
+  private val pearson: Column = graft.functions.Hashing.rd4(
+    (col("n") * col("sxy") - col("sx") * col("sy")) /
+      (sqrt(col("n") * col("sxx") - col("sx") * col("sx")) *
+       sqrt(col("n") * col("syy") - col("sy") * col("sy"))))
 
   /** Top-k movers: the series whose total changed most between the two
     * halves of the range split at `split`. One map-side-combinable
@@ -660,21 +661,9 @@ object Tsdb {
     * Leading buckets before the first real point stay NULL.
     */
   def gapfillLocf(pts1: DataFrame, from: Column, to: Column, series: Seq[String]): DataFrame = {
-    val axis = pts1
-      .filter(col("f1").isin(series: _*))
-      .select(col("f1")).distinct()
-      .select(col("f1"), explode(sequence(
-        from.cast("timestamp_ntz"),
-        to.cast("timestamp_ntz") - expr("INTERVAL 1 HOUR"),
-        expr("INTERVAL 1 HOUR"))).as("bucket"))
-    val joined = axis.join(
-      pts1.filter(col("f1").isin(series: _*) &&
-        col("bucket") >= from && col("bucket") < to)
-        .select(col("f1"), col("bucket"), col("total")),
-      Seq("f1", "bucket"), "left")
     val w = Window.partitionBy(col("f1")).orderBy(col("bucket"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    joined.select(col("f1"), col("bucket"),
+    hourlyAxisJoin(pts1, from, to, series).select(col("f1"), col("bucket"),
       last(col("total"), ignoreNulls = true).over(w).as("total_locf"),
       col("total").isNull.as("filled"))
   }
@@ -911,14 +900,22 @@ object Tsdb {
   def funnel(events: DataFrame): DataFrame =
     events
       .groupBy(col("user_id"))
-      .agg(
-        min(when(col("event_type") === "signup", expr("ts_ns div 1000"))).as("first_signup"),
-        min(when(col("event_type") === "purchase", expr("ts_ns div 1000"))).as("first_purchase"))
+      .agg(firstTouches.head, firstTouches.tail: _*)
       .agg(
         sum(when(col("first_signup").isNotNull, 1).otherwise(0)).as("n_signup"),
         sum(when(col("first_purchase").isNotNull, 1).otherwise(0)).as("n_purchase"),
-        sum(when(col("first_signup").isNotNull && col("first_purchase").isNotNull &&
-          col("first_purchase") > col("first_signup"), 1).otherwise(0)).as("n_converted"))
+        sum(when(converted, 1).otherwise(0)).as("n_converted"))
+
+  /** A user's first-touch signup and purchase times in µs (`ts_ns div
+    * 1000`, exact ints), the per-user aggregates [[funnel]] and
+    * [[propsFunnel]] share.
+    */
+  private val firstTouches: Seq[Column] = Seq("signup", "purchase").map(t =>
+    min(when(col("event_type") === t, expr("ts_ns div 1000"))).as(s"first_$t"))
+
+  /** Over [[firstTouches]]: the user signed up, then purchased strictly later. */
+  private val converted: Column = col("first_signup").isNotNull &&
+    col("first_purchase").isNotNull && col("first_purchase") > col("first_signup")
 
   /** Property-segmented funnel: [[funnel]]'s first-touch signup→purchase
     * conversion, split by a JSON-prop segment (here k > 50 at the user's
@@ -935,16 +932,13 @@ object Tsdb {
     events
       .withColumn("k", get_json_object(col("props"), "$.k").cast("long"))
       .groupBy(col("user_id"))
-      .agg(
-        min(when(col("event_type") === "signup", expr("ts_ns div 1000"))).as("first_signup"),
-        min(when(col("event_type") === "purchase", expr("ts_ns div 1000"))).as("first_purchase"),
-        min_by(col("k"), struct(col("ts_ns"), col("event_id"))).as("first_k"))
+      .agg(firstTouches.head, firstTouches.tail :+
+        min_by(col("k"), struct(col("ts_ns"), col("event_id"))).as("first_k"): _*)
       .withColumn("segment", when(col("first_k") > threshold, "high").otherwise("low"))
       .groupBy(col("segment"))
       .agg(
         sum(when(col("first_signup").isNotNull, 1L).otherwise(0L)).as("n_signup"),
-        sum(when(col("first_signup").isNotNull && col("first_purchase").isNotNull &&
-          col("first_purchase") > col("first_signup"), 1L).otherwise(0L)).as("n_converted"))
+        sum(when(converted, 1L).otherwise(0L)).as("n_converted"))
       .withColumn("conversion", graft.functions.Hashing.rd4(
         // nullif: a segment with purchases but no signups has n_signup=0;
         // NULL conversion (matches DuckDB x/0=NULL) under ANSI too
@@ -1119,6 +1113,19 @@ object Tsdb {
         (abs(col("after_avg") - col("before_avg")) >= threshold).as("is_shift"))
   }
 
+  /** Error and total event counts (n_err, n_all) per `hour` group, an
+    * event being an error when `eventType` is "error": the hourly counts
+    * [[burnRate]], [[sloAvailability]], [[sloStreaks]] and
+    * StreamingTracker.burnRateStream read. The batch defaults group the
+    * events table by its hour `bucket`.
+    */
+  private[graft] def hourlyErrors(events: DataFrame,
+      hour: Column = bucket(col("ts"), "hour").as("bucket"),
+      eventType: Column = col("event_type")): DataFrame =
+    events.groupBy(hour)
+      .agg(sum(when(eventType === "error", 1L).otherwise(0L)).as("n_err"),
+        count(lit(1)).as("n_all"))
+
   /** SRE multi-window error-budget burn rate: per hour bucket, the error
     * fraction of all events (short window = the bucket itself, long
     * window = trailing `longW` buckets), each divided by the SLO budget;
@@ -1132,12 +1139,7 @@ object Tsdb {
     * an equi-join on the rank — instead of a single-task ordered window.
     */
   def burnRate(events: DataFrame, budget: Double = 0.05, longW: Int = 6): DataFrame = {
-    val perBucket = events
-      .groupBy(bucket(col("ts"), "hour").as("bucket"))
-      .agg(
-        sum(when(col("event_type") === "error", 1L).otherwise(0L)).as("n_err"),
-        count(lit(1)).as("n_all"))
-    val ranked = graft.core.Ranking.withRankAndSums(perBucket, Seq(col("bucket")),
+    val ranked = graft.core.Ranking.withRankAndSums(hourlyErrors(events), Seq(col("bucket")),
       "__r", Seq(col("n_err") -> "__cerr", col("n_all") -> "__call"))
     val lagged = ranked.select((col("__r") + longW).as("__r"),
       col("__cerr").as("__lerr"), col("__call").as("__lall"))
@@ -1190,26 +1192,10 @@ object Tsdb {
     lagged
       .join(y, col("f1") === col("fy") && col("b2") === col("by"))
       .groupBy(col("f1"), col("lag").cast("long").as("lag"))
-      .agg(count(lit(1)).cast("double").as("n"), sum(col("x")).as("sx"),
-        sum(col("y")).as("sy"), sum(col("x") * col("y")).as("sxy"),
-        sum(col("x") * col("x")).as("sxx"), sum(col("y") * col("y")).as("syy"))
-      .select(col("f1"), col("lag"), col("n").cast("long").as("n_pairs"),
-        graft.functions.Hashing.rd4(
-          (col("n") * col("sxy") - col("sx") * col("sy")) /
-            (sqrt(col("n") * col("sxx") - col("sx") * col("sx")) *
-             sqrt(col("n") * col("syy") - col("sy") * col("sy")))).as("acf"))
+      .agg(pearsonSums.head, pearsonSums.tail: _*)
+      .select(col("f1"), col("lag"), col("n").cast("long").as("n_pairs"), pearson.as("acf"))
   }
 
-  /** One-sided CUSUM per series: c_i = max(0, c_{i-1} + (x_i - target)),
-    * alarm when c crosses `h` — the classical sequential change detector
-    * (drift accumulates, in-control buckets drain to zero). Like [[ewma]]
-    * it is an inherently sequential fold, so it runs as a per-series
-    * prefix fold over the collected bucket array with the identical
-    * operation order in the oracle; the fold arithmetic is +/max only
-    * (no transcendentals), so c is bit-identical cross-engine and the
-    * raw-value alarm comparison is portable. O(n) per series via
-    * [[foldSeries]].
-    */
   /** Largest-Triangle-Three-Buckets display downsampling per series —
     * the dashboard renderer's "draw 526k minute-buckets as k points
     * without losing the spikes" pass (Steinarsson 2013, the algorithm
@@ -1281,6 +1267,16 @@ object Tsdb {
   private[graft] def cusumStep(c: Double, x: Double, target: Double): Double =
     math.max(0.0, c + x - target)
 
+  /** One-sided CUSUM per series: c_i = max(0, c_{i-1} + (x_i - target)),
+    * alarm when c crosses `h` — the classical sequential change detector
+    * (drift accumulates, in-control buckets drain to zero). Like [[ewma]]
+    * it is an inherently sequential fold, so it runs as a per-series
+    * prefix fold over the collected bucket array with the identical
+    * operation order in the oracle; the fold arithmetic is +/max only
+    * (no transcendentals), so c is bit-identical cross-engine and the
+    * raw-value alarm comparison is portable. O(n) per series via
+    * [[foldSeries]].
+    */
   def cusum(pts1: DataFrame, target: Double, h: Double): DataFrame =
     foldSeries[CusumRow](pts1) { (f1, v) =>
       val out = new Array[CusumRow](v.length)
@@ -1370,11 +1366,8 @@ object Tsdb {
     * aggregations (hour → day), every ratio a ratio of integers.
     */
   def sloAvailability(events: DataFrame, budget: Double): DataFrame =
-    events
-      .groupBy(bucket(col("ts"), "hour").as("h"))
-      .agg(sum(when(col("event_type") === "error", 1L).otherwise(0L)).as("n_err"),
-        count(lit(1)).as("n_all"))
-      .groupBy(bucket(col("h"), "day").as("day"))
+    hourlyErrors(events)
+      .groupBy(bucket(col("bucket"), "day").as("day"))
       .agg(count(lit(1)).as("n_hours"),
         sum(when(col("n_err").cast("double") / col("n_all") > budget, 1L)
           .otherwise(0L)).as("n_bad"))
@@ -1400,18 +1393,6 @@ object Tsdb {
         max_by(col("total"), col("bucket")).as("close"),
         count(lit(1)).as("n_buckets"))
 
-  /** One-step-ahead forecast backtest: [[doubleSmooth]]'s forecast at
-    * bucket t is scored against the ACTUAL total at t+1h, summarized per
-    * series as MAE and MAPE — the walk-forward evaluation loop any
-    * forecaster needs before its numbers are trusted. The forecast
-    * column is already grid-rounded and bit-stable cross-engine, so the
-    * per-row errors are deterministic; only the final averages need the
-    * rd4 grid. One self-join of two post-agg tables. MAPE is undefined
-    * where the actual is 0 — those buckets are EXCLUDED from the mape
-    * mean explicitly (and counted in n_zero_actual) on both engines;
-    * relying on the engine's division-by-zero convention would diverge
-    * (Spark NULL-drops the row, DuckDB propagates ±inf).
-    */
   /** Capacity forecast per series: least-squares linear trend over the
     * bucket sequence and the projected buckets until `limit` is crossed
     * — the "days until the disk is full" read every metrics deployment
@@ -1522,6 +1503,18 @@ object Tsdb {
           (sum(when(col("g_rel").isNotNull, 1L).otherwise(0L)) * 1000000.0)).as("mape"))
   }
 
+  /** One-step-ahead forecast backtest: [[doubleSmooth]]'s forecast at
+    * bucket t is scored against the ACTUAL total at t+1h, summarized per
+    * series as MAE and MAPE — the walk-forward evaluation loop any
+    * forecaster needs before its numbers are trusted. The forecast
+    * column is already grid-rounded and bit-stable cross-engine, so the
+    * per-row errors are deterministic; only the final averages need the
+    * rd4 grid. One self-join of two post-agg tables. MAPE is undefined
+    * where the actual is 0 — those buckets are EXCLUDED from the mape
+    * mean explicitly (and counted in n_zero_actual) on both engines;
+    * relying on the engine's division-by-zero convention would diverge
+    * (Spark NULL-drops the row, DuckDB propagates ±inf).
+    */
   def forecastEval(pts1: DataFrame, alpha: Double): DataFrame = {
     val rd4 = graft.functions.Hashing.rd4 _
     val fc = doubleSmooth(pts1, alpha)
@@ -1575,15 +1568,12 @@ object Tsdb {
     * shuffle + broadcast offsets), not a single-task ordered window.
     */
   def sloStreaks(events: DataFrame, budget: Double): DataFrame = {
-    val bad = events
-      .groupBy(bucket(col("ts"), "hour").as("h"))
-      .agg(sum(when(col("event_type") === "error", 1L).otherwise(0L)).as("n_err"),
-        count(lit(1)).as("n_all"))
+    val bad = hourlyErrors(events)
       .filter(col("n_err").cast("double") / col("n_all") > budget)
-    graft.core.Ranking.withGlobalRank(bad, Seq(col("h")), "rn")
-      .withColumn("grp", expr("(unix_timestamp(h) div 3600) - rn"))
+    graft.core.Ranking.withGlobalRank(bad, Seq(col("bucket")), "rn")
+      .withColumn("grp", expr("(unix_timestamp(bucket) div 3600) - rn"))
       .groupBy(col("grp"))
-      .agg(min(col("h")).as("incident_start"), max(col("h")).as("incident_end"),
+      .agg(min(col("bucket")).as("incident_start"), max(col("bucket")).as("incident_end"),
         count(lit(1)).as("n_hours"))
       .select(col("incident_start"), col("incident_end"), col("n_hours"))
   }

@@ -52,9 +52,8 @@ final class AnnIndexStore(spark: SparkSession, path: String) {
     cb.write.mode("overwrite").parquet(codebookDir)
     Similarity.ivfPqEncode(resTab, cent, cb, nSub)
       .write.mode("overwrite").partitionBy("cid").parquet(codesDir)
-    Files.createDirectories(Paths.get(path))
-    Files.writeString(Paths.get(path, AnnIndexStore.ParamFile),
-      s"""{"nSub": $nSub, "nCent": $nCent, "nCode": $nCode}""")
+    CorpusArtifact.writeParams(Paths.get(path, CorpusArtifact.ParamFile),
+      Seq("nSub" -> nSub, "nCent" -> nCent, "nCode" -> nCode))
   }
 
   def cells: DataFrame = spark.read.parquet(cellsDir)
@@ -65,11 +64,11 @@ final class AnnIndexStore(spark: SparkSession, path: String) {
     * store rather than mis-slicing subvectors.
     */
   def params: AnnIndexStore.Params = {
-    val p = Paths.get(path, AnnIndexStore.ParamFile)
-    require(Files.exists(p), s"no ${AnnIndexStore.ParamFile} under $path — not an ANN index store")
+    val p = Paths.get(path, CorpusArtifact.ParamFile)
+    require(Files.exists(p), s"no ${CorpusArtifact.ParamFile} under $path — not an ANN index store")
     val json = CorpusArtifact.readParams(p)
     def num(key: String) = json.getOrElse(key,
-      throw new IllegalStateException(s"$key missing in ${AnnIndexStore.ParamFile}")).toInt
+      throw new IllegalStateException(s"$key missing in ${CorpusArtifact.ParamFile}")).toInt
     AnnIndexStore.Params(num("nSub"), num("nCent"), num("nCode"))
   }
 
@@ -109,7 +108,4 @@ final class AnnIndexStore(spark: SparkSession, path: String) {
 
 object AnnIndexStore {
   final case class Params(nSub: Int, nCent: Int, nCode: Int)
-
-  /** Name of the per-store config file, like kadiyadb's params.json. */
-  val ParamFile = "params.json"
 }

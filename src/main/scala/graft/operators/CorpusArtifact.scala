@@ -8,6 +8,8 @@ import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
 import scala.util.Try
 
+import com.fasterxml.jackson.core.JsonGenerator
+import com.fasterxml.jackson.core.util.MinimalPrettyPrinter
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -90,11 +92,7 @@ final class CorpusArtifact[V](store: String, table: String, idCol: String,
         if (!fresh) {
           builds.incrementAndGet()
           build(src, base)
-          Files.createDirectories(Paths.get(base))
-          Files.write(paramPath, recorded.map {
-            case (k, v: String) => s""""$k": "$v""""
-            case (k, v) => s""""$k": $v"""
-          }.mkString("{", ", ", "}").getBytes(StandardCharsets.UTF_8))
+          writeParams(paramPath, recorded)
         }
         read(base)
       }
@@ -110,13 +108,35 @@ final class CorpusArtifact[V](store: String, table: String, idCol: String,
 }
 
 object CorpusArtifact {
-  /** Name of the per-store manifest, like kadiyadb's params.json. */
+  /** Name of every store's manifest (corpus, ANN index and metric
+    * stores), like kadiyadb's params.json.
+    */
   val ParamFile = "params.json"
 
   private val pathLocks = TrieMap.empty[String, Object]
 
-  /** The one JSON codec for params.json files (corpus and metric stores). */
+  /** The one JSON codec for params.json files (corpus, ANN index and
+    * metric stores).
+    */
   private[graft] val mapper = new ObjectMapper()
+
+  /** Writes `params` to `p` (creating its directory) as one flat JSON
+    * object, in order, spelled `{"k": 1, "s": "v"}`: the spelling the
+    * stores wrote before they shared [[mapper]], so existing manifests
+    * stay byte-identical. A java collection value becomes a JSON array.
+    */
+  private[graft] def writeParams(p: Path, params: Seq[(String, Any)]): Unit = {
+    val obj = new java.util.LinkedHashMap[String, Any]()
+    params.foreach { case (k, v) => obj.put(k, v) }
+    Files.createDirectories(p.getParent)
+    Files.writeString(p, mapper.writer(Spaced).writeValueAsString(obj))
+  }
+
+  /** Compact JSON with a space after each `:` and `,`. */
+  private object Spaced extends MinimalPrettyPrinter {
+    override def writeObjectFieldValueSeparator(g: JsonGenerator): Unit = g.writeRaw(": ")
+    override def writeObjectEntrySeparator(g: JsonGenerator): Unit = g.writeRaw(", ")
+  }
 
   private[graft] def root(store: String, dir: String, key: String): String = {
     val digest = java.security.MessageDigest.getInstance("SHA-1")

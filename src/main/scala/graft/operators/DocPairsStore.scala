@@ -169,28 +169,35 @@ object DocPairsStore {
   /** Bump when the shingle/sketch/pair pipeline changes behavior. */
   private[graft] val AlgoVersion = 1
 
-  /** The open memo holds only the validated base path. */
-  private val artifact = new CorpusArtifact[String](
+  /** The four persisted tables of one validated store, each read (its
+    * schema inferred) at most once per session. Appends go through
+    * [[DocPairsStore]] instances, whose readers list the files afresh.
+    */
+  private final class Opened(s: SparkSession, base: String) {
+    lazy val shingles: DataFrame = s.read.parquet(s"$base/shingles")
+    lazy val sigs: DataFrame = s.read.parquet(s"$base/sigs")
+    lazy val exactPairs: DataFrame = s.read.parquet(s"$base/exact_pairs")
+    lazy val lshPairs: DataFrame = s.read.parquet(s"$base/lsh_pairs")
+  }
+
+  /** The open memo holds only disk-backed table plans. */
+  private val artifact = new CorpusArtifact[Opened](
     "docpairs", "documents", "doc_id", "text", AlgoVersion)
 
   private[graft] val buildCount = artifact.builds
 
   private[graft] def dropHandles(): Unit = artifact.dropHandles()
 
-  private def ensure(s: SparkSession, dir: String): String =
+  private def ensure(s: SparkSession, dir: String): Opened =
     artifact.open(s, dir, s"n$ShingleN", "shingle_n" -> ShingleN,
       "exact_floor" -> Dedup.SharedExactFloor, "lsh_floor" -> Dedup.SharedPairFloor)(
-      (docs, base) => new DocPairsStore(s, base).build(docs))(identity)
+      (docs, base) => new DocPairsStore(s, base).build(docs))(new Opened(s, _))
 
   /** The persisted artifacts over `dir`'s documents — built once per
     * corpus, then served from disk to every consumer in every session.
     */
-  def shingles(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"${ensure(s, dir)}/shingles")
-  def sigs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"${ensure(s, dir)}/sigs")
-  def exactPairs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"${ensure(s, dir)}/exact_pairs")
-  def lshPairs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"${ensure(s, dir)}/lsh_pairs")
+  def shingles(s: SparkSession, dir: String): DataFrame = ensure(s, dir).shingles
+  def sigs(s: SparkSession, dir: String): DataFrame = ensure(s, dir).sigs
+  def exactPairs(s: SparkSession, dir: String): DataFrame = ensure(s, dir).exactPairs
+  def lshPairs(s: SparkSession, dir: String): DataFrame = ensure(s, dir).lshPairs
 }

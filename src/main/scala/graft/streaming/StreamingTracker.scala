@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.time.{ZoneId, ZoneOffset}
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.{DoubleType, StringType}
@@ -73,15 +73,21 @@ object StreamingTracker {
             col("total"), col("cnt"), lit(prefix.length).as("depth")): _*)
     }
     store.writeParamsIfAbsent()
-    val q = depths.reduce(_ union _)
-      .withColumn("epoch", params.epochId(col("bucket")))
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", s"$checkpointDir/union")
-      .foreachBatch(commitBatch(store.path) _)
-      .start()
-    Seq(q)
+    Seq(eachBatch(depths.reduce(_ union _).withColumn("epoch", params.epochId(col("bucket"))),
+      s"$checkpointDir/union")(commitBatch(store.path)))
   }
+
+  /** Starts `input` as an Append query checkpointed at `checkpointDir`
+    * that hands each micro-batch and its id to `sink`: the writeStream
+    * shell of every foreachBatch sink below.
+    */
+  private def eachBatch(input: DataFrame, checkpointDir: String)(
+      sink: (DataFrame, Long) => Unit): StreamingQuery =
+    input.writeStream
+      .outputMode(OutputMode.Append)
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch(sink)
+      .start()
 
   /** Exactly-once micro-batch commit: stage → move → marker.
     * A replayed batchId is skipped (marker exists). A crash between stage
@@ -173,17 +179,13 @@ object StreamingTracker {
     */
   def incrementalDedupStream(docs: DataFrame, storePath: String, outDir: String,
       checkpointDir: String, threshold: Double): StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val store = new graft.operators.LshIndexStore(batch.sparkSession, storePath)
-        val fresh = commitOnce(storePath, "", batchId) {
-          store.ingest(batch, threshold).write.mode("append").parquet(outDir)
-        }
-        if (!fresh) store.decide(batch, threshold).write.mode("append").parquet(outDir)
+    eachBatch(docs, checkpointDir) { (batch, batchId) =>
+      val store = new graft.operators.LshIndexStore(batch.sparkSession, storePath)
+      val fresh = commitOnce(storePath, "", batchId) {
+        store.ingest(batch, threshold).write.mode("append").parquet(outDir)
       }
-      .start()
+      if (!fresh) store.decide(batch, threshold).write.mode("append").parquet(outDir)
+    }
 
   /** Streaming content-novelty gate — each arriving micro-batch of
     * (doc_id, text) is scored against the [[graft.operators.LshIndexStore]]'s
@@ -199,19 +201,14 @@ object StreamingTracker {
     */
   def noveltyGateStream(docs: DataFrame, storePath: String, outDir: String,
       checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val store = new graft.operators.LshIndexStore(batch.sparkSession, storePath)
-        val nov = store.noveltyOf(batch)
-          .withColumn("batch_id", lit(batchId))
-          .localCheckpoint() // freeze BEFORE the type append changes the store
-        nov.write.mode("append").parquet(outDir)
-        commitOnce(storePath, "nov_", batchId)(store.appendTypes(batch))
-        ()
-      }
-      .start()
+    eachBatch(docs, checkpointDir) { (batch, batchId) =>
+      val store = new graft.operators.LshIndexStore(batch.sparkSession, storePath)
+      val nov = store.noveltyOf(batch)
+        .withColumn("batch_id", lit(batchId))
+        .localCheckpoint() // freeze BEFORE the type append changes the store
+      nov.write.mode("append").parquet(outDir)
+      commitOnce(storePath, "nov_", batchId)(store.appendTypes(batch))
+    }
 
   /** Streaming ANN ingestion — arriving embedding micro-batches encoded
     * against the PERSISTED IVF-PQ quantizers and appended to the store
@@ -223,17 +220,11 @@ object StreamingTracker {
     */
   def annIngestStream(vectors: DataFrame, storePath: String,
       checkpointDir: String): StreamingQuery =
-    vectors.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        commitOnce(storePath, "ann_", batchId) {
-          new graft.operators.AnnIndexStore(batch.sparkSession, storePath)
-            .append(batch)
-        }
-        ()
+    eachBatch(vectors, checkpointDir) { (batch, batchId) =>
+      commitOnce(storePath, "ann_", batchId) {
+        new graft.operators.AnnIndexStore(batch.sparkSession, storePath).append(batch)
       }
-      .start()
+    }
 
   /** Streaming semantic-contamination gate — each micro-batch of train
     * embeddings is scored against a STATIC held-out test table via the
@@ -245,17 +236,13 @@ object StreamingTracker {
     */
   def contaminationGateStream(vectors: DataFrame, testSet: DataFrame,
       outDir: String, checkpointDir: String, threshold: Double): StreamingQuery =
-    vectors.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.operators.Similarity.contaminationSemantic(
-          batch.withColumn("__t", lit(false))
-            .unionByName(testSet.withColumn("__t", lit(true))),
-          col("__t"), threshold)
-          .write.mode("append").parquet(outDir)
-      }
-      .start()
+    eachBatch(vectors, checkpointDir) { (batch, _) =>
+      graft.operators.Similarity.contaminationSemantic(
+        batch.withColumn("__t", lit(false))
+          .unionByName(testSet.withColumn("__t", lit(true))),
+        col("__t"), threshold)
+        .write.mode("append").parquet(outDir)
+    }
 
   /** Streaming sessionization — the live twin of Tsdb.sessionize, using
     * Spark's native dynamic-gap `session_window`: a session closes (and
@@ -281,11 +268,8 @@ object StreamingTracker {
     */
   def burnRateStream(events: DataFrame, watermark: String,
       budget: Double): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), "1 hour"))
-      .agg(sum(when(col("f1") === "error", 1L).otherwise(0L)).as("n_err"),
-        count(lit(1)).as("n_all"))
+    Tsdb.hourlyErrors(events.withWatermark("ts", watermark),
+        window(col("ts"), "1 hour"), col("f1"))
       .select(col("window.start").as("bucket"), col("n_err"), col("n_all"),
         graft.functions.Hashing.rd4(
           col("n_err") / col("n_all") / budget).as("burn"),
@@ -305,6 +289,23 @@ object StreamingTracker {
       .filter(col("total") >= threshold)
       .select(col("f1"), col("window.start").as("win_start"),
         col("window.end").as("win_end"), col("total"), col("n_events"))
+
+  /** Keyed in-order replay, the shell of the six flatMapGroupsWithState
+    * twins below: group `points` by `key`, sort each key's micro-batch
+    * points by `order`, and `fold` them over the key's prior state. The
+    * fold returns the state to keep (None leaves the stored state as it
+    * is) and the rows to emit. Append output, no timeout.
+    */
+  private def replay[V, K: Encoder, T: Ordering, S: Encoder, R: Encoder](
+      points: Dataset[V])(key: V => K, order: V => T)(
+      fold: (K, Option[S], Seq[V]) => (Option[S], Iterator[R])): Dataset[R] =
+    points.groupByKey(key)
+      .flatMapGroupsWithState[S, R](OutputMode.Append, GroupStateTimeout.NoTimeout) {
+        (k: K, it: Iterator[V], state: GroupState[S]) =>
+          val (next, out) = fold(k, state.getOption, it.toSeq.sortBy(order))
+          next.foreach(state.update)
+          out
+      }
 
   final case class TaggedPoint(f2: String, side: Int, ts: java.sql.Timestamp, value: Double)
   final case class AsofMatch(f2: String, ts: java.sql.Timestamp, value: Double,
@@ -345,37 +346,31 @@ object StreamingTracker {
   def asofStream(spark: SparkSession, points: Dataset[TaggedPoint],
       horizonMs: Long = 3600000L): Dataset[AsofMatch] = {
     import spark.implicits._
-    points
-      .groupByKey(_.f2)
-      .flatMapGroupsWithState[AsofState, AsofMatch](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        case (f2, it, state: GroupState[AsofState]) =>
-          val ordered = it.toSeq.sortBy(e => (e.ts.getTime, e.side))
-          state.getOption.foreach(s => requireAsofStateVersion(s.version))
-          var buf = state.getOption.map(_.buf).getOrElse(Nil) // ascending by ts
-          val out = Seq.newBuilder[AsofMatch]
-          ordered.foreach { e =>
-            if (e.side == 0) {
-              // insert keeping ascending order; an equal-ts re-delivery
-              // replaces the old value (last write wins, like batch
-              // replay order)
-              buf = (buf.filterNot(_._1.getTime == e.ts.getTime)
-                :+ ((e.ts, e.value))).sortBy(_._1.getTime)
-            } else {
-              val m = buf.filter(_._1.getTime <= e.ts.getTime).lastOption
-              out += AsofMatch(f2, e.ts, e.value, m.map(_._1), m.map(_._2))
-            }
+    replay(points)(_.f2, e => (e.ts.getTime, e.side)) {
+      (f2: String, prior: Option[AsofState], ordered: Seq[TaggedPoint]) =>
+        prior.foreach(s => requireAsofStateVersion(s.version))
+        var buf = prior.map(_.buf).getOrElse(Nil) // ascending by ts
+        val out = Seq.newBuilder[AsofMatch]
+        ordered.foreach { e =>
+          if (e.side == 0) {
+            // insert keeping ascending order; an equal-ts re-delivery
+            // replaces the old value (last write wins, like batch
+            // replay order)
+            buf = (buf.filterNot(_._1.getTime == e.ts.getTime)
+              :+ ((e.ts, e.value))).sortBy(_._1.getTime)
+          } else {
+            val m = buf.filter(_._1.getTime <= e.ts.getTime).lastOption
+            out += AsofMatch(f2, e.ts, e.value, m.map(_._1), m.map(_._2))
           }
-          if (buf.nonEmpty) {
-            // evict below (newest build - horizon), keeping the newest
-            // evictee as the floor match for boundary probes
-            val cut = buf.last._1.getTime - horizonMs
-            val (old, recent) = buf.partition(_._1.getTime < cut)
-            buf = old.lastOption.toList ++ recent
-            state.update(AsofState(AsofStateVersion, buf))
-          }
-          out.result().iterator
-      }
+        }
+        // evict below (newest build - horizon), keeping the newest
+        // evictee as the floor match for boundary probes
+        val kept = buf.lastOption.map { newest =>
+          val (old, recent) = buf.partition(_._1.getTime < newest._1.getTime - horizonMs)
+          AsofState(AsofStateVersion, old.lastOption.toList ++ recent)
+        }
+        (kept, out.result().iterator)
+    }
   }
 
   /** Current [[asofStream]] per-key state format. v2 = versioned
@@ -410,22 +405,16 @@ object StreamingTracker {
     */
   def rateStream(spark: SparkSession, points: Dataset[Point]): Dataset[RateOut] = {
     import spark.implicits._
-    points
-      .groupByKey(p => (p.f1, p.f2))
-      .flatMapGroupsWithState[Double, RateOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        case ((f1, f2), it, state: GroupState[Double]) =>
-          val ordered = it.toSeq.sortBy(_.ts.getTime)
-          var prev = state.getOption
-          val out = Seq.newBuilder[RateOut]
-          ordered.foreach { p =>
-            val inc = prev.map(pv => if (p.value >= pv) p.value - pv else p.value)
-            out += RateOut(f1, f2, p.ts, inc)
-            prev = Some(p.value)
-          }
-          prev.foreach(state.update)
-          out.result().iterator
-      }
+    replay(points)(p => (p.f1, p.f2), _.ts.getTime) {
+      (key: (String, String), prior: Option[Double], ordered: Seq[Point]) =>
+        var prev = prior
+        val out = ordered.map { p =>
+          val inc = prev.map(pv => if (p.value >= pv) p.value - pv else p.value)
+          prev = Some(p.value)
+          RateOut(key._1, key._2, p.ts, inc)
+        }
+        (prev, out.iterator)
+    }
   }
 
   final case class CusumOut(f1: String, f2: String, ts: java.sql.Timestamp,
@@ -443,21 +432,15 @@ object StreamingTracker {
   def cusumStream(spark: SparkSession, points: Dataset[Point],
       target: Double, h: Double): Dataset[CusumOut] = {
     import spark.implicits._
-    points
-      .groupByKey(p => (p.f1, p.f2))
-      .flatMapGroupsWithState[Double, CusumOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        case ((f1, f2), it, state: GroupState[Double]) =>
-          val ordered = it.toSeq.sortBy(_.ts.getTime)
-          var c = state.getOption.getOrElse(0.0)
-          val out = Seq.newBuilder[CusumOut]
-          ordered.foreach { p =>
-            c = Tsdb.cusumStep(c, p.value, target)
-            out += CusumOut(f1, f2, p.ts, Tsdb.rd4d(c), c > h)
-          }
-          state.update(c)
-          out.result().iterator
-      }
+    replay(points)(p => (p.f1, p.f2), _.ts.getTime) {
+      (key: (String, String), prior: Option[Double], ordered: Seq[Point]) =>
+        var c = prior.getOrElse(0.0)
+        val out = ordered.map { p =>
+          c = Tsdb.cusumStep(c, p.value, target)
+          CusumOut(key._1, key._2, p.ts, Tsdb.rd4d(c), c > h)
+        }
+        (Some(c), out.iterator)
+    }
   }
 
   final case class HwState(i: Long, lvl: Double, tr: Double, se: Seq[Double])
@@ -477,21 +460,17 @@ object StreamingTracker {
   def holtWintersStream(spark: SparkSession, points: Dataset[Point],
       alpha: Double, beta: Double, gamma: Double, m: Int): Dataset[HwOut] = {
     import spark.implicits._
-    points
-      .groupByKey(p => (p.f1, p.f2))
-      .flatMapGroupsWithState[HwState, HwOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        case ((f1, f2), it, state: GroupState[HwState]) =>
-          val hw = state.getOption match {
-            case Some(st) => new Tsdb.HwFold(alpha, beta, gamma, st.i, st.lvl, st.tr, st.se.toArray)
-            case None => new Tsdb.HwFold(alpha, beta, gamma, 0L, 0.0, 0.0, new Array[Double](m))
-          }
-          val out = it.toSeq.sortBy(_.ts.getTime).map { p =>
-            HwOut(f1, f2, p.ts, p.value, Tsdb.rd4d(hw.step(p.value)))
-          }
-          state.update(HwState(hw.i, hw.lvl, hw.tr, hw.se.toSeq))
-          out.iterator
-      }
+    replay(points)(p => (p.f1, p.f2), _.ts.getTime) {
+      (key: (String, String), prior: Option[HwState], ordered: Seq[Point]) =>
+        val hw = prior match {
+          case Some(st) => new Tsdb.HwFold(alpha, beta, gamma, st.i, st.lvl, st.tr, st.se.toArray)
+          case None => new Tsdb.HwFold(alpha, beta, gamma, 0L, 0.0, 0.0, new Array[Double](m))
+        }
+        val out = ordered.map { p =>
+          HwOut(key._1, key._2, p.ts, p.value, Tsdb.rd4d(hw.step(p.value)))
+        }
+        (Some(HwState(hw.i, hw.lvl, hw.tr, hw.se.toSeq)), out.iterator)
+    }
   }
 
   final case class AttrState(first: Option[String], last: Option[String])
@@ -513,28 +492,23 @@ object StreamingTracker {
     */
   def attributionStream(spark: SparkSession, points: Dataset[Point]): Dataset[AttrOut] = {
     import spark.implicits._
-    points
-      .groupByKey(_.f2)
-      .flatMapGroupsWithState[AttrState, AttrOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        case (user, it, state: GroupState[AttrState]) =>
-          var st = state.getOption.getOrElse(AttrState(None, None))
-          val out = Seq.newBuilder[AttrOut]
-          // equal-ts tie-break: touches apply before the purchase
-          it.toSeq.sortBy(p =>
-            (p.ts.getTime, if (p.f1 == "purchase") 1 else 0, p.f1)).foreach { p =>
-            p.f1 match {
-              case "view" | "click" =>
-                st = AttrState(st.first.orElse(Some(p.f1)), Some(p.f1))
-              case "purchase" =>
-                out += AttrOut(user, p.ts, p.value,
-                  st.first.getOrElse("none"), st.last.getOrElse("none"))
-              case _ => ()
-            }
+    // equal-ts tie-break: touches apply before the purchase
+    replay(points)(_.f2, p => (p.ts.getTime, if (p.f1 == "purchase") 1 else 0, p.f1)) {
+      (user: String, prior: Option[AttrState], ordered: Seq[Point]) =>
+        var st = prior.getOrElse(AttrState(None, None))
+        val out = Seq.newBuilder[AttrOut]
+        ordered.foreach { p =>
+          p.f1 match {
+            case "view" | "click" =>
+              st = AttrState(st.first.orElse(Some(p.f1)), Some(p.f1))
+            case "purchase" =>
+              out += AttrOut(user, p.ts, p.value,
+                st.first.getOrElse("none"), st.last.getOrElse("none"))
+            case _ => ()
           }
-          state.update(st)
-          out.result().iterator
-      }
+        }
+        (Some(st), out.result().iterator)
+    }
   }
 
   final case class TopkOut(f1: String, f2: String, est: Long, err: Long, rank: Int)
@@ -554,29 +528,23 @@ object StreamingTracker {
   def topkStream(spark: SparkSession, points: Dataset[Point],
       m: Int = 8, k: Int = 3): Dataset[TopkOut] = {
     import spark.implicits._
-    points
-      .groupByKey(_.f1)
-      .flatMapGroupsWithState[Map[String, (Long, Long)], TopkOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        case (f1, it, state: GroupState[Map[String, (Long, Long)]]) =>
-          var sk = state.getOption.getOrElse(Map.empty[String, (Long, Long)])
-          it.toSeq.sortBy(p => (p.ts.getTime, p.f2)).foreach { p =>
-            sk.get(p.f2) match {
-              case Some((c, e)) => sk += p.f2 -> ((c + 1, e))
-              case None if sk.size < m => sk += p.f2 -> ((1L, 0L))
-              case None =>
-                // replace the min counter (key tie-break), inherit its
-                // count as the new key's overestimation error
-                val (minKey, (minC, _)) = sk.minBy { case (kk, (c, _)) => (c, kk) }
-                sk = sk - minKey + (p.f2 -> ((minC + 1, minC)))
-            }
+    replay(points)(_.f1, p => (p.ts.getTime, p.f2)) {
+      (f1: String, prior: Option[Map[String, (Long, Long)]], ordered: Seq[Point]) =>
+        var sk = prior.getOrElse(Map.empty[String, (Long, Long)])
+        ordered.foreach { p =>
+          sk.get(p.f2) match {
+            case Some((c, e)) => sk += p.f2 -> ((c + 1, e))
+            case None if sk.size < m => sk += p.f2 -> ((1L, 0L))
+            case None =>
+              // replace the min counter (key tie-break), inherit its
+              // count as the new key's overestimation error
+              val (minKey, (minC, _)) = sk.minBy { case (kk, (c, _)) => (c, kk) }
+              sk = sk - minKey + (p.f2 -> ((minC + 1, minC)))
           }
-          state.update(sk)
-          sk.toSeq.sortBy { case (kk, (c, _)) => (-c, kk) }.take(k)
-            .zipWithIndex.map { case ((f2, (c, e)), i) =>
-              TopkOut(f1, f2, c, e, i + 1)
-            }.iterator
-      }
+        }
+        (Some(sk), sk.toSeq.sortBy { case (kk, (c, _)) => (-c, kk) }.take(k)
+          .zipWithIndex.map { case ((f2, (c, e)), i) => TopkOut(f1, f2, c, e, i + 1) }.iterator)
+    }
   }
 
   final case class Point(f1: String, f2: String, ts: java.sql.Timestamp, value: Double)

@@ -4,6 +4,8 @@ import java.nio.file.{Files, Paths}
 import java.util.concurrent.{CyclicBarrier, Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicLong
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -74,6 +76,25 @@ class CorpusArtifactSpec extends SparkSpec {
       }
       assert(stale.isEmpty,
         s"a changed recorded value must rebuild, not serve the stale artifact: ${stale.mkString("; ")}")
+    }
+  }
+
+  test("a params.json in the hand-formatted {\"k\": v, ...} spelling opens each store without a rebuild") {
+    withCorpusDir { dir =>
+      val rebuilt = stores.flatMap { case (store, key, open, counter, drop, _, _) =>
+        open(spark, dir)
+        val pj = Paths.get(CorpusArtifact.root(store, dir, key), "params.json")
+        Files.writeString(pj, CorpusArtifact.mapper.readTree(Files.readString(pj))
+          .properties().asScala.map { e =>
+            val v = e.getValue
+            s""""${e.getKey}": ${if (v.isTextual) s""""${v.asText}"""" else v.asText}"""
+          }.mkString("{", ", ", "}"))
+        drop()
+        val before = counter.get()
+        open(spark, dir)
+        if (counter.get() == before) None else Some(store)
+      }
+      assert(rebuilt.isEmpty, s"a hand-formatted manifest rebuilt: ${rebuilt.mkString(", ")}")
     }
   }
 

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Path}
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, DocPairsStore}
@@ -67,6 +67,17 @@ class DocPairsStoreSpec extends SparkSpec {
         "persisted exact pairs differ from a fresh build")
       assert(l1 == sortedRows(Dedup.minhashLsh(docs, Dedup.SharedPairFloor)),
         "persisted LSH pairs differ from a fresh build")
+    }
+  }
+
+  test("each reader infers its table's schema once per session: a re-read starts no job") {
+    withCorpusDir(baseRows) { dir =>
+      val readers = Seq[(String, (SparkSession, String) => DataFrame)](
+        "shingles" -> DocPairsStore.shingles _, "sigs" -> DocPairsStore.sigs _,
+        "exactPairs" -> DocPairsStore.exactPairs _, "lshPairs" -> DocPairsStore.lshPairs _)
+      readers.foreach { case (_, read) => read(spark, dir.toString) } // first open + reads
+      val jobs = readers.map { case (name, read) => name -> jobsDuring(read(spark, dir.toString)) }
+      assert(jobs.forall(_._2 == 0), s"re-reading a persisted table started jobs: $jobs")
     }
   }
 

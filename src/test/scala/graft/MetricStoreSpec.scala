@@ -12,6 +12,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.core.{MetricStore, StoreParams}
+import graft.operators.CorpusArtifact
 
 class MetricStoreSpec extends SparkSpec {
 
@@ -186,7 +187,7 @@ class MetricStoreSpec extends SparkSpec {
       good.track(mkEvents(Seq(("2024-01-01 00:00:00", "cpu", "h", 1.0))))
       val badDir = java.nio.file.Paths.get(s"$root/bad")
       Files.createDirectories(badDir)
-      Files.writeString(badDir.resolve(MetricStore.ParamFile),
+      Files.writeString(badDir.resolve(CorpusArtifact.ParamFile),
         """{"resolution":"week","epochDuration":"day","retentionEpochs":3,"fields":["f1"]}""")
       assert(MetricStore.loadAll(spark, root).keySet == Set("good"))
     }
@@ -361,7 +362,7 @@ class MetricStoreSpec extends SparkSpec {
         Files.createDirectories(java.nio.file.Paths.get(root, "bare"))
         val e = intercept[Exception](spark.sql(
           "SELECT * FROM graft_fetch('bare', 'us', '2024-01-01', '2024-01-02')").collect())
-        assert(e.getMessage.contains("bare") && e.getMessage.contains(MetricStore.ParamFile))
+        assert(e.getMessage.contains("bare") && e.getMessage.contains(CorpusArtifact.ParamFile))
       }
     }
   }

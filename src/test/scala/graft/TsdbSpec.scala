@@ -138,6 +138,26 @@ class TsdbSpec extends SparkSpec {
     assert(at("error", 3).getAs[Double]("value") == 2.0) // trailing → prev
   }
 
+  test("gapfillLocf: leading hours stay NULL, gaps carry the last value, filled marks the synthesized hours") {
+    val pts1 = Tsdb.points1(eventsDf(Seq(
+      ("2024-01-01 01:10:00", "purchase", 1L, 5.0),
+      ("2024-01-01 03:20:00", "purchase", 2L, 7.0),
+      ("2024-01-01 00:30:00", "error", 1L, 2.0))))
+    val r = Tsdb.gapfillLocf(pts1,
+      lit("2024-01-01"), lit("2024-01-01 05:00:00"), Seq("purchase", "error"))
+      .collect()
+    assert(r.length == 10) // 2 series x 5 hours
+    val byHour = r.map { x =>
+      (x.getAs[String]("f1"), x.getAs[java.time.LocalDateTime]("bucket").getHour) ->
+        (Option(x.get(x.fieldIndex("total_locf"))), x.getAs[Boolean]("filled"))
+    }.toMap
+    assert(byHour(("purchase", 0)) == ((None, true)), "before the first point: NULL")
+    assert((1 to 4).map(h => byHour(("purchase", h))) ==
+      Seq((Some(5.0), false), (Some(5.0), true), (Some(7.0), false), (Some(7.0), true)))
+    assert((0 to 4).map(h => byHour(("error", h))) ==
+      (Some(2.0), false) +: Seq.fill(4)((Some(2.0), true)))
+  }
+
   test("approxDistinctKMV: exact below k, deterministic estimate above") {
     val r = Tsdb.approxDistinctKMV(ev, k = 64).collect()
     // 2 distinct users per series here — below k, estimate is exact
